@@ -1,5 +1,5 @@
 """Coref-lite (SURVEY §2.1 op 20): document-local pronoun resolution +
-coreference chains, as a per-document pass over the mentions table.
+coreference chains over the mentions table.
 
 The reference runs a neural per-document coref model and selects a
 representative mention per chain — the longest span in words, length ties
@@ -14,21 +14,35 @@ model exhibits on its golden fixture, and the semantics the DuckDB oracle
 reconstructs with a `ROWS ... 1 PRECEDING` window over sent_id) and chains
 repeated surfaces of the same entity.
 
-Spark shape: the per-document scan is a grouped operation —
-``applyInPandas`` over ``groupBy(url)``, the per-doc analog of the
-reference's per-Document processing.  Document groups are small (pages,
-not books), so group skew is bounded; at corpus scale this is one shuffle
-on url, which the annotate stage's output partitioning already provides.
+Spark shape: both operators are Catalyst window plans over the mentions
+table — no Python node.  The candidate frame "strictly earlier
+sentences" is a range window over sent_id per url (``rangeBetween(
+unboundedPreceding, -1)``); for each candidate gender class (the
+genders of ``vocab.PERSON_GENDERS`` plus unknown) the latest candidate
+is ``max(struct(sent_id, first_word_id, key))`` over that frame.  The
+trained pair scorer becomes a (pronoun, class) score table on the
+driver, and the antecedent is the greatest ``struct(score, latest)``
+among the classes whose score clears the threshold — score first, then
+recency, the rule of ``_best_antecedent``.  Chains are the keys with
+>= 2 members (a count over ``(url, key)``), numbered by ``dense_rank``
+over each url's keys, each represented by ``min(struct(-words, -propn,
+sent_id, first_word_id))``.  Every window keys on url, so the plan
+shuffles at most once, on url.  The per-document functions
+``_resolve_doc`` / ``_resolve_pronouns_doc`` remain as the executable
+reference the tests compare the plans against.
 """
 
 from __future__ import annotations
 
 import json
-import os
+import pkgutil
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import functions as F
+
+from .. import vocab as V
 
 PRONOUNS = {"he", "she", "it", "they"}
 
@@ -44,16 +58,16 @@ PRONOUNS = {"he", "she", "it", "they"}
 # pure recency gets wrong whenever a female person intervenes.
 # ---------------------------------------------------------------------------
 
-_CW_PATH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "resources", "coref_weights.json")
-with open(_CW_PATH) as _f:
-    _CW = json.load(_f)["weights"]
+# pkgutil reads through the package loader, so this also works when the
+# package is imported from a zip (spark-submit --py-files)
+_MODEL = json.loads(pkgutil.get_data("stanza_spark",
+                                     "resources/coref_weights.json"))
+_CW = _MODEL["weights"]
 
 
 def entity_gender(entity_id: str | None) -> str | None:
     """PERSON entity id (P<i>) -> grammatical gender from the committed
     PERSON_GENDERS table; None when unknown."""
-    from .. import vocab as V
     if entity_id and entity_id[0] == "P" and entity_id[1:].isdigit():
         i = int(entity_id[1:])
         if i < len(V.PERSON_GENDERS):
@@ -84,15 +98,142 @@ def _best_antecedent(pron: str, committed: list) -> str | None:
             best_key, best = key, ent
     return best
 
-CHAINS_SCHEMA = ("url string, chain_id int, member string, sent_id int, "
-                 "first_word_id int, representative string")
-
 
 def _propn_count(surface: str) -> int:
     """PROPN tokens in a mention: our NER mentions are capitalized-token
     runs (every token PROPN); pronouns carry zero."""
     return 0 if surface.lower() in PRONOUNS else len(surface.split())
 
+
+# ---------------------------------------------------------------------------
+# Catalyst plans
+# ---------------------------------------------------------------------------
+
+_COLS = ["url", "sent_id", "first_word_id", "mention", "type", "entity_id"]
+
+
+def _score_table() -> dict[str, dict[str, float]]:
+    """The trained scorer as candidate class (a gender of PERSON_GENDERS,
+    or "unknown") -> {pronoun: score} over the admissible pairs; a class
+    no pronoun admits is left out."""
+    out = {}
+    for g in [*sorted(set(V.PERSON_GENDERS)), None]:
+        table = {p: pair_score(p, g) for p in sorted(PRONOUNS)
+                 if pair_score(p, g) > 0}
+        if table:
+            out[g or "unknown"] = table
+    return out
+
+
+_SCORES = _score_table()
+
+
+def _gender_col(entity_id: Column) -> Column:
+    """entity_gender as an expression: P<i> -> PERSON_GENDERS[i], else
+    NULL (try_cast: an id too long for an int is out of range too)."""
+    i = F.regexp_extract(entity_id, r"^P([0-9]+)\z", 1).try_cast("int")
+    return F.when(i < len(V.PERSON_GENDERS),
+                  F.array(*map(F.lit, V.PERSON_GENDERS))[i])
+
+
+def _resolve(m: DataFrame, candidate: Column, key: Column) -> DataFrame:
+    """Mentions -> the same rows plus ``is_pron``, ``key`` (NULL on
+    pronoun rows) and ``antecedent`` (the best-scoring candidate key from
+    a strictly earlier sentence; NULL when none clears the threshold or
+    the row is not a pronoun), in ONE window level.
+
+    Within a gender class every candidate scores the same, so the
+    class's best is its latest; across classes the score decides and
+    recency breaks ties — ``_best_antecedent`` as a greatest() over one
+    struct per class."""
+    pron = F.lower("mention")
+    is_pron = pron.isin(*sorted(PRONOUNS))
+    # each row's candidate class (a gender, "unknown", or NULL for a
+    # non-candidate), computed once below the window
+    rows = m.select(
+        *_COLS, pron.alias("pron"), is_pron.alias("is_pron"),
+        F.when(~is_pron, key).alias("key"),
+        F.when(candidate & ~is_pron,
+               F.coalesce(_gender_col(F.col("entity_id")),
+                          F.lit("unknown")))
+        .alias("cls"))
+    earlier = (Window.partitionBy("url").orderBy("sent_id")
+               .rangeBetween(Window.unboundedPreceding, -1))
+    latest = rows.select(*_COLS, "pron", "is_pron", "key", *(
+        F.max(F.when(F.col("cls") == cls, F.struct(
+            "sent_id", "first_word_id", "key"))).over(earlier)
+        .alias(f"latest_{cls}") for cls in _SCORES))
+    scored = []
+    for cls, table in _SCORES.items():
+        score = F.coalesce(*(F.when(F.col("pron") == p, F.lit(s))
+                             for p, s in table.items()))
+        cand = F.col(f"latest_{cls}")
+        scored.append(F.when(score.isNotNull() & cand.isNotNull(),
+                             F.named_struct(F.lit("score"), score,
+                                            F.lit("latest"), cand)))
+    best = scored[0] if len(scored) == 1 else F.greatest(*scored)
+    return latest.select(*_COLS, "is_pron", "key",
+                         best["latest"]["key"].alias("antecedent"))
+
+
+def coref_chains(mentions_linked: DataFrame) -> DataFrame:
+    """linked mentions (+pronoun mentions) -> per-doc coref chains
+    (url, chain_id, member, sent_id, first_word_id, representative).
+
+    Input needs columns: url, sent_id, first_word_id, mention, type,
+    entity_id (null ok).  Every non-pronoun mention is a member keyed by
+    its entity id, or its lowercased surface when unlinked; a pronoun
+    joins its antecedent's chain; PERSON mentions are the candidates."""
+    ent = F.nullif(F.col("entity_id"), F.lit(""))
+    res = _resolve(mentions_linked,
+                   F.col("type") == "PERSON",
+                   F.coalesce(ent, F.lower("mention")))
+    words = F.size(F.filter(F.split("mention", r"\s+"), lambda t: t != ""))
+    members = res.select(
+        "url", "sent_id", "first_word_id", "mention",
+        F.coalesce("key", "antecedent").alias("key"),
+        F.when(F.col("is_pron"), 0).otherwise(words).alias("propn"),
+        words.alias("words"),
+    ).filter(F.col("key").isNotNull())
+    doc_key = Window.partitionBy("url", "key")
+    sized = members.select(
+        "url", "sent_id", "first_word_id", "mention", "key",
+        F.count(F.lit(1)).over(doc_key).alias("n"),
+        # longest in words, most PROPN, earliest (coref_processor.py:
+        # 135-162)
+        F.min(F.struct(-F.col("words"), -F.col("propn"), "sent_id",
+                       "first_word_id", "mention")).over(doc_key)
+        ["mention"].alias("representative"))
+    return sized.filter(F.col("n") >= 2).select(
+        "url",
+        (F.dense_rank().over(Window.partitionBy("url").orderBy("key"))
+         - 1).cast("int").alias("chain_id"),
+        F.col("mention").alias("member"),
+        F.col("sent_id").cast("int").alias("sent_id"),
+        F.col("first_word_id").cast("int").alias("first_word_id"),
+        "representative")
+
+
+def resolve_pronouns(mentions_linked: DataFrame) -> DataFrame:
+    """coref_input rows -> (url, sent_id, pronoun, antecedent_entity):
+    one row per pronoun with the entity of the best-scoring
+    agreement-compatible PERSON mention (with an entity id) from a
+    strictly earlier sentence, NULL when none clears the trained
+    threshold; gated against the grammar oracle (kg_coref)."""
+    ent = F.nullif(F.col("entity_id"), F.lit(""))
+    res = _resolve(mentions_linked,
+                   (F.col("type") == "PERSON") & ent.isNotNull(), ent)
+    return res.filter("is_pron").select(
+        "url", F.col("sent_id").cast("int").alias("sent_id"),
+        F.col("mention").alias("pronoun"),
+        F.col("antecedent").alias("antecedent_entity"))
+
+
+# ---------------------------------------------------------------------------
+# per-document Python reference: the rule as a sequential scan, which the
+# tests compare the Catalyst plans against row for row (no DataFrame path
+# calls these)
+# ---------------------------------------------------------------------------
 
 def _resolve_doc(pdf: pd.DataFrame) -> pd.DataFrame:
     """One document's mentions+pronouns (sorted) -> chain rows."""
@@ -137,23 +278,6 @@ def _resolve_doc(pdf: pd.DataFrame) -> pd.DataFrame:
                                        "representative"])
 
 
-def coref_chains(mentions_linked: DataFrame) -> DataFrame:
-    """linked mentions (+pronoun mentions) -> per-doc coref chains.
-
-    Input needs columns: url, sent_id, first_word_id, mention, type,
-    entity_id (null ok)."""
-    cols = ["url", "sent_id", "first_word_id", "mention", "type", "entity_id"]
-    return (
-        mentions_linked.select(*cols)
-        .groupBy("url")
-        .applyInPandas(lambda pdf: _resolve_doc(pdf), schema=CHAINS_SCHEMA)
-    )
-
-
-RESOLVE_SCHEMA = ("url string, sent_id int, pronoun string, "
-                  "antecedent_entity string")
-
-
 def _resolve_pronouns_doc(pdf: pd.DataFrame) -> pd.DataFrame:
     """One document's coref input -> one row per pronoun with the entity
     of the best-scoring AGREEMENT-COMPATIBLE person mention from a
@@ -183,25 +307,10 @@ def _resolve_pronouns_doc(pdf: pd.DataFrame) -> pd.DataFrame:
                                        "antecedent_entity"])
 
 
-def resolve_pronouns(mentions_linked: DataFrame) -> DataFrame:
-    """coref_input rows -> (url, sent_id, pronoun, antecedent_entity):
-    the document-local recency resolution, gated against the grammar
-    oracle (kg_coref)."""
-    cols = ["url", "sent_id", "first_word_id", "mention", "type",
-            "entity_id"]
-    return (
-        mentions_linked.select(*cols)
-        .groupBy("url")
-        .applyInPandas(lambda pdf: _resolve_pronouns_doc(pdf),
-                       schema=RESOLVE_SCHEMA)
-    )
-
-
 def coref_input(words: DataFrame, linked_mentions: DataFrame) -> DataFrame:
     """Union the typed mentions with pronoun tokens (He/She/It/They) from
     the words table — pronouns are not NER mentions but are coref
     anchors."""
-    from pyspark.sql import functions as F
     prons = (
         words.filter(F.lower(F.col("text")).isin(*sorted(PRONOUNS))
                      & (F.col("upos") == "PRON"))

@@ -28,7 +28,7 @@ production.
 from __future__ import annotations
 
 import json
-import os
+import pkgutil
 from typing import Iterator
 
 import numpy as np
@@ -50,10 +50,10 @@ from .decode import mst_single_root, viterbi_decode
 # transition context, the behavior a per-token argmax cannot reproduce.
 # ---------------------------------------------------------------------------
 
-_WEIGHTS_PATH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "resources", "learned_weights.json")
-with open(_WEIGHTS_PATH) as _f:
-    _MODEL = json.load(_f)
+# pkgutil reads through the package loader, so this also works when the
+# package is imported from a zip (spark-submit --py-files)
+_MODEL = json.loads(pkgutil.get_data("stanza_spark",
+                                     "resources/learned_weights.json"))
 
 TAGS = tuple(_MODEL["tags"])
 _T = {t: i for i, t in enumerate(TAGS)}

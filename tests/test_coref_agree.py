@@ -3,14 +3,15 @@ agreement weights from a committed Spark MLE job, layered on the recency
 rule — including the case pure recency gets WRONG (a female person
 intervening between a male antecedent and "He")."""
 
-import json
-
 import pandas as pd
-import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
-from stanza_spark.operators.coref import (_CW_PATH, _best_antecedent,
+from stanza_spark.operators.coref import (_MODEL, _best_antecedent,
+                                          _resolve_doc,
                                           _resolve_pronouns_doc,
-                                          entity_gender, pair_score)
+                                          coref_chains, entity_gender,
+                                          pair_score, resolve_pronouns)
 from stanza_spark.operators.coref_train import pair_features
 from stanza_spark import vocab as V
 
@@ -19,9 +20,7 @@ def test_trained_weights_reproduce_committed_artifact(spark):
     """The committed JSON is the Spark job's exact output, not
     hand-tuned constants (same discipline as learned_train)."""
     from stanza_spark.operators.coref_train import train_weights
-    with open(_CW_PATH) as f:
-        committed = json.load(f)
-    assert train_weights(spark) == committed
+    assert train_weights(spark) == _MODEL
 
 
 def test_decision_threshold_properties():
@@ -112,3 +111,111 @@ def test_best_antecedent_prefers_match_over_unknown():
     assert _best_antecedent("he", committed) == "P0"
     # unknown-gender candidate still admissible when it is all there is
     assert _best_antecedent("he", [("Px", None)]) == "Px"
+
+
+# ---------------------------------------------------------------------------
+# The Catalyst operators against the per-document Python reference
+# ---------------------------------------------------------------------------
+
+COLS = ["url", "sent_id", "first_word_id", "mention", "type", "entity_id"]
+SCHEMA = ("url string, sent_id int, first_word_id int, mention string, "
+          "type string, entity_id string")
+
+
+def _reference(rows, per_doc):
+    """Python reference over every document of ``rows`` -> row tuples."""
+    pdf = pd.DataFrame(rows, columns=COLS)
+    out = [per_doc(g) for _, g in pdf.groupby("url")]
+    return sorted((tuple(None if pd.isna(v) else v for v in r)
+                   for df in out for r in df.itertuples(index=False)),
+                  key=repr)
+
+
+def _assert_operators_match_reference(spark, rows):
+    m = spark.createDataFrame(rows, SCHEMA)
+    got_chains = sorted((tuple(r) for r in coref_chains(m).collect()),
+                        key=repr)
+    got_res = sorted((tuple(r) for r in resolve_pronouns(m).collect()),
+                     key=repr)
+    assert got_chains == _reference(rows, _resolve_doc)
+    assert got_res == _reference(rows, _resolve_pronouns_doc)
+    return got_chains, got_res
+
+
+def test_catalyst_matches_reference_on_edge_cases(spark):
+    rows = [
+        # own-sentence PERSON never serves; tie of two males -> recency
+        ("a", 0, 0, "Barack Obama", "PERSON", "P0"),
+        ("a", 1, 0, "Alan Turing", "PERSON", "P2"),
+        ("a", 1, 4, "Marie Curie", "PERSON", "P1"),
+        ("a", 2, 0, "Ada", "PERSON", "P12"),     # out of range: unknown
+        ("a", 2, 3, "hE", "PRON", None),         # -> P2 (recency among m)
+        ("a", 2, 5, "It", "PRON", None),         # unknown gender only: no
+        ("a", 3, 0, "SHE", "PRON", None),        # -> P1
+        ("a", 3, 2, "It", "ORG", "O1"),          # NER mention, pronoun
+        ("a", 4, 1, "they", "PRON", None),       # never on singulars
+        # unknown-gender PERSONs with and without an entity id: without
+        # one (NULL or "") coref_chains keys them by surface and
+        # resolve_pronouns skips them; a non-P<i> id is unknown gender
+        ("b", 0, 0, "Kim", "PERSON", None),
+        ("b", 0, 2, "Kim Lee", "PERSON", "X9"),
+        ("b", 1, 0, "it", "PRON", None),
+        ("b", 2, 0, "Kim", "PERSON", ""),
+        ("b", 3, 0, "It", "PRON", None),
+        ("b", 3, 1, "Paris", "LOC", None),       # single member: dropped
+        ("b", 4, 0, "Jo", "PERSON", "P99999999999"),
+    ]
+    chains, res = _assert_operators_match_reference(spark, rows)
+    by_pron = {(u, s, p): a for u, s, p, a in res}
+    assert by_pron[("a", 2, "hE")] == "P2"
+    assert by_pron[("a", 2, "It")] is None
+    assert by_pron[("a", 3, "SHE")] == "P1"
+    assert by_pron[("a", 3, "It")] == "P12"   # the unknown-gender Ada
+    assert by_pron[("a", 4, "they")] is None
+    # resolve_pronouns admits only PERSONs with an entity id ("X9");
+    # coref_chains also admits the surface-keyed Kim of sentence 2
+    assert by_pron[("b", 1, "it")] == "X9"
+    assert by_pron[("b", 3, "It")] == "X9"
+    b_chains = {(m, s): rep for u, _, m, s, _, rep in chains
+                if u == "b"}
+    assert b_chains[("It", 3)] == "Kim"
+    assert b_chains[("it", 1)] == "Kim Lee"
+    members = {m for _, _, m, *_ in chains}
+    assert "Paris" not in members and "Jo" not in members
+
+
+_PRONOUN_FORMS = ["he", "He", "HE", "hE", "she", "She", "SHE", "it", "It",
+                  "IT", "they", "They", "tHEy"]
+_NAMES = ["Ben", "Kim", "Barack Obama", "Marie Curie", "Ada Love Lace"]
+_OTHER = ["Paris", "2008", "Acme Corp", "kim"]
+_IDS = [None, None, "", "P0", "P1", "P2", "P3", "P11", "P12", "P007",
+        "P99999999999", "P", "X9", "Q1"]
+
+_mention = st.one_of(
+    st.tuples(st.sampled_from(_PRONOUN_FORMS), st.just("PRON"),
+              st.just(None)),
+    st.tuples(st.sampled_from(_PRONOUN_FORMS),
+              st.sampled_from(["PERSON", "ORG"]), st.sampled_from(_IDS)),
+    st.tuples(st.sampled_from(_NAMES), st.just("PERSON"),
+              st.sampled_from(_IDS)),
+    st.tuples(st.sampled_from(_NAMES + _OTHER),
+              st.sampled_from(["LOC", "ORG", "DATE"]),
+              st.sampled_from(_IDS)),
+)
+# positions are unique per document: recency is then a total order, as
+# it is in an annotated document
+_doc_rows = st.lists(
+    st.tuples(st.integers(0, 4), st.integers(0, 6), _mention),
+    max_size=14, unique_by=lambda r: (r[0], r[1]))
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(_doc_rows, min_size=1, max_size=6))
+def test_catalyst_operators_equal_python_reference(spark, docs):
+    """Multi-document mention tables: both window plans equal the
+    per-document Python reference row for row."""
+    rows = [(f"u{d}", s, w, *mention)
+            for d, doc in enumerate(docs) for s, w, mention in doc]
+    if rows:
+        _assert_operators_match_reference(spark, rows)

@@ -180,6 +180,23 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {t2}")
 
 
+def test_coref_plans_have_no_grouped_python(spark):
+    """Coreference is a Catalyst window plan: the physical plans of both
+    coref gates contain no FlatMapGroupsInPandas (no per-document Python
+    pass), and the annotate MapInPandas — behind the words checkpoint —
+    is the only kind of Python node they may hold."""
+    import re
+    from stanza_spark.queries import q_kg_coref, q_kg_coref_chains
+    for q in (q_kg_coref_chains, q_kg_coref):
+        p = _plan(q(spark, SF_SMOKE))
+        nodes = set(re.findall(r"^\(\d+\) (\w+)", p, re.M))
+        python = {n for n in nodes if re.search("Pandas|Arrow|Python", n)}
+        assert "FlatMapGroupsInPandas" not in p, q.__name__
+        assert python <= {"MapInPandas"}, (q.__name__, python)
+        # the antecedent frame: strictly earlier sentences
+        assert "RangeFrame, unboundedpreceding$(), -1" in p, q.__name__
+
+
 def test_no_driver_collect_in_operator_paths():
     """Anti-pattern guard (VERDICT r2): no `.collect()` anywhere in the
     operator/query modules except the two documented sites — the

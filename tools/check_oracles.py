@@ -7,6 +7,7 @@ Usage: python tools/check_oracles.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -34,7 +35,8 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(
+        __file__))))
     import __spark_entry__ as entrymod
     from stanza_spark.session import get_spark
 
