@@ -1,16 +1,16 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on the session's default cores
+($SPARK_GRAFT_CPUS, else the host's usable cores).
 
 Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...}, "sf": ..., "docs_per_sec": ...,
-   "scaling": {...}}   # scaling block when SPARK_GRAFT_SCALING=1
+  {"metric": "headline_total", "value": <total sec>, "unit": "sec",
+   "queries": {...}, "sf": ..., "docs": ..., "kg_docs_per_sec": ...,
+   "full": "BENCH_FULL.json"}
 
 The flagship pipeline (pages -> annotate -> triples -> graph) is measured
-end-to-end; per-query timings cover the operator families.  The scaling
-block evidences the north rule's two-cluster-size criterion by running the
-flagship at two parallelism levels (local[8] vs local[32]) in separate
-SparkSessions — see BENCH.md.
+end-to-end; per-query timings cover the operator families.  Whether a
+change helped is perfbench/'s question (perfbench/README.md); the N->4N
+scaling pair comes from tools/scaling.py.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # headline set: one per operator family (full gate list runs in verify)
 HEADLINE = [
@@ -44,76 +43,27 @@ HEADLINE = [
 ]
 
 
-# Host-calibration reference: this VM's parallel md5-burn throughput at
-# the time the r3 CEILING.json was recorded.  Each bench session re-samples
-# the same burn IN-BAND (pre and post) so cross-round query times can be
-# host-normalized: the r3 judge found a uniform ~1.5x drift across ALL
-# queries between rounds with no in-band artifact to attribute it to VM
-# phase — this block is that artifact.
-CAL_REF_OPS_S = {1: 1_534_215, 32: 23_599_902}     # CEILING.json snapshot
-
-
-def _burn(quantum: int) -> int:
-    import hashlib
-    h = b"seed"
-    for _ in range(quantum):
-        h = hashlib.md5(h).digest()
-    return h[0]
-
-
-def calibrate(quantum: int = 120_000, sizes=(1, 32)) -> dict:
-    """Aggregate md5-chain ops/s at the given process counts (same method
-    as tools/ceiling.py, one quick sample per size)."""
-    import multiprocessing as mp
-    out = {}
-    for n in sizes:
-        with mp.get_context("spawn").Pool(n) as pool:
-            pool.map(_burn, [1000] * n)            # warm the pool
-            t0 = time.monotonic()
-            pool.map(_burn, [quantum] * n)
-            dt = time.monotonic() - t0
-        out[n] = round(n * quantum / dt)
-    return out
-
-
-def run_once(cores: int, queries: dict, names, repeats: int = 3) -> dict:
+def run_once(queries: dict, names, repeats: int = 3):
     """Time each query as min over >= 3 INTERLEAVED passes: a transient
     VM stall (this host's JVM timings are bimodal, BENCH.md) then hits one
     pass of many queries instead of every sample of one query — a 20x
-    outlier can no longer become a query's reported number.
-
-    One md5-burn calibration sample (32 procs, ~1 s) runs per cycle, so
-    every query sample can be normalized by its NEAREST host-phase
-    measurement instead of a single session-wide factor (the r4 judge
-    found a 1.86x in-session host swing that one factor cannot express).
-    All samples + per-cycle calibrations are kept in the artifact."""
+    outlier can no longer become a query's reported number.  Returns
+    (min seconds, row counts, all samples) per query."""
     from stanza_spark.session import get_spark
-    spark = get_spark(f"bench-{cores}", cores=cores,
-                      shuffle_partitions=max(cores, 8),
+    spark = get_spark("bench",
                       extra={"spark.ui.showConsoleProgress": "false"})
     # warm python workers / codegen once so the first query isn't charged
     # session cold-start (a long-lived cluster never re-pays it)
     queries[names[0]](spark, SF_DIR).count()
     samples = {name: [] for name in names}
-    cycle_cal = []
     rows = {}
     for _ in range(repeats):
-        # best-of-2: a transient stall can only make the burn SLOWER,
-        # never faster, so max is the right capacity estimator — a single
-        # sample once under-read the host by 6.5x while the adjacent
-        # queries ran at full speed
-        cycle_cal.append(max(calibrate(quantum=50_000, sizes=(32,))[32]
-                             for _ in range(2)))
         for name in names:
             t0 = time.time()
             rows[name] = queries[name](spark, SF_DIR).count()
             samples[name].append(round(time.time() - t0, 3))
-    timings = {name: min(s) for name, s in samples.items()}
-    timings["_rows"] = rows
-    timings["_samples"] = samples
-    timings["_cycle_cal"] = cycle_cal
     spark.stop()
-    return timings
+    return {name: min(s) for name, s in samples.items()}, rows, samples
 
 
 def main():
@@ -122,36 +72,8 @@ def main():
     # production plans kg_triples_mst / text_ann_ivf stay benchmarked)
     queries = {**entrymod.queries(), **entrymod.parity_queries()}
 
-    cal_pre = calibrate()
-    timings = run_once(CPUS, queries, HEADLINE)
-    cal_post = calibrate()
-    rows = timings.pop("_rows")
-    samples = timings.pop("_samples")
-    cycle_cal = timings.pop("_cycle_cal")
+    timings, rows, samples = run_once(queries, HEADLINE)
     total = round(sum(timings.values()), 3)
-
-    # Host normalization (r4 judge item #3), three views so no single
-    # factor hides the in-session phase swing:
-    #  * point estimate = raw min x the MAX factor seen in-session
-    #    (pre/post/cycles) — conservative (max = closest to reference
-    #    capacity, so it flatters speed the least) and r4-comparable;
-    #  * nearest-cycle = min over samples of t_j x factor(cycle j) — each
-    #    sample scaled by ITS cycle's measured phase (the judge's ask;
-    #    biased low whenever a cycle's burn under-reads, so reported
-    #    alongside, not alone);
-    #  * bounds = raw min x [slowest, fastest] session factor.
-    ref32 = CAL_REF_OPS_S[32]
-    factors = [c / ref32 for c in cycle_cal]
-    host_factor = max(factors + [cal_pre[32] / ref32,
-                                 cal_post[32] / ref32])
-    normalized = {q: round(min(s) * host_factor, 3)
-                  for q, s in samples.items()}
-    normalized_nearest = {
-        q: round(min(t * factors[j] for j, t in enumerate(s)), 3)
-        for q, s in samples.items()}
-    lo_f, hi_f = min(factors), max(factors)
-    norm_bounds = {q: [round(min(s) * lo_f, 3), round(min(s) * hi_f, 3)]
-                   for q, s in samples.items()}
 
     import duckdb
     n_docs = duckdb.sql(
@@ -161,11 +83,10 @@ def main():
     kg_time = (timings["kg_extract_text"] + timings["kg_tokens"]
                + timings["kg_triples"] + timings["kg_graph_edges"])
 
-    # the COMPACT driver line: everything essential, small enough that a
-    # tail-truncating wrapper can never cut the JSON mid-object (the r4
-    # artifact lost its raw mins that way); the complete object — raw
-    # samples, per-cycle calibrations, rows, bounds — self-persists to
-    # BENCH_FULL.json next to this script.
+    # the COMPACT driver line: small enough that a tail-truncating wrapper
+    # can never cut the JSON mid-object; the complete object — raw
+    # samples and rows — self-persists to BENCH_FULL.json next to this
+    # script.
     out = {
         "metric": "headline_total",
         "value": total,
@@ -174,59 +95,9 @@ def main():
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
         "docs": n_docs,
         "kg_docs_per_sec": round(n_docs / kg_time, 1) if kg_time else None,
-        "host_factor_32": round(host_factor, 4),
         "full": "BENCH_FULL.json",
     }
-
-    full = dict(out)
-    full.update({
-        "rows": rows,
-        "samples": samples,
-        "calibration": {
-            "method": "md5-chain burn ops/s (tools/ceiling.py): pre+post "
-                      "at 1/32 procs plus ONE 32-proc sample per "
-                      "interleaved cycle; each query sample normalizes "
-                      "by its own cycle's factor",
-            "pre": {str(k): v for k, v in cal_pre.items()},
-            "post": {str(k): v for k, v in cal_post.items()},
-            "per_cycle_32": cycle_cal,
-            "ref_ops_s": {str(k): v for k, v in CAL_REF_OPS_S.items()},
-            "factors": [round(f, 4) for f in factors],
-        },
-        "queries_host_normalized": normalized,
-        "queries_host_normalized_nearest_cycle": normalized_nearest,
-        "queries_host_normalized_bounds": norm_bounds,
-    })
-
-    # last full two-parallelism scaling measurement (tools/scaling.py
-    # writes it; methodology in BENCH.md)
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_SCALING.json")) as f:
-            scaling = json.load(f)
-        full["scaling"] = scaling
-        compact = {k: scaling[k] for k in
-                   ("efficiency_n_to_4n", "throughput_ratio_4n_vs_n")
-                   if k in scaling}
-        for pair, v in scaling.get("pairs", {}).items():
-            compact[pair] = v.get("efficiency_n_to_4n")
-        if compact:
-            out["scaling"] = compact
-    except OSError:
-        pass
-
-    if os.environ.get("SPARK_GRAFT_SCALING") == "1":
-        scaling = {}
-        for c in (8, 32):
-            t = run_once(c, queries, ["kg_triples"])
-            for priv in ("_rows", "_samples", "_cycle_cal"):
-                t.pop(priv, None)
-            scaling[f"local[{c}]"] = t["kg_triples"]
-        t8, t32 = scaling["local[8]"], scaling["local[32]"]
-        scaling["throughput_ratio_32_vs_8"] = round(t8 / t32, 3)
-        scaling["efficiency_n_to_4n"] = round((t8 / t32) / 4.0, 3)
-        out["scaling"] = scaling
-        full["scaling"] = scaling
+    full = {**out, "rows": rows, "samples": samples}
 
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_FULL.json"), "w") as f:

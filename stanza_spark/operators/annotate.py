@@ -259,16 +259,6 @@ def _is_katakana(ch: str) -> bool:
     return "゠" <= ch <= "ヿ"
 
 
-def ja_tokenize(text: str, start: int, end: int):
-    """Japanese mixed-script segmentation (seventh language): katakana
-    runs (loanwords like データ, incl. the ー prolonged-sound mark) are
-    single tokens by SCRIPT rule; kanji/hiragana segment by greedy
-    longest dictionary match; embedded ASCII (years, acronyms) keeps the
-    standard tokenizer — three scripts, three strategies, one pass."""
-    return zh_max_match(text, start, end, seg_dict=V.JA_SEG_DICT,
-                        max_len=V.JA_SEG_MAX_LEN, run_class=_is_katakana)
-
-
 def vi_group_tokens(text: str, toks, seg_dict=None, max_syls=None):
     """Vietnamese word segmentation: GROUP adjacent word tokens
     (syllables) into one multi-syllable word by greedy longest
@@ -1072,10 +1062,6 @@ def _make_triples_batches(decoder: str):
                 out.extend(page_triples(url, lang, text, decoder=decoder))
             yield pd.DataFrame(out, columns=cols)
     return _batches
-
-
-def _triples_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    yield from _make_triples_batches("grammar")(batches)
 
 
 def triples_narrow(pages_df, en_only: bool = True, decoder: str = "grammar"):

@@ -307,10 +307,16 @@ def _resolve_pronouns_doc(pdf: pd.DataFrame) -> pd.DataFrame:
                                        "antecedent_entity"])
 
 
-def coref_input(words: DataFrame, linked_mentions: DataFrame) -> DataFrame:
-    """Union the typed mentions with pronoun tokens (He/She/It/They) from
-    the words table — pronouns are not NER mentions but are coref
-    anchors."""
+def coref_input(words: DataFrame, mentions: DataFrame,
+                aliases: DataFrame) -> DataFrame:
+    """Decoded mentions + their ``entity_id`` (a broadcast left join on
+    the lowercased alias; unlinked mentions keep a NULL id), unioned with
+    the pronoun tokens (He/She/It/They) from the words table — pronouns
+    are not NER mentions but are coref anchors."""
+    linked = mentions.withColumn("alias_l", F.lower("mention")).join(
+        F.broadcast(aliases.select(F.lower("alias").alias("alias_l"),
+                                   "entity_id")),
+        "alias_l", "left").drop("alias_l")
     prons = (
         words.filter(F.lower(F.col("text")).isin(*sorted(PRONOUNS))
                      & (F.col("upos") == "PRON"))
@@ -320,6 +326,6 @@ def coref_input(words: DataFrame, linked_mentions: DataFrame) -> DataFrame:
                 F.lit("PRON").alias("type"),
                 F.lit(None).cast("string").alias("entity_id"))
     )
-    m = linked_mentions.select("url", "sent_id", "first_word_id", "mention",
-                               "type", "entity_id")
+    m = linked.select("url", "sent_id", "first_word_id", "mention", "type",
+                      "entity_id")
     return m.unionByName(prons)

@@ -87,11 +87,7 @@ def with_minhash_features(df: DataFrame, grams_col: str = "_grams",
         raise ValueError(f"signature length {k} not divisible by "
                          f"n_bands {n_bands}")
     rpb = k // n_bands
-    df = df.withColumn(
-        "_hs", F.transform(
-            F.col(grams_col),
-            lambda g: F.conv(F.substring(F.md5(g), 1, 8), 16, 10)
-                       .cast("long")))
+    df = df.withColumn("_hs", F.transform(F.col(grams_col), hash32))
     a_arr = F.array(*[F.lit(x) for x in SEED_A[:k]])
     b_arr = F.array(*[F.lit(x) for x in SEED_B[:k]])
     df = df.withColumn(

@@ -136,14 +136,6 @@ def image_payloads(df: DataFrame, id_col: str = "doc_id",
         F.unhex(payload_hex_expr(doc, F.col(text_col))).alias("payload"))
 
 
-def binary_payloads(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Opaque-bytes variant (no image header): utf-8 bytes of the text —
-    kept for plumbing tests of non-decodable payloads."""
-    return df.select(F.col(id_col).alias("doc_id"),
-                     F.encode(F.col(text_col), "UTF-8").alias("payload"))
-
-
 def decode_meta(payloads: DataFrame) -> DataFrame:
     """binary payload -> typed metadata via Arrow-batched mapInPandas."""
     return payloads.mapInPandas(_meta_batches, schema=META_SCHEMA)

@@ -195,11 +195,7 @@ class KGPipeline:
 
         def coref_stage(w, m):
             from ..operators.coref import coref_input, resolve_pronouns
-            a = F.broadcast(alias_df(self.spark).select(
-                F.lower("alias").alias("alias_l"), "entity_id"))
-            ml = (m.withColumn("alias_l", F.lower("mention"))
-                  .join(a, "alias_l", "left").drop("alias_l"))
-            return resolve_pronouns(coref_input(w, ml))
+            return resolve_pronouns(coref_input(w, m, alias_df(self.spark)))
 
         self._run_stage(
             "coref", coref_stage, ["words", "mentions"], hook("coref"))

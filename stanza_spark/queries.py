@@ -165,13 +165,8 @@ def q_kg_coref(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule; representative-selection analog of coref_chain.py:66-69)."""
     from .operators.coref import coref_input, resolve_pronouns
     w = _words(spark, sf_dir, cache=True)
-    # coref stream needs first_word_id (link_mentions drops it): mentions
-    # + broadcast entity-id lookup
-    m = decode_mentions(w).withColumn("alias_l", F.lower("mention")).join(
-        F.broadcast(alias_df(spark).select(F.lower("alias").alias("alias_l"),
-                                           "entity_id")),
-        "alias_l", "left").drop("alias_l")
-    return resolve_pronouns(coref_input(w, m))
+    return resolve_pronouns(coref_input(w, decode_mentions(w),
+                                        alias_df(spark)))
 
 
 def q_kg_coref_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,11 +176,8 @@ def q_kg_coref_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     coref_processor.py:135-162)."""
     from .operators.coref import coref_chains, coref_input
     w = _words(spark, sf_dir, cache=True)
-    m = decode_mentions(w).withColumn("alias_l", F.lower("mention")).join(
-        F.broadcast(alias_df(spark).select(F.lower("alias").alias("alias_l"),
-                                           "entity_id")),
-        "alias_l", "left").drop("alias_l")
-    return coref_chains(coref_input(w, m)).select(
+    m = coref_input(w, decode_mentions(w), alias_df(spark))
+    return coref_chains(m).select(
         "url", "chain_id", "member", "sent_id", "representative")
 
 

@@ -2,7 +2,7 @@
 
 Defaults follow the scale design in SURVEY.md §4/§7: AQE on (skew-join
 splitting + dynamic coalescing), Arrow enabled for every pandas UDF path,
-modest shuffle partitioning for local[32] (on a real cluster
+shuffle partitioning sized to the cores in use (on a real cluster
 ``spark.sql.shuffle.partitions`` scales with executor count; every shuffle
 in this engine keys on url-hash so the setting is a pure throughput knob,
 not a correctness one).
@@ -53,7 +53,8 @@ def get_spark(app: str = "stanza-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra: dict | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                   len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cores), 8)
     b = (
@@ -64,8 +65,7 @@ def get_spark(app: str = "stanza-spark", cores: int | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"))
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         # AQE's coalescing floor: with the default 1m floor a byte-light
         # but compute-heavy intermediate shuffle (window/aggregate over a
         # few MB) coalesces to 1-2 partitions and serializes on one core
@@ -75,10 +75,9 @@ def get_spark(app: str = "stanza-spark", cores: int | None = None,
         # shuffles are governed by the advisory size either way, so this
         # only changes byte-light stages at any scale.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_AQE_MIN_PART", "64k"))
+                "64k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1024"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         # heap sized to a 4-vCPU / 15 GB host: the JVM grows its heap a
@@ -94,8 +93,7 @@ def get_spark(app: str = "stanza-spark", cores: int | None = None,
         # catastrophically: measured 4x slowdown on pure map work).
         # Parallel GC capped at 4 threads restores positive scaling.
         .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_JAVA_OPTS",
-                               "-XX:+UseParallelGC -XX:ParallelGCThreads=4"))
+                "-XX:+UseParallelGC -XX:ParallelGCThreads=4")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -5,12 +5,11 @@ has to read it through the package loader, not a path built from
 ``__file__`` (which then points inside the zip)."""
 
 import os
+import pathlib
 import subprocess
 import sys
 
-from tests.conftest import SF_SMOKE
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from tests.conftest import REPO, SF_SMOKE
 
 
 def test_resource_gates_pass_from_a_foreign_cwd(tmp_path):
@@ -43,3 +42,15 @@ def test_resource_modules_import_from_a_zip(tmp_path):
                           capture_output=True, text=True, timeout=300,
                           env={**os.environ, "PYTHONPATH": ""})
     assert proc.returncode == 0, proc.stderr[-4000:]
+
+
+def test_no_tracked_python_file_hard_codes_the_checkout_path():
+    """Every tracked .py file finds the repo relative to itself, so no
+    file spells out the absolute path of the checkout it runs from."""
+    files = subprocess.run(["git", "ls-files", "*.py"], cwd=REPO,
+                           capture_output=True, text=True,
+                           check=True).stdout.split()
+    assert files
+    offenders = [f for f in files if REPO in pathlib.Path(
+        REPO, f).read_text(encoding="utf-8")]
+    assert offenders == []

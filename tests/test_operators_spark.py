@@ -285,14 +285,8 @@ def test_coref_lite_golden(spark):
     df = spark.createDataFrame([("u", "en", doc)],
                                "url string, lang string, text string")
     w = annotate(df)
-    m = decode_mentions(w)
-    linked = link_mentions(
-        m.select("url", "sent_id", "mention", "type",
-                 "first_word_id", "last_word_id"),
-        alias_df(spark), how="left") \
-        .join(m.select("url", "sent_id", "mention", "first_word_id"),
-              ["url", "sent_id", "mention"])
-    chains = coref_chains(coref_input(w, linked)).collect()
+    chains = coref_chains(
+        coref_input(w, decode_mentions(w), alias_df(spark))).collect()
     members = sorted((r.member, r.sent_id) for r in chains)
     assert members == [("Barack Obama", 0), ("He", 1), ("Obama", 2)]
     assert all(r.representative == "Barack Obama" for r in chains)

@@ -7,11 +7,12 @@ their correctness gate (same compare as tools/check_oracles.py: row count,
 column names, order-insensitive normalized values)."""
 
 import importlib.util
+import os
 
 import duckdb
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -19,7 +20,7 @@ TABLES = ("region nation customer supplier part orders lineitem events "
 
 def _load_checker():
     spec = importlib.util.spec_from_file_location(
-        "check_oracles", "/root/repo/tools/check_oracles.py")
+        "check_oracles", os.path.join(REPO, "tools", "check_oracles.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

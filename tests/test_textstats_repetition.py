@@ -2,11 +2,13 @@
 value-checked against a DuckDB twin over the driver corpus, plus planted
 repetitive fixtures pinning each metric's definition."""
 
+import os
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 from stanza_spark import vocab as V
 from stanza_spark.operators.textstats import repetition_signals
 
@@ -53,7 +55,7 @@ FROM lineagg l LEFT JOIN top t USING (doc_id)
 def test_repetition_signals_match_duckdb_twin(spark):
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "check_oracles", "/root/repo/tools/check_oracles.py")
+        "check_oracles", os.path.join(REPO, "tools", "check_oracles.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
