@@ -51,22 +51,26 @@ def unlinked_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
 
 def _char_ngrams(col, n: int = 3):
     """Distinct character n-grams of a string column (whole string when
-    shorter than n), as a pure higher-order-function expression."""
-    c = F.lower(col)
+    shorter than n), as a pure higher-order-function expression.
+
+    ``col`` must already be lowercased (both callers pass ``m_l`` /
+    ``alias_l``): an expression such as ``lower(col)`` captured in the
+    lambda would be re-evaluated once per gram."""
     return F.when(
-        F.length(c) >= n,
+        F.length(col) >= n,
         F.array_distinct(
-            F.transform(F.sequence(F.lit(1), F.length(c) - n + 1),
-                        lambda i: c.substr(i, F.lit(n)))),
-    ).otherwise(F.array(c))
+            F.transform(F.sequence(F.lit(1), F.length(col) - n + 1),
+                        lambda i: col.substr(i, F.lit(n)))),
+    ).otherwise(F.array(col))
 
 
 def surface_features(df: DataFrame, col: str, n: int = 3, *,
                      k: int | None = None,
                      n_bands: int | None = None) -> DataFrame:
-    """surface string column -> + ``_grams`` (distinct char n-grams),
-    ``_n`` (their count) and ``_bands`` (LSH band hashes), all in ONE
-    narrow projection — no explode, no aggregation (r7, guide §2.4).
+    """lowercased surface string column -> + ``_grams`` (distinct char
+    n-grams), ``_n`` (their count) and ``_bands`` (LSH band hashes), all
+    in ONE narrow projection — no explode, no aggregation (r7, guide
+    §2.4).
 
     The arithmetic is bit-identical to the exploded
     ``dedup.minhash_signatures`` chain — see

@@ -10,6 +10,7 @@ not a correctness one).
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import SparkSession
@@ -29,7 +30,9 @@ def local_values_df(spark: SparkSession, rows, columns: list[str]):
 
     Supports str / int / float / None scalars and flat str lists
     (rendered as ``array(...)``); values are static code data
-    (vocab tables), escaped for SQL literals."""
+    (vocab tables), escaped for SQL literals.  An empty ``rows`` and a
+    non-finite float (``repr`` would render nan/inf as an identifier)
+    raise ``ValueError``."""
     def lit(v):
         if v is None:
             return "CAST(NULL AS STRING)"
@@ -37,12 +40,18 @@ def local_values_df(spark: SparkSession, rows, columns: list[str]):
             return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
         if isinstance(v, bool):
             return "true" if v else "false"
+        if isinstance(v, float) and not math.isfinite(v):
+            raise ValueError(
+                f"local_values_df: non-finite float {v!r} has no SQL literal")
         if isinstance(v, (int, float)):
             return repr(v)
         if isinstance(v, (list, tuple)):
             return "array(" + ", ".join(lit(x) for x in v) + ")"
         raise TypeError(f"local_values_df: unsupported value {v!r}")
 
+    if not rows:
+        raise ValueError("local_values_df: rows is empty; VALUES needs at "
+                         "least one row")
     values = ", ".join("(" + ", ".join(lit(v) for v in row) + ")"
                        for row in rows)
     cols = ", ".join(columns)

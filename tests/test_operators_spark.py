@@ -318,6 +318,34 @@ def test_shingles_short_text_edge(spark):
     assert got == [(4, "w x y"), (4, "x y z")]
 
 
+def test_shingles_match_python_reference(spark):
+    """Property: shingles == split on vocab.WS_SPLIT_RE with python re,
+    word 3-grams, distinct — over whitespace runs of every kind (tab,
+    newline, NBSP, leading/trailing) and texts shorter than n."""
+    import re
+    from hypothesis import given, settings, strategies as st
+    from stanza_spark import vocab as V
+    from stanza_spark.operators.dedup import shingles
+
+    def ref(text, n=3):
+        w = re.split(V.WS_SPLIT_RE, text)
+        return {" ".join(w[i:i + n]) for i in range(len(w) - n + 1)}
+
+    piece = st.sampled_from(["a", "b", "cat", "Dog", "é", " ", "  ", "\t",
+                             "\n", "\u00a0", " \r\n "])
+    text = st.lists(piece, max_size=12).map("".join)
+
+    @settings(max_examples=25, deadline=None)
+    @given(texts=st.lists(text, min_size=1, max_size=8))
+    def check(texts):
+        df = spark.createDataFrame(list(enumerate(texts)),
+                                   "doc_id long, text string")
+        got = {(r.doc_id, r.shingle) for r in shingles(df).collect()}
+        want = {(i, g) for i, t in enumerate(texts) for g in ref(t)}
+        assert got == want
+    check()
+
+
 def test_pipeline_facade(spark):
     """The stanza.Pipeline-style entry point: dependency validation at
     construction (core.py:342-345 analog), columnar output matching the

@@ -250,6 +250,28 @@ def test_new_gate_plans_have_no_cartesian(spark):
     # coalesced partition needs no exchange), so 0 is also a valid —
     # strictly better — shape
     assert tree.count("Exchange") - tree.count("BroadcastExchange") <= 1
+    # ...and the bound alone would pass a plan that lost the join: the
+    # case-children aggregate (min lower(lemma) per (url, sent_id, head))
+    # must be there
+    assert "Aggregate (" in tree
+    assert "Functions [1]: [min(lower(lemma#" in p
+    assert "AS case_lemma#" in p
+
+
+def test_shingle_split_is_projected_once_below_generate(spark):
+    """Lambda-captured expressions are re-evaluated per element: a
+    ``split`` inside the shingle ``transform`` lambda ran once per word
+    (O(W^2) regex work per document).  The optimized plan must split
+    once, in the Project under the Generate, never in a lambda."""
+    from stanza_spark.operators.dedup import shingles
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    plan = shingles(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan
+    gen = plan.index("Generate explode(")
+    proj = plan.index("Project [", gen)
+    at = plan.index("split(")
+    assert gen < proj < at, plan
+    assert "+-" not in plan[proj:at], plan   # same node as the Project
 
 
 def test_dedup_keep_rule_is_window_free(spark):
@@ -435,6 +457,19 @@ def test_local_values_df_matches_createDataFrame(spark):
     p = _plan(local_values_df(spark, rows, cols))
     assert "LocalTableScan" in p or "LocalRelation" in p
     assert "Scan ExistingRDD" not in p
+
+
+def test_local_values_df_rejects_empty_and_non_finite(spark):
+    """An empty row list is a clear ValueError (not a SQL syntax error),
+    and so is a NaN/inf float (``repr`` would render an identifier)."""
+    import pytest
+    from stanza_spark.session import local_values_df
+    with pytest.raises(ValueError, match="empty"):
+        local_values_df(spark, [], ["a"])
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="non-finite"):
+            local_values_df(spark, [("x", bad)], ["a", "b"])
+    assert local_values_df(spark, [("x", 1.5)], ["a", "b"]).collect()[0].b == 1.5
 
 
 def test_minhash_narrow_features_match_exploded(spark):
