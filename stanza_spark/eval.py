@@ -32,14 +32,16 @@ def _prf(pred: set, gold: set):
     return p, r, _f1(p, r)
 
 
-def triple_pr(pred_df: DataFrame, gold_df: DataFrame,
-              keys=("url", "sent_id", "subj", "pred", "obj")) -> dict:
+TRIPLE_KEYS = ("url", "sent_id", "subj", "pred", "obj")
+
+
+def triple_pr(pred_df: DataFrame, gold_df: DataFrame) -> dict:
     """Set-level P/R/F1 of predicted triples vs reference triples,
-    computed distributed: dedup both sides on the key tuple, count the
+    computed distributed: dedup both sides on TRIPLE_KEYS, count the
     null-safe equi-join for true positives.  The join shuffles on the
     same key tuple both inputs already group by, so at 100 TB this is one
     exchange per side and three count jobs — no collect."""
-    ks = list(keys)
+    ks = list(TRIPLE_KEYS)
     p_df = pred_df.select(*ks).dropDuplicates(ks).alias("p") \
         .localCheckpoint(eager=True)
     g_df = gold_df.select(*ks).dropDuplicates(ks).alias("g") \

@@ -134,9 +134,3 @@ LANG_PACKS: dict[str, LangPack] = {
         default_params=_m({"propn_xpos": "Np", "noun_xpos": "N",
                            "noun_lemma": "lower"})),
 }
-
-
-def register_lang_pack(lang: str, pack: LangPack) -> None:
-    """Add (or replace) a language pack at runtime — the extension point
-    a user reaches for before editing any engine source."""
-    LANG_PACKS[lang] = pack

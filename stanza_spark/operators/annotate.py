@@ -1064,16 +1064,15 @@ def _make_triples_batches(decoder: str):
     return _batches
 
 
-def triples_narrow(pages_df, en_only: bool = True, decoder: str = "grammar"):
-    """pages -> triples in one narrow Arrow pass (no shuffle anywhere).
+def triples_narrow(pages_df, decoder: str = "grammar"):
+    """English pages -> triples in one narrow Arrow pass (no shuffle
+    anywhere).
     ``decoder='mst'`` runs the MST/Viterbi decode kernels instead of the
     fixed grammars — same narrow plan, numpy per sentence inside the
     Arrow batch."""
     df = pages_df.select("url", "lang", "text")
-    if en_only:
-        df = df.filter(df.lang == "en")
-    return df.mapInPandas(_make_triples_batches(decoder),
-                          schema=TRIPLES_SCHEMA)
+    return df.filter(df.lang == "en").mapInPandas(
+        _make_triples_batches(decoder), schema=TRIPLES_SCHEMA)
 
 
 def align_pretokenized(text: str, tokens: list[str]):

@@ -74,9 +74,7 @@ def _checksum(edges: DataFrame):
 
 
 def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
-                         max_iter: int = 20,
-                         checkpoint: bool = True,
-                         check_every: int = 2) -> DataFrame:
+                         max_iter: int = 20) -> DataFrame:
     """edges(src, dst) undirected (+ optional nodes(node) to keep
     singletons) -> (node, component_id) with component_id = min label.
 
@@ -84,30 +82,30 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
     ``max_iter`` rounds (returning silently would hand wrong component ids
     downstream); for arbitrary graphs max_iter=20 covers > 2^20 nodes.
 
-    The convergence checksum runs every ``check_every`` rounds (VERDICT r2:
-    halves the aggregate-job count on deep graphs).  Sound because the
-    star iteration's potential strictly decreases until the star forest is
-    reached and the converged forest is a fixed point — an edge set
-    repeating k rounds apart implies convergence, and the extra rounds run
-    on the already-converged (idempotent) forest."""
+    Each round's edge set is checkpointed (the star steps read their input
+    more than once, so an uncut plan grows super-linearly with rounds).
+    The convergence checksum runs every second round, which halves the
+    aggregate jobs on deep graphs; checking every fourth round measured
+    worse (kg_components at sf0.01 on a 4-vCPU host: 82 jobs / 4.15 s
+    against 46 / 3.16 s).  Sound because the star iteration's potential
+    strictly decreases until the star forest is reached and the converged
+    forest is a fixed point — an edge set repeating two rounds apart
+    implies convergence, and the extra round runs on the already-converged
+    (idempotent) forest."""
     cur = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .select(F.greatest("src", "dst").alias("src"),
                 F.least("src", "dst").alias("dst"))
         .distinct()
-    )
-    if checkpoint:
-        cur = cur.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     prev_sig = _checksum(cur)
     converged = prev_sig[0] == 0
     i = 0
     while i < max_iter and not converged:
-        cur = _small_star(_large_star(cur))
-        if checkpoint:
-            cur = cur.localCheckpoint(eager=True)
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         i += 1
-        if i % check_every == 0 or i == max_iter:
+        if i % 2 == 0 or i == max_iter:
             sig = _checksum(cur)
             converged = sig == prev_sig
             prev_sig = sig
@@ -148,8 +146,7 @@ def alias_edges(linked: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize(linked: DataFrame, max_iter: int = 20,
-                 checkpoint: bool = True) -> DataFrame:
+def canonicalize(linked: DataFrame) -> DataFrame:
     """linked mentions -> (node, component_id, representative).
 
     representative = longest surface in the component, ties broken
@@ -159,8 +156,7 @@ def canonicalize(linked: DataFrame, max_iter: int = 20,
         linked.filter(F.col("entity_id").isNotNull())
         .select(F.lower("mention").alias("node")).distinct()
     )
-    comps = connected_components(alias_edges(linked), nodes,
-                                 max_iter, checkpoint)
+    comps = connected_components(alias_edges(linked), nodes)
     w = Window.partitionBy("component_id").orderBy(
         F.length("node").desc(), F.col("node").asc()
     )

@@ -21,10 +21,10 @@ from __future__ import annotations
 from typing import Iterator
 
 
-def constituency_trees(pages_df, en_only: bool = True):
-    """pages -> (url, sent_id, tree): one narrow Arrow pass (the same
-    zero-shuffle shape as the annotator — constituency is sentence-local,
-    so nothing exchanges)."""
+def constituency_trees(pages_df):
+    """English pages -> (url, sent_id, tree): one narrow Arrow pass (the
+    same zero-shuffle shape as the annotator — constituency is
+    sentence-local, so nothing exchanges)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -38,9 +38,8 @@ def constituency_trees(pages_df, en_only: bool = True):
                     out.append((url, sent_id, sentence_tree(words)))
             yield pd.DataFrame(out, columns=["url", "sent_id", "tree"])
 
-    df = pages_df.select("url", "lang", "text")
-    if en_only:
-        df = df.filter(F.col("lang") == "en")
+    df = pages_df.select("url", "lang", "text") \
+        .filter(F.col("lang") == "en")
     return df.select("url", "text").mapInPandas(
         batches, schema="url string, sent_id int, tree string")
 

@@ -436,19 +436,18 @@ def gazetteer_emissions(words) -> np.ndarray:
     return em
 
 
-def tag_ner_viterbi(words, emissions_fn=None):
-    """Viterbi NER decode (same output contract as annotate.tag_ner):
-    returns (BIOES tags, mention spans [(first, last, type)]).  Mentions
-    come from the reference-identical BIOES state machine
-    (ner_tags.decode_from_bioes), so malformed paths — impossible under
-    NER_TRANS but possible with a plugged-in emission model and weaker
-    transitions — decode exactly like the reference."""
+def tag_ner_viterbi(words):
+    """Viterbi NER decode over the gazetteer emissions (same output
+    contract as annotate.tag_ner): returns (BIOES tags, mention spans
+    [(first, last, type)]).  Mentions come from the reference-identical
+    BIOES state machine (ner_tags.decode_from_bioes), so even a malformed
+    path (impossible under NER_TRANS) would decode exactly like the
+    reference."""
     from .ner_tags import decode_from_bioes
 
     if not words:
         return [], []
-    emit_fn = emissions_fn if emissions_fn is not None else gazetteer_emissions
-    path, _score = viterbi_decode(emit_fn(words), NER_TRANS)
+    path, _score = viterbi_decode(gazetteer_emissions(words), NER_TRANS)
     tags = [NER_TAGS[p] for p in path]
     spans = decode_from_bioes(tags)
     mentions = [(s["start"], s["end"], s["type"]) for s in spans]

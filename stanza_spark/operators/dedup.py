@@ -5,6 +5,7 @@ signatures + banded LSH (the scale path), and SimHash fingerprints.
 Everything is pure Spark SQL expressions (JVM, whole-stage codegen): hashing
 is md5-hex-prefix → int so DuckDB can reproduce values bit-for-bit (the
 correctness oracle) and results are engine/partitioning independent.
+The document operators read a frame with ``doc_id`` and ``text`` columns.
 
 Scale notes (100 TB):
 * exact dedup: one shuffle on the 16-byte digest; group sizes are bounded by
@@ -12,8 +13,7 @@ Scale notes (100 TB):
 * n-gram Jaccard all-pairs self-join is quadratic in document frequency of a
   shingle — it is the *verification* stage only; pair candidates come from
   LSH banding, which shuffles on (band_id, band_hash) with bounded bucket
-  sizes.  `doc_freq_cap` drops stop-shingles (df > cap) before the join, the
-  standard guard against hot-key blowup.
+  sizes.
 * MinHash signatures aggregate in one pass (k min-aggregates, map-side
   partial) — no row blowup.
 """
@@ -40,8 +40,7 @@ def hash32(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """-> (doc_id, text_hash, group_size, keep): keep = min id per digest.
 
     Skew-safe keep-rule (r3 judge item): the per-digest stats come from an
@@ -51,8 +50,7 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id",
     digest into ONE unsplittable window task; a shuffle join on the same
     key is AQE-skew-splittable (the one-row-per-digest build side gets
     replicated across the split probe partitions)."""
-    h = (df.select(F.col(id_col).alias("doc_id"),
-                   F.md5(text_col).alias("text_hash"))
+    h = (df.select("doc_id", F.md5("text").alias("text_hash"))
          .groupBy("text_hash", "doc_id")
          .agg(F.count(F.lit(1)).alias("_inst")))
     stats = h.groupBy("text_hash").agg(
@@ -70,9 +68,8 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def with_minhash_features(df: DataFrame, grams_col: str = "_grams",
-                          k: int = N_HASHES,
-                          n_bands: int = N_BANDS) -> DataFrame:
+def with_minhash_features(df: DataFrame,
+                          grams_col: str = "_grams") -> DataFrame:
     """df with a distinct-gram array column -> + ``_n`` (gram count) and
     ``_bands`` (the LSH band hashes), ONE narrow projection — no
     explode, no aggregation (r7, guide §2.4).
@@ -81,35 +78,34 @@ def with_minhash_features(df: DataFrame, grams_col: str = "_grams",
     chain: per-seed minima are ``array_min`` folds over the gram array;
     h32 is materialized once per gram; the seeds are array literals and
     the permutation is one nested lambda, so the expression tree stays
-    O(1) in ``k`` (a 16-way unrolled variant measurably cost more in
+    O(1) in N_HASHES (a 16-way unrolled variant measurably cost more in
     Catalyst planning than it saved at runtime)."""
-    if k % n_bands != 0:
-        raise ValueError(f"signature length {k} not divisible by "
-                         f"n_bands {n_bands}")
-    rpb = k // n_bands
+    rpb = N_HASHES // N_BANDS
     df = df.withColumn("_hs", F.transform(F.col(grams_col), hash32))
-    a_arr = F.array(*[F.lit(x) for x in SEED_A[:k]])
-    b_arr = F.array(*[F.lit(x) for x in SEED_B[:k]])
+    a_arr = F.array(*[F.lit(x) for x in SEED_A])
+    b_arr = F.array(*[F.lit(x) for x in SEED_B])
     df = df.withColumn(
         "_sig",
         F.transform(
-            F.sequence(F.lit(1), F.lit(k)),
+            F.sequence(F.lit(1), F.lit(N_HASHES)),
             lambda i: F.array_min(F.transform(
                 F.col("_hs"),
                 lambda h: (F.element_at(a_arr, i) * h
                            + F.element_at(b_arr, i))
                           % F.lit(MERSENNE)))))
     bands = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
         lambda b: F.md5(F.concat_ws(
             ",", F.slice(F.col("_sig"), b * rpb + F.lit(1), F.lit(rpb)))))
     return (df.withColumn("_n", F.size(grams_col))
             .withColumn("_bands", bands).drop("_hs", "_sig"))
 
 
-def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             n: int = 3) -> DataFrame:
-    """-> distinct (doc_id, shingle): word n-grams via higher-order array
+SHINGLE_N = 3  # words per shingle
+
+
+def shingles(df: DataFrame) -> DataFrame:
+    """-> distinct (doc_id, shingle): word 3-grams via higher-order array
     functions (no UDF).  Splits on whitespace runs (not a single space):
     real text with consecutive spaces/newlines would otherwise produce
     empty-string shingle members.  The run class is vocab.WS_SPLIT_RE, not
@@ -126,28 +122,23 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # guard: sequence(0, -1) is DESCENDING in Spark, so texts shorter than
     # n words would produce slice(words, 0, n) and crash — emit no shingles
     grams = F.when(
-        F.size(words) >= n,
+        F.size(words) >= SHINGLE_N,
         F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
+            F.sequence(F.lit(0), F.size(words) - SHINGLE_N),
+            lambda i: F.array_join(F.slice(words, i + 1, SHINGLE_N), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
     return (
-        df.select(F.col(id_col).alias("doc_id"),
-                  F.split(F.col(text_col), V.WS_SPLIT_RE).alias("_words"))
+        df.select("doc_id",
+                  F.split(F.col("text"), V.WS_SPLIT_RE).alias("_words"))
         .select("doc_id", F.explode(grams).alias("shingle"))
         .distinct()
     )
 
 
-def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
-                  doc_freq_cap: int | None = None) -> DataFrame:
+def jaccard_pairs(sh: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Exact n-gram Jaccard over a (doc_id, shingle) set ->
     (doc_a, doc_b, jaccard) with jaccard >= threshold, doc_a < doc_b."""
-    if doc_freq_cap is not None:
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        sh = sh.join(dfreq.filter(F.col("df") <= doc_freq_cap), "shingle") \
-               .select("doc_id", "shingle")
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -171,25 +162,25 @@ def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
     )
 
 
-def minhash_signatures(sh: DataFrame, k: int = N_HASHES) -> DataFrame:
-    """-> (doc_id, sig array<long> of length k): one aggregation pass.
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """-> (doc_id, sig array<long> of length N_HASHES): one aggregation
+    pass.
 
     Each aggregate is one parsed SQL string (int literal x bigint, the
-    same types as ``F.lit``): built through the Column API, the k
+    same types as ``F.lit``): built through the Column API, the 16
     unrolled aggregates cost 1 637 py4j round trips and a median 154 ms
     of driver time per build before Spark ran anything; as SQL text,
     114 round trips and 51 ms (4-vCPU host, bit-identical signatures)."""
     h = sh.withColumn("h32", hash32("shingle"))
     aggs = [F.expr(f"min(({SEED_A[i]} * h32 + {SEED_B[i]}) % {MERSENNE})"
                    f" AS mh{i}")
-            for i in range(k)]
+            for i in range(N_HASHES)]
     sig = h.groupBy("doc_id").agg(*aggs)
-    mh = ", ".join(f"mh{i}" for i in range(k))
+    mh = ", ".join(f"mh{i}" for i in range(N_HASHES))
     return sig.selectExpr("doc_id", f"array({mh}) AS sig")
 
 
-def lsh_candidate_pairs(sig: DataFrame, n_bands: int = N_BANDS, *,
-                        k: int) -> DataFrame:
+def lsh_candidate_pairs(sig: DataFrame, *, k: int) -> DataFrame:
     """Band the signatures and join on (band, band-hash) -> candidate
     (doc_a, doc_b) pairs. Shuffles on the band key only.
 
@@ -200,15 +191,15 @@ def lsh_candidate_pairs(sig: DataFrame, n_bands: int = N_BANDS, *,
     round-trip that triggered the full shingle/signature lineage once
     inside operator construction; at scale that is a wasted job
     (VERDICT r2 'What's wrong' #2)."""
-    if k % n_bands != 0:
+    if k % N_BANDS != 0:
         raise ValueError(f"signature length {k} not divisible by "
-                         f"n_bands {n_bands}")
-    rows_per_band = k // n_bands
+                         f"{N_BANDS} bands")
+    rows_per_band = k // N_BANDS
     bands = sig.select(
         "doc_id",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
+                F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
                 lambda b: F.md5(F.concat_ws(
                     ",", F.slice("sig", b * rows_per_band + 1, rows_per_band))),
             )
@@ -224,9 +215,7 @@ def lsh_candidate_pairs(sig: DataFrame, n_bands: int = N_BANDS, *,
     )
 
 
-def lsh_dedup_pairs(df: DataFrame, threshold: float = 0.8, n: int = 3,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    n_bands: int = N_BANDS, k: int = N_HASHES) -> DataFrame:
+def lsh_dedup_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """The scale path: LSH banding for candidates, exact Jaccard computed
     *only on candidate pairs* — same output contract as jaccard_pairs but
     near-linear shuffle volume (the all-pairs shingle self-join never
@@ -248,8 +237,8 @@ def lsh_dedup_pairs(df: DataFrame, threshold: float = 0.8, n: int = 3,
     them first), the eager shingle checkpoint was 2.07 s of 3.13 s;
     with it projected, 0.49 s of 1.41 s.  Everything after the
     checkpoint — band join, verify joins, sizes — is the rest."""
-    sh = shingles(df, id_col, text_col, n).localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs(minhash_signatures(sh, k), n_bands, k=k)
+    sh = shingles(df).localCheckpoint(eager=True)
+    cand = lsh_candidate_pairs(minhash_signatures(sh), k=N_HASHES)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     # verification joins reference ONE canonical shingle subtree and ONE
     # size-aggregate subtree (renames live in the join conditions, r7
@@ -283,9 +272,7 @@ def lsh_dedup_pairs(df: DataFrame, threshold: float = 0.8, n: int = 3,
     )
 
 
-def dedup_clusters(df: DataFrame, threshold: float = 0.8, n: int = 3,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   n_bands: int = N_BANDS, k: int = N_HASHES) -> DataFrame:
+def dedup_clusters(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """The full keep-one-per-cluster curation step:
     LSH near-dup pairs -> connected components -> (doc_id, cluster_id,
     keep) with cluster_id = min doc_id of the duplicate cluster and
@@ -299,10 +286,10 @@ def dedup_clusters(df: DataFrame, threshold: float = 0.8, n: int = 3,
     that survives 100 TB: every stage is bounded joins + aggregations."""
     from .canonicalize import connected_components
 
-    pairs = lsh_dedup_pairs(df, threshold, n, id_col, text_col, n_bands, k)
+    pairs = lsh_dedup_pairs(df, threshold)
     edges = pairs.select(F.col("doc_a").alias("src"),
                          F.col("doc_b").alias("dst"))
-    nodes = df.select(F.col(id_col).alias("node"))
+    nodes = df.select(F.col("doc_id").alias("node"))
     comps = connected_components(edges, nodes)
     return comps.select(
         F.col("node").alias("doc_id"),
@@ -346,22 +333,21 @@ def sentence_dedup(sentences: DataFrame) -> DataFrame:
     )
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 32) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """-> (doc_id, simhash): per-token 32-bit md5 hash, majority vote per
     bit over all token occurrences."""
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), V.WS_SPLIT_RE)).alias("tok"),
+        "doc_id",
+        F.explode(F.split(F.col("text"), V.WS_SPLIT_RE)).alias("tok"),
     ).withColumn("h", hash32("tok"))
     votes = [
         F.sum(F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1)
               .otherwise(-1)).alias(f"v{b}")
-        for b in range(bits)
+        for b in range(32)
     ]
     agg = toks.groupBy("doc_id").agg(*votes)
     sim = None
-    for b in range(bits):
+    for b in range(32):
         term = F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return agg.select("doc_id", sim.cast("long").alias("simhash"))

@@ -57,35 +57,38 @@ def salted_support(triples: DataFrame, aliases: DataFrame,
     )
 
 
-def pagerank(edges: DataFrame, iters: int = 5,
-             damping: float = 0.85, checkpoint: bool = True) -> DataFrame:
+PAGERANK_ITERS = 5
+PAGERANK_DAMPING = 0.85
+
+
+def pagerank(edges: DataFrame) -> DataFrame:
     """Entity importance over the KG: the classic unnormalized power
-    iteration  r(v) = (1-d) + d * Σ_{u->v} r(u)/outdeg(u), a fixed
-    ``iters`` rounds (deterministic — no convergence tolerance on floats).
+    iteration  r(v) = (1-d) + d * Σ_{u->v} r(u)/outdeg(u) with
+    d = PAGERANK_DAMPING, a fixed PAGERANK_ITERS rounds (deterministic —
+    no convergence tolerance on floats).
     Dangling nodes keep rank but donate nothing (the standard simplified
     variant).  Per-iteration ranks round to 9 decimals so the result is
     bit-reproducible across engines and partitionings (same device as the
-    k-means centroid means); the DuckDB oracle unrolls the identical
-    iterations.
+    k-means centroid means); the DuckDB oracle (queries._pagerank_oracle)
+    unrolls the identical iterations from the same two constants.
 
     Shape: one distinct + degree aggregate up front; each round is one
     join of the edge list to the current rank vector on the source key
     plus one sum aggregate on the destination key — both map-side
-    combinable; lineage truncated per round.  -> (node, rank to 6 dp)."""
+    combinable; the edge list, node set and each round's ranks are
+    checkpointed, which truncates lineage per round.
+    -> (node, rank to 6 dp)."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")) \
-        .distinct()
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
+        .distinct().localCheckpoint(eager=True)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = e.join(deg, "src")
     nodes = e.select(F.col("src").alias("node")).union(
-        e.select(F.col("dst").alias("node"))).distinct()
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=True)
+        e.select(F.col("dst").alias("node"))).distinct() \
+        .localCheckpoint(eager=True)
     ranks = nodes.select("node", F.lit(1.0).alias("r"))
     # round the base so the SQL-literal twin parses to the same double
-    base = F.lit(round(1.0 - damping, 12))
-    for _ in range(iters):
+    base = F.lit(round(1.0 - PAGERANK_DAMPING, 12))
+    for _ in range(PAGERANK_ITERS):
         contribs = (
             ed.join(ranks, ed.src == ranks.node)
             .select(F.col("dst").alias("node"),
@@ -95,11 +98,9 @@ def pagerank(edges: DataFrame, iters: int = 5,
         ranks = (
             nodes.join(contribs, "node", "left")
             .select("node",
-                    F.round(base + damping * F.coalesce("inflow", F.lit(0.0)),
-                            9).alias("r"))
-        )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=True)
+                    F.round(base + PAGERANK_DAMPING
+                            * F.coalesce("inflow", F.lit(0.0)), 9).alias("r"))
+        ).localCheckpoint(eager=True)
     return ranks.select("node", F.round("r", 6).alias("rank"))
 
 

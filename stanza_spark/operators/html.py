@@ -2,8 +2,8 @@
 
 The reference consumes pre-extracted text (`Document.text`,
 /root/reference/stanza/models/common/doc.py:123-131) — extraction is our
-overlay stage.  Contract (north rule): ``extract_text(html)`` must be
-byte-identical to the gold ``text`` per url.
+overlay stage.  Contract (north rule): ``extract_text_expr(html)`` must
+be byte-identical to the gold ``text`` per url.
 
 Both directions are pure Catalyst expressions (regexp + chained replace),
 JVM-side inside whole-stage codegen — no Python, no shuffle.  Entity escaping
@@ -51,7 +51,3 @@ def extract_text_expr(html: Column) -> Column:
     s = F.decode(html, "UTF-8")
     body = F.regexp_replace(s, ARTICLE_RE, "$1")
     return _unescape(body)
-
-
-def extract_text(pages_df, html_col: str = "html", out_col: str = "extracted_text"):
-    return pages_df.withColumn(out_col, extract_text_expr(F.col(html_col)))

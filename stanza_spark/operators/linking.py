@@ -15,6 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import vocab as V
 
+CHAR_N = 3       # characters per surface n-gram
+FUZZY_T = 0.6    # least gram Jaccard for a fuzzy link
+
 
 def alias_df(spark: SparkSession) -> DataFrame:
     # VALUES LocalRelation, not createDataFrame: the dictionary is built
@@ -26,16 +29,14 @@ def alias_df(spark: SparkSession) -> DataFrame:
         ["alias", "entity_id", "canonical_name", "entity_type"])
 
 
-def link_mentions(mentions: DataFrame, aliases: DataFrame,
-                  how: str = "inner") -> DataFrame:
+def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     """mentions (operators.mentions schema) x broadcast aliases ->
     (url, sent_id, mention, type, entity_id, canonical_name, entity_type).
-    ``how='left'`` keeps unlinked mentions (entity_id null) for the fuzzy
-    fallback path."""
+    Unlinked mentions drop out; ``unlinked_mentions`` is their residue."""
     a = F.broadcast(aliases.withColumn("alias_l", F.lower("alias")).drop("alias"))
     m = mentions.withColumn("alias_l", F.lower("mention"))
     return (
-        m.join(a, "alias_l", how)
+        m.join(a, "alias_l")
         .select("url", "sent_id", "mention", "type",
                 "entity_id", "canonical_name", "entity_type")
     )
@@ -49,27 +50,25 @@ def unlinked_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     return m.join(a, "alias_l", "left_anti").drop("alias_l")
 
 
-def _char_ngrams(col, n: int = 3):
-    """Distinct character n-grams of a string column (whole string when
-    shorter than n), as a pure higher-order-function expression.
+def _char_ngrams(col):
+    """Distinct character CHAR_N-grams of a string column (whole string
+    when shorter), as a pure higher-order-function expression.
 
     ``col`` must already be lowercased (both callers pass ``m_l`` /
     ``alias_l``): an expression such as ``lower(col)`` captured in the
     lambda would be re-evaluated once per gram."""
     return F.when(
-        F.length(col) >= n,
+        F.length(col) >= CHAR_N,
         F.array_distinct(
-            F.transform(F.sequence(F.lit(1), F.length(col) - n + 1),
-                        lambda i: col.substr(i, F.lit(n)))),
+            F.transform(F.sequence(F.lit(1), F.length(col) - CHAR_N + 1),
+                        lambda i: col.substr(i, F.lit(CHAR_N)))),
     ).otherwise(F.array(col))
 
 
-def surface_features(df: DataFrame, col: str, n: int = 3, *,
-                     k: int | None = None,
-                     n_bands: int | None = None) -> DataFrame:
+def surface_features(df: DataFrame, col: str) -> DataFrame:
     """lowercased surface string column -> + ``_grams`` (distinct char
-    n-grams), ``_n`` (their count) and ``_bands`` (LSH band hashes), all
-    in ONE narrow projection — no explode, no aggregation (r7, guide
+    CHAR_N-grams), ``_n`` (their count) and ``_bands`` (LSH band hashes),
+    all in ONE narrow projection — no explode, no aggregation (r7, guide
     §2.4).
 
     The arithmetic is bit-identical to the exploded
@@ -78,23 +77,16 @@ def surface_features(df: DataFrame, col: str, n: int = 3, *,
     owns the signature/banding expressions; this wrapper only supplies
     the char-n-gram set."""
     from . import dedup as D
-    if k is None:
-        k = D.N_HASHES
-    if n_bands is None:
-        n_bands = D.N_BANDS
     return D.with_minhash_features(
-        df.withColumn("_grams", _char_ngrams(F.col(col), n)),
-        "_grams", k, n_bands)
+        df.withColumn("_grams", _char_ngrams(F.col(col))), "_grams")
 
 
-def fuzzy_link_mentions(mentions: DataFrame, aliases: DataFrame,
-                        threshold: float = 0.6, n: int = 3,
-                        n_bands: int = 8) -> DataFrame:
+def fuzzy_link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     """Fuzzy fallback for dict-miss mentions (SURVEY C3): **MinHash-LSH
     blocking over char n-grams** (the north star's stated blocking
     scheme) of the anti-join residue against the alias dictionary, exact
-    Jaccard verification on candidates only, best alias per surface above
-    ``threshold``.
+    Jaccard verification on candidates only, best alias per surface at
+    or above ``FUZZY_T``.
 
     Scale shape: matching runs once per DISTINCT miss surface (typo
     populations are tiny relative to occurrences); candidate pairs come
@@ -110,8 +102,6 @@ def fuzzy_link_mentions(mentions: DataFrame, aliases: DataFrame,
     8 bands) a J=0.75 pair collides with probability 1-(1-J^2)^8 ≈ 0.999
     over random gram sets, and the planted corpus pairs are asserted
     exactly by the kg_links_fuzzy gate."""
-    from . import dedup as D
-    k = D.N_HASHES
     residue = unlinked_mentions(mentions, aliases)
     # eager-checkpoint the distinct miss surfaces (bounded: typo-surface
     # diversity, not occurrences): downstream feature/banding/scoring
@@ -130,12 +120,12 @@ def fuzzy_link_mentions(mentions: DataFrame, aliases: DataFrame,
     # Jaccard are bit-identical), and best-alias-per-surface is an
     # algebraic min-struct (-jaccard, alias_l, ...) instead of a window
     # — two hash exchanges total (surface distinct + best aggregate).
-    mb = surface_features(surfaces, "m_l", n, k=k, n_bands=n_bands) \
+    mb = surface_features(surfaces, "m_l") \
         .select("m_l", "_grams", F.col("_n").alias("m_n"),
                 F.posexplode("_bands").alias("band", "band_hash"))
     a = aliases.select(F.lower("alias").alias("alias_l"), "entity_id",
                        "canonical_name", "entity_type").distinct()
-    ab = surface_features(a, "alias_l", n, k=k, n_bands=n_bands) \
+    ab = surface_features(a, "alias_l") \
         .select("alias_l", "entity_id", "canonical_name", "entity_type",
                 F.col("_grams").alias("a_grams"),
                 F.col("_n").alias("a_n"),
@@ -145,7 +135,7 @@ def fuzzy_link_mentions(mentions: DataFrame, aliases: DataFrame,
         mb.join(F.broadcast(ab), ["band", "band_hash"])
         .withColumn("jaccard",
                     inter / (F.col("m_n") + F.col("a_n") - inter))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= FUZZY_T)
     )
     # a pair colliding in several bands scores identically each time, so
     # the min-aggregate absorbs duplicates without a separate distinct
@@ -169,14 +159,14 @@ def fuzzy_link_mentions(mentions: DataFrame, aliases: DataFrame,
     )
 
 
-def link_mentions_with_fallback(mentions: DataFrame, aliases: DataFrame,
-                                threshold: float = 0.6) -> DataFrame:
+def link_mentions_with_fallback(mentions: DataFrame,
+                                aliases: DataFrame) -> DataFrame:
     """Dict-first ensemble: exact broadcast-join links plus fuzzy links
     for the residue, tagged by ``method`` — the coalesce order of the
     reference's lemma ensemble (dict hit wins; the expensive path only
     ever sees misses)."""
     exact = link_mentions(mentions, aliases).withColumn(
         "method", F.lit("exact"))
-    fuzzy = fuzzy_link_mentions(mentions, aliases, threshold).withColumn(
+    fuzzy = fuzzy_link_mentions(mentions, aliases).withColumn(
         "method", F.lit("fuzzy"))
     return exact.unionByName(fuzzy)

@@ -72,9 +72,9 @@ def morphemes_expr(word_col: Column) -> Column:
     return F.when(eligible, segmented).otherwise(word_col)
 
 
-def segment_words(words_df, word_col: str = "text"):
-    """words table -> + ``morphemes`` column ('+'-joined)."""
-    return words_df.withColumn("morphemes", morphemes_expr(F.col(word_col)))
+def segment_words(words_df):
+    """words table -> + ``morphemes`` column ('+'-joined) of ``text``."""
+    return words_df.withColumn("morphemes", morphemes_expr(F.col("text")))
 
 
 def morphseg_sql(word_expr: str) -> str:

@@ -33,14 +33,13 @@ from .tokenize_sql import sentences_from_pages, tokens_sql
 FULL_PIPELINE_LANGS = ("en", "de", "fr", "ar", "it", "es")
 
 
-def route_and_annotate(pages_df: DataFrame,
-                       full_langs=FULL_PIPELINE_LANGS) -> DataFrame:
-    """pages -> unified words table: full annotation for `full_langs`,
-    tokenize+ssplit only for the rest."""
-    full = annotate(pages_df.filter(F.col("lang").isin(*full_langs)),
+def route_and_annotate(pages_df: DataFrame) -> DataFrame:
+    """pages -> unified words table: full annotation for
+    FULL_PIPELINE_LANGS, tokenize+ssplit only for the rest."""
+    full = annotate(pages_df.filter(F.col("lang").isin(*FULL_PIPELINE_LANGS)),
                     en_only=False)
     rest_tokens = tokens_sql(sentences_from_pages(
-        pages_df.filter(~F.col("lang").isin(*full_langs))))
+        pages_df.filter(~F.col("lang").isin(*FULL_PIPELINE_LANGS))))
     rest = rest_tokens.select(
         "url", "lang", "sent_id",
         F.lit(None).cast("bigint").alias("sent_start"),
@@ -60,8 +59,7 @@ def route_and_annotate(pages_df: DataFrame,
     return full.unionByName(rest)
 
 
-def route_by_langid(pages_df: DataFrame, spark,
-                    full_langs=FULL_PIPELINE_LANGS) -> DataFrame:
+def route_by_langid(pages_df: DataFrame, spark) -> DataFrame:
     """The reference MultilingualPipeline's ACTUAL routing semantics
     (multilingual.py:141-146): language id runs FIRST and routing follows
     the PREDICTION — the input's lang column (if any) is ignored.  Pages
@@ -83,4 +81,4 @@ def route_by_langid(pages_df: DataFrame, spark,
     # consume the prediction join — eager-checkpoint so langid runs once,
     # not per branch (measured ~10 % end-to-end at sf0.1/local[32])
     routed = p.join(pred, "url").localCheckpoint(eager=True)
-    return route_and_annotate(routed, full_langs)
+    return route_and_annotate(routed)

@@ -127,13 +127,13 @@ def payload_hex_expr(doc: Column, text: Column) -> Column:
     return F.when(doc % 2 == 0, png).otherwise(jpg)
 
 
-def image_payloads(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """Multimodal table (doc_id, payload binary) with REAL image headers."""
-    doc = F.col(id_col).cast("bigint")
+def image_payloads(df: DataFrame) -> DataFrame:
+    """(doc_id, text) -> multimodal table (doc_id, payload binary) with
+    REAL image headers."""
+    doc = F.col("doc_id").cast("bigint")
     return df.select(
         doc.alias("doc_id"),
-        F.unhex(payload_hex_expr(doc, F.col(text_col))).alias("payload"))
+        F.unhex(payload_hex_expr(doc, F.col("text"))).alias("payload"))
 
 
 def decode_meta(payloads: DataFrame) -> DataFrame:

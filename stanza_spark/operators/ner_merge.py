@@ -25,13 +25,13 @@ from pyspark.sql import DataFrame, functions as F, Window
 ROLE_WORDS = ("president", "director", "founder", "champion")
 
 
-def secondary_ner_expr(text_col="text"):
-    """Pure-SQL second tagger: S-ROLE for role nouns, S-YEAR for 4-digit
-    years, O otherwise."""
-    lw = F.lower(F.col(text_col))
+def secondary_ner_expr():
+    """Pure-SQL second tagger over ``text``: S-ROLE for role nouns, S-YEAR
+    for 4-digit years, O otherwise."""
+    lw = F.lower(F.col("text"))
     return (
         F.when(lw.isin(*ROLE_WORDS), F.lit("S-ROLE"))
-        .when(F.col(text_col).rlike("^[0-9]{4}$"), F.lit("S-YEAR"))
+        .when(F.col("text").rlike("^[0-9]{4}$"), F.lit("S-YEAR"))
         .otherwise(F.lit("O"))
     )
 
@@ -55,20 +55,17 @@ def _spans(df: DataFrame, tag_col: str) -> DataFrame:
     )
 
 
-def merge_ner_tags(words: DataFrame, primary: str = "ner",
-                   secondary_expr=None) -> DataFrame:
-    """words (+ computed secondary tags) -> words with
+def merge_ner_tags(words: DataFrame) -> DataFrame:
+    """words (+ secondary_ner_expr tags) -> words with
 
     * ``ner`` replaced by the merged tags (primary wins; secondary spans
       adopted only over all-O primary stretches), and
     * ``multi_ner`` = array(primary_tag, secondary_tag) per word
       (the reference's Token.multi_ner, doc.py:1305-1313).
     """
-    if secondary_expr is None:
-        secondary_expr = secondary_ner_expr()
-    w = words.withColumn("_ner2", secondary_expr)
+    w = words.withColumn("_ner2", secondary_ner_expr())
 
-    p_spans = _spans(w, primary).select(
+    p_spans = _spans(w, "ner").select(
         "url", "sent_id",
         F.col("first_word_id").alias("p_first"),
         F.col("last_word_id").alias("p_last"))
@@ -98,10 +95,10 @@ def merge_ner_tags(words: DataFrame, primary: str = "ner",
     )
     merged = (
         adopted.withColumn(
-            "multi_ner", F.array(F.col(primary), F.col("_ner2")))
+            "multi_ner", F.array(F.col("ner"), F.col("_ner2")))
         .withColumn(
-            primary,
-            F.when(F.col(primary) != "O", F.col(primary))
+            "ner",
+            F.when(F.col("ner") != "O", F.col("ner"))
             .when(F.col("_in_kept").isNotNull(), F.col("_ner2"))
             .otherwise(F.lit("O")))
         .drop("_ner2", "_in_kept")

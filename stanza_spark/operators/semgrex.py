@@ -35,9 +35,9 @@ greedy-select-then-require rule :func:`~stanza_spark.operators.triples
   ``rels`` and whose local attrs match is selected; the child's own
   nested clauses are then REQUIRED — a selected child that fails them
   drops the parent binding (inner join), it is never re-chosen;
-* ``>>``: same, over bounded-depth descendants (depth ≤ ``desc_depth``),
+* ``>>``: same, over bounded-depth descendants (depth ≤ ``DESC_DEPTH``),
   first by (depth, word order) — Semgrex's dominates operator as
-  ``desc_depth - 1`` extra sentence-key self-joins, no iteration state;
+  ``DESC_DEPTH - 1`` extra sentence-key self-joins, no iteration state;
 * ``<``: the parent's governor — requires the parent's OWN deprel in
   ``rels`` and the governor to match the target attrs (each word has
   exactly one governor, so no tie-break);
@@ -71,6 +71,8 @@ from pyspark.sql import DataFrame, functions as F, Window
 MAX_NEST_DEPTH = 4
 #: total-clause cap across the whole pattern
 MAX_CLAUSES = 16
+#: deepest descendant a ``>>`` clause reaches
+DESC_DEPTH = 3
 
 
 @dataclass(frozen=True)
@@ -242,9 +244,8 @@ def _attr_filter(df: DataFrame, node: SemNode) -> DataFrame:
 class _Compiler:
     """Binds pattern nodes to word-id columns over narrow self-joins."""
 
-    def __init__(self, words: DataFrame, desc_depth: int):
+    def __init__(self, words: DataFrame):
         self.words = words
-        self.desc_depth = desc_depth
         self.anon = 0
         self.id_col: dict[str, str] = {}  # name -> binding id column
 
@@ -285,7 +286,7 @@ class _Compiler:
                          .filter(F.col("_rn") == 1).drop("_rn"))
                 b = b.join(first, ["url", "sent_id", pcol], how)
             elif c.kind == "desc":
-                # bounded-depth closure: desc_depth-1 extra self-joins on
+                # bounded-depth closure: DESC_DEPTH-1 extra self-joins on
                 # the sentence key (Semgrex dominates), first match by
                 # (depth, word order)
                 edge = self.words.select(
@@ -297,7 +298,7 @@ class _Compiler:
                     F.col("_c").alias(ccol), "deprel", "upos", "lemma",
                     F.lit(1).alias("_depth"))
                 desc = level
-                for d in range(2, self.desc_depth + 1):
+                for d in range(2, DESC_DEPTH + 1):
                     level = (level.select(
                         "url", "sent_id", pcol,
                         F.col(ccol).alias("_p"))
@@ -335,13 +336,13 @@ class _Compiler:
 
 
 def match_semgrex(words: DataFrame, pattern: SemNode | str,
-                  desc_depth: int = 3, uniq: bool = False) -> DataFrame:
+                  uniq: bool = False) -> DataFrame:
     """General Semgrex matching over the words table.
 
     -> (url, sent_id, <root name> = lemma, <named node> = surface span …)
     one row per root binding satisfying every clause; named-node columns
     appear in pattern order; an OPTIONAL clause's named column is NULL
-    where it did not bind.  ``desc_depth`` bounds the ``>>`` closure;
+    where it did not bind.  ``DESC_DEPTH`` bounds the ``>>`` closure;
     ``uniq=True`` collapses duplicate output rows (the Semgrex CLI's
     uniq post-step) with one distinct over the named columns.
     """
@@ -349,7 +350,7 @@ def match_semgrex(words: DataFrame, pattern: SemNode | str,
 
     if isinstance(pattern, str):
         pattern = parse_semgrex(pattern)
-    comp = _Compiler(words, desc_depth)
+    comp = _Compiler(words)
     b = comp.compile(pattern)
     names = _names_in_order(pattern)
     named_nonroot = [n for n in names[1:]]

@@ -6,6 +6,7 @@ token counting (whitespace + the RE tokenizer), and k-min-hash document
 fingerprints (winnowing-style containment sketch).
 
 All pure Spark SQL — each is one narrow projection + at most one aggregation.
+Every operator reads a frame with ``doc_id`` and ``text`` columns.
 """
 
 from __future__ import annotations
@@ -40,8 +41,7 @@ def langid_clean_expr(col):
     return col
 
 
-def langid(df: DataFrame, spark: SparkSession, id_col: str = "doc_id",
-           text_col: str = "text") -> DataFrame:
+def langid(df: DataFrame, spark: SparkSession) -> DataFrame:
     """-> (doc_id, lang_pred, score): argmax stopword-hit count per
     language over the cleaned text; ties lexicographic; no hits -> 'und'.
 
@@ -58,7 +58,7 @@ def langid(df: DataFrame, spark: SparkSession, id_col: str = "doc_id",
     per-document label.  Zero exchanges now; identical output (one row per
     input row — every gated caller keys rows by a unique document id)."""
     langs = sorted(V.STOPWORDS)
-    words = F.split(F.lower(langid_clean_expr(F.col(text_col))),
+    words = F.split(F.lower(langid_clean_expr(F.col("text"))),
                     "[^\\p{L}]+")
     def _hits(ws):
         return F.size(F.filter(words, lambda w: w.isin(*ws)))
@@ -68,7 +68,7 @@ def langid(df: DataFrame, spark: SparkSession, id_col: str = "doc_id",
     lang_arr = F.array(*[F.lit(l) for l in langs])
     best = F.array_max(counts)
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.when(best > 0,
                F.element_at(lang_arr, F.array_position(counts, best)
                             .cast("int")))
@@ -77,15 +77,14 @@ def langid(df: DataFrame, spark: SparkSession, id_col: str = "doc_id",
     )
 
 
-def quality_scores(df: DataFrame, spark: SparkSession,
-                   id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame, spark: SparkSession) -> DataFrame:
     """-> per-doc curation features: char/token counts, mean token length,
     alpha & stopword ratios, and a coarse quality bucket."""
     en_stop = sorted(V.STOPWORDS["en"])
-    words = F.split(F.col(text_col), V.WS_SPLIT_RE)
+    words = F.split(F.col("text"), V.WS_SPLIT_RE)
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(text_col).alias("n_chars"),
+        "doc_id",
+        F.length("text").alias("n_chars"),
         words.alias("words"),
     ).select(
         "doc_id", "n_chars",
@@ -114,8 +113,7 @@ def quality_scores(df: DataFrame, spark: SparkSession,
     )
 
 
-def repetition_signals(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1, the
     standard web-corpus quality gates): per document,
 
@@ -135,12 +133,12 @@ def repetition_signals(df: DataFrame, id_col: str = "doc_id",
     algebraic aggregates keyed by document, so map-side partials absorb
     repetitive docs and no key can exceed one document's slots.  Both
     reproduce bit-for-bit in DuckDB (tests/test_textstats_repetition.py)."""
-    lines = F.filter(F.split(F.col(text_col), "\n"),
+    lines = F.filter(F.split(F.col("text"), "\n"),
                      lambda l: l != F.lit(""))
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         lines.alias("lines"),
-        F.split(F.col(text_col), V.WS_SPLIT_RE).alias("words"),
+        F.split(F.col("text"), V.WS_SPLIT_RE).alias("words"),
     ).select(
         "doc_id", "words",
         F.size("lines").alias("n_lines"),
@@ -184,20 +182,18 @@ def repetition_signals(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def token_counts(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """-> (doc_id, n_ws_tokens, n_re_tokens): whitespace split vs the
     BPE-ish RE tokenizer (vocab.TOKEN_RE)."""
     return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.col(text_col), V.WS_SPLIT_RE)).alias("n_ws_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(V.TOKEN_RE), 0))
+        "doc_id",
+        F.size(F.split(F.col("text"), V.WS_SPLIT_RE)).alias("n_ws_tokens"),
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(V.TOKEN_RE), 0))
          .alias("n_re_tokens"),
     )
 
 
-def redact(df: DataFrame, id_col: str = "doc_id",
-           text_col: str = "text") -> DataFrame:
+def redact(df: DataFrame) -> DataFrame:
     """Training-data PII hygiene pass: mask emails then URLs with typed
     placeholder tokens (emails FIRST — their domain tails would otherwise
     re-match the bare-domain URL form).  The regexes are the cross-engine
@@ -207,27 +203,28 @@ def redact(df: DataFrame, id_col: str = "doc_id",
     shuffles.
 
     -> (doc_id, redacted, n_emails, n_urls)."""
-    text = F.col(text_col)
+    text = F.col("text")
     n_emails = F.size(F.regexp_extract_all(text, F.lit(V.EMAIL_RE), 0))
     masked_email = F.regexp_replace(text, V.EMAIL_RE, "<EMAIL>")
     n_urls = F.size(F.regexp_extract_all(masked_email, F.lit(V.URL_RE), 0))
     redacted = F.regexp_replace(masked_email, V.URL_RE, "<URL>")
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         redacted.alias("redacted"),
         n_emails.alias("n_emails"),
         n_urls.alias("n_urls"))
 
 
+REP_DUPLINE_T = 0.3  # duplicate-line fraction that marks a doc repetitive
+
+
 def curation_flags(df: DataFrame, spark: SparkSession,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   lang: str = "en", rep_bigram_t: float = 0.15,
-                   rep_dupline_t: float = 0.3) -> DataFrame:
+                   rep_bigram_t: float = 0.15) -> DataFrame:
     """The composite corpus-curation decision a training-data pipeline
     applies per document: drop exact duplicates (keep first), drop
-    documents whose predicted language isn't ``lang``, drop low-quality
+    documents whose predicted language isn't English, drop low-quality
     documents, drop repetitive documents (Gopher-style: top-bigram mass
-    >= ``rep_bigram_t`` or duplicate-line fraction >= ``rep_dupline_t``)
+    >= ``rep_bigram_t`` or duplicate-line fraction >= ``REP_DUPLINE_T``)
     — in that precedence; survivors get reason 'ok'.
 
     -> (doc_id, reason in {duplicate, lang, quality, repetition, ok}, keep).
@@ -239,20 +236,18 @@ def curation_flags(df: DataFrame, spark: SparkSession,
     once the corpus is bucketed by document key (plans/pipeline.py)."""
     from .dedup import exact_dedup
 
-    uniq = exact_dedup(df, id_col, text_col) \
-        .select("doc_id", F.col("keep").alias("uniq"))
-    lp = langid(df, spark, id_col, text_col).select("doc_id", "lang_pred")
-    qb = quality_scores(df, spark, id_col, text_col) \
-        .select("doc_id", "quality_bucket")
-    rep = repetition_signals(df, id_col, text_col) \
+    uniq = exact_dedup(df).select("doc_id", F.col("keep").alias("uniq"))
+    lp = langid(df, spark).select("doc_id", "lang_pred")
+    qb = quality_scores(df, spark).select("doc_id", "quality_bucket")
+    rep = repetition_signals(df) \
         .select("doc_id", "dup_line_frac", "top_bigram_frac")
     j = uniq.join(lp, "doc_id").join(qb, "doc_id").join(rep, "doc_id")
     reason = (
         F.when(~F.col("uniq"), F.lit("duplicate"))
-        .when(F.col("lang_pred") != lang, F.lit("lang"))
+        .when(F.col("lang_pred") != "en", F.lit("lang"))
         .when(F.col("quality_bucket") == "low", F.lit("quality"))
         .when((F.col("top_bigram_frac") >= rep_bigram_t)
-              | (F.col("dup_line_frac") >= rep_dupline_t),
+              | (F.col("dup_line_frac") >= REP_DUPLINE_T),
               F.lit("repetition"))
         .otherwise(F.lit("ok")))
     return j.select(
@@ -260,16 +255,15 @@ def curation_flags(df: DataFrame, spark: SparkSession,
         (reason == "ok").cast("int").alias("keep"))
 
 
-def fingerprints(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", n: int = 3, k: int = 4) -> DataFrame:
-    """-> (doc_id, fingerprint): k smallest md5 shingle digests joined —
-    a containment sketch usable as a cheap near-dup blocking key."""
+def fingerprints(df: DataFrame) -> DataFrame:
+    """-> (doc_id, fingerprint): the 4 smallest md5 shingle digests joined
+    — a containment sketch usable as a cheap near-dup blocking key."""
     from .dedup import shingles
-    sh = shingles(df, id_col, text_col, n)
+    sh = shingles(df)
     return (
         sh.withColumn("d", F.md5("shingle"))
         .groupBy("doc_id")
         .agg(F.array_join(
-            F.slice(F.array_sort(F.collect_set("d")), 1, k), "|"
+            F.slice(F.array_sort(F.collect_set("d")), 1, 4), "|"
         ).alias("fingerprint"))
     )

@@ -38,7 +38,8 @@ from .operators.triples import extract_triples
 from .operators.linking import (alias_df, link_mentions,
                                 link_mentions_with_fallback)
 from .operators.canonicalize import canonicalize
-from .operators.graph import materialize_graph
+from .operators.graph import (PAGERANK_DAMPING, PAGERANK_ITERS,
+                              materialize_graph)
 
 DUCK = Dialect("duckdb")
 
@@ -894,13 +895,13 @@ def _obl_pattern_oracle(d: Dialect) -> str:
     return gold_triples_select(d, V.OBL_TRIPLES)
 
 
-def _pagerank_oracle(d: Dialect, iters: int = 5,
-                     damping: float = 0.85) -> str:
+def _pagerank_oracle(d: Dialect) -> str:
     """Unrolled power-iteration twin of operators.graph.pagerank over the
     grammar-derived graph (correlated inflow subquery per node — the
-    oracle favors obvious-correctness over plan quality)."""
+    oracle favors obvious-correctness over plan quality); it reads the
+    operator's iteration count and damping."""
     g = gold_graph_select(d)
-    base = repr(round(1.0 - damping, 12))
+    base = repr(round(1.0 - PAGERANK_DAMPING, 12))
     parts = [
         ("e AS (SELECT DISTINCT subj_canon AS src, obj_canon AS dst "
          f"FROM ({g}) WHERE subj_canon <> obj_canon)"),
@@ -908,15 +909,15 @@ def _pagerank_oracle(d: Dialect, iters: int = 5,
         "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
         "r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS r FROM nodes)",
     ]
-    for k in range(1, iters + 1):
+    for k in range(1, PAGERANK_ITERS + 1):
         parts.append(
-            f"r{k} AS (SELECT n.node, round({base} + {damping} * "
+            f"r{k} AS (SELECT n.node, round({base} + {PAGERANK_DAMPING} * "
             f"coalesce((SELECT sum(p.r / dg.deg) FROM e "
             f"JOIN r{k - 1} p ON p.node = e.src "
             f"JOIN deg dg ON dg.src = e.src "
             f"WHERE e.dst = n.node), 0), 9) AS r FROM nodes n)")
     return ("WITH " + ",\n".join(parts) +
-            f" SELECT node, round(r, 6) AS rank FROM r{iters}")
+            f" SELECT node, round(r, 6) AS rank FROM r{PAGERANK_ITERS}")
 
 
 def kg_oracles() -> dict[str, str]:

@@ -146,9 +146,11 @@ def q_curation_keep(spark, sf_dir):
 
 
 def q_langid(spark, sf_dir):
+    """langid returns one row per input row; ``url`` is unique per page,
+    so that is one row per document."""
     p = pages(spark, sf_dir, with_html=False) \
         .select(F.col("url").alias("doc_id"), "text")
-    return T.langid(p, spark, id_col="doc_id")
+    return T.langid(p, spark)
 
 
 def q_quality(spark, sf_dir):

@@ -30,8 +30,10 @@ def local_values_df(spark: SparkSession, rows, columns: list[str]):
 
     Supports str / int / float / None scalars and flat str lists
     (rendered as ``array(...)``); values are static code data
-    (vocab tables), escaped for SQL literals.  An empty ``rows`` and a
-    non-finite float (``repr`` would render nan/inf as an identifier)
+    (vocab tables), escaped for SQL literals.  An empty ``rows``, a
+    non-finite float (``repr`` would render nan/inf as an identifier) and
+    a session with ``spark.sql.parser.escapedStringLiterals=true`` (the
+    parser would then keep the backslash escapes, changing the values)
     raise ``ValueError``."""
     def lit(v):
         if v is None:
@@ -52,6 +54,11 @@ def local_values_df(spark: SparkSession, rows, columns: list[str]):
     if not rows:
         raise ValueError("local_values_df: rows is empty; VALUES needs at "
                          "least one row")
+    if spark.conf.get("spark.sql.parser.escapedStringLiterals",
+                      "false").lower() == "true":
+        raise ValueError("local_values_df: spark.sql.parser."
+                         "escapedStringLiterals is true; the escaped "
+                         "string literals would change value")
     values = ", ".join("(" + ", ".join(lit(v) for v in row) + ")"
                        for row in rows)
     cols = ", ".join(columns)

@@ -108,7 +108,7 @@ def parse_conllu(text: str, ignore_gapping: bool = False):
     return [d for d in docs if d["sentences"]]
 
 
-def render_parsed(docs, newdoc_comments: bool = False) -> str:
+def render_parsed(docs) -> str:
     """Parsed docs (parse_conllu output) -> CoNLL-U text, rebuilt from the
     structured fields: comments in original order, MWT range lines at
     their position, 10 tab fields per word.  render_parsed(parse_conllu(x))
@@ -116,8 +116,6 @@ def render_parsed(docs, newdoc_comments: bool = False) -> str:
     asserted against the reference golden in tests/test_conllu.py."""
     out = []
     for d in docs:
-        if newdoc_comments:
-            out.append(f"# newdoc id = {d['doc_id']}")
         for s in d["sentences"]:
             out.extend(s["comments"])
             mwt_at = {m["first"]: m for m in s["mwts"]}

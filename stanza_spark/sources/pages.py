@@ -28,8 +28,8 @@ def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def pages(spark: SparkSession, sf_dir: str, with_html: bool = True,
-          n_partitions: int | None = None) -> DataFrame:
+def pages(spark: SparkSession, sf_dir: str,
+          with_html: bool = True) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) + doc_id carried for tests.
 
     The local documents parquet is one input split — useless parallelism
@@ -41,10 +41,9 @@ def pages(spark: SparkSession, sf_dir: str, with_html: bool = True,
     measured ~0.3s/query of pure task overhead at 2x), docs are
     uniform-sized so the second wave bought no balance, and at cluster
     scale split count comes from the file layout anyway (guide §6
-    maxPartitionBytes), not from this simulation knob.
+    maxPartitionBytes), not from this simulated spread.
     """
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism
+    n_partitions = spark.sparkContext.defaultParallelism
     df = documents(spark, sf_dir).repartition(n_partitions, "doc_id").selectExpr(
         "doc_id",
         f"{url_expr(_SPARK)} AS url",

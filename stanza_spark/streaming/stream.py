@@ -52,17 +52,16 @@ def stream_pages_to_triples(spark: SparkSession, input_dir: str,
     )
 
 
-def windowed_event_counts(events_stream: DataFrame,
-                          window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Event-time tumbling-window counts with a watermark bounding state:
-    late events beyond the watermark are dropped, state for closed windows
-    is evicted — the streaming form of queries_relational.q_rel_hourly_counts."""
+def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
+    """Event-time 1-hour tumbling-window counts with a 2-hour watermark
+    bounding state: late events beyond the watermark are dropped, state
+    for closed windows is evicted — the streaming form of
+    queries_relational.q_rel_hourly_counts."""
     return (
         events_stream
         .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
@@ -119,8 +118,7 @@ def _dedup_group(key, pdf_iter, state):
     yield pd.DataFrame(rows, columns=["doc_id", "text_hash", "keep"])
 
 
-def stream_exact_dedup(docs_stream: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def stream_exact_dedup(docs_stream: DataFrame) -> DataFrame:
     """Streaming exact dedup over an unbounded document feed — the
     incremental-ingest form of operators.dedup.exact_dedup: keep =
     first-arrival wins (ties inside one micro-batch broken by doc_id),
@@ -130,8 +128,7 @@ def stream_exact_dedup(docs_stream: DataFrame, id_col: str = "doc_id",
     -> append stream of (doc_id, text_hash, keep)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    h = docs_stream.select(F.col(id_col).alias("doc_id"),
-                           F.md5(text_col).alias("text_hash"))
+    h = docs_stream.select("doc_id", F.md5("text").alias("text_hash"))
     return h.groupBy("text_hash").applyInPandasWithState(
         _dedup_group,
         outputStructType="doc_id bigint, text_hash string, keep boolean",

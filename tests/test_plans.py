@@ -472,6 +472,27 @@ def test_local_values_df_rejects_empty_and_non_finite(spark):
     assert local_values_df(spark, [("x", 1.5)], ["a", "b"]).collect()[0].b == 1.5
 
 
+def test_local_values_df_rejects_escaped_string_literals(spark):
+    """With ``spark.sql.parser.escapedStringLiterals=true`` the parser
+    keeps backslash escapes verbatim, so the hand-escaped quotes and
+    backslashes would silently change value: a clear ValueError."""
+    import pytest
+    from stanza_spark.session import local_values_df
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            local_values_df(spark, [("it's", "a\\b")], ["a", "b"])
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert local_values_df(spark, [("it's", "a\\b")], ["a", "b"]) \
+        .collect()[0] == ("it's", "a\\b")
+
+
 def test_minhash_narrow_features_match_exploded(spark):
     """r7: with_minhash_features (narrow array folds) must reproduce the
     exploded minhash_signatures chain bit-for-bit — same h32, same
