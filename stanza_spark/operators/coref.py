@@ -16,8 +16,8 @@ repeated surfaces of the same entity.
 
 Spark shape: both operators are Catalyst window plans over the mentions
 table — no Python node.  The candidate frame "strictly earlier
-sentences" is a range window over sent_id per url (``rangeBetween(
-unboundedPreceding, -1)``); for each candidate gender class (the
+sentences" is a range window over sent_id per url (``RANGE BETWEEN
+UNBOUNDED PRECEDING AND 1 PRECEDING``); for each candidate gender class (the
 genders of ``vocab.PERSON_GENDERS`` plus unknown) the latest candidate
 is ``max(struct(sent_id, first_word_id, key))`` over that frame.  The
 trained pair scorer becomes a (pronoun, class) score table on the
@@ -30,6 +30,16 @@ sent_id, first_word_id))``.  Every window keys on url, so the plan
 shuffles at most once, on url.  The per-document functions
 ``_resolve_doc`` / ``_resolve_pronouns_doc`` remain as the executable
 reference the tests compare the plans against.
+
+Each operator is ONE ``spark.sql(text, **frames)`` statement whose text
+depends only on constants (``PRONOUNS``, ``PERSON_GENDERS``, the score
+table) and is built at import.  The same plans written with the Column
+API cost about 1 000 py4j round trips and 350 ms of driver time per
+``kg_coref_chains`` build before any task ran; as SQL text, 34 round
+trips and about 130 ms (4-vCPU host, identical rows and physical
+operators).  The text nests subqueries instead of a WITH clause: the CTE
+form analysed slower, and every later select on its result re-walked the
+CTE definitions (43 vs 11 ms per select).
 """
 
 from __future__ import annotations
@@ -39,10 +49,10 @@ import pkgutil
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from .. import vocab as V
+from ..session import sql, sql_str
 
 PRONOUNS = {"he", "she", "it", "they"}
 
@@ -106,10 +116,11 @@ def _propn_count(surface: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Catalyst plans
+# Catalyst plans, as SQL text fixed at import
 # ---------------------------------------------------------------------------
 
-_COLS = ["url", "sent_id", "first_word_id", "mention", "type", "entity_id"]
+_COLS = "url, sent_id, first_word_id, mention, type, entity_id"
+_PRONOUNS_IN = "(" + ", ".join(map(sql_str, sorted(PRONOUNS))) + ")"
 
 
 def _score_table() -> dict[str, dict[str, float]]:
@@ -127,53 +138,93 @@ def _score_table() -> dict[str, dict[str, float]]:
 
 _SCORES = _score_table()
 
+# entity_gender as an expression: P<i> -> PERSON_GENDERS[i], else NULL
+# (try_cast: an id too long for an int is out of range too)
+_ID_RE = sql_str(r"^P([0-9]+)\z")
+_GENDER_IDX = f"try_cast(regexp_extract(entity_id, {_ID_RE}, 1) AS INT)"
+_GENDER = (f"CASE WHEN {_GENDER_IDX} < {len(V.PERSON_GENDERS)} THEN "
+           f"array({', '.join(map(sql_str, V.PERSON_GENDERS))})[{_GENDER_IDX}]"
+           f" END")
 
-def _gender_col(entity_id: Column) -> Column:
-    """entity_gender as an expression: P<i> -> PERSON_GENDERS[i], else
-    NULL (try_cast: an id too long for an int is out of range too)."""
-    i = F.regexp_extract(entity_id, r"^P([0-9]+)\z", 1).try_cast("int")
-    return F.when(i < len(V.PERSON_GENDERS),
-                  F.array(*map(F.lit, V.PERSON_GENDERS))[i])
+
+def _class_best(cls: str, table: dict[str, float]) -> str:
+    """The class's (score, latest candidate) struct, NULL when the
+    pronoun scores nothing against the class or the class has no
+    candidate yet.  Scores are DOUBLE literals (``D``): a bare decimal
+    would make greatest() compare DECIMALs."""
+    prons = ", ".join(map(sql_str, table))
+    score = " ".join(f"WHEN {sql_str(p)} THEN {s!r}D"
+                     for p, s in table.items())
+    return (f"CASE WHEN pron IN ({prons}) AND latest_{cls} IS NOT NULL THEN "
+            f"named_struct('score', CASE pron {score} END, "
+            f"'latest', latest_{cls}) END")
 
 
-def _resolve(m: DataFrame, candidate: Column, key: Column) -> DataFrame:
-    """Mentions -> the same rows plus ``is_pron``, ``key`` (NULL on
-    pronoun rows) and ``antecedent`` (the best-scoring candidate key from
-    a strictly earlier sentence; NULL when none clears the threshold or
-    the row is not a pronoun), in ONE window level.
+def _resolve_sql(candidate: str, key: str) -> str:
+    """Mentions ``{m}`` -> the same rows plus ``is_pron``, ``key`` (NULL
+    on pronoun rows) and ``antecedent`` (the best-scoring candidate key
+    from a strictly earlier sentence; NULL when none clears the threshold
+    or the row is not a pronoun), in ONE window level.
 
     Within a gender class every candidate scores the same, so the
     class's best is its latest; across classes the score decides and
     recency breaks ties — ``_best_antecedent`` as a greatest() over one
     struct per class."""
-    pron = F.lower("mention")
-    is_pron = pron.isin(*sorted(PRONOUNS))
-    # each row's candidate class (a gender, "unknown", or NULL for a
+    base = f"""SELECT {_COLS}, lower(mention) AS pron,
+       lower(mention) IN {_PRONOUNS_IN} AS is_pron
+FROM {{m}}"""
+    # each row's candidate class (a gender, 'unknown', or NULL for a
     # non-candidate), computed once below the window
-    rows = m.select(
-        *_COLS, pron.alias("pron"), is_pron.alias("is_pron"),
-        F.when(~is_pron, key).alias("key"),
-        F.when(candidate & ~is_pron,
-               F.coalesce(_gender_col(F.col("entity_id")),
-                          F.lit("unknown")))
-        .alias("cls"))
-    earlier = (Window.partitionBy("url").orderBy("sent_id")
-               .rangeBetween(Window.unboundedPreceding, -1))
-    latest = rows.select(*_COLS, "pron", "is_pron", "key", *(
-        F.max(F.when(F.col("cls") == cls, F.struct(
-            "sent_id", "first_word_id", "key"))).over(earlier)
-        .alias(f"latest_{cls}") for cls in _SCORES))
-    scored = []
-    for cls, table in _SCORES.items():
-        score = F.coalesce(*(F.when(F.col("pron") == p, F.lit(s))
-                             for p, s in table.items()))
-        cand = F.col(f"latest_{cls}")
-        scored.append(F.when(score.isNotNull() & cand.isNotNull(),
-                             F.named_struct(F.lit("score"), score,
-                                            F.lit("latest"), cand)))
-    best = scored[0] if len(scored) == 1 else F.greatest(*scored)
-    return latest.select(*_COLS, "is_pron", "key",
-                         best["latest"]["key"].alias("antecedent"))
+    cands = f"""SELECT *, CASE WHEN NOT is_pron THEN {key} END AS key,
+       CASE WHEN ({candidate}) AND NOT is_pron
+            THEN coalesce({_GENDER}, 'unknown') END AS cls
+FROM ({base}) base"""
+    per_class = ",\n       ".join(
+        f"max(CASE WHEN cls = {sql_str(cls)} THEN struct(sent_id, "
+        f"first_word_id, key) END) OVER earlier AS latest_{cls}"
+        for cls in _SCORES)
+    latest = f"""SELECT {_COLS}, pron, is_pron, key,
+       {per_class}
+FROM ({cands}) cands
+WINDOW earlier AS (PARTITION BY url ORDER BY sent_id
+                   RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"""
+    best = [_class_best(cls, table) for cls, table in _SCORES.items()]
+    best = best[0] if len(best) == 1 else f"greatest({', '.join(best)})"
+    return f"""SELECT {_COLS}, is_pron, key, {best}.latest.key AS antecedent
+FROM ({latest}) latest"""
+
+
+_ENT = "nullif(entity_id, '')"
+_WS_RE = sql_str(r"\s+")
+
+_MEMBERS = f"""SELECT url, sent_id, first_word_id, mention,
+       coalesce(key, antecedent) AS key,
+       CASE WHEN is_pron THEN 0 ELSE words END AS propn, words
+FROM (SELECT *, size(filter(split(mention, {_WS_RE}), t -> t != ''))
+                  AS words
+      FROM ({_resolve_sql("type = 'PERSON'",
+                          f"coalesce({_ENT}, lower(mention))")}) res) counted
+WHERE coalesce(key, antecedent) IS NOT NULL"""
+# chains are the keys with >= 2 members; representative: longest in
+# words, most PROPN, earliest (coref_processor.py:135-162)
+_SIZED = f"""SELECT url, sent_id, first_word_id, mention, key,
+       count(1) OVER doc_key AS n,
+       min(struct(-words, -propn, sent_id, first_word_id, mention))
+         OVER doc_key AS rep
+FROM ({_MEMBERS}) members
+WINDOW doc_key AS (PARTITION BY url, key)"""
+_CHAINS_SQL = f"""SELECT url,
+       CAST(dense_rank() OVER (PARTITION BY url ORDER BY key) - 1 AS INT)
+         AS chain_id,
+       mention AS member, CAST(sent_id AS INT) AS sent_id,
+       CAST(first_word_id AS INT) AS first_word_id,
+       rep.mention AS representative
+FROM ({_SIZED}) sized WHERE n >= 2"""
+
+_PRONOUNS_SQL = f"""SELECT url, CAST(sent_id AS INT) AS sent_id,
+       mention AS pronoun, antecedent AS antecedent_entity
+FROM ({_resolve_sql(f"type = 'PERSON' AND {_ENT} IS NOT NULL", _ENT)}) res
+WHERE is_pron"""
 
 
 def coref_chains(mentions_linked: DataFrame) -> DataFrame:
@@ -184,34 +235,7 @@ def coref_chains(mentions_linked: DataFrame) -> DataFrame:
     entity_id (null ok).  Every non-pronoun mention is a member keyed by
     its entity id, or its lowercased surface when unlinked; a pronoun
     joins its antecedent's chain; PERSON mentions are the candidates."""
-    ent = F.nullif(F.col("entity_id"), F.lit(""))
-    res = _resolve(mentions_linked,
-                   F.col("type") == "PERSON",
-                   F.coalesce(ent, F.lower("mention")))
-    words = F.size(F.filter(F.split("mention", r"\s+"), lambda t: t != ""))
-    members = res.select(
-        "url", "sent_id", "first_word_id", "mention",
-        F.coalesce("key", "antecedent").alias("key"),
-        F.when(F.col("is_pron"), 0).otherwise(words).alias("propn"),
-        words.alias("words"),
-    ).filter(F.col("key").isNotNull())
-    doc_key = Window.partitionBy("url", "key")
-    sized = members.select(
-        "url", "sent_id", "first_word_id", "mention", "key",
-        F.count(F.lit(1)).over(doc_key).alias("n"),
-        # longest in words, most PROPN, earliest (coref_processor.py:
-        # 135-162)
-        F.min(F.struct(-F.col("words"), -F.col("propn"), "sent_id",
-                       "first_word_id", "mention")).over(doc_key)
-        ["mention"].alias("representative"))
-    return sized.filter(F.col("n") >= 2).select(
-        "url",
-        (F.dense_rank().over(Window.partitionBy("url").orderBy("key"))
-         - 1).cast("int").alias("chain_id"),
-        F.col("mention").alias("member"),
-        F.col("sent_id").cast("int").alias("sent_id"),
-        F.col("first_word_id").cast("int").alias("first_word_id"),
-        "representative")
+    return sql(mentions_linked.sparkSession, _CHAINS_SQL, m=mentions_linked)
 
 
 def resolve_pronouns(mentions_linked: DataFrame) -> DataFrame:
@@ -220,13 +244,7 @@ def resolve_pronouns(mentions_linked: DataFrame) -> DataFrame:
     agreement-compatible PERSON mention (with an entity id) from a
     strictly earlier sentence, NULL when none clears the trained
     threshold; gated against the grammar oracle (kg_coref)."""
-    ent = F.nullif(F.col("entity_id"), F.lit(""))
-    res = _resolve(mentions_linked,
-                   (F.col("type") == "PERSON") & ent.isNotNull(), ent)
-    return res.filter("is_pron").select(
-        "url", F.col("sent_id").cast("int").alias("sent_id"),
-        F.col("mention").alias("pronoun"),
-        F.col("antecedent").alias("antecedent_entity"))
+    return sql(mentions_linked.sparkSession, _PRONOUNS_SQL, m=mentions_linked)
 
 
 # ---------------------------------------------------------------------------
@@ -307,25 +325,23 @@ def _resolve_pronouns_doc(pdf: pd.DataFrame) -> pd.DataFrame:
                                        "antecedent_entity"])
 
 
+_INPUT_SQL = f"""SELECT /*+ BROADCAST(a) */ m.url, m.sent_id, m.first_word_id,
+       m.mention, m.type, a.entity_id
+FROM {{mentions}} m
+LEFT JOIN (SELECT lower(alias) AS alias_l, entity_id FROM {{aliases}}) a
+  ON lower(m.mention) = a.alias_l
+UNION ALL
+SELECT url, sent_id, word_id AS first_word_id, text AS mention,
+       'PRON' AS type, CAST(NULL AS STRING) AS entity_id
+FROM {{words}}
+WHERE lower(text) IN {_PRONOUNS_IN} AND upos = 'PRON'"""
+
+
 def coref_input(words: DataFrame, mentions: DataFrame,
                 aliases: DataFrame) -> DataFrame:
     """Decoded mentions + their ``entity_id`` (a broadcast left join on
     the lowercased alias; unlinked mentions keep a NULL id), unioned with
     the pronoun tokens (He/She/It/They) from the words table — pronouns
     are not NER mentions but are coref anchors."""
-    linked = mentions.withColumn("alias_l", F.lower("mention")).join(
-        F.broadcast(aliases.select(F.lower("alias").alias("alias_l"),
-                                   "entity_id")),
-        "alias_l", "left").drop("alias_l")
-    prons = (
-        words.filter(F.lower(F.col("text")).isin(*sorted(PRONOUNS))
-                     & (F.col("upos") == "PRON"))
-        .select("url", "sent_id",
-                F.col("word_id").alias("first_word_id"),
-                F.col("text").alias("mention"),
-                F.lit("PRON").alias("type"),
-                F.lit(None).cast("string").alias("entity_id"))
-    )
-    m = linked.select("url", "sent_id", "first_word_id", "mention", "type",
-                      "entity_id")
-    return m.unionByName(prons)
+    return sql(words.sparkSession, _INPUT_SQL, words=words,
+               mentions=mentions, aliases=aliases)

@@ -15,7 +15,7 @@ from .operators import dedup as D
 from .operators import similarity as S
 from .operators import textstats as T
 from .operators import multimodal as M
-from .sources.pages import pages
+from .sources.pages import documents, pages
 from .synth import Dialect, pages_select, sentences_select
 from . import vocab as V
 
@@ -29,10 +29,9 @@ def _docs(spark, sf_dir):
     """The local documents parquet is ONE split — without a spread the
     whole narrow shingle/hash chain runs on a single task regardless of
     cores (same rationale as sources.pages: a real corpus arrives in
-    thousands of splits).  Repartition to 2x parallelism."""
+    thousands of splits).  Repartition to defaultParallelism."""
     n = spark.sparkContext.defaultParallelism
-    return spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .repartition(n, "doc_id")
+    return documents(spark, sf_dir).repartition(n, "doc_id")
 
 
 def _emb(spark, sf_dir):

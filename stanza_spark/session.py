@@ -13,7 +13,28 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal, backslashes and quotes
+    escaped.  The escapes hold only while
+    ``spark.sql.parser.escapedStringLiterals`` is false, which
+    :func:`sql` checks before it parses the text."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql(spark: SparkSession, text: str, **frames) -> DataFrame:
+    """``spark.sql(text, **frames)`` for SQL text whose string literals
+    were rendered by :func:`sql_str`.  A session with
+    ``spark.sql.parser.escapedStringLiterals=true`` would keep those
+    backslash escapes verbatim and silently change the values, so it
+    raises ``ValueError`` instead."""
+    if spark.conf.get("spark.sql.parser.escapedStringLiterals",
+                      "false").lower() == "true":
+        raise ValueError("spark.sql.parser.escapedStringLiterals is true; "
+                         "the escaped string literals would change value")
+    return spark.sql(text, **frames)
 
 
 def local_values_df(spark: SparkSession, rows, columns: list[str]):
@@ -32,14 +53,13 @@ def local_values_df(spark: SparkSession, rows, columns: list[str]):
     (rendered as ``array(...)``); values are static code data
     (vocab tables), escaped for SQL literals.  An empty ``rows``, a
     non-finite float (``repr`` would render nan/inf as an identifier) and
-    a session with ``spark.sql.parser.escapedStringLiterals=true`` (the
-    parser would then keep the backslash escapes, changing the values)
-    raise ``ValueError``."""
+    a session with ``spark.sql.parser.escapedStringLiterals=true`` (see
+    :func:`sql`) raise ``ValueError``."""
     def lit(v):
         if v is None:
             return "CAST(NULL AS STRING)"
         if isinstance(v, str):
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            return sql_str(v)
         if isinstance(v, bool):
             return "true" if v else "false"
         if isinstance(v, float) and not math.isfinite(v):
@@ -54,15 +74,10 @@ def local_values_df(spark: SparkSession, rows, columns: list[str]):
     if not rows:
         raise ValueError("local_values_df: rows is empty; VALUES needs at "
                          "least one row")
-    if spark.conf.get("spark.sql.parser.escapedStringLiterals",
-                      "false").lower() == "true":
-        raise ValueError("local_values_df: spark.sql.parser."
-                         "escapedStringLiterals is true; the escaped "
-                         "string literals would change value")
     values = ", ".join("(" + ", ".join(lit(v) for v in row) + ")"
                        for row in rows)
     cols = ", ".join(columns)
-    return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
+    return sql(spark, f"SELECT * FROM VALUES {values} AS t({cols})")
 
 
 def get_spark(app: str = "stanza-spark", cores: int | None = None,
