@@ -20,7 +20,7 @@ models (reference contract: row counts match).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 # execution order (reference PIPELINE_NAMES, core.py:22-31 + registry)
 PIPELINE_NAMES = ["tokenize", "mwt", "pos", "lemma", "constituency",
@@ -96,44 +96,8 @@ class Pipeline:
         from .operators.annotate import annotate
         variant = ("pretokenized" if self.pretokenized
                    else "no_ssplit" if self.no_ssplit else None)
-        pages = self._pages(docs)
-        # bind to locals: the foreachBatch/mapInPandas closures must not
-        # capture `self` (it holds the SparkSession — unpicklable on
-        # workers, SPARK-5063)
-        procs = self.processors
-        dec = self.decoder
-        if variant == "pretokenized":
-            w = annotate(pages, en_only=False, pretokenized=True,
-                         processors=procs, decoder=self.decoder)
-        elif variant == "no_ssplit":
-            # route through the registered variant
-            from .operators import annotate as A
-
-            def batches(it):
-                import pandas as pd
-                for pdf in it:
-                    out = []
-                    for url, lng, text in zip(pdf["url"], pdf["lang"],
-                                              pdf["text"]):
-                        for sid, ss, se, words in A.annotate_sentences(
-                                text, variant="no_ssplit",
-                                processors=procs, decoder=dec):
-                            for wi, wd in enumerate(words):
-                                out.append((url, lng, sid, ss, se,
-                                            wd["token_id"], wi + 1,
-                                            wd["is_mwt"], wd["text"],
-                                            wd["start"], wd["end"],
-                                            wd["upos"], wd["xpos"],
-                                            wd["feats"], wd["lemma"],
-                                            wd["head"], wd["deprel"],
-                                            wd["ner"]))
-                    yield pd.DataFrame(out, columns=A.WORD_COLUMNS)
-
-            w = pages.select("url", "lang", "text").mapInPandas(
-                batches, schema=A.WORDS_SCHEMA)
-        else:
-            w = annotate(pages, en_only=False, processors=procs,
-                         decoder=self.decoder)
+        w = annotate(self._pages(docs), en_only=False, variant=variant,
+                     processors=self.processors, decoder=self.decoder)
         if "morphseg" in self.processors:
             from .operators.morphseg import segment_words
             w = segment_words(w)

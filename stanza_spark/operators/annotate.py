@@ -764,7 +764,9 @@ def split_pretokenized(text: str):
 # --- processor-variant registry (op 22) -----------------------------------
 # The reference's register_processor_variant plugin point
 # (/root/reference/stanza/pipeline/processor.py:160-180,286-293) lets a
-# drop-in tokenizer replace the model.  Here a variant is any callable
+# drop-in tokenizer replace the model.  Here the registry is the
+# TOKENIZER_VARIANTS dict below, selected per call by
+# annotate(..., variant=name): a variant is any callable
 # text -> [(sent_start, sent_end, [(tok, start, end), ...])]; the rest of
 # the pipeline (MWT/POS/lemma/NER/depparse) is agnostic to which one ran.
 def split_no_ssplit(text: str):
@@ -786,13 +788,7 @@ TOKENIZER_VARIANTS = {
 }
 
 
-def register_tokenizer_variant(name: str, splitter) -> None:
-    """Register a drop-in sentence-splitter/tokenizer under ``name`` —
-    selectable via annotate(..., variant=name)."""
-    TOKENIZER_VARIANTS[name] = splitter
-
-
-def annotate_sentences(text: str, pretokenized: bool = False,
+def annotate_sentences(text: str,
                        max_token_len: int = MAX_TOKEN_LEN_DEFAULT,
                        variant: str | None = None, lang: str = "en",
                        processors=None, decoder: str = "grammar"):
@@ -801,6 +797,11 @@ def annotate_sentences(text: str, pretokenized: bool = False,
     dicts (token_id/is_mwt/text/start/end/upos/xpos/feats/lemma/head/
     deprel/ner) — the shared core of annotate_page and the CoNLL-U
     renderer.
+
+    ``variant`` (None = the language's own splitter) names a
+    TOKENIZER_VARIANTS entry — ``'pretokenized'`` or ``'no_ssplit'``
+    (op 12) — that replaces sentence splitting and tokenization only;
+    every later stage still runs with ``lang``.
 
     ``decoder='mst'`` swaps the fixed NER/depparse grammars for the
     general decode kernels (operators.decode: single-root Chu-Liu/Edmonds
@@ -830,8 +831,6 @@ def annotate_sentences(text: str, pretokenized: bool = False,
         parse_fn, ner_fn = parse_sentence, tag_ner
     if variant is not None:
         splitter = TOKENIZER_VARIANTS[variant]
-    elif pretokenized:
-        splitter = split_pretokenized
     elif lang in LANG_PACKS and LANG_PACKS[lang].segmenter != "standard":
         # the pack's segmenter kernel: zh max-match over unspaced CJK,
         # ja mixed-script (katakana runs + dict), vi syllable grouping,
@@ -877,12 +876,12 @@ def annotate_sentences(text: str, pretokenized: bool = False,
 
 
 def annotate_page(url: str, lang: str, text: str,
-                  pretokenized: bool = False, processors=None,
+                  variant: str | None = None, processors=None,
                   decoder: str = "grammar"):
     """-> list of word-row tuples (WORD_COLUMNS order)."""
     rows = []
     for sent_id, s_start, s_end, words in annotate_sentences(
-            text, pretokenized=pretokenized, lang=lang,
+            text, variant=variant, lang=lang,
             processors=processors, decoder=decoder):
         for w_i, w in enumerate(words):
             rows.append((
@@ -894,25 +893,27 @@ def annotate_page(url: str, lang: str, text: str,
     return rows
 
 
-def _make_annotate_batches(pretokenized: bool, processors=None,
+def _make_annotate_batches(variant: str | None, processors=None,
                            decoder: str = "grammar"):
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for url, lang, text in zip(pdf["url"], pdf["lang"], pdf["text"]):
                 out.extend(annotate_page(url, lang, text,
-                                         pretokenized=pretokenized,
+                                         variant=variant,
                                          processors=processors,
                                          decoder=decoder))
             yield pd.DataFrame(out, columns=WORD_COLUMNS)
     return _batches
 
 
-def annotate(pages_df, en_only: bool = True, pretokenized: bool = False,
+def annotate(pages_df, en_only: bool = True, variant: str | None = None,
              processors=None, decoder: str = "grammar"):
     """pages(url, text, lang) -> flat words table via one narrow
-    mapInPandas pass (zero shuffle).  ``pretokenized=True`` switches to
-    the whitespace/newline tokenization bypass (op 12); ``processors``
+    mapInPandas pass (zero shuffle).  ``variant`` picks a
+    TOKENIZER_VARIANTS splitter (op 12: ``'pretokenized'`` is the
+    whitespace/newline tokenization bypass, ``'no_ssplit'`` one sentence
+    per paragraph) in place of the language's own; ``processors``
     (None = all) skips unconfigured stages inside the UDF — unrequested
     annotators never execute (api.Pipeline threads its configured set
     through here); ``decoder='mst'`` runs the MST/Viterbi kernels in
@@ -921,52 +922,8 @@ def annotate(pages_df, en_only: bool = True, pretokenized: bool = False,
     if en_only:
         df = df.filter(df.lang == "en")
     return df.mapInPandas(
-        _make_annotate_batches(pretokenized, processors, decoder),
+        _make_annotate_batches(variant, processors, decoder),
         schema=WORDS_SCHEMA)
-
-
-FROM_TOKENS_SCHEMA = (
-    "url string, sent_id int, word_id int, is_mwt boolean, text string, "
-    "upos string, xpos string, feats string, lemma string, head int, "
-    "deprel string, ner string"
-)
-
-
-def annotate_from_tokens(words_df):
-    """Run the non-tokenize processors (pos/lemma/ner/depparse) over
-    already-tokenized sentences — the process_conllu path (op 4,
-    /root/reference/stanza/pipeline/core.py:433-442): ingest a CoNLL-U
-    fixture with sources.conllu.read_conllu, re-annotate its token
-    stream.  Grouped per sentence (applyInPandas) because depparse is a
-    whole-sentence function."""
-    from pyspark.sql import functions as F
-
-    def one_sentence(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("word_id")
-        words = []
-        for t, mwt in zip(pdf["text"], pdf["is_mwt"]):
-            upos, xpos, feats, lemma = tag_word(t)
-            words.append({"text": t, "is_mwt": bool(mwt), "upos": upos,
-                          "xpos": xpos, "feats": feats, "lemma": lemma})
-        tags, _ = tag_ner(words)
-        for w, tag in zip(words, tags):
-            w["ner"] = tag
-        parse_sentence(words)
-        url = pdf["url"].iloc[0]
-        sid = pdf["sent_id"].iloc[0]
-        return pd.DataFrame(
-            [(url, sid, i + 1, w["is_mwt"], w["text"], w["upos"],
-              w["xpos"], w["feats"], w["lemma"], w["head"], w["deprel"],
-              w["ner"]) for i, w in enumerate(words)],
-            columns=["url", "sent_id", "word_id", "is_mwt", "text",
-                     "upos", "xpos", "feats", "lemma", "head", "deprel",
-                     "ner"])
-
-    return (
-        words_df.select("url", "sent_id", "word_id", "is_mwt", "text")
-        .groupBy("url", "sent_id")
-        .applyInPandas(one_sentence, schema=FROM_TOKENS_SCHEMA)
-    )
 
 
 # ---------------------------------------------------------------------------

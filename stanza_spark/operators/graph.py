@@ -102,94 +102,3 @@ def pagerank(edges: DataFrame) -> DataFrame:
                             * F.coalesce("inflow", F.lit(0.0)), 9).alias("r"))
         ).localCheckpoint(eager=True)
     return ranks.select("node", F.round("r", 6).alias("rank"))
-
-
-def _recover_merge_dirs(existing_dir: str) -> None:
-    """Crash recovery for the swap protocol below.  Invariant: at every
-    instant at least one of existing/backup holds a complete committed
-    table (_SUCCESS present).  A leftover tmp is always discardable (the
-    merge that wrote it never committed); a leftover backup with no
-    committed existing table means we died mid-swap — roll back."""
-    import os
-    import shutil
-
-    tmp = existing_dir.rstrip("/") + ".__merge_tmp__"
-    bak = existing_dir.rstrip("/") + ".__merge_bak__"
-    committed = os.path.exists(os.path.join(existing_dir, "_SUCCESS"))
-    if os.path.exists(bak):
-        if committed:
-            shutil.rmtree(bak)          # swap completed; drop the backup
-        else:
-            if os.path.exists(existing_dir):
-                shutil.rmtree(existing_dir)
-            os.rename(bak, existing_dir)  # roll back to pre-merge snapshot
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-
-
-def merge_graph_edges(spark, existing_dir: str, new_triples: DataFrame,
-                      aliases: DataFrame, batch_id: str | None = None) -> DataFrame:
-    """Incremental upsert — the parquet equivalent of Iceberg's
-    ``MERGE INTO graph_edges USING new ON keys WHEN MATCHED THEN UPDATE
-    support = support + delta WHEN NOT MATCHED THEN INSERT`` (SURVEY §2.3
-    C5).  Reads the existing table (if any), aggregates the delta, merges
-    via full outer join on the canonical key.
-
-    Crash-safety: commit = write tmp -> rename existing to backup -> rename
-    tmp to existing -> delete backup; `_recover_merge_dirs` restores a
-    consistent committed table from any interruption point (the Iceberg
-    snapshot-commit stand-in).
-
-    Idempotence: pass a stable ``batch_id`` per delta; merged batch ids are
-    recorded in a ``_batches`` ledger inside the table directory and a
-    re-submitted batch is a no-op instead of double-counting support.
-
-    Returns the merged DataFrame (already persisted at ``existing_dir``).
-    """
-    import json
-    import os
-    import shutil
-
-    _recover_merge_dirs(existing_dir)
-    tmp = existing_dir.rstrip("/") + ".__merge_tmp__"
-    bak = existing_dir.rstrip("/") + ".__merge_bak__"
-    ledger = os.path.join(existing_dir, "_batches")
-
-    committed = os.path.exists(os.path.join(existing_dir, "_SUCCESS"))
-    batches: list[str] = []
-    if committed and os.path.exists(ledger):
-        with open(ledger) as f:
-            batches = json.load(f)
-    if batch_id is not None and batch_id in batches:
-        return spark.read.parquet(existing_dir)  # replay: already merged
-
-    delta = materialize_graph(new_triples, aliases) \
-        .withColumnRenamed("support", "delta_support")
-    if committed:
-        existing = spark.read.parquet(existing_dir)
-        merged = (
-            existing.join(delta, ["subj_canon", "pred", "obj_canon"], "full")
-            .select(
-                "subj_canon", "pred", "obj_canon",
-                (F.coalesce("support", F.lit(0))
-                 + F.coalesce("delta_support", F.lit(0))).alias("support"))
-        )
-    else:
-        merged = delta.withColumnRenamed("delta_support", "support")
-    merged.write.mode("overwrite").parquet(tmp)
-    # ALWAYS carry the existing ledger forward (even when this merge has no
-    # batch_id): otherwise an unledgered merge would commit a table with no
-    # _batches file, erasing replay protection for earlier batches — a
-    # re-submitted old batch would then double-count support (ADVICE r2).
-    if batch_id is not None:
-        batches = batches + [batch_id]
-    with open(os.path.join(tmp, "_batches"), "w") as f:
-        json.dump(batches, f)
-    # atomic-enough swap: the pre-merge table survives as `bak` until the
-    # new table is fully in place; every intermediate state is recoverable
-    if os.path.exists(existing_dir):
-        os.rename(existing_dir, bak)
-    os.rename(tmp, existing_dir)
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-    return spark.read.parquet(existing_dir)

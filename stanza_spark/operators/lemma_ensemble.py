@@ -11,9 +11,8 @@ beam-search seq2seq — the wiring, not the network, is the operator); a
 final union restores the full table.  Dict hits never pay the Python
 round-trip — asserted by plan inspection in tests/test_plans.py.
 
-The same split also serves MWT expansion (mwt/trainer.py:179-189): the
-dict path covers every contraction in MWT_DICT, the miss path falls back
-to identity.
+MWT expansion (mwt/trainer.py:168-189) is not a relational stage: the
+annotator expands contractions inline (``annotate.expand_token``).
 """
 
 from __future__ import annotations
@@ -93,45 +92,3 @@ def ensemble_lemmas(words: DataFrame, lemma_dict: DataFrame) -> DataFrame:
                "upos string, lemma_pred string",
     ).withColumnRenamed("lemma_pred", "lemma")
     return hits.unionByName(expensive)
-
-
-def mwt_dict_df(spark: SparkSession) -> DataFrame:
-    from ..session import local_values_df
-    rows = [(tok, list(parts)) for tok, parts in sorted(V.MWT_DICT.items())]
-    return local_values_df(spark, rows, ["mtok", "parts"])
-
-
-def expand_mwt_relational(tokens: DataFrame, mwt_dict: DataFrame) -> DataFrame:
-    """(url, sent_id, token_id, token) -> (url, sent_id, token_id,
-    word_pos, word, is_mwt): the MWT dict path as broadcast join +
-    posexplode (mwt/trainer.py:168-177); dict misses pass through as
-    single words (the ensemble fallback, trainer.py:179-189).  The Arrow
-    annotator's inline expansion is equivalence-tested against this."""
-    d = F.broadcast(mwt_dict)
-    t = tokens.withColumn("_lt", F.lower("token"))
-    hits = (
-        t.join(d, t._lt == d.mtok, "inner")
-        .select(
-            "url", "sent_id", "token_id", "token",
-            F.posexplode(
-                # preserve original casing on the first part (annotate.
-                # expand_token rule)
-                F.when(
-                    F.substring("token", 1, 1) ==
-                    F.upper(F.substring("token", 1, 1)),
-                    F.concat(
-                        F.array(F.initcap(F.element_at("parts", 1))),
-                        F.slice("parts", 2, 100)))
-                .otherwise(F.col("parts"))
-            ).alias("word_pos", "word"))
-        .select("url", "sent_id", "token_id", "word_pos", "word",
-                F.lit(True).alias("is_mwt"))
-    )
-    misses = (
-        t.join(d, t._lt == d.mtok, "left_anti")
-        .select("url", "sent_id", "token_id",
-                F.lit(0).alias("word_pos"),
-                F.col("token").alias("word"),
-                F.lit(False).alias("is_mwt"))
-    )
-    return hits.unionByName(misses)

@@ -73,16 +73,6 @@ def parse_image_dims(payload: bytes) -> tuple[str, int, int] | None:
     return None
 
 
-def decode_image(payload: bytes) -> tuple[str, int, int]:
-    """Header-level decode of one image payload (raises on non-image
-    bytes).  Pixel-level decode would slot in here with PIL/ffmpeg; the
-    header path is fully implemented and library-free."""
-    dims = parse_image_dims(payload)
-    if dims is None:
-        raise ValueError("payload is neither a PNG nor a JPEG stream")
-    return dims
-
-
 def _meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = []

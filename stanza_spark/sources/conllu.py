@@ -1,5 +1,6 @@
-"""CoNLL-U codec (SURVEY §2.2 I1-I3): read fixture files into the flat
-words schema, render annotated words back to CoNLL-U text.
+"""CoNLL-U codec (SURVEY §2.2 I1-I3): parse CoNLL-U text into sentence
+dicts and render it back byte-for-byte, and render one annotated document
+in the reference's ``{:C}`` format.
 
 Format per the reference implementation (/root/reference/stanza/utils/
 conll.py:19-124: 10 tab-separated fields, ``#`` comment lines, ``n-m``
@@ -7,13 +8,12 @@ multi-word-token ranges) with the reference's misc extensions
 (``start_char=..|end_char=..|ner=..``, doc.py:1003-1124 and the golden
 rendering in tests/pipeline/test_english_pipeline.py:89-122).
 
-Reading is a driver-side fixture utility (test corpora are small); writing
-is a pure Spark aggregation over the words table — no UDF.
+All three are driver-side string functions: ``render_document`` is what
+``api.Pipeline.conllu`` returns.  There is no DataFrame ingest or writer
+(the reference's process_conllu path is not provided).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
 
 FIELDS = ["id", "form", "lemma", "upos", "xpos", "feats",
           "head", "deprel", "deps", "misc"]
@@ -138,46 +138,6 @@ def render_parsed(docs) -> str:
     return "\n".join(out).rstrip("\n")
 
 
-def read_conllu(spark: SparkSession, path: str) -> DataFrame:
-    """Fixture file -> DataFrame in (a subset of) the words schema."""
-    with open(path) as f:
-        docs = parse_conllu(f.read())
-    rows = []
-    for d in docs:
-        for sid, s in enumerate(d["sentences"]):
-            for w in s["words"]:
-                rows.append((d["doc_id"], sid, w["id"], bool(w["is_mwt"]),
-                             w["form"], w["lemma"], w["upos"], w["xpos"],
-                             w["feats"], int(w["head"]), w["deprel"],
-                             w["misc"]))
-    return spark.createDataFrame(rows, schema=(
-        "url string, sent_id int, word_id int, is_mwt boolean, text string, "
-        "lemma string, upos string, xpos string, feats string, head int, "
-        "deprel string, misc string"))
-
-
-def read_conllu_empties(spark: SparkSession, path: str) -> DataFrame:
-    """Empty (enhanced-only) ellipsis nodes of a fixture as a relation:
-    (url, sent_id, anchor_id, empty_index, form, lemma, upos, xpos, feats,
-    deps, misc) — the Sentence.empty_words surface (doc.py:782-801) in the
-    natural relational shape; the node's CoNLL-U id is
-    ``anchor_id.empty_index`` and its DEPS column carries its enhanced
-    heads (empty nodes have no basic head by definition)."""
-    with open(path) as f:
-        docs = parse_conllu(f.read())
-    rows = []
-    for d in docs:
-        for sid, s in enumerate(d["sentences"]):
-            for e in s["empties"]:
-                c = e["cols"]
-                rows.append((d["doc_id"], sid, e["anchor"], e["index"],
-                             c[1], c[2], c[3], c[4], c[5], c[8], c[9]))
-    return spark.createDataFrame(rows, schema=(
-        "url string, sent_id int, anchor_id int, empty_index int, "
-        "text string, lemma string, upos string, xpos string, "
-        "feats string, deps string, misc string"))
-
-
 def escape_misc_space(space: str) -> str:
     """The reference's MISC whitespace escaping
     (/root/reference/stanza/models/common/utils.py:693-713)."""
@@ -258,59 +218,3 @@ def render_document(text: str) -> str:
                 "|".join(misc)]))
         blocks.append("\n".join(lines))
     return "\n\n".join(blocks)
-
-
-def render_conllu_docs(pages_df: DataFrame) -> DataFrame:
-    """pages -> (url, conllu): one reference-format ``{:C}`` rendering per
-    document (narrow Arrow pass; ``# newdoc id`` marks the document like
-    the multi-doc writer, conll.py:153-192)."""
-    import pandas as pd
-    from typing import Iterator
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = [(url, f"# newdoc id = {url}\n" + render_document(t))
-                   for url, t in zip(pdf["url"], pdf["text"])]
-            yield pd.DataFrame(out, columns=["url", "conllu"])
-
-    return pages_df.select("url", "text").mapInPandas(
-        batches, schema="url string, conllu string")
-
-
-def render_conllu(words: DataFrame, include_meta: bool = True) -> DataFrame:
-    """words (annotate.WORDS_SCHEMA) -> one row per sentence:
-    (url, sent_id, conllu string) — rendering is pure Spark SQL:
-    per-word line via concat, per-sentence assembly via sorted
-    collect_list + array_join (misc carries the reference's
-    start_char/end_char/ner extensions)."""
-    line = F.concat_ws(
-        "\t",
-        F.col("word_id").cast("string"), F.col("text"), F.col("lemma"),
-        F.col("upos"), F.col("xpos"), F.col("feats"),
-        F.col("head").cast("string"), F.col("deprel"), F.lit("_"),
-        F.concat(
-            F.lit("start_char="), F.col("start_char").cast("string"),
-            F.lit("|end_char="), F.col("end_char").cast("string"),
-            F.lit("|ner="), F.col("ner")),
-    )
-    per_sent = (
-        words.withColumn("line", line)
-        .groupBy("url", "sent_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("word_id", "line"))),
-                    lambda s: s["line"]),
-                "\n").alias("body"),
-            F.min("sent_start").alias("ss"),
-            F.min("sent_end").alias("se"),
-        )
-    )
-    if include_meta:
-        header = F.concat(F.lit("# sent_id = "),
-                          F.col("sent_id").cast("string"), F.lit("\n"))
-        return per_sent.select(
-            "url", "sent_id",
-            F.concat(header, F.col("body"), F.lit("\n")).alias("conllu"))
-    return per_sent.select("url", "sent_id",
-                           F.concat(F.col("body"), F.lit("\n")).alias("conllu"))

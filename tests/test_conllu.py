@@ -1,36 +1,14 @@
-"""CoNLL-U codec tests: golden rendering of the reference document
-(field-level values from test_english_pipeline.py:89-122) and read
-round-trip."""
+"""CoNLL-U codec tests: golden {:C} rendering of the reference document
+(test_english_pipeline.py:89-122) and parse/render round-trips."""
 
-from pyspark.sql import functions as F
-
-from stanza_spark.operators.annotate import annotate
-from stanza_spark.sources.conllu import render_conllu, parse_conllu
+from stanza_spark.sources.conllu import parse_conllu, render_document
 
 EN_DOC = ("Barack Obama was born in Hawaii.  He was elected president in "
           "2008.  Obama attended Harvard.")
 
-# golden CoNLL-U body for sentence 2 (reference
-# test_english_pipeline.py:116-122; SpaceAfter annotations not rendered)
-GOLD_SENT2 = """1\tObama\tObama\tPROPN\tNNP\tNumber=Sing\t2\tnsubj\t_\tstart_char=69|end_char=74|ner=S-PERSON
-2\tattended\tattend\tVERB\tVBD\tMood=Ind|Number=Sing|Person=3|Tense=Past|VerbForm=Fin\t0\troot\t_\tstart_char=75|end_char=83|ner=O
-3\tHarvard\tHarvard\tPROPN\tNNP\tNumber=Sing\t2\tobj\t_\tstart_char=84|end_char=91|ner=S-ORG
-4\t.\t.\tPUNCT\t.\t_\t2\tpunct\t_\tstart_char=91|end_char=92|ner=O"""
 
-
-def test_render_matches_reference_golden(spark):
-    df = spark.createDataFrame([("u", "en", EN_DOC)],
-                               "url string, lang string, text string")
-    out = render_conllu(annotate(df), include_meta=False) \
-        .filter(F.col("sent_id") == 2).collect()
-    assert out[0].conllu.rstrip("\n") == GOLD_SENT2
-
-
-def test_parse_round_trip(spark):
-    df = spark.createDataFrame([("u", "en", EN_DOC)],
-                               "url string, lang string, text string")
-    rendered = render_conllu(annotate(df)).orderBy("sent_id").collect()
-    text = "# doc_id = u\n" + "\n".join(r.conllu for r in rendered)
+def test_parse_round_trip():
+    text = "# doc_id = u\n" + render_document(EN_DOC)
     docs = parse_conllu(text)
     assert len(docs) == 1 and docs[0]["doc_id"] == "u"
     sents = docs[0]["sentences"]
@@ -84,7 +62,6 @@ def test_pipeline_render_equals_reference_golden_bytes():
     {:C} reproduces the reference's EN_DOC_CONLLU_GOLD BYTE-FOR-BYTE —
     comments, constituency trees, sentiment, SpaceAfter/SpacesAfter
     escapes, misc field order, everything."""
-    from stanza_spark.sources.conllu import render_document
     assert render_document(EN_DOC) == EN_DOC_CONLLU_GOLD
 
 
@@ -100,15 +77,6 @@ def test_constituency_golden_trees():
         "(ROOT (S (NP (NNP Obama)) (VP (VBD attended) (NP (NNP Harvard)))"
         " (. .)))",
     ]
-
-
-def test_render_docs_spark_op(spark):
-    from stanza_spark.sources.conllu import render_conllu_docs
-    df = spark.createDataFrame([("u", "en", EN_DOC)],
-                               "url string, lang string, text string")
-    rows = render_conllu_docs(df).collect()
-    assert len(rows) == 1
-    assert rows[0].conllu == "# newdoc id = u\n" + EN_DOC_CONLLU_GOLD
 
 
 def test_render_parse_golden_byte_roundtrip():
@@ -131,27 +99,6 @@ def test_render_parse_mwt_byte_roundtrip():
 4\tgo\tgo\tVERB\tVB\t_\t0\troot\t_\t_
 5\t.\t.\tPUNCT\t.\t_\t4\tpunct\t_\t_"""
     assert render_parsed(parse_conllu(text)) == text
-
-
-def test_process_conllu_reannotates_ingested_tokens(spark, tmp_path):
-    """op 4 full path (core.py:433-442): parse CoNLL-U, run the
-    non-tokenize processors over the ingested token stream — annotations
-    must equal the direct-pipeline output on the same document."""
-    from stanza_spark.operators.annotate import annotate_from_tokens
-    from stanza_spark.sources.conllu import read_conllu
-
-    fx = tmp_path / "golden.conllu"
-    fx.write_text("# doc_id = u\n" + EN_DOC_CONLLU_GOLD + "\n")
-    ingested = read_conllu(spark, str(fx))
-    got = {(r.sent_id, r.word_id):
-           (r.text, r.upos, r.lemma, r.head, r.deprel, r.ner)
-           for r in annotate_from_tokens(ingested).collect()}
-    df = spark.createDataFrame([("u", "en", EN_DOC)],
-                               "url string, lang string, text string")
-    want = {(r.sent_id, r.word_id):
-            (r.text, r.upos, r.lemma, r.head, r.deprel, r.ner)
-            for r in annotate(df).collect()}
-    assert got == want
 
 
 def test_parse_mwt_and_comments():
@@ -219,14 +166,3 @@ def test_empty_node_before_first_word_round_trips():
     assert render_parsed(parse_conllu(fx)) == fx
 
 
-def test_read_conllu_empties_relation(spark, tmp_path):
-    from stanza_spark.sources.conllu import read_conllu, read_conllu_empties
-    fx = tmp_path / "empty.conllu"
-    fx.write_text("# doc_id = u\n" + ESTONIAN_EMPTY_DEPS + "\n")
-    words = read_conllu(spark, str(fx))
-    assert words.count() == 7                 # overt words only
-    e = read_conllu_empties(spark, str(fx)).collect()
-    assert len(e) == 1
-    r = e[0]
-    assert (r.anchor_id, r.empty_index, r.text, r.lemma, r.upos,
-            r.deps) == (5, 1, "panna", "panema", "VERB", "0:root")

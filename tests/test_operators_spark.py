@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 from stanza_spark.operators.html import wrap_html_expr, extract_text_expr
-from stanza_spark.operators.annotate import annotate, WORDS_SCHEMA
+from stanza_spark.operators.annotate import annotate
 from stanza_spark.operators.tokenize_sql import sentences_from_pages, tokens_sql
 from stanza_spark.operators.mentions import decode_mentions
 from stanza_spark.operators.triples import extract_triples
@@ -382,6 +382,23 @@ def test_pipeline_facade_no_ssplit_and_pretokenized(spark):
                                                         "opal"]
 
 
+def test_pipeline_facade_no_ssplit_keeps_lang(spark):
+    """no_ssplit replaces only sentence splitting: the German pipeline
+    still expands im -> in dem and tags as German, as it does without
+    no_ssplit."""
+    from stanza_spark.api import Pipeline
+    text = "Er wohnt im Haus."
+
+    def words(nlp):
+        return [(r.token_id, r.text, r.is_mwt, r.upos)
+                for r in nlp(text).orderBy("sent_id", "word_id").collect()]
+
+    default = words(Pipeline(spark, lang="de"))
+    assert (3, "in", True, "ADP") in default
+    assert (3, "dem", True, "DET") in default
+    assert words(Pipeline(spark, lang="de", no_ssplit=True)) == default
+
+
 def test_morphseg_rules_and_spark_parity(spark):
     """op 21 stand-in: affix segmentation — Python twin, the Catalyst
     expression and edge cases agree."""
@@ -422,7 +439,7 @@ def test_tokenizer_variant_registry():
     analog) replaces sentence splitting; downstream annotation is
     agnostic."""
     from stanza_spark.operators.annotate import (
-        annotate_sentences, register_tokenizer_variant, TOKENIZER_VARIANTS)
+        annotate_sentences, TOKENIZER_VARIANTS)
 
     def semicolon_splitter(text):
         sents = []
@@ -439,7 +456,7 @@ def test_tokenizer_variant_registry():
             pos += len(chunk) + 1
         return sents
 
-    register_tokenizer_variant("semicolon", semicolon_splitter)
+    TOKENIZER_VARIANTS["semicolon"] = semicolon_splitter
     try:
         sents = list(annotate_sentences("alpha beta; gamma delta",
                                         variant="semicolon"))
@@ -449,25 +466,6 @@ def test_tokenizer_variant_registry():
         assert len(list(annotate_sentences("alpha beta; gamma"))) == 1
     finally:
         TOKENIZER_VARIANTS.pop("semicolon", None)
-
-
-def test_documents_json_nested(spark):
-    """I4: nested Document.to_dict-style JSON per document."""
-    import json
-    from stanza_spark.sources.serialize import documents_json
-    doc = "Barack Obama was born in Hawaii.  Obama attended Harvard."
-    df = spark.createDataFrame([("u", "en", doc)],
-                               "url string, lang string, text string")
-    out = documents_json(annotate(df)).collect()
-    assert len(out) == 1
-    sents = json.loads(out[0].json)
-    assert len(sents) == 2
-    w0 = sents[0][0]
-    assert (w0["id"], w0["text"], w0["lemma"], w0["upos"],
-            w0["head"], w0["deprel"], w0["ner"]) == \
-        (1, "Barack", "Barack", "PROPN", 4, "nsubj:pass", "B-PERSON")
-    assert [w["text"] for w in sents[1]] == ["Obama", "attended",
-                                             "Harvard", "."]
 
 
 def test_enhanced_deps_column(spark):
@@ -485,22 +483,20 @@ def test_enhanced_deps_column(spark):
 
 
 def test_mwt_relational_expansion_matches_annotator(spark):
-    """The broadcast-join + posexplode MWT dict path must equal the Arrow
-    annotator's inline expansion (tuple ids, casing rule, miss
-    fall-through)."""
-    from stanza_spark.operators.lemma_ensemble import (
-        expand_mwt_relational, mwt_dict_df)
+    """The annotator's MWT expansion on Spark: contractions become one
+    token id shared by its words (tuple ids), the first word keeps the
+    token's casing, and a dict miss passes through as one word."""
     doc = "She can't go. Don't stop. It works."
     df = spark.createDataFrame([("u", "en", doc)],
                                "url string, lang string, text string")
-    w = annotate(df)
-    want = [(r.sent_id, r.token_id, r.text, r.is_mwt)
-            for r in w.orderBy("sent_id", "word_id").collect()]
-    toks = tokens_sql(sentences_from_pages(df))
-    got_rows = expand_mwt_relational(toks, mwt_dict_df(spark)) \
-        .orderBy("sent_id", "token_id", "word_pos").collect()
-    got = [(r.sent_id, r.token_id, r.word, r.is_mwt) for r in got_rows]
-    assert got == want
+    got = [(r.sent_id, r.token_id, r.text, r.is_mwt)
+           for r in annotate(df).orderBy("sent_id", "word_id").collect()]
+    assert got == [
+        (0, 1, "She", False), (0, 2, "ca", True), (0, 2, "n't", True),
+        (0, 3, "go", False), (0, 4, ".", False),
+        (1, 1, "Do", True), (1, 1, "n't", True), (1, 2, "stop", False),
+        (1, 3, ".", False),
+        (2, 1, "It", False), (2, 2, "works", False), (2, 3, ".", False)]
 
 
 def test_signlsh_recall_vs_brute_force(spark):
@@ -516,66 +512,6 @@ def test_signlsh_recall_vs_brute_force(spark):
               for r in signlsh_topk(emb, qids, 5).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.8, f"sign-LSH recall {recall:.3f} < 0.8"
-
-
-def test_merge_graph_edges_incremental(spark, tmp_path):
-    """Two incremental merges must equal one full materialize (the
-    Iceberg-MERGE analog, C5)."""
-    from stanza_spark.operators.annotate import triples_narrow
-    from stanza_spark.operators.graph import merge_graph_edges, materialize_graph
-    out = str(tmp_path / "graph_edges")
-    p = pages(spark, SF_SMOKE, with_html=False)
-    first = triples_narrow(p.filter(F.col("doc_id") % 2 == 0))
-    second = triples_narrow(p.filter(F.col("doc_id") % 2 == 1))
-    a = alias_df(spark)
-    merge_graph_edges(spark, out, first, a)
-    merged = merge_graph_edges(spark, out, second, a)
-    got = {(r.subj_canon, r.pred, r.obj_canon): r.support
-           for r in merged.collect()}
-    want = {(r.subj_canon, r.pred, r.obj_canon): r.support
-            for r in materialize_graph(triples_narrow(p), a).collect()}
-    assert got == want
-
-
-def test_merge_graph_edges_replay_and_crash_recovery(spark, tmp_path):
-    """(a) Re-submitting a batch_id is a no-op (no double-counted support);
-    (b) a crash between the two commit renames leaves a recoverable state:
-    the next merge rolls back to the pre-merge snapshot and applies
-    cleanly."""
-    import os
-    import shutil
-    from stanza_spark.operators.annotate import triples_narrow
-    from stanza_spark.operators.graph import (merge_graph_edges,
-                                              materialize_graph)
-    out = str(tmp_path / "graph_edges")
-    p = pages(spark, SF_SMOKE, with_html=False)
-    first = triples_narrow(p.filter(F.col("doc_id") % 2 == 0))
-    second = triples_narrow(p.filter(F.col("doc_id") % 2 == 1))
-    a = alias_df(spark)
-
-    merge_graph_edges(spark, out, first, a, batch_id="b0")
-    merge_graph_edges(spark, out, first, a, batch_id="b0")  # replay
-    merged = merge_graph_edges(spark, out, second, a, batch_id="b1")
-    got = {(r.subj_canon, r.pred, r.obj_canon): r.support
-           for r in merged.collect()}
-    want = {(r.subj_canon, r.pred, r.obj_canon): r.support
-            for r in materialize_graph(triples_narrow(p), a).collect()}
-    assert got == want
-
-    # simulate dying right after `existing -> backup` (the window the old
-    # rmtree+rename code lost data in): table dir missing, backup present
-    os.rename(out, out + ".__merge_bak__")
-    merged2 = merge_graph_edges(spark, out, second, a, batch_id="b1")
-    got2 = {(r.subj_canon, r.pred, r.obj_canon): r.support
-            for r in merged2.collect()}
-    assert got2 == want  # rolled back to post-b1 snapshot; b1 replay no-op
-    assert not os.path.exists(out + ".__merge_bak__")
-    # and a stale tmp dir is discarded, not mistaken for the table
-    shutil.copytree(out, out + ".__merge_tmp__")
-    merged3 = merge_graph_edges(spark, out, second, a, batch_id="b1")
-    got3 = {(r.subj_canon, r.pred, r.obj_canon): r.support
-            for r in merged3.collect()}
-    assert got3 == want
 
 
 def test_coref_propn_tiebreak_and_same_sentence(spark):
@@ -613,27 +549,6 @@ def test_coref_propn_tiebreak_and_same_sentence(spark):
            for r in resolve_pronouns(m).collect()}
     assert res[("b", "He")] is None       # same sentence: never
     assert res[("c", "She")] == "P1"      # earlier sentence + agrees: yes
-
-
-def test_merge_ledger_survives_unledgered_merge(spark, tmp_path):
-    """ADVICE r2: a merge WITHOUT batch_id between two ledgered merges must
-    carry the ledger forward — replaying an already-merged batch afterwards
-    stays a no-op instead of double-counting support."""
-    from stanza_spark.operators.annotate import triples_narrow
-    from stanza_spark.operators.graph import merge_graph_edges
-    out = str(tmp_path / "graph_edges")
-    p = pages(spark, SF_SMOKE, with_html=False)
-    first = triples_narrow(p.filter(F.col("doc_id") % 2 == 0))
-    second = triples_narrow(p.filter(F.col("doc_id") % 2 == 1))
-    a = alias_df(spark)
-    merge_graph_edges(spark, out, first, a, batch_id="b0")
-    merge_graph_edges(spark, out, second, a)          # NO batch_id
-    want = {(r.subj_canon, r.pred, r.obj_canon): r.support
-            for r in spark.read.parquet(out).collect()}
-    merged = merge_graph_edges(spark, out, first, a, batch_id="b0")  # replay
-    got = {(r.subj_canon, r.pred, r.obj_canon): r.support
-           for r in merged.collect()}
-    assert got == want
 
 
 def test_langid_emoji_cleanup(spark):
@@ -827,9 +742,7 @@ def test_image_header_codec_parses_real_bytes():
     from raw bytes, including a JPEG whose SOF0 sits behind APP0 and COM
     segments the walker must skip by length field."""
     import struct
-    import pytest as _pytest
-    from stanza_spark.operators.multimodal import (decode_image,
-                                                   parse_image_dims)
+    from stanza_spark.operators.multimodal import parse_image_dims
 
     png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
            + struct.pack(">II", 640, 480) + b"\x08\x06\x00\x00\x00"
@@ -846,11 +759,8 @@ def test_image_header_codec_parses_real_bytes():
             + b"\x03\x01\x11\x00\x02\x11\x01\x03\x11\x01"
             + b"\xff\xd9")
     assert parse_image_dims(jpeg) == ("jpeg", 1920, 1080)
-    assert decode_image(jpeg) == ("jpeg", 1920, 1080)
 
     assert parse_image_dims(b"not an image at all") is None
-    with _pytest.raises(ValueError):
-        decode_image(b"plain text payload")
 
 
 def test_image_payload_roundtrip_spark(spark):

@@ -2,7 +2,6 @@
 (exactly-once across restarts through the checkpoint) and watermarked
 windowed aggregation."""
 
-import os
 import shutil
 
 from pyspark.sql import functions as F
@@ -10,7 +9,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 from stanza_spark.sources.pages import pages
 from stanza_spark.streaming.stream import (
-    stream_pages_to_triples, stream_windowed_counts)
+    stream_pages_to_triples, windowed_event_counts)
 from stanza_spark.queries import q_kg_triples
 
 
@@ -69,7 +68,17 @@ def test_windowed_counts_with_watermark(spark, tmp_path):
         "*"))  # empty dir
     spark.read.parquet(f"{SF_SMOKE}/events.parquet") \
         .repartition(4).write.mode("overwrite").parquet(src)
-    q = stream_windowed_counts(spark, src, query_name="evc_test")
+    stream = (
+        spark.readStream
+        .schema("event_id bigint, ts timestamp_ntz, user_id bigint, "
+                "event_type string, value double, props string")
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
+    # append mode into a memory sink: only watermark-closed windows emit
+    q = (windowed_event_counts(stream)
+         .writeStream.format("memory").queryName("evc_test")
+         .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(300)
     got = spark.sql("SELECT * FROM evc_test")
     # append mode emits only watermark-closed windows; with availableNow
@@ -86,118 +95,6 @@ def test_windowed_counts_with_watermark(spark, tmp_path):
         batch.alias("b"), ["window_start", "event_type"], "left")
     assert j.filter(F.col("g.n") != F.col("b.n")).count() == 0
     assert got.count() > 0
-
-
-def test_stateful_sessionize_stream(spark, tmp_path):
-    """applyInPandasWithState sessionizer over a file stream: closed
-    sessions must match the batch window-function sessionizer (all but
-    each user's final, still-open session)."""
-    from stanza_spark.streaming.stream import stateful_sessionize
-    from stanza_spark.queries_relational import q_rel_sessionize
-
-    src = str(tmp_path / "ev")
-    spark.read.parquet(f"{SF_SMOKE}/events.parquet") \
-        .write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream
-        .schema("event_id bigint, ts timestamp_ntz, user_id bigint, "
-                "event_type string, value double, props string")
-        .parquet(src)
-    )
-    out = str(tmp_path / "sessions")
-    q = (stateful_sessionize(stream)
-         .writeStream.format("memory").queryName("sess_test")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(45)
-    q.stop()
-    got = {(r.user_id, int(r.session_start)): r.n_events
-           for r in spark.sql("SELECT * FROM sess_test").collect()}
-
-    batch = q_rel_sessionize(spark, SF_SMOKE).collect()
-    # drop each user's last (open) session — the stream can't close it
-    last = {}
-    for r in batch:
-        last[r.user_id] = max(last.get(r.user_id, 0), r.session_id)
-    import datetime
-    def us(s):
-        return int(datetime.datetime.strptime(
-            s, "%Y-%m-%d %H:%M:%S.%f").replace(
-            tzinfo=datetime.timezone.utc).timestamp() * 1_000_000)
-    closed = {(r.user_id, us(r.session_start)): r.n_events
-              for r in batch if r.session_id != last[r.user_id]}
-    allsess = {(r.user_id, us(r.session_start)): r.n_events
-               for r in batch}
-    # every gap-closed session must be emitted; the final (open) session
-    # per user may or may not flush depending on timeout timing
-    assert set(closed) <= set(got) <= set(allsess)
-    assert all(got[k] == allsess[k] for k in got)
-    assert len(got) > 0
-
-
-def test_stream_exact_dedup_state_survives_batches_and_restart(spark, tmp_path):
-    """Streaming exact dedup: the digest counter lives in the state store,
-    so a duplicate arriving in a LATER micro-batch (or after a query
-    restart from the checkpoint) is dropped while the first arrival was
-    kept."""
-    from stanza_spark.streaming.stream import stream_exact_dedup
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    chk = str(tmp_path / "chk")
-
-    first = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, "alpha")],
-        "doc_id long, text string")
-    # ONE file per wave: keep arrival order deterministic (the operator's
-    # contract is first-ARRIVAL wins; multiple part-files would stream in
-    # listing order, not doc_id order)
-    first.coalesce(1).write.mode("overwrite").parquet(src)
-
-    def drain():
-        s = (spark.readStream.schema("doc_id long, text string")
-             .option("maxFilesPerTrigger", 1).parquet(src))
-        q = (stream_exact_dedup(s)
-             .writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", chk)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(300)
-
-    drain()
-    got = {r.doc_id: r.keep for r in spark.read.parquet(out).collect()}
-    assert got == {1: True, 2: True, 3: False}
-
-    # restart from the checkpoint with new arrivals: 'alpha'/'beta' are
-    # already-seen (state restored), 'gamma' is new
-    second = spark.createDataFrame(
-        [(4, "alpha"), (5, "gamma"), (6, "beta")],
-        "doc_id long, text string")
-    second.coalesce(1).write.mode("append").parquet(src)
-    drain()
-    got = {r.doc_id: r.keep for r in spark.read.parquet(out).collect()}
-    assert got == {1: True, 2: True, 3: False,
-                   4: False, 5: True, 6: False}
-
-
-def test_dedup_group_sorts_across_chunks():
-    """_dedup_group must buffer every pandas chunk of a digest group
-    before choosing the kept row: a group split across chunks with
-    doc_ids out of order must still keep the global min doc_id
-    (ADVICE r3 — per-chunk sorting kept arrival order across chunks)."""
-    import pandas as pd
-    from stanza_spark.streaming.stream import _dedup_group
-
-    class FakeState:
-        exists = False
-        def update(self, v):
-            self.get = v
-            self.exists = True
-
-    chunks = iter([pd.DataFrame({"doc_id": [7, 9]}),
-                   pd.DataFrame({"doc_id": [2, 8]})])
-    st = FakeState()
-    (out,) = list(_dedup_group(("h",), chunks, st))
-    assert out["doc_id"].tolist() == [2, 7, 8, 9]
-    assert out["keep"].tolist() == [True, False, False, False]
-    assert st.get == (4,)
 
 
 def test_stream_gate_raises_on_timeout(tmp_path):
