@@ -41,7 +41,7 @@ import json
 import math
 import os
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 ALPHA = 0.5
 

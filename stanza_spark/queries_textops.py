@@ -9,7 +9,7 @@ hash chain is md5-hex-prefix arithmetic expressible in both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from .operators import dedup as D
 from .operators import similarity as S

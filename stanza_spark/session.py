@@ -5,7 +5,10 @@ splitting + dynamic coalescing), Arrow enabled for every pandas UDF path,
 shuffle partitioning sized to the cores in use (on a real cluster
 ``spark.sql.shuffle.partitions`` scales with executor count; every shuffle
 in this engine keys on url-hash so the setting is a pure throughput knob,
-not a correctness one).
+not a correctness one).  The Python workers run on the installed
+pyspark through :mod:`stanza_spark.worker_daemon`, not on Spark's
+``pyspark.zip``: with the zip, every task paid 0.17-0.46 s re-reading
+archive directories before its UDF ran.
 """
 
 from __future__ import annotations
@@ -14,6 +17,8 @@ import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def sql_str(s: str) -> str:
@@ -111,6 +116,12 @@ def get_spark(app: str = "stanza-spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # Python workers import pyspark from its installed package rather
+        # than Spark's pyspark.zip (see worker_daemon); the daemon imports
+        # this package at start, so its parent directory goes on the
+        # workers' path whatever the caller's cwd
+        .config("spark.python.daemon.module", "stanza_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # heap sized to a 4-vCPU / 15 GB host: the JVM grows its heap a
         # step per job up to this cap, so a larger cap only buys RSS
         # (perfbench curation_dedup at local[4], medians of 5 seeds:
@@ -118,7 +129,6 @@ def get_spark(app: str = "stanza-spark", cores: int | None = None,
         # 2.12 s); the sf0.01 oracle gates and the test suite run in 2g
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "2g"))
-        .config("spark.driver.maxResultSize", "4g")
         # This VM anti-scales when GC thread pools are sized from the 32
         # vCPUs (G1's concurrent threads + 32 mutator threads interfere
         # catastrophically: measured 4x slowdown on pure map work).

@@ -72,11 +72,14 @@ def pages(spark: SparkSession, sf_dir: str,
     Common-Crawl corpus arrives in thousands of splits; this stands in
     for that).  Everything after the repartition is narrow.  ONE wave of
     cores (r7; was 2x): every task pays a fixed Python-boundary cost in
-    the Arrow annotate passes (worker round-trip + batch plumbing —
-    measured ~0.3s/query of pure task overhead at 2x), docs are
-    uniform-sized so the second wave bought no balance, and at cluster
-    scale split count comes from the file layout anyway (guide §6
-    maxPartitionBytes), not from this simulated spread.
+    the Arrow annotate passes, docs are uniform-sized so the second wave
+    bought no balance, and at cluster scale split count comes from the
+    file layout anyway (guide §6 maxPartitionBytes), not from this
+    simulated spread.  Most of that per-task cost was pyspark's
+    ``importlib.invalidate_caches()`` re-reading Spark's archives
+    (0.17-0.46 s per task); on the installed pyspark
+    (``worker_daemon``) a task enters its UDF about 0.1 s after the
+    action starts, measured at local[4] on a 4-vCPU host.
     """
     n_partitions = spark.sparkContext.defaultParallelism
     df = documents(spark, sf_dir).repartition(n_partitions, "doc_id").selectExpr(

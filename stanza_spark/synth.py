@@ -96,8 +96,8 @@ def slot_expr(d: Dialect, slot: str, I: str) -> str:
     if slot == "P":
         return d.idx(d.arr(V.PERSONS), _ix("p", I))
     if slot == "PC":
-        # corrupted person surface: name + doubled final char (vocab.
-        # corrupt_name) — misses the exact alias dict, fuzzy-links back
+        # corrupted person surface: the full person name with its final
+        # character doubled — misses the exact alias dict, fuzzy-links back
         p = d.idx(d.arr(V.PERSONS), _ix("p", I))
         return f"concat({p}, substr({p}, length({p}), 1))"
     if slot == "O":

@@ -232,11 +232,6 @@ DEEP_TRIPLES = {
     9: ("P", "elect", "in", None, None),
 }
 
-# Deterministic surface corruption for slot PC (fuzzy-linking exercise):
-# the full person name with its final character doubled.
-def corrupt_name(name: str) -> str:
-    return name + name[-1]
-
 # Sentiment lexicon (op 19: per-sentence classifier stand-in;
 # 0=negative 1=neutral 2=positive like the reference's sentiment labels,
 # golden `# sentiment = 1` in test_english_pipeline.py:92).

@@ -1,7 +1,8 @@
 """Results must not depend on the caller's working directory.  From a
 directory outside the repo, ``__spark_entry__`` ships the package to the
-Python workers as a zip, so every module that reads a committed resource
-has to read it through the package loader, not a path built from
+Python workers as a zip, and the workers of a session not made by
+``get_spark`` import it from there, so every module that reads a committed
+resource has to read it through the package loader, not a path built from
 ``__file__`` (which then points inside the zip)."""
 
 import os

@@ -58,8 +58,6 @@ ALLOWED = {
         "ROADMAP item 7 owns it",
     ("stanza_spark/operators/ner_tags.py", "merge_tags"):
         "the span-level relational merge (ner_merge) is checked against it",
-    ("stanza_spark/vocab.py", "corrupt_name"):
-        "states synth's PC-slot rule in Python; no caller (ROADMAP item 7)",
 }
 
 

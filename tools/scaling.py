@@ -128,9 +128,6 @@ def main():
     if n < 1:
         sys.exit("tools/scaling.py needs at least 4 usable cores")
     pair = (n, 4 * n)
-    # the Python workers import the package too, from any working directory
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
     workdir = tempfile.mkdtemp(prefix="scaling-")
     try:
         big = prepare_input(sf_dir, mult, workdir)
