@@ -25,15 +25,22 @@ os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 
 def _ensure_package(spark: SparkSession) -> None:
+    """Ship the package as a zip to the workers of a session the caller
+    built.  A ``get_spark`` session's workers already import it from the
+    checkout (``spark.executorEnv.PYTHONPATH`` names it), so it gets no
+    zip."""
     sc = spark.sparkContext
     if getattr(sc, "_stanza_spark_shipped", False):
         return
-    import shutil
-    import tempfile
-    zdir = tempfile.mkdtemp(prefix="stanza-spark-pkg-")
-    zpath = shutil.make_archive(os.path.join(zdir, "stanza_spark"), "zip",
-                                root_dir=_REPO, base_dir="stanza_spark")
-    sc.addPyFile(zpath)
+    worker_path = sc.getConf().get("spark.executorEnv.PYTHONPATH", "")
+    if _REPO not in worker_path.split(os.pathsep):
+        import shutil
+        import tempfile
+        zdir = tempfile.mkdtemp(prefix="stanza-spark-pkg-")
+        zpath = shutil.make_archive(os.path.join(zdir, "stanza_spark"),
+                                    "zip", root_dir=_REPO,
+                                    base_dir="stanza_spark")
+        sc.addPyFile(zpath)
     sc._stanza_spark_shipped = True
 
 
@@ -105,7 +112,6 @@ DRIVER_GATES = [
 # evidence is recorded, never whether it exists.
 ROTATED_GATES = [
     "kg_pages",            # trivial scan (kg_extract_text subsumes)
-    "kg_triples_narrow",   # same oracle as kg_triples (narrow plan)
     "kg_triples_mst",      # same oracle as kg_triples (decode kernels,
                            # separately gated via kg_deps_full_mst)
     "kg_deps_full",        # same oracle as kg_deps_full_mst

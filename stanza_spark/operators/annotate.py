@@ -928,13 +928,15 @@ def annotate(pages_df, en_only: bool = True, variant: str | None = None,
 
 # ---------------------------------------------------------------------------
 # Narrow-path triple extraction: the whole pages -> triples chain in ONE
-# mapInPandas pass (zero shuffle).  Physically this is the production plan
-# for 100 TB — annotation and pattern-matching are sentence-local, so
-# nothing needs an exchange until the corpus-wide graph aggregate
-# (the reference exploits the same locality in UDProcessor.bulk_process,
-# processor.py:242-260).  Semantics are identical to the relational path
-# (operators.triples SQL joins); parity is asserted in tests and both are
-# gated against the same DuckDB oracle.
+# mapInPandas pass (zero shuffle).  This is the only plan for
+# default-pattern triples: kg_triples, the KGPipeline triples stage, the
+# stream's foreachBatch and the graph/pagerank gates all run it.
+# Annotation and pattern-matching are sentence-local, so nothing needs an
+# exchange until the corpus-wide graph aggregate (the reference exploits
+# the same locality in UDProcessor.bulk_process, processor.py:242-260).
+# The relational path (operators.triples SQL joins) serves declared
+# patterns; its default-pattern case stays gated through kg_ssurgeon and
+# the extract_triples_multi parity case (tests/test_parity_rotated.py).
 # ---------------------------------------------------------------------------
 
 _TRIPLE_PRIO = {"obj": 1, "xcomp": 2, "obl": 3}

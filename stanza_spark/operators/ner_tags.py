@@ -1,12 +1,11 @@
 """NER tag-scheme algorithms with reference-identical semantics:
 
-* ``to_bio2`` / ``bio2_to_bioes`` — scheme coercion used at fixture
-  ingest (/root/reference/stanza/models/ner/utils.py:49-125);
 * ``decode_from_bioes`` — the sequential span decode
-  (ner/utils.py:218-264), kept as the unit anchor the distributed SQL
-  decode (operators.mentions) is differential-tested against, including
-  the reference's malformed-sequence behavior (leading I-, unclosed B-,
-  mixed types resolve to the *last* tag's type);
+  (stanza/models/ner/utils.py:218-264), kept as the unit anchor the
+  distributed SQL decode (operators.mentions) is differential-tested
+  against, including the reference's malformed-sequence behavior
+  (leading I-, unclosed B-, mixed types resolve to the *last* tag's
+  type);
 * ``merge_tags`` — multi-model merge with earlier-model precedence
   (ner/utils.py:267-314): later models only fill regions that are
   entirely O in the running merge, and malformed later sequences raise.
@@ -17,44 +16,6 @@ decode (mentions.py) and the span-level relational merge (ner_merge.py).
 """
 
 from __future__ import annotations
-
-_EMPTY = {"O", ""}
-
-
-def to_bio2(tags: list) -> list:
-    """BIO1 -> BIO2: an I- that opens an entity (sentence start, after O,
-    or after a different type) becomes B- (ner/utils.py:66-88)."""
-    out = []
-    for i, tag in enumerate(tags):
-        if tag in _EMPTY or tag is None:
-            out.append(tag)
-        elif tag[0] == "I" and (
-                i == 0 or tags[i - 1] == "O"
-                or tags[i - 1] is None or tags[i - 1][1:] != tag[1:]):
-            out.append("B" + tag[1:])
-        else:
-            out.append(tag)
-    return out
-
-
-def bio2_to_bioes(tags: list) -> list:
-    """BIO2 -> BIOES (ner/utils.py:94-125); underscore variants (B_/I_)
-    are normalized to dashes like the reference."""
-    out = []
-    for i, tag in enumerate(tags):
-        if tag in _EMPTY or tag is None:
-            out.append(tag)
-            continue
-        if len(tag) < 2:
-            raise ValueError(f"Invalid BIO2 tag found: {tag}")
-        nxt_i = i + 1 < len(tags) and str(tags[i + 1])[:2] in ("I-", "I_")
-        if tag[:2] in ("I-", "I_"):
-            out.append(("I-" if nxt_i else "E-") + tag[2:])
-        elif tag[:2] in ("B-", "B_"):
-            out.append(("B-" if nxt_i else "S-") + tag[2:])
-        else:
-            raise ValueError(f"Invalid IOB tag found: {tag}")
-    return out
 
 
 def decode_from_bioes(tags: list) -> list:

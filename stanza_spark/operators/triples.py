@@ -5,7 +5,10 @@ The reference's analog is Semgrex patterns run in a Java subprocess per
 document (/root/reference/stanza/server/semgrex.py:53-102, default pattern
 ``{}=source >obj=zzz {}=target``); here the same dependency patterns are
 relational joins over the flat words table, so Catalyst plans them and there
-is no per-document IPC at all.
+is no per-document IPC at all.  These joins serve declared patterns and
+``api.Pipeline``; default-pattern triples in kg_triples, the KGPipeline
+triples stage and the stream run the one narrow pass
+``annotate.triples_narrow``.
 
 Pattern (anchored to the reference golden parse
 `Obama --nsubj--> attended <--obj-- Harvard` =>

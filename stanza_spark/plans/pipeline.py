@@ -7,7 +7,7 @@ can replace the directory convention — this container has no Iceberg jars):
     <base>/stage=<name>/bucket=<b>/part-*.parquet   stage data
     <base>/_manifest/<name>.json                    completed buckets
     <base>/_metrics/<name>-<b>.json                 rows + wall time per bucket
-    <base>/_lineage/<name>.json                     inputs + config fingerprint
+    <base>/_lineage/<name>.json                     inputs + sf_dir + n_buckets
 
 Design for 10^12 documents:
 
@@ -20,9 +20,11 @@ Design for 10^12 documents:
   against the manifest — per-partition restart without reprocessing);
 * writes go to a temp dir then atomically rename into place (the parquet
   stand-in for an Iceberg snapshot commit), making re-runs idempotent;
-* metrics/lineage per bucket give the per-partition observability the
-  north rule requires (row counts catch drift, config fingerprints catch
-  code/data skew between resumed and fresh buckets).
+* metrics per bucket group give the per-partition observability the
+  north rule requires (row counts catch drift); lineage per stage records
+  its inputs, sf_dir, n_buckets and write time.  It records no config
+  fingerprint (confs, git rev, package hash) yet, so code skew between
+  resumed and fresh buckets is not caught (ROADMAP items 3/6).
 """
 
 from __future__ import annotations
@@ -36,9 +38,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.pages import pages as pages_src
 from ..operators.html import extract_text_expr
-from ..operators.annotate import annotate
+from ..operators.annotate import annotate, triples_narrow
 from ..operators.mentions import decode_mentions
-from ..operators.triples import extract_triples
 from ..operators.linking import alias_df, link_mentions_with_fallback
 from ..operators.graph import materialize_graph
 
@@ -201,9 +202,7 @@ class KGPipeline:
             "coref", coref_stage, ["words", "mentions"], hook("coref"))
 
         self._run_stage(
-            "triples",
-            lambda w, m: extract_triples(w.localCheckpoint(eager=True), m),
-            ["words", "mentions"], hook("triples"))
+            "triples", triples_narrow, ["pages"], hook("triples"))
 
         # graph is a global aggregate over all url buckets; its OUTPUT is
         # bucketed by subject hash (stage_inputs pruning doesn't apply —

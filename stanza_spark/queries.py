@@ -95,13 +95,11 @@ def q_kg_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url", "sent_id", "token_id", "token")
 
 
-#: column sets the triple join fan / the BIOES mention decode actually
-#: consume — checkpointing only these (guide §2.3 "project before the
-#: exchange") materializes ~60% of the words table's bytes instead of all
-#: 18 columns; at cluster scale the same projection shrinks the stage
-#: table every downstream exchange reads.
-TRIPLE_COLS = ("url", "sent_id", "word_id", "text", "upos", "lemma",
-               "head", "deprel")
+#: the columns the BIOES mention decode actually consumes — projecting
+#: to these before a materialization (guide §2.3 "project before the
+#: exchange") writes 7 of the words table's 18 columns; at cluster scale
+#: the same projection shrinks the stage table every downstream exchange
+#: reads.
 MENTION_COLS = ("url", "sent_id", "word_id", "text", "start_char",
                 "end_char", "ner")
 
@@ -116,13 +114,13 @@ MENTION_PROCS = ("tokenize", "mwt", "ner")
 def _words(spark, sf_dir, cache: bool = False, cols=None,
            processors=None):
     """Annotated words table.  ``cache=True`` persists it — essential for
-    the multi-branch triple/graph plans, which otherwise re-execute the
-    whole pages->annotate chain once per self-join branch (measured 7x
-    recompute = ~20x slowdown at sf0.1).  At cluster scale the equivalent
-    is the materialized stage table in plans.pipeline.  ``cols`` projects
-    the table down to what the caller's plan consumes BEFORE the
-    materialization, and ``processors`` skips annotator stages the
-    caller never reads (r7, guide §2.3 / §1.2)."""
+    the multi-branch declared-pattern triple plans, which otherwise
+    re-execute the whole pages->annotate chain once per self-join branch
+    (measured 7x recompute = ~20x slowdown at sf0.1).  At cluster scale
+    the equivalent is the materialized stage table in plans.pipeline.
+    ``cols`` projects the table down to what the caller's plan consumes
+    BEFORE the materialization, and ``processors`` skips annotator stages
+    the caller never reads (r7, guide §2.3 / §1.2)."""
     w = annotate(pages(spark, sf_dir, with_html=False),
                  processors=processors)
     if cols is not None:
@@ -136,9 +134,9 @@ def _words(spark, sf_dir, cache: bool = False, cols=None,
     # concurrent build-side scans of the fan each re-pay that task count;
     # coalesce the READ side to cores/4 so k concurrent scans stay ~2x
     # cores tasks in flight (scale-adaptive: derived from parallelism,
-    # and the coalesce is narrow — no shuffle).  Measured at
-    # sf0.1/local[32]: kg_triples 3.0 -> 1.7-2.3 s together with the
-    # AQE small-stage floor fix.
+    # and the coalesce is narrow — no shuffle).  Measured on a 4-vCPU
+    # host at local[4]: kg_coref_chains was faster with the coalesce in
+    # 6 of 8 alternating A/B pairs (ROADMAP item 8).
     scan_parts = max(1, spark.sparkContext.defaultParallelism // 4)
     return w.localCheckpoint(eager=True).coalesce(scan_parts)
 
@@ -296,15 +294,10 @@ def q_kg_links_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: checkpoint only the columns the join fan + mention decode read
-    # (11 of 18), and leave the mention decode LAZY — its two consumers
-    # (subj/obj typing) are broadcast build sides over the checkpointed
-    # words, and rebuilding the small decode subtree twice is measurably
-    # cheaper than a third eager materialization job (noop-isolated:
-    # 2.34 s vs 2.66 s for the fan at sf0.1/local[32], identical rows).
-    w = _words(spark, sf_dir, cache=True,
-               cols=sorted(set(TRIPLE_COLS) | set(MENTION_COLS)))
-    return extract_triples(w, decode_mentions(w))
+    """Default-pattern triples: pages -> triples in one narrow Arrow pass
+    (annotate.triples_narrow), no shuffle and no checkpoint.  The
+    relational join fan (operators.triples) serves declared patterns."""
+    return triples_narrow(pages(spark, sf_dir, with_html=False))
 
 
 def q_kg_triples_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,12 +448,6 @@ FROM l WHERE lower(word) IN {preps} AND u1 = 'PROPN' AND u2 = 'PROPN'
 """
 
 
-def q_kg_triples_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics as q_kg_triples via the shuffle-free narrow plan
-    (one mapInPandas pass) — the production physical strategy at 100 TB."""
-    return triples_narrow(pages(spark, sf_dir, with_html=False))
-
-
 def q_kg_triples_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same semantics again via the GENERAL decode kernels
     (operators.decode): Chu-Liu/Edmonds single-root MST over
@@ -576,11 +563,9 @@ def q_kg_stream_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph materialize fed by the narrow production plan (zero
-    checkpoints; the relational triple path is separately gated via
-    kg_triples with the same oracle)."""
-    t = triples_narrow(pages(spark, sf_dir, with_html=False))
-    return materialize_graph(t, alias_df(spark))
+    """Graph materialize fed by the kg_triples plan (triples_narrow,
+    zero checkpoints)."""
+    return materialize_graph(q_kg_triples(spark, sf_dir), alias_df(spark))
 
 
 def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -589,8 +574,7 @@ def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit stability); the oracle unrolls the identical iterations over the
     grammar-derived graph."""
     from .operators.graph import pagerank
-    t = triples_narrow(pages(spark, sf_dir, with_html=False))
-    g = materialize_graph(t, alias_df(spark))
+    g = materialize_graph(q_kg_triples(spark, sf_dir), alias_df(spark))
     edges = g.select(F.col("subj_canon").alias("src"),
                      F.col("obj_canon").alias("dst"))
     return pagerank(edges)
@@ -867,7 +851,6 @@ KG_QUERIES = {
     "kg_triples_deep": q_kg_triples_deep,
     "kg_ssurgeon": q_kg_ssurgeon,
     "kg_tokensregex": q_kg_tokensregex,
-    "kg_triples_narrow": q_kg_triples_narrow,
     "kg_triples_mst": q_kg_triples_mst,
     "kg_triples_stream": q_kg_triples_stream,
     "kg_stream_windows": q_kg_stream_windows,
@@ -957,7 +940,6 @@ def kg_oracles() -> dict[str, str]:
             f"({gold_triples_select(d, _V.DEEP_TRIPLES)})"),
         "kg_ssurgeon": gold_triples_ssurgeon_select(d),
         "kg_tokensregex": _tokensregex_oracle(d),
-        "kg_triples_narrow": gold_triples_select(d),
         "kg_triples_mst": gold_triples_select(d),
         "kg_triples_stream": gold_triples_select(d),
         # batch hourly counts restricted to watermark-closed windows:

@@ -3,10 +3,11 @@ event-time windowed aggregation.
 
 The reference's only streaming analog is ``Pipeline.stream`` — plain
 micro-batching with no time semantics (/root/reference/stanza/pipeline/
-core.py:477-503).  Here incremental ingestion reuses the *batch* pipeline
-inside ``foreachBatch`` (the recommended pattern: one code path for batch
-and stream), with exactly-once sink semantics provided by the checkpoint +
-idempotent parquet append; the windowed aggregation
+core.py:477-503).  Here incremental ingestion runs the *batch* triples
+plan inside ``foreachBatch`` — ``annotate.triples_narrow``, the one narrow
+Arrow pass kg_triples runs (the recommended pattern: one code path for
+batch and stream) — with exactly-once sink semantics provided by the
+checkpoint + a per-batch parquet overwrite; the windowed aggregation
 (``windowed_event_counts``, drained by the kg_stream_windows gate) shows
 watermark-bounded state for late events.
 """
@@ -15,9 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.annotate import annotate
-from ..operators.mentions import decode_mentions
-from ..operators.triples import extract_triples
+from ..operators.annotate import triples_narrow
 
 PAGES_SCHEMA = ("doc_id bigint, url string, warc_ts timestamp, "
                 "text string, lang string")
@@ -25,7 +24,8 @@ PAGES_SCHEMA = ("doc_id bigint, url string, warc_ts timestamp, "
 
 def stream_pages_to_triples(spark: SparkSession, input_dir: str,
                             out_dir: str, checkpoint_dir: str):
-    """File-source stream of pages -> annotate -> triples via foreachBatch.
+    """File-source stream of pages -> triples via foreachBatch, each
+    micro-batch running kg_triples' one narrow pass (triples_narrow).
     availableNow trigger: drains everything currently in the source then
     stops (incremental batch, resumable via the checkpoint).
 
@@ -40,10 +40,8 @@ def stream_pages_to_triples(spark: SparkSession, input_dir: str,
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int):
-        w = annotate(batch_df).localCheckpoint(eager=True)
-        m = decode_mentions(w).localCheckpoint(eager=True)
-        t = extract_triples(w, m)
-        t.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+        triples_narrow(batch_df).write.mode("overwrite").parquet(
+            f"{out_dir}/batch_id={batch_id}")
 
     return (
         src.writeStream.foreachBatch(process_batch)

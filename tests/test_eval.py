@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 from stanza_spark.eval import triple_pr, tokenization_f1
 from stanza_spark.queries import q_kg_triples
-from stanza_spark.operators.annotate import annotate, triples_narrow
+from stanza_spark.operators.annotate import annotate
 from stanza_spark.sources.pages import pages
 from stanza_spark.synth import Dialect, gold_triples_select
 
@@ -32,7 +32,7 @@ def test_triple_pr_meets_north_rule(spark, gold_triples):
 def test_triple_pr_detects_degradation(spark, gold_triples):
     # drop half the predictions and corrupt some predicates: P stays 1,
     # R drops; the harness must see it
-    pred = triples_narrow(pages(spark, SF_SMOKE, with_html=False))
+    pred = q_kg_triples(spark, SF_SMOKE)
     half = pred.filter(F.col("sent_id") % 2 == 0)
     m = triple_pr(half, gold_triples)
     assert m["precision"] == 1.0 and m["recall"] < 0.95

@@ -1,9 +1,10 @@
-"""Results must not depend on the caller's working directory.  From a
-directory outside the repo, ``__spark_entry__`` ships the package to the
-Python workers as a zip, and the workers of a session not made by
-``get_spark`` import it from there, so every module that reads a committed
-resource has to read it through the package loader, not a path built from
-``__file__`` (which then points inside the zip)."""
+"""Results must not depend on the caller's working directory.  The
+workers of a ``get_spark`` session import the package from the checkout
+(``spark.executorEnv.PYTHONPATH``); for a session not made by
+``get_spark``, ``__spark_entry__`` ships the package to the Python workers
+as a zip and they import it from there, so every module that reads a
+committed resource has to read it through the package loader, not a path
+built from ``__file__`` (which then points inside the zip)."""
 
 import os
 import pathlib

@@ -4,42 +4,7 @@ stanza/models/ner/utils.py run standalone).  Pure Python — no Spark."""
 
 import pytest
 
-from stanza_spark.operators.ner_tags import (
-    to_bio2, bio2_to_bioes, decode_from_bioes, merge_tags)
-
-# transcribed from the reference's test_ner_utils.py:11-16
-WORDS = [["Unban", "Mox", "Opal"],
-         ["Ragavan", "is", "red"],
-         ["Urza", "Lord", "High", "Artificer", "goes", "infinite",
-          "with", "Thopter", "Sword"]]
-BIO_TAGS = [["O", "B-ART", "I-ART"],
-            ["B-MONKEY", "O", "B-COLOR"],
-            ["B-PER", "I-PER", "I-PER", "I-PER", "O", "O", "O",
-             "B-WEAPON", "B-WEAPON"]]
-BIOES_TAGS = [["O", "B-ART", "E-ART"],
-              ["S-MONKEY", "O", "S-COLOR"],
-              ["B-PER", "I-PER", "I-PER", "E-PER", "O", "O", "O",
-               "S-WEAPON", "S-WEAPON"]]
-
-
-def test_bio_to_bioes_reference_golden():
-    for bio, bioes in zip(BIO_TAGS, BIOES_TAGS):
-        assert bio2_to_bioes(to_bio2(bio)) == bioes
-
-
-def test_to_bio2_opens_dangling_i():
-    # measured reference behavior (ner/utils.py:60-88)
-    assert to_bio2(["I-PER", "I-PER", "O", "I-ORG", "B-LOC", "I-LOC"]) == \
-        ["B-PER", "I-PER", "O", "B-ORG", "B-LOC", "I-LOC"]
-
-
-def test_bio2_to_bioes_underscore_normalized():
-    # measured reference behavior: B_/I_ accepted, output dashes
-    assert bio2_to_bioes(["B_PER", "I_PER", "B_ORG"]) == \
-        ["B-PER", "E-PER", "S-ORG"]
-    with pytest.raises(ValueError):
-        bio2_to_bioes(["X-PER"])
-
+from stanza_spark.operators.ner_tags import decode_from_bioes, merge_tags
 
 # every case's expected value is the measured output of the reference's
 # decode_from_bioes on the same input (malformed sequences included)

@@ -65,5 +65,5 @@ def test_metrics_and_lineage_written(spark, base):
     assert {"pages", "words", "mentions", "links", "triples", "graph"} <= stages
     assert all(x["rows"] > 0 for x in m if x["stage"] == "words")
     lin = json.load(open(os.path.join(base, "_lineage", "triples.json")))
-    assert lin["inputs"] == ["words", "mentions"]
+    assert lin["inputs"] == ["pages"]
     assert lin["n_buckets"] == 4

@@ -40,10 +40,9 @@ def test_alias_dict_join_broadcasts(spark):
 
 
 def test_narrow_plan_has_no_exchange(spark):
-    """The production triples plan must be shuffle-free."""
-    from stanza_spark.operators.annotate import triples_narrow
-    from stanza_spark.sources.pages import pages
-    p = _plan(triples_narrow(pages(spark, SF_SMOKE, with_html=False)))
+    """The kg_triples plan (triples_narrow) must be shuffle-free."""
+    from stanza_spark.queries import q_kg_triples
+    p = _plan(q_kg_triples(spark, SF_SMOKE))
     body = p.split("== Physical Plan ==")[1]
     tree = body.split("(1)")[0]  # tree rendering, before the detail blocks
     # one exchange allowed: the explicit input-spread repartition in pages()

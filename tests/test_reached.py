@@ -50,12 +50,6 @@ ALLOWED = {
         "byte-exact {:C} round-trip check of render_document's format",
     ("stanza_spark/sources/conllu.py", "render_parsed"):
         "byte-exact {:C} round-trip check of render_document's format",
-    ("stanza_spark/operators/ner_tags.py", "to_bio2"):
-        "tag-scheme conversion checked against the reference's cases; "
-        "ROADMAP item 7 owns it",
-    ("stanza_spark/operators/ner_tags.py", "bio2_to_bioes"):
-        "tag-scheme conversion checked against the reference's cases; "
-        "ROADMAP item 7 owns it",
     ("stanza_spark/operators/ner_tags.py", "merge_tags"):
         "the span-level relational merge (ner_merge) is checked against it",
 }

@@ -39,7 +39,6 @@ def main():
         # bench-scale mode: replicate the corpus, derive gold with the
         # SPARK dialect, compare via the distributed join-count P/R
         import tempfile
-        from stanza_spark.queries import q_kg_triples_narrow
         tmp = tempfile.mkdtemp(prefix="scorecard-big-")
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         big = (
@@ -54,7 +53,6 @@ def main():
             .createOrReplaceTempView("documents")
         gold = spark.sql(gold_triples_select(Dialect("spark"))).select(
             "url", "sent_id", "subj", "pred", "obj")
-        pr = triple_pr(q_kg_triples_narrow(spark, sf_dir), gold)
     else:
         con = duckdb.connect()
         con.execute(f"CREATE VIEW documents AS SELECT * FROM "
@@ -64,7 +62,7 @@ def main():
         gold = spark.createDataFrame(
             [(r[0], r[1], r[2], r[3], r[4]) for r in gold_rows],
             "url string, sent_id int, subj string, pred string, obj string")
-        pr = triple_pr(q_kg_triples(spark, sf_dir), gold)
+    pr = triple_pr(q_kg_triples(spark, sf_dir), gold)
 
     p = pages(spark, sf_dir, with_html=True)
     byte_violations = (
