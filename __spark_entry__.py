@@ -34,9 +34,13 @@ def _ensure_package(spark: SparkSession) -> None:
         return
     worker_path = sc.getConf().get("spark.executorEnv.PYTHONPATH", "")
     if _REPO not in worker_path.split(os.pathsep):
+        import atexit
         import shutil
         import tempfile
         zdir = tempfile.mkdtemp(prefix="stanza-spark-pkg-")
+        # in local mode the file server serves the zip from this dir for
+        # the session's lifetime, so it goes only when the interpreter exits
+        atexit.register(shutil.rmtree, zdir, True)
         zpath = shutil.make_archive(os.path.join(zdir, "stanza_spark"),
                                     "zip", root_dir=_REPO,
                                     base_dir="stanza_spark")

@@ -6,25 +6,32 @@ can replace the directory convention — this container has no Iceberg jars):
 
     <base>/stage=<name>/bucket=<b>/part-*.parquet   stage data
     <base>/_manifest/<name>.json                    completed buckets
-    <base>/_metrics/<name>-<b>.json                 rows + wall time per bucket
+    <base>/_metrics/<name>-<min>-<max>.json         rows + wall time per group
     <base>/_lineage/<name>.json                     inputs + sf_dir + n_buckets
 
 Design for 10^12 documents:
 
 * the corpus is range-partitioned by ``pmod(xxhash64(url), n_buckets)`` —
-  a stable, data-independent split, so every stage processes bucket *b*
-  of its input into bucket *b* of its output with no cross-bucket shuffle
-  in the annotate stages (joins within a page key stay bucket-local);
-* each bucket group is one job; the manifest records completed buckets, so
-  a killed run resumes by processing only missing buckets (anti-join
-  against the manifest — per-partition restart without reprocessing);
+  a stable, data-independent split, so every per-document stage (output
+  bucketed on ``url``) processes bucket *b* of its input into bucket *b*
+  of its output with no cross-bucket shuffle (joins within a page key
+  stay bucket-local);
+* a per-document stage runs its missing buckets in groups of
+  ``buckets_per_job``, each group one write over the pruned input
+  buckets; the manifest records completed buckets, so a killed run
+  resumes by processing only missing buckets (per-partition restart
+  without reprocessing);
+* a global stage (``graph``, bucketed on ``subj_canon``; ``pagerank``, on
+  ``node``) reads its inputs whole, computes once, and writes all of its
+  missing buckets in one group;
 * writes go to a temp dir then atomically rename into place (the parquet
   stand-in for an Iceberg snapshot commit), making re-runs idempotent;
-* metrics per bucket group give the per-partition observability the
+* metrics per bucket group (rows counted by an ``Observation`` on the
+  write itself, wall time) give the per-partition observability the
   north rule requires (row counts catch drift); lineage per stage records
-  its inputs, sf_dir, n_buckets and write time.  It records no config
-  fingerprint (confs, git rev, package hash) yet, so code skew between
-  resumed and fresh buckets is not caught (ROADMAP items 3/6).
+  its inputs, sf_dir, n_buckets and write time.  It records no
+  config fingerprint (confs, git rev, package hash) yet, so code skew
+  between resumed and fresh buckets is not caught (ROADMAP items 3/6).
 """
 
 from __future__ import annotations
@@ -34,7 +41,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..sources.pages import pages as pages_src
 from ..operators.html import extract_text_expr
@@ -108,14 +115,16 @@ class KGPipeline:
         return self.spark.read.parquet(self._stage_dir(stage))
 
     def _write_buckets(self, stage: str, df: DataFrame, bucket_group: list[int]):
-        """Write one bucket group atomically (temp dir + rename per bucket)."""
+        """Write one bucket group atomically (temp dir + rename per bucket);
+        the write itself counts the group's rows."""
         t0 = time.time()
-        part = df.filter(F.col("bucket").isin(bucket_group))
+        rows = Observation()
+        part = df.filter(F.col("bucket").isin(bucket_group)) \
+            .observe(rows, F.count(F.lit(1)).alias("rows"))
         tmp = os.path.join(self.base, f"_tmp-{stage}-{min(bucket_group)}")
         if os.path.exists(tmp):
             shutil.rmtree(tmp)  # leftover from a killed run: idempotent redo
         part.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        rows = self.spark.read.parquet(tmp).count()
         for b in bucket_group:
             src = os.path.join(tmp, f"bucket={b}")
             dst = os.path.join(self._stage_dir(stage), f"bucket={b}")
@@ -127,41 +136,39 @@ class KGPipeline:
             else:  # bucket empty in this run — still mark it complete
                 os.makedirs(dst, exist_ok=True)
         shutil.rmtree(tmp, ignore_errors=True)
-        self._write_metrics(stage, bucket_group, rows, time.time() - t0)
+        self._write_metrics(stage, bucket_group, rows.get["rows"],
+                            time.time() - t0)
         self._mark_completed(stage, bucket_group)
 
     def _run_stage(self, stage: str, fn, inputs: list[str],
                    fail_after_groups: int | None = None,
                    bucket_col: str = "url"):
-        """Process missing buckets in groups.
+        """Process the stage's missing buckets; returns the groups written.
 
-        ``fn(*input_dfs)`` transforms the (bucket-pruned) input stage
-        tables; for source stages (``inputs`` not stage names) it is called
-        with no arguments.  Inputs and outputs are co-bucketed on
-        xxhash64(url), so pruning the input partitions to the group is
-        correct for every per-document stage — resuming one missing bucket
-        reads and computes only that bucket, not the whole corpus.
+        ``fn(*input_dfs)`` transforms the input stage tables; a source
+        stage (``inputs`` names no stage) calls it with no arguments.  The
+        output is bucketed by ``pmod(xxhash64(bucket_col), n_buckets)``.
+
+        A stage bucketed on ``url`` is per-document: inputs and output are
+        co-bucketed, so each group of ``buckets_per_job`` missing buckets
+        reads only its own input partitions and resuming one bucket
+        computes only that bucket.  Any other stage is global: pruning its
+        input would drop rows, so it reads its inputs whole, calls ``fn``
+        once and writes all missing buckets as one group.
         ``fail_after_groups`` simulates a killed job (tests)."""
         missing = sorted(set(range(self.n_buckets)) - self.completed_buckets(stage))
         if not missing:
             return 0
-        stage_inputs = [i for i in inputs if i in STAGES]
-        groups = [missing[i:i + self.buckets_per_job]
-                  for i in range(0, len(missing), self.buckets_per_job)]
+        per_doc = bucket_col == "url"
+        step = self.buckets_per_job if per_doc else len(missing)
+        groups = [missing[i:i + step] for i in range(0, len(missing), step)]
         for gi, g in enumerate(groups):
             if fail_after_groups is not None and gi >= fail_after_groups:
                 raise RuntimeError(f"simulated failure in stage {stage}")
-            if stage_inputs:
-                ins = [
-                    self.read_stage(n)
-                    .filter(F.col("bucket").isin(g))   # partition pruning
-                    .drop("bucket")
-                    for n in stage_inputs
-                ]
-                out = fn(*ins)
-            else:
-                out = fn()
-            out = out.withColumn(
+            ins = [self.read_stage(n) for n in inputs if n in STAGES]
+            if per_doc:  # partition pruning
+                ins = [d.filter(F.col("bucket").isin(g)) for d in ins]
+            out = fn(*(d.drop("bucket") for d in ins)).withColumn(
                 "bucket", F.pmod(F.xxhash64(bucket_col), F.lit(self.n_buckets)))
             self._write_buckets(stage, out, g)
         self._write_lineage(stage, inputs)
@@ -204,28 +211,19 @@ class KGPipeline:
         self._run_stage(
             "triples", triples_narrow, ["pages"], hook("triples"))
 
-        # graph is a global aggregate over all url buckets; its OUTPUT is
-        # bucketed by subject hash (stage_inputs pruning doesn't apply —
-        # pass the full triples table explicitly)
+        # global stages: graph is an aggregate over all url buckets,
+        # bucketed by subject hash; pagerank (entity importance over the
+        # graph) is bucketed by node hash
         self._run_stage(
-            "graph",
-            lambda: materialize_graph(
-                self.read_stage("triples").drop("bucket"),
-                alias_df(self.spark)),
-            ["__all_triples__"], hook("graph"), bucket_col="subj_canon")
-        self._write_lineage("graph", ["triples"])
+            "graph", lambda t: materialize_graph(t, alias_df(self.spark)),
+            ["triples"], hook("graph"), bucket_col="subj_canon")
 
-        # entity importance over the materialized graph (also a global
-        # stage; output bucketed by node hash)
         from ..operators.graph import pagerank
         self._run_stage(
             "pagerank",
-            lambda: pagerank(
-                self.read_stage("graph").drop("bucket")
-                .select(F.col("subj_canon").alias("src"),
-                        F.col("obj_canon").alias("dst"))),
-            ["__graph__"], hook("pagerank"), bucket_col="node")
-        self._write_lineage("pagerank", ["graph"])
+            lambda g: pagerank(g.select(F.col("subj_canon").alias("src"),
+                                        F.col("obj_canon").alias("dst"))),
+            ["graph"], hook("pagerank"), bucket_col="node")
 
         # publish the deduplicated (subj, pred, obj) graph as a snapshot
         # table (north rule: "materialize ... Iceberg graph tables"):

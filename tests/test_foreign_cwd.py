@@ -46,6 +46,35 @@ def test_resource_modules_import_from_a_zip(tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
 
 
+def test_shipped_package_zip_is_removed_at_exit(tmp_path):
+    """A session not made by ``get_spark`` gets the package zipped into a
+    temp dir; the dir is gone once the interpreter exits."""
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "import __spark_entry__\n"
+        "added = []\n"
+        "class Conf:\n"
+        "    def get(self, key, default=None):\n"
+        "        return default\n"
+        "class Context:\n"
+        "    def getConf(self):\n"
+        "        return Conf()\n"
+        "    def addPyFile(self, path):\n"
+        "        added.append(path)\n"
+        "class Session:\n"
+        "    sparkContext = Context()\n"
+        "__spark_entry__._ensure_package(Session())\n"
+        "print(added[0])\n")
+    proc = subprocess.run([sys.executable, "-c", code], cwd=tmp_path,
+                          capture_output=True, text=True, timeout=300,
+                          env={**os.environ, "TMPDIR": str(tmp_path)})
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    zpath = proc.stdout.split()[-1]
+    assert zpath.startswith(str(tmp_path)) and zpath.endswith(".zip")
+    assert list(tmp_path.glob("stanza-spark-pkg-*")) == []
+
+
 def test_no_tracked_python_file_hard_codes_the_checkout_path():
     """Every tracked .py file finds the repo relative to itself, so no
     file spells out the absolute path of the checkout it runs from."""

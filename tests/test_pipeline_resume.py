@@ -57,13 +57,42 @@ def test_kill_and_resume_matches_uninterrupted(spark, base):
     assert got == expected
 
 
-def test_metrics_and_lineage_written(spark, base):
-    p = KGPipeline(spark, SF_SMOKE, base, n_buckets=4, buckets_per_job=4)
+def test_metrics_and_lineage_written(spark, base, monkeypatch):
+    """Global stages (graph, pagerank) compute once per build and write
+    all their buckets in one group, even with several groups per
+    per-document stage; each stage's metrics rows add up to its table;
+    lineage names the real input stages."""
+    import stanza_spark.operators.graph as graph_ops
+    import stanza_spark.plans.pipeline as pipeline
+    calls = {"materialize_graph": 0, "pagerank": 0}
+
+    def count_calls(mod, name):
+        fn = getattr(mod, name)
+
+        def counted(*a, **kw):
+            calls[name] += 1
+            return fn(*a, **kw)
+        monkeypatch.setattr(mod, name, counted)
+    count_calls(pipeline, "materialize_graph")
+    count_calls(graph_ops, "pagerank")
+
+    p = KGPipeline(spark, SF_SMOKE, base, n_buckets=4, buckets_per_job=2)
     p.run()
+    assert calls == {"materialize_graph": 1, "pagerank": 1}
     m = p.metrics()
     stages = {x["stage"] for x in m}
     assert {"pages", "words", "mentions", "links", "triples", "graph"} <= stages
     assert all(x["rows"] > 0 for x in m if x["stage"] == "words")
-    lin = json.load(open(os.path.join(base, "_lineage", "triples.json")))
-    assert lin["inputs"] == ["pages"]
-    assert lin["n_buckets"] == 4
+    for s in ("graph", "pagerank"):
+        assert [x["buckets"] for x in m if x["stage"] == s] == [[0, 1, 2, 3]]
+    for s in pipeline.STAGES:   # the write counts only its own group
+        assert sum(x["rows"] for x in m if x["stage"] == s) \
+            == p.read_stage(s).count(), s
+
+    def lineage(stage):
+        with open(os.path.join(base, "_lineage", f"{stage}.json")) as f:
+            return json.load(f)
+    assert lineage("triples")["inputs"] == ["pages"]
+    assert lineage("triples")["n_buckets"] == 4
+    assert lineage("graph")["inputs"] == ["triples"]
+    assert lineage("pagerank")["inputs"] == ["graph"]

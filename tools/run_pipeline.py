@@ -44,7 +44,7 @@ def main():
     graph = p.run()
     print(json.dumps({
         "graph_edges": graph.count(),
-        "stages_metrics": p.metrics()[-6:],
+        "stages_metrics": p.metrics(),
         "out": args.out,
     }))
 
