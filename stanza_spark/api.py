@@ -148,14 +148,18 @@ class Pipeline:
         to any depth, governor direction ``<``, bounded ``>>`` dominance,
         negation, relation regexes, optional ``?``-clauses; a bare
         ``{}`` root defaults to VERB here (the facade is verb-rooted
-        like the reference's patterns).  ``uniq=True`` collapses
-        duplicate output rows (the Semgrex CLI's uniq post-step)."""
+        like the reference's patterns; an unconstrained root would bind
+        every word).  ``uniq=True`` collapses duplicate output rows (the
+        Semgrex CLI's uniq post-step)."""
         if "depparse" not in self.processors:
             raise PipelineRequirementsException(
                 "semgrex requires the depparse processor")
-        from .operators.triples import match_dep_pattern
+        from .operators.semgrex import SemNode, match_semgrex, parse_semgrex
+        root = parse_semgrex(pattern)
+        if root.upos is None and root.lemma_re is None:
+            root = SemNode(root.name, ("VERB",), None, root.clauses)
         w = self.process(docs).localCheckpoint(eager=True)
-        return match_dep_pattern(w, pattern, uniq=uniq)
+        return match_semgrex(w, root, uniq=uniq)
 
     def ssurgeon(self, docs, rules) -> DataFrame:
         """Dependency-graph surgery from the facade — the reference's

@@ -820,9 +820,9 @@ def annotate_sentences(text: str,
     before downstream tagging, the reference's GPU-memory guard
     (tokenize_processor.py:113-117); offsets keep the original span."""
     procs = None if processors is None else frozenset(processors)
-
-    def has(p):
-        return procs is None or p in procs
+    # stage flags resolved once per call, not per word
+    pos, lem, mwt, ner, dep = (procs is None or p in procs for p in
+                               ("pos", "lemma", "mwt", "ner", "depparse"))
 
     if decoder == "mst":
         from .decode import parse_sentence_mst, tag_ner_viterbi
@@ -838,35 +838,29 @@ def annotate_sentences(text: str,
         splitter = pack_splitter(lang)
     else:
         splitter = split_sentences
-    tag = has("pos") or has("lemma")
     for sent_id, (s_start, s_end, toks) in enumerate(splitter(text)):
         words = []
         for t_i, (tok, a, b) in enumerate(toks):
             if len(tok) > max_token_len:
                 tok = TOKEN_TOO_LONG_REPLACEMENT
-            parts = expand_token(tok, lang) if has("mwt") else [tok]
+            parts = expand_token(tok, lang) if mwt else [tok]
             is_mwt = len(parts) > 1
             for p in parts:
-                if tag:
+                if pos or lem:
                     upos, xpos, feats, lemma = tag_word(p, lang)
+                    if not pos:
+                        upos = xpos = feats = None
                 else:
                     upos = xpos = feats = lemma = None
                 words.append({
                     "token_id": t_i + 1, "is_mwt": is_mwt, "text": p,
-                    "start": a, "end": b,
-                    "upos": upos if has("pos") else None,
-                    "xpos": xpos if has("pos") else None,
-                    "feats": feats if has("pos") else None,
-                    "lemma": lemma if has("lemma") else None,
+                    "start": a, "end": b, "upos": upos, "xpos": xpos,
+                    "feats": feats, "lemma": lemma if lem else None,
                 })
-        if has("ner"):
-            tags, _ = ner_fn(words)
-            for w, t in zip(words, tags):
-                w["ner"] = t
-        else:
-            for w in words:
-                w["ner"] = None
-        if has("depparse"):
+        tags = ner_fn(words)[0] if ner else [None] * len(words)
+        for w, t in zip(words, tags):
+            w["ner"] = t
+        if dep:
             parse_fn(words, lang=lang)
         else:
             for w in words:
@@ -947,7 +941,7 @@ TRIPLES_SCHEMA = ("url string, sent_id int, subj string, pred string, "
 
 def sentence_triples(words, mentions):
     """words: annotated dicts (text/upos/lemma/head/deprel, 1-based heads);
-    mentions: (first0, last0, type) 0-based spans from tag_ner.
+    mentions: ner_tags.decode_from_bioes spans (0-based start/end/type).
     -> list of (subj, pred, obj, subj_type, obj_type)."""
     flats: dict = {}
     for i, w in enumerate(words):
@@ -961,7 +955,7 @@ def sentence_triples(words, mentions):
         last = fl[-1][0] if fl else word_id
         return text, last
 
-    mtype = {(a + 1, b + 1): t for a, b, t in mentions}
+    mtype = {(m["start"] + 1, m["end"] + 1): m["type"] for m in mentions}
     out = []
     for v in range(1, len(words) + 1):
         if words[v - 1]["upos"] != "VERB":
@@ -983,7 +977,10 @@ def sentence_triples(words, mentions):
 
 
 def page_triples(url: str, lang: str, text: str, decoder: str = "grammar"):
-    """-> list of triple rows for one page (TRIPLES_SCHEMA order).
+    """-> list of triple rows for one page (TRIPLES_SCHEMA order): the
+    sentences of annotate_sentences (the words table's own annotation,
+    incl. the <UNK> long-token guard), mentions decoded from their BIOES
+    ``ner`` tags.
 
     ``decoder='mst'`` swaps the fixed grammars for the general decode
     kernels (operators.decode): Chu-Liu/Edmonds single-root MST over the
@@ -991,21 +988,12 @@ def page_triples(url: str, lang: str, text: str, decoder: str = "grammar"):
     emissions for NER — byte-identical output on in-grammar sentences
     (gate kg_triples_mst shares kg_triples' oracle), valid trees/tag
     sequences on sentences the grammar degrades on."""
-    if decoder == "mst":
-        from .decode import parse_sentence_mst, tag_ner_viterbi
-        parse_fn, ner_fn = parse_sentence_mst, tag_ner_viterbi
-    else:
-        parse_fn, ner_fn = parse_sentence, tag_ner
+    from .ner_tags import decode_from_bioes
+
     rows = []
-    for sent_id, (_a, _b, toks) in enumerate(split_sentences(text)):
-        words = []
-        for t_i, (tok, a, b) in enumerate(toks):
-            for p in expand_token(tok):
-                upos, xpos, feats, lemma = tag_word(p)
-                words.append({"text": p, "upos": upos, "xpos": xpos,
-                              "lemma": lemma})
-        _tags, mentions = ner_fn(words)
-        parse_fn(words)
+    for sent_id, _a, _b, words in annotate_sentences(
+            text, lang=lang, decoder=decoder):
+        mentions = decode_from_bioes([w["ner"] for w in words])
         for subj, pred, obj, st, ot in sentence_triples(words, mentions):
             rows.append((url, sent_id, subj, pred, obj, st, ot))
     return rows

@@ -110,10 +110,31 @@ _CLAUSE_RE = re.compile(
     r"\s*(\??)(!>|>>|>|<)(?:([\w:|]+)|/((?:[^/\\]|\\.)+)/)\s*(?:=(\w+))?")
 
 
+def _parse_head_attrs(attrs: str):
+    """Node attribute parser for every node of a pattern (the root and
+    each clause target): ``upos:A|B`` and ``lemma:/re/`` are supported;
+    ANY leftover attribute text raises — unsupported Semgrex syntax must
+    fail loudly, never be silently ignored.
+    -> (upos tuple | None, lemma regex | None)."""
+    upos = lemma_re = None
+    rest = attrs
+    m = re.search(r"upos:([\w|]+)", attrs)
+    if m:
+        upos = tuple(m.group(1).split("|"))
+        rest = rest.replace(m.group(0), "", 1)
+    m = re.search(r"lemma:/((?:[^/\\]|\\.)*)/", attrs)
+    if m:
+        lemma_re = m.group(1)
+        rest = rest.replace(m.group(0), "", 1)
+    if rest.strip(" ,"):
+        raise ValueError(
+            f"semgrex: unsupported head attributes {rest.strip(' ,')!r} "
+            "(supported: upos:..., lemma:/.../)")
+    return upos, lemma_re
+
+
 def _parse_node(pattern: str, pos: int, depth: int,
                 counters: dict) -> tuple[SemNode, int]:
-    from .triples import _parse_head_attrs
-
     if depth > MAX_NEST_DEPTH:
         raise ValueError(
             f"semgrex: nesting deeper than {MAX_NEST_DEPTH} in "

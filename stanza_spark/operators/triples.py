@@ -34,31 +34,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 
-def _parse_head_attrs(attrs: str):
-    """Shared head-node attribute parser for the two Semgrex compilers
-    (``DepPattern.from_semgrex`` and :func:`match_dep_pattern`):
-    ``upos:A|B`` and ``lemma:/re/`` are supported; ANY leftover attribute
-    text raises — unsupported Semgrex syntax must fail loudly, never be
-    silently ignored.  -> (upos tuple | None, lemma regex | None)."""
-    import re as _re
-
-    upos = lemma_re = None
-    rest = attrs
-    m = _re.search(r"upos:([\w|]+)", attrs)
-    if m:
-        upos = tuple(m.group(1).split("|"))
-        rest = rest.replace(m.group(0), "", 1)
-    m = _re.search(r"lemma:/((?:[^/\\]|\\.)*)/", attrs)
-    if m:
-        lemma_re = m.group(1)
-        rest = rest.replace(m.group(0), "", 1)
-    if rest.strip(" ,"):
-        raise ValueError(
-            f"semgrex: unsupported head attributes {rest.strip(' ,')!r} "
-            "(supported: upos:..., lemma:/.../)")
-    return upos, lemma_re
-
-
 @dataclass(frozen=True)
 class DepPattern:
     """Declarative dependency-pattern spec — the Semgrex-analog surface.
@@ -271,31 +246,6 @@ def spans(words: DataFrame,
             F.coalesce("flat_last", "word_id").alias("last_word_id"),
         )
     )
-
-
-def match_dep_pattern(words: DataFrame, pattern: str,
-                      uniq: bool = False) -> DataFrame:
-    """GENERAL Semgrex matching with ARBITRARY named nodes — the
-    back-compat name for :func:`~stanza_spark.operators.semgrex
-    .match_semgrex`, which owns the full bounded grammar (nested chains
-    to any depth, governor direction ``<``, bounded ``>>`` dominance,
-    negation — r5 judge item #2 unified the two compilers; the reference
-    surface is semgrex.py:53-102, a triple is just the 3-named special
-    case).
-
-    One compat difference vs calling :func:`match_semgrex` directly: a
-    bare root ``{}=name`` keeps this entry point's historical
-    VERB-root default (the reference's patterns are verb-rooted; an
-    unconstrained root would bind EVERY word — at corpus scale that is a
-    user error, so the general entry point requires explicit attrs while
-    this one narrows to VERB).
-    """
-    from .semgrex import SemNode, match_semgrex, parse_semgrex
-
-    root = parse_semgrex(pattern)
-    if root.upos is None and root.lemma_re is None:
-        root = SemNode(root.name, ("VERB",), None, root.clauses)
-    return match_semgrex(words, root, uniq=uniq)
 
 
 def extract_triples_multi(words: DataFrame,

@@ -22,11 +22,8 @@ from .synth import (
     gold_deps_full_select, gold_coref_select, gold_coref_chains_select,
     gold_triples_chain_select, gold_triples_ssurgeon_select,
     gold_triples_subj_chain_select, gold_semgrex_select,
-    gold_words_routed_select, gold_pos_lemma_de_select,
-    gold_pos_lemma_fr_select, gold_pos_lemma_ar_select,
-    gold_pos_lemma_zh_select, gold_pos_lemma_vi_select,
-    gold_pos_lemma_ja_select, gold_pos_lemma_it_select,
-    gold_pos_lemma_es_select,
+    gold_words_routed_select, gold_pos_lemma_lang_select,
+    POS_LEMMA_LANGS, template_text_expr,
 )
 from . import vocab as _V
 from .sources.pages import pages
@@ -590,17 +587,6 @@ def q_kg_words_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("text").alias("word"))
 
 
-def q_kg_pos_lemma_de(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """German full-pipeline annotations (op 7 second language): lexicon
-    POS/feats/lemma + APPRART MWT expansion, value-checked per word."""
-    from .operators.multilingual import route_and_annotate
-    w = route_and_annotate(pages(spark, sf_dir, with_html=False))
-    return w.filter(F.col("lang") == "de").select(
-        "url", "sent_id", "word_id", F.col("text").alias("word"),
-        "upos", "xpos", "feats", "lemma",
-        F.col("is_mwt").cast("int").alias("is_mwt"))
-
-
 def q_kg_words_routed_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Routing driven by the langid PREDICTION (the reference
     MultilingualPipeline's real semantics, multilingual.py:141-146) — on
@@ -613,164 +599,36 @@ def q_kg_words_routed_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("text").alias("word"))
 
 
-def q_kg_pos_lemma_fr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """French full-pipeline annotations (op 7 third language): lexicon
-    POS/feats/lemma + preposition-article clitic MWT (du -> de le, the
-    reference's French golden shape), value-checked per word."""
-    from .operators.multilingual import route_and_annotate
-    w = route_and_annotate(pages(spark, sf_dir, with_html=False))
-    return w.filter(F.col("lang") == "fr").select(
-        "url", "sent_id", "word_id", F.col("text").alias("word"),
-        "upos", "xpos", "feats", "lemma",
-        F.col("is_mwt").cast("int").alias("is_mwt"))
+def _pos_lemma_gate(lang: str):
+    """kg_pos_lemma_<lang> (op 7, one gate per POS_LEMMA_LANGS row): the
+    full annotator over ONE language's pages, value-checked per word.  A
+    live language's corpus rows are filtered on ``lang`` before the
+    Python pass; any other language reads its twin corpus, one page per
+    document from the language's template (the same doc_id arithmetic
+    as synth.twin_pages_select).  Each source holds one language, so no
+    routing is needed."""
+    template, live = POS_LEMMA_LANGS[lang]
 
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        if live:
+            src = pages(spark, sf_dir, with_html=False).filter(
+                F.col("lang") == lang)
+        else:
+            from .sources.pages import documents
+            text = template_text_expr(Dialect("spark"), template[0], "0")
+            n_parts = spark.sparkContext.defaultParallelism
+            src = documents(spark, sf_dir).repartition(
+                n_parts, "doc_id").selectExpr(
+                f"concat('https://{lang}.example.org/d/', "
+                "CAST(doc_id AS STRING)) AS url",
+                f"'{lang}' AS lang", f"{text} AS text")
+        return annotate(src, en_only=False).select(
+            "url", "sent_id", "word_id", F.col("text").alias("word"),
+            "upos", "xpos", "feats", "lemma",
+            F.col("is_mwt").cast("int").alias("is_mwt"))
 
-def q_kg_pos_lemma_ar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arabic full-pipeline annotations (op 7 FOURTH language): RTL
-    script, logical-order offsets, and a MULTI-clitic MWT expansion —
-    وللوزارة -> و + ل + الوزارة, a THREE-way split exceeding the de/fr
-    2-word shapes (reference test_arabic_pipeline.py golden shape).  The
-    driver corpus has no ar rows, so the gate synthesizes a deterministic
-    Arabic twin page per document (pure doc_id arithmetic in BOTH
-    engines) and runs it through the same routed annotator."""
-    from .operators.multilingual import route_and_annotate
-    from .sources.pages import documents
-    from .synth import template_text_expr
-    from . import vocab as V
-
-    d = Dialect("spark")
-    parts, _ = V.NON_EN_TEMPLATES["ar"]
-    n_parts = spark.sparkContext.defaultParallelism
-    ar = documents(spark, sf_dir).repartition(n_parts, "doc_id").selectExpr(
-        f"concat('https://ar.example.org/d/', CAST(doc_id AS STRING)) AS url",
-        "'ar' AS lang",
-        f"{template_text_expr(d, parts, '0')} AS text",
-    )
-    w = route_and_annotate(ar)
-    return w.select(
-        "url", "sent_id", "word_id", F.col("text").alias("word"),
-        "upos", "xpos", "feats", "lemma",
-        F.col("is_mwt").cast("int").alias("is_mwt"))
-
-
-def q_kg_pos_lemma_es(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spanish full-pipeline annotations (op 7 NINTH language): the
-    second langpacks data-only language, and the first upgraded over
-    LIVE corpus rows — es pages ship in the driver corpus (previously
-    tokenize-only), so this gate runs the routed annotator on real
-    corpus text, no twin synthesis."""
-    from .operators.multilingual import route_and_annotate
-    w = route_and_annotate(pages(spark, sf_dir, with_html=False))
-    return w.filter(F.col("lang") == "es").select(
-        "url", "sent_id", "word_id", F.col("text").alias("word"),
-        "upos", "xpos", "feats", "lemma",
-        F.col("is_mwt").cast("int").alias("is_mwt"))
-
-
-def q_kg_pos_lemma_it(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Italian full-pipeline annotations (op 7 EIGHTH language) — the
-    language that exists ONLY as a langpacks.LANG_PACKS registry entry
-    plus vocab data tables (r5 judge item #5: data, not code): romance
-    elision (sull'economia -> sull' + economia) composing with
-    preposition-article MWT expansion (del -> di+il, sull' -> su+l',
-    nel -> in+il), value-checked per word over a synthesized twin corpus
-    (pure doc_id arithmetic in both engines, like kg_pos_lemma_ar)."""
-    from .operators.multilingual import route_and_annotate
-    from .sources.pages import documents
-    from .synth import template_text_expr
-    from . import vocab as V
-
-    d = Dialect("spark")
-    parts, _ = V.NON_EN_TEMPLATES["it"]
-    n_parts = spark.sparkContext.defaultParallelism
-    it = documents(spark, sf_dir).repartition(n_parts, "doc_id").selectExpr(
-        "concat('https://it.example.org/d/', CAST(doc_id AS STRING)) AS url",
-        "'it' AS lang",
-        f"{template_text_expr(d, parts, '0')} AS text",
-    )
-    w = route_and_annotate(it)
-    return w.select(
-        "url", "sent_id", "word_id", F.col("text").alias("word"),
-        "upos", "xpos", "feats", "lemma",
-        F.col("is_mwt").cast("int").alias("is_mwt"))
-
-
-def q_kg_pos_lemma_zh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chinese full-pipeline annotations (op 7/8 FIFTH language): UNSPACED
-    CJK text through greedy longest-prefix dictionary segmentation — the
-    deterministic stand-in for the reference's neural zh char classifier,
-    and the hardest tokenizer case (every word boundary is the
-    segmenter's decision; the dict carries single-char prefixes of its
-    multi-char words so longest-match semantics are value-checked).  Twin
-    corpus from doc_id arithmetic in both engines, like kg_pos_lemma_ar."""
-    from .operators.annotate import annotate
-    from .sources.pages import documents
-    from .synth import template_text_expr
-    from . import vocab as V
-
-    d = Dialect("spark")
-    n_parts = spark.sparkContext.defaultParallelism
-    zh = documents(spark, sf_dir).repartition(n_parts, "doc_id").selectExpr(
-        "concat('https://zh.example.org/d/', CAST(doc_id AS STRING)) AS url",
-        "'zh' AS lang",
-        f"{template_text_expr(d, V.ZH_SEG_TEMPLATE[0], '0')} AS text",
-    )
-    w = annotate(zh, en_only=False)
-    return w.select(
-        "url", "sent_id", "word_id", F.col("text").alias("word"),
-        "upos", "xpos", "feats", "lemma",
-        F.col("is_mwt").cast("int").alias("is_mwt"))
-
-
-def q_kg_pos_lemma_vi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vietnamese full-pipeline annotations (op 7 SIXTH language):
-    SPACED-SYLLABLE text through greedy longest-match syllable GROUPING —
-    the third segmentation typology (en splits on boundaries, zh splits
-    unspaced runs, vi MERGES spaced syllables into multi-syllable words,
-    the reference's VLSP word-segmentation semantics).  Twin corpus from
-    doc_id arithmetic in both engines, like kg_pos_lemma_zh."""
-    from .operators.annotate import annotate
-    from .sources.pages import documents
-    from .synth import template_text_expr
-    from . import vocab as V
-
-    d = Dialect("spark")
-    n_parts = spark.sparkContext.defaultParallelism
-    vi = documents(spark, sf_dir).repartition(n_parts, "doc_id").selectExpr(
-        "concat('https://vi.example.org/d/', CAST(doc_id AS STRING)) AS url",
-        "'vi' AS lang",
-        f"{template_text_expr(d, V.VI_SEG_TEMPLATE[0], '0')} AS text",
-    )
-    w = annotate(vi, en_only=False)
-    return w.select(
-        "url", "sent_id", "word_id", F.col("text").alias("word"),
-        "upos", "xpos", "feats", "lemma",
-        F.col("is_mwt").cast("int").alias("is_mwt"))
-
-
-def q_kg_pos_lemma_ja(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Japanese annotations (op 7 SEVENTH language, pytest-parity gate):
-    MIXED-SCRIPT segmentation — katakana loanword runs by script rule,
-    unspaced kanji/hiragana by greedy longest dict match, embedded ASCII
-    by the standard tokenizer, with a real lemma normalization
-    (発表された -> 発表する).  Twin corpus from doc_id arithmetic."""
-    from .operators.annotate import annotate
-    from .sources.pages import documents
-    from .synth import template_text_expr
-    from . import vocab as V
-
-    d = Dialect("spark")
-    n_parts = spark.sparkContext.defaultParallelism
-    ja = documents(spark, sf_dir).repartition(n_parts, "doc_id").selectExpr(
-        "concat('https://ja.example.org/d/', CAST(doc_id AS STRING)) AS url",
-        "'ja' AS lang",
-        f"{template_text_expr(d, V.JA_SEG_TEMPLATE[0], '0')} AS text",
-    )
-    w = annotate(ja, en_only=False)
-    return w.select(
-        "url", "sent_id", "word_id", F.col("text").alias("word"),
-        "upos", "xpos", "feats", "lemma",
-        F.col("is_mwt").cast("int").alias("is_mwt"))
+    q.__name__ = f"q_kg_pos_lemma_{lang}"
+    return q
 
 
 def q_kg_learned_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -858,14 +716,8 @@ KG_QUERIES = {
     "kg_pagerank": q_kg_pagerank,
     "kg_words_routed": q_kg_words_routed,
     "kg_words_routed_pred": q_kg_words_routed_pred,
-    "kg_pos_lemma_de": q_kg_pos_lemma_de,
-    "kg_pos_lemma_fr": q_kg_pos_lemma_fr,
-    "kg_pos_lemma_ar": q_kg_pos_lemma_ar,
-    "kg_pos_lemma_zh": q_kg_pos_lemma_zh,
-    "kg_pos_lemma_vi": q_kg_pos_lemma_vi,
-    "kg_pos_lemma_it": q_kg_pos_lemma_it,
-    "kg_pos_lemma_es": q_kg_pos_lemma_es,
-    "kg_pos_lemma_ja": q_kg_pos_lemma_ja,
+    **{f"kg_pos_lemma_{lang}": _pos_lemma_gate(lang)
+       for lang in POS_LEMMA_LANGS},
     "kg_learned_decode": q_kg_learned_decode,
     "kg_components": q_kg_components,
     "kg_coref": q_kg_coref,
@@ -966,14 +818,8 @@ def kg_oracles() -> dict[str, str]:
             "SELECT url, CASE WHEN lang = 'zh' THEN 'und' ELSE lang END "
             "AS lang, sent_id, word_id, word "
             f"FROM ({gold_words_routed_select(d)})"),
-        "kg_pos_lemma_de": gold_pos_lemma_de_select(d),
-        "kg_pos_lemma_fr": gold_pos_lemma_fr_select(d),
-        "kg_pos_lemma_ar": gold_pos_lemma_ar_select(d),
-        "kg_pos_lemma_zh": gold_pos_lemma_zh_select(d),
-        "kg_pos_lemma_vi": gold_pos_lemma_vi_select(d),
-        "kg_pos_lemma_ja": gold_pos_lemma_ja_select(d),
-        "kg_pos_lemma_it": gold_pos_lemma_it_select(d),
-        "kg_pos_lemma_es": gold_pos_lemma_es_select(d),
+        **{f"kg_pos_lemma_{lang}": gold_pos_lemma_lang_select(d, lang)
+           for lang in POS_LEMMA_LANGS},
         "kg_learned_decode": _learned_decode_oracle(d),
         "kg_components": gold_components_select(d),
         "kg_coref": gold_coref_select(d),

@@ -567,9 +567,49 @@ def gold_enhanced_deps_select(d: Dialect) -> str:
 MWT_LANGS = ("de", "fr")
 
 
-def _lang_word_pattern(lang: str, template=None):
+# Per-language POS/lemma gates (kg_pos_lemma_<lang>), one row each:
+# lang -> (template, live).  A live language's pages ship in the
+# documents corpus and its gate reads those rows; every other language
+# gets a twin corpus, one single-sentence page per document built from
+# ``template`` (twin_pages_select).  The gold word pattern comes from
+# running the language's annotator on the template (_lang_word_pattern),
+# so adding a language gate is one row here plus its langpacks/vocab
+# data.
+POS_LEMMA_LANGS = {
+    # APPRART MWT: im -> in dem
+    "de": (V.NON_EN_TEMPLATES["de"], True),
+    # preposition-article clitic MWT: du -> de le at words 3/4, both
+    # is_mwt (test_french_pipeline.py:55-80 golden shape)
+    "fr": (V.NON_EN_TEMPLATES["fr"], True),
+    # the second langpacks data-only language, over live corpus rows
+    "es": (V.NON_EN_TEMPLATES["es"], True),
+    # RTL script, logical-order offsets; the multi-clitic MWT وللوزارة
+    # expands three ways to words 3/4/5 (و CCONJ, ل ADP, الوزارة NOUN;
+    # test_arabic_pipeline.py golden shape)
+    "ar": (V.NON_EN_TEMPLATES["ar"], False),
+    # langpacks registry data only: elision first (sull'economia ->
+    # sull' + economia), then MWT (del -> di il, sull' -> su l',
+    # nel -> in il)
+    "it": (V.NON_EN_TEMPLATES["it"], False),
+    # unspaced CJK, greedy longest-prefix dictionary segmentation
+    # (数据|报告|于|Y|年|发布|。; the dict holds single-char prefixes of
+    # its multi-char words, so each boundary proves longest match)
+    "zh": (V.ZH_SEG_TEMPLATE, False),
+    # spaced syllables grouped into words by greedy longest match
+    # (Báo cáo|được|công bố|tại|Hà Nội|năm|Y|.; Hà Nội groups across
+    # capitalized syllables)
+    "vi": (V.VI_SEG_TEMPLATE, False),
+    # mixed script: katakana runs by script rule, kanji/kana by longest
+    # dict match, the ASCII year by the standard tokenizer
+    # (データ|報告書|は|Y|年|に|東京|で|発表された|。); the verb lemma
+    # normalizes to 発表する
+    "ja": (V.JA_SEG_TEMPLATE, False),
+}
+
+
+def _lang_word_pattern(lang: str):
     from .operators.annotate import annotate_sentences
-    parts, _ = V.NON_EN_TEMPLATES[lang] if template is None else template
+    parts, _ = POS_LEMMA_LANGS[lang][0]
     text = "".join("1111" if p == "Y" else p for p in parts)
     sents = list(annotate_sentences(text, lang=lang))
     assert len(sents) == 1
@@ -597,20 +637,28 @@ def gold_words_routed_select(d: Dialect) -> str:
     return non_mwt + " UNION ALL " + " UNION ALL ".join(branches)
 
 
-def _gold_pos_lemma_lang_select(d: Dialect, lang: str,
-                                inner: str | None = None,
-                                lang_filter: bool = True,
-                                template=None) -> str:
+def twin_pages_select(d: Dialect, lang: str) -> str:
+    """Twin corpus for a language the documents corpus lacks: ONE
+    single-sentence page per document from the language's
+    POS_LEMMA_LANGS template (pure doc_id arithmetic in both dialects)."""
+    parts, _ = POS_LEMMA_LANGS[lang][0]
+    text = template_text_expr(d, parts, "0")
+    url = f"concat('https://{lang}.example.org/d/', {d.cast_str('doc_id')})"
+    return (f"SELECT doc_id, {url} AS url, {d.str_lit(lang)} AS lang, "
+            f"0 AS sent_id, {text} AS text FROM documents")
+
+
+def gold_pos_lemma_lang_select(d: Dialect, lang: str) -> str:
     """(url, sent_id, word_id, word, upos, xpos, feats, lemma, is_mwt)
-    for one routed language — the lexicon annotations as template
-    constants (incl. live MWT expansion positions).  ``inner`` overrides
-    the corpus source (the Arabic twin corpus passes its own)."""
-    if inner is None:
-        inner = sentences_select(d)
-    where = f" WHERE lang = {d.str_lit(lang)}" if lang_filter else ""
+    for one POS_LEMMA_LANGS language — the lexicon annotations as
+    template constants (incl. live MWT expansion positions), over the
+    live corpus rows of that language or its twin corpus."""
+    live = POS_LEMMA_LANGS[lang][1]
+    inner = sentences_select(d) if live else twin_pages_select(d, lang)
+    where = f" WHERE lang = {d.str_lit(lang)}" if live else ""
     y = slot_expr(d, "Y", "sent_id")
     branches = []
-    for i, w in enumerate(_lang_word_pattern(lang, template)):
+    for i, w in enumerate(_lang_word_pattern(lang)):
         if w["text"] == "1111":
             word, lemma = y, y
         else:
@@ -622,128 +670,6 @@ def _gold_pos_lemma_lang_select(d: Dialect, lang: str,
             f"{1 if w['is_mwt'] else 0} AS is_mwt "
             f"FROM ({inner}){where}")
     return " UNION ALL ".join(branches)
-
-
-def gold_pos_lemma_de_select(d: Dialect) -> str:
-    return _gold_pos_lemma_lang_select(d, "de")
-
-
-def gold_pos_lemma_fr_select(d: Dialect) -> str:
-    """French full-pipeline gold: the clitic MWT expansion du -> de le
-    sits at fixed word positions (word 3 = 'de' ADP, word 4 = 'le' DET,
-    both is_mwt — the reference golden shape,
-    test_french_pipeline.py:55-80)."""
-    return _gold_pos_lemma_lang_select(d, "fr")
-
-
-def ar_pages_select(d: Dialect) -> str:
-    """Arabic twin corpus: the driver corpus carries no lang='ar' rows, so
-    the fourth-language gate synthesizes ONE deterministic Arabic page per
-    document (pure doc_id arithmetic, single sentence) in both dialects —
-    same philosophy as the rest of this module."""
-    parts, _ = V.NON_EN_TEMPLATES["ar"]
-    text = template_text_expr(d, parts, "0")
-    url = f"concat('https://ar.example.org/d/', {d.cast_str('doc_id')})"
-    return (f"SELECT doc_id, {url} AS url, 'ar' AS lang, 0 AS sent_id, "
-            f"{text} AS text FROM documents")
-
-
-def gold_pos_lemma_ar_select(d: Dialect) -> str:
-    """Arabic full-pipeline gold over the twin corpus: the multi-clitic
-    MWT وللوزارة expands at fixed positions to words 3/4/5 (و CCONJ,
-    ل ADP, الوزارة NOUN — all is_mwt), the reference Arabic pipeline's
-    >2-way token split (test_arabic_pipeline.py golden shape)."""
-    return _gold_pos_lemma_lang_select(d, "ar", inner=ar_pages_select(d),
-                                       lang_filter=False)
-
-
-def gold_pos_lemma_es_select(d: Dialect) -> str:
-    """Spanish full-pipeline gold over the LIVE corpus es rows (ninth
-    language; the first langpacks data-only language measured on driver
-    corpus pages rather than a synthesized twin)."""
-    return _gold_pos_lemma_lang_select(d, "es")
-
-
-def it_pages_select(d: Dialect) -> str:
-    """Italian twin corpus (EIGHTH language — langpacks registry data
-    only): one page per document; the template carries both romance MWT
-    mechanisms (del/nel contractions AND the elided sull')."""
-    parts, _ = V.NON_EN_TEMPLATES["it"]
-    text = template_text_expr(d, parts, "0")
-    url = f"concat('https://it.example.org/d/', {d.cast_str('doc_id')})"
-    return (f"SELECT doc_id, {url} AS url, 'it' AS lang, 0 AS sent_id, "
-            f"{text} AS text FROM documents")
-
-
-def gold_pos_lemma_it_select(d: Dialect) -> str:
-    """Italian full-pipeline gold over the twin corpus: elision first
-    (sull'economia -> sull' + economia), then MWT expansion (del -> di
-    il at words 3/4, sull' -> su l' at 6/7, nel -> in il at 12/13) — the
-    language added purely as a langpacks entry (r5 judge item #5)."""
-    return _gold_pos_lemma_lang_select(d, "it", inner=it_pages_select(d),
-                                       lang_filter=False)
-
-
-def zh_pages_select(d: Dialect) -> str:
-    """Chinese UNSPACED twin corpus (fifth full language): one page per
-    document from ZH_SEG_TEMPLATE — no whitespace anywhere, so the
-    max-match segmenter is load-bearing for every token boundary."""
-    text = template_text_expr(d, V.ZH_SEG_TEMPLATE[0], "0")
-    url = f"concat('https://zh.example.org/d/', {d.cast_str('doc_id')})"
-    return (f"SELECT doc_id, {url} AS url, 'zh' AS lang, 0 AS sent_id, "
-            f"{text} AS text FROM documents")
-
-
-def gold_pos_lemma_zh_select(d: Dialect) -> str:
-    """Chinese segmentation gold over the unspaced twin corpus: word
-    boundaries at fixed max-match positions (数据|报告|于|Y|年|发布|。 —
-    longest-prefix dictionary semantics; the dict holds single-char
-    prefixes of its multi-char words, so each boundary proves the greedy
-    longest match, not mere membership)."""
-    return _gold_pos_lemma_lang_select(d, "zh", inner=zh_pages_select(d),
-                                       lang_filter=False,
-                                       template=V.ZH_SEG_TEMPLATE)
-
-
-def vi_pages_select(d: Dialect) -> str:
-    """Vietnamese spaced-syllable twin corpus (sixth full language): one
-    page per document from VI_SEG_TEMPLATE — every multi-syllable word
-    boundary is the GROUPING segmenter's decision."""
-    text = template_text_expr(d, V.VI_SEG_TEMPLATE[0], "0")
-    url = f"concat('https://vi.example.org/d/', {d.cast_str('doc_id')})"
-    return (f"SELECT doc_id, {url} AS url, 'vi' AS lang, 0 AS sent_id, "
-            f"{text} AS text FROM documents")
-
-
-def gold_pos_lemma_vi_select(d: Dialect) -> str:
-    """Vietnamese segmentation gold over the spaced-syllable twin corpus:
-    fixed greedy-longest grouping positions (Báo cáo|được|công bố|tại|
-    Hà Nội|năm|Y|. — the dict holds single-syllable prefixes of its
-    multi-syllable words, so each grouping proves longest-match; Hà Nội
-    proves grouping across capitalized syllables)."""
-    return _gold_pos_lemma_lang_select(d, "vi", inner=vi_pages_select(d),
-                                       lang_filter=False,
-                                       template=V.VI_SEG_TEMPLATE)
-
-
-def ja_pages_select(d: Dialect) -> str:
-    """Japanese mixed-script twin corpus (seventh language): one page per
-    document from JA_SEG_TEMPLATE — katakana run + unspaced kanji/kana +
-    embedded ASCII year in one stream."""
-    text = template_text_expr(d, V.JA_SEG_TEMPLATE[0], "0")
-    url = f"concat('https://ja.example.org/d/', {d.cast_str('doc_id')})"
-    return (f"SELECT doc_id, {url} AS url, 'ja' AS lang, 0 AS sent_id, "
-            f"{text} AS text FROM documents")
-
-
-def gold_pos_lemma_ja_select(d: Dialect) -> str:
-    """Japanese segmentation gold: fixed mixed-script positions
-    (データ|報告書|は|Y|年|に|東京|で|発表された|。) — katakana by script
-    rule, kanji by longest dict match (prefix traps), ASCII year by the
-    standard tokenizer; the verb lemma normalizes to 発表する."""
-    return _gold_pos_lemma_lang_select(d, "ja", inner=ja_pages_select(d),
-                                       lang_filter=False,
-                                       template=V.JA_SEG_TEMPLATE)
 
 
 def alias_values_cte(d: Dialect) -> str:

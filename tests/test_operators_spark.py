@@ -897,11 +897,12 @@ def test_vietnamese_syllable_grouping():
 
 
 def test_semgrex_arbitrary_named_nodes(spark):
-    """match_dep_pattern: any clause name becomes an output column — a
-    4-node pattern (pred + subj + place + when) beyond the triple shape;
-    negation vetoes; malformed patterns raise."""
+    """Pipeline.semgrex / match_semgrex: any clause name becomes an
+    output column — a 4-node pattern (pred + subj + place + when) beyond
+    the triple shape; negation vetoes; malformed patterns raise; a bare
+    root defaults to VERB in the facade."""
     from stanza_spark.api import Pipeline
-    from stanza_spark.operators.triples import match_dep_pattern
+    from stanza_spark.operators.semgrex import match_semgrex
     nlp = Pipeline(spark)
     docs = ["Obama moved to Tokyo in 1995.",
             "Obama was elected president in 2008."]
@@ -917,7 +918,7 @@ def test_semgrex_arbitrary_named_nodes(spark):
     assert ("move", "Obama", "Tokyo") in rows
     w = nlp.process(docs).localCheckpoint(eager=True)
     # negation column: veto predicates with an xcomp child
-    m2 = match_dep_pattern(
+    m2 = match_semgrex(
         w, "{upos:VERB}=action >nsubj|nsubj:pass=actor {} !>xcomp {} "
            ">obl=place {}")
     assert {r.action for r in m2.collect()} == {"move"}
@@ -925,21 +926,24 @@ def test_semgrex_arbitrary_named_nodes(spark):
                 "{}=p >obl=x {} >obl=x {}",   # duplicate names
                 "{}=p >obl=x ({} >case=y {}"):  # unclosed group
         with _pytest.raises(ValueError):
-            match_dep_pattern(w, bad)
+            match_semgrex(w, bad)
+        with _pytest.raises(ValueError):
+            nlp.semgrex(docs, bad)
     # r6: the unified engine legalized what the old one-hop matcher
-    # rejected — bounded >> dominance now works from this entry point too
-    deep = match_dep_pattern(w, "{}=p >>case=marker {}")
+    # rejected — bounded >> dominance works from the facade too, its bare
+    # root narrowed to VERB
+    deep = nlp.semgrex(docs, "{}=p >>case=marker {}")
     assert {(r.p, r.marker) for r in deep.collect()} == {
         ("move", "to"), ("elect", "in")}
     # head lemma regex constrains (same anchoring as extract_triples)...
-    m3 = match_dep_pattern(
+    m3 = match_semgrex(
         w, "{upos:VERB,lemma:/move/}=action >nsubj|nsubj:pass=actor {}")
     assert {r.action for r in m3.collect()} == {"move"}
-    assert match_dep_pattern(
+    assert match_semgrex(
         w, "{lemma:/elect/}=a >nsubj|nsubj:pass=s {}").count() == 1
     # ...and unsupported head attributes fail loudly, never drop silently
     with _pytest.raises(ValueError, match="unsupported head attributes"):
-        match_dep_pattern(w, "{cpos:VB}=a >nsubj=s {}")
+        match_semgrex(w, "{cpos:VB}=a >nsubj=s {}")
 
 
 def test_semgrex_unified_engine(spark):

@@ -4,6 +4,7 @@ aggregation matches the plain aggregate (SURVEY §4)."""
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -373,12 +374,32 @@ def test_dedup_exactly_one_keep_with_duplicated_rows(spark):
     assert d.agg(F.max("group_size")).collect()[0][0] == 3
 
 
+def _lang_filters_over_python(p: str) -> list[str]:
+    """Conditions of the Filter nodes that sit directly on a MapInPandas
+    and test ``lang`` — a column the Python pass only copies through, so
+    the filter belongs below the pass, not after it."""
+    tree = p.split("== Physical Plan ==")[1].split("\n\n")[0]
+    nodes = re.findall(r"^[\s+:-]*(?:\* )?([A-Za-z][\w ]*?) \((\d+)\)$",
+                       tree, re.M)
+    out = []
+    for (kind, nid), (child, _) in zip(nodes, nodes[1:]):
+        if kind == "Filter" and child == "MapInPandas":
+            cond = re.search(rf"^\({nid}\) Filter\n(?:.*\n)*?Condition : (.*)$",
+                             p, re.M).group(1)
+            if re.search(r"\blang#\d", cond):
+                out.append(cond)
+    return out
+
+
 def test_no_cartesian_or_row_python_in_any_gate_plan(spark):
     """Structural audit of EVERY batch gate plan in the driver registry:
     no CartesianProduct, no row-at-a-time Python UDF (BatchEvalPython)
     anywhere — Python only enters through Arrow-vectorized nodes
-    (MapInPandas / ArrowEvalPython / FlatMapGroupsInPandas).  Streaming
-    gates are exercised end-to-end elsewhere (they execute on build)."""
+    (MapInPandas / ArrowEvalPython / FlatMapGroupsInPandas) — and no
+    filter on ``lang`` directly above a MapInPandas (the Python pass
+    would annotate rows the filter then drops; filters on the pass's
+    own outputs, e.g. ``ner``, are fine).  Streaming gates are exercised
+    end-to-end elsewhere (they execute on build)."""
     import __spark_entry__ as entry
     skip = {"kg_triples_stream", "kg_stream_windows"}
     offenders = []
@@ -390,6 +411,8 @@ def test_no_cartesian_or_row_python_in_any_gate_plan(spark):
             offenders.append((name, "CartesianProduct"))
         if "BatchEvalPython" in p:
             offenders.append((name, "BatchEvalPython"))
+        for cond in _lang_filters_over_python(p):
+            offenders.append((name, f"Filter {cond} over MapInPandas"))
     assert offenders == []
 
 
