@@ -724,12 +724,6 @@ def parse_sentence(words, lang: str = "en"):
 # page-level driver
 # ---------------------------------------------------------------------------
 
-WORD_COLUMNS = [
-    "url", "lang", "sent_id", "sent_start", "sent_end",
-    "token_id", "word_id", "is_mwt", "text", "start_char", "end_char",
-    "upos", "xpos", "feats", "lemma", "head", "deprel", "ner",
-]
-
 WORDS_SCHEMA = (
     "url string, lang string, sent_id int, sent_start bigint, sent_end bigint, "
     "token_id int, word_id int, is_mwt boolean, text string, "
@@ -872,7 +866,7 @@ def annotate_sentences(text: str,
 def annotate_page(url: str, lang: str, text: str,
                   variant: str | None = None, processors=None,
                   decoder: str = "grammar"):
-    """-> list of word-row tuples (WORD_COLUMNS order)."""
+    """-> list of word-row tuples (WORDS_SCHEMA order)."""
     rows = []
     for sent_id, s_start, s_end, words in annotate_sentences(
             text, variant=variant, lang=lang,
@@ -887,18 +881,24 @@ def annotate_page(url: str, lang: str, text: str,
     return rows
 
 
-def _make_annotate_batches(variant: str | None, processors=None,
-                           decoder: str = "grammar"):
+def map_pages(pages_df, page_fn, schema: str, en_only: bool):
+    """pages (url, lang, text) -> the rows ``page_fn(url, lang, text)``
+    returns for each page (tuples in ``schema`` order), in ONE narrow
+    mapInPandas pass (zero shuffle) — the Arrow loop every per-page
+    kernel shares (annotation, triples, coref).  ``en_only`` drops the
+    other languages at the scan, before the Python pass."""
+    columns = [c.split()[0] for c in schema.split(", ")]
+    df = pages_df.select("url", "lang", "text")
+    if en_only:
+        df = df.filter(df.lang == "en")
+
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for url, lang, text in zip(pdf["url"], pdf["lang"], pdf["text"]):
-                out.extend(annotate_page(url, lang, text,
-                                         variant=variant,
-                                         processors=processors,
-                                         decoder=decoder))
-            yield pd.DataFrame(out, columns=WORD_COLUMNS)
-    return _batches
+                out.extend(page_fn(url, lang, text))
+            yield pd.DataFrame(out, columns=columns)
+    return df.mapInPandas(_batches, schema=schema)
 
 
 def annotate(pages_df, en_only: bool = True, variant: str | None = None,
@@ -912,12 +912,12 @@ def annotate(pages_df, en_only: bool = True, variant: str | None = None,
     annotators never execute (api.Pipeline threads its configured set
     through here); ``decoder='mst'`` runs the MST/Viterbi kernels in
     place of the fixed grammars (same narrow plan)."""
-    df = pages_df.select("url", "lang", "text")
-    if en_only:
-        df = df.filter(df.lang == "en")
-    return df.mapInPandas(
-        _make_annotate_batches(variant, processors, decoder),
-        schema=WORDS_SCHEMA)
+    return map_pages(
+        pages_df,
+        lambda url, lang, text: annotate_page(
+            url, lang, text, variant=variant, processors=processors,
+            decoder=decoder),
+        WORDS_SCHEMA, en_only)
 
 
 # ---------------------------------------------------------------------------
@@ -999,27 +999,17 @@ def page_triples(url: str, lang: str, text: str, decoder: str = "grammar"):
     return rows
 
 
-def _make_triples_batches(decoder: str):
-    cols = ["url", "sent_id", "subj", "pred", "obj", "subj_type", "obj_type"]
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, lang, text in zip(pdf["url"], pdf["lang"], pdf["text"]):
-                out.extend(page_triples(url, lang, text, decoder=decoder))
-            yield pd.DataFrame(out, columns=cols)
-    return _batches
-
-
 def triples_narrow(pages_df, decoder: str = "grammar"):
     """English pages -> triples in one narrow Arrow pass (no shuffle
     anywhere).
     ``decoder='mst'`` runs the MST/Viterbi decode kernels instead of the
     fixed grammars — same narrow plan, numpy per sentence inside the
     Arrow batch."""
-    df = pages_df.select("url", "lang", "text")
-    return df.filter(df.lang == "en").mapInPandas(
-        _make_triples_batches(decoder), schema=TRIPLES_SCHEMA)
+    return map_pages(
+        pages_df,
+        lambda url, lang, text: page_triples(url, lang, text,
+                                             decoder=decoder),
+        TRIPLES_SCHEMA, en_only=True)
 
 
 def align_pretokenized(text: str, tokens: list[str]):

@@ -1,5 +1,5 @@
 """Coref-lite (SURVEY §2.1 op 20): document-local pronoun resolution +
-coreference chains over the mentions table.
+coreference chains, one per-document kernel in one narrow Arrow pass.
 
 The reference runs a neural per-document coref model and selects a
 representative mention per chain — the longest span in words, length ties
@@ -7,39 +7,28 @@ broken by most PROPN tokens, remaining ties by earliest document position
 (/root/reference/stanza/pipeline/coref_processor.py:135-162: the loop
 updates best only on strictly-greater (len, num_propn), so the first
 maximum wins).  The deterministic stand-in resolves each personal pronoun
-to the most recent PERSON mention in a STRICTLY EARLIER sentence (classic
-recency heuristic; a PERSON in the pronoun's own sentence is never its
-antecedent — the same cross-sentence-only semantics the reference's coref
-model exhibits on its golden fixture, and the semantics the DuckDB oracle
-reconstructs with a `ROWS ... 1 PRECEDING` window over sent_id) and chains
-repeated surfaces of the same entity.
+to the best-scoring PERSON mention in a STRICTLY EARLIER sentence (the
+trained agreement scorer below, recency breaking ties; a PERSON in the
+pronoun's own sentence is never its antecedent — the same
+cross-sentence-only semantics the reference's coref model exhibits on its
+golden fixture, and the semantics the DuckDB oracle reconstructs with a
+`ROWS ... 1 PRECEDING` window over sent_id) and chains repeated surfaces
+of the same entity.
 
-Spark shape: both operators are Catalyst window plans over the mentions
-table — no Python node.  The candidate frame "strictly earlier
-sentences" is a range window over sent_id per url (``RANGE BETWEEN
-UNBOUNDED PRECEDING AND 1 PRECEDING``); for each candidate gender class (the
-genders of ``vocab.PERSON_GENDERS`` plus unknown) the latest candidate
-is ``max(struct(sent_id, first_word_id, key))`` over that frame.  The
-trained pair scorer becomes a (pronoun, class) score table on the
-driver, and the antecedent is the greatest ``struct(score, latest)``
-among the classes whose score clears the threshold — score first, then
-recency, the rule of ``_best_antecedent``.  Chains are the keys with
->= 2 members (a count over ``(url, key)``), numbered by ``dense_rank``
-over each url's keys, each represented by ``min(struct(-words, -propn,
-sent_id, first_word_id))``.  Every window keys on url, so the plan
-shuffles at most once, on url.  The per-document functions
-``_resolve_doc`` / ``_resolve_pronouns_doc`` remain as the executable
-reference the tests compare the plans against.
-
-Each operator is ONE ``spark.sql(text, **frames)`` statement whose text
-depends only on constants (``PRONOUNS``, ``PERSON_GENDERS``, the score
-table) and is built at import.  The same plans written with the Column
-API cost about 1 000 py4j round trips and 350 ms of driver time per
-``kg_coref_chains`` build before any task ran; as SQL text, 34 round
-trips and about 130 ms (4-vCPU host, identical rows and physical
-operators).  The text nests subqueries instead of a WITH clause: the CTE
-form analysed slower, and every later select on its result re-walked the
-CTE definitions (43 vs 11 ms per select).
+Spark shape: all of coref is local to one document, so it runs where the
+document is annotated.  ``page_coref`` annotates one page (tokenize, MWT,
+POS, NER: depparse and lemma are never read), decodes its BIOES mentions
+(``ner_tags.decode_from_bioes``), links each one through the
+``lower(alias) -> [entity_id]`` dictionary (one row per match, like a left
+join) and adds the PRON-tagged pronoun words; ``resolve_doc`` applies the
+rule to those rows as plain Python lists.  ``chains_narrow`` and
+``pronouns_narrow`` run it over pages in one ``mapInPandas`` pass
+(``annotate.map_pages``): no words table, no shuffle but the pages
+repartition.  The same rule as a five-window Catalyst plan over a
+checkpointed words table took four Spark jobs per kg_coref_chains
+collect against two here, and 0.93 s against 0.35 s (perfbench kg_adhoc
+job_s, 1 000 docs, medians of 10 alternating pairs, 4-vCPU host,
+identical rows).
 """
 
 from __future__ import annotations
@@ -47,12 +36,9 @@ from __future__ import annotations
 import json
 import pkgutil
 
-import pandas as pd
-
-from pyspark.sql import DataFrame
-
 from .. import vocab as V
-from ..session import sql, sql_str
+from .annotate import annotate_sentences, map_pages
+from .ner_tags import decode_from_bioes
 
 PRONOUNS = {"he", "she", "it", "they"}
 
@@ -116,232 +102,112 @@ def _propn_count(surface: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Catalyst plans, as SQL text fixed at import
+# the per-document kernel and the narrow pass over pages
 # ---------------------------------------------------------------------------
 
-_COLS = "url, sent_id, first_word_id, mention, type, entity_id"
-_PRONOUNS_IN = "(" + ", ".join(map(sql_str, sorted(PRONOUNS))) + ")"
+CHAINS_SCHEMA = ("url string, chain_id int, member string, sent_id int, "
+                 "first_word_id int, representative string")
+PRONOUNS_SCHEMA = ("url string, sent_id int, pronoun string, "
+                   "antecedent_entity string")
+
+#: the annotators coref reads: POS for the PRON tag, NER for the mentions
+COREF_PROCS = ("tokenize", "mwt", "pos", "ner")
 
 
-def _score_table() -> dict[str, dict[str, float]]:
-    """The trained scorer as candidate class (a gender of PERSON_GENDERS,
-    or "unknown") -> {pronoun: score} over the admissible pairs; a class
-    no pronoun admits is left out."""
-    out = {}
-    for g in [*sorted(set(V.PERSON_GENDERS)), None]:
-        table = {p: pair_score(p, g) for p in sorted(PRONOUNS)
-                 if pair_score(p, g) > 0}
-        if table:
-            out[g or "unknown"] = table
+def _alias_ids() -> dict[str, list[str]]:
+    """lower(alias) -> the entity id of every alias row it matches."""
+    out: dict[str, list[str]] = {}
+    for alias, entity_id, _name, _type in V.alias_rows():
+        out.setdefault(alias.lower(), []).append(entity_id)
     return out
 
 
-_SCORES = _score_table()
-
-# entity_gender as an expression: P<i> -> PERSON_GENDERS[i], else NULL
-# (try_cast: an id too long for an int is out of range too)
-_ID_RE = sql_str(r"^P([0-9]+)\z")
-_GENDER_IDX = f"try_cast(regexp_extract(entity_id, {_ID_RE}, 1) AS INT)"
-_GENDER = (f"CASE WHEN {_GENDER_IDX} < {len(V.PERSON_GENDERS)} THEN "
-           f"array({', '.join(map(sql_str, V.PERSON_GENDERS))})[{_GENDER_IDX}]"
-           f" END")
+_ALIAS_IDS = _alias_ids()
 
 
-def _class_best(cls: str, table: dict[str, float]) -> str:
-    """The class's (score, latest candidate) struct, NULL when the
-    pronoun scores nothing against the class or the class has no
-    candidate yet.  Scores are DOUBLE literals (``D``): a bare decimal
-    would make greatest() compare DECIMALs."""
-    prons = ", ".join(map(sql_str, table))
-    score = " ".join(f"WHEN {sql_str(p)} THEN {s!r}D"
-                     for p, s in table.items())
-    return (f"CASE WHEN pron IN ({prons}) AND latest_{cls} IS NOT NULL THEN "
-            f"named_struct('score', CASE pron {score} END, "
-            f"'latest', latest_{cls}) END")
+def resolve_doc(url: str, rows) -> tuple[list, list]:
+    """One document's coref rows -> (chain rows, pronoun rows).
 
+    ``rows``: (sent_id, first_word_id, mention, type, entity_id), the
+    linked mentions and the pronoun words, in any order.  A mention whose
+    lowercased surface is a pronoun resolves to the best antecedent among
+    the PERSON mentions of strictly earlier sentences (recency = document
+    position, then entity id); every other mention is a chain member
+    keyed by its entity id, or its lowercased surface when unlinked.
+    Chain candidates are all PERSONs; pronoun resolution admits only
+    PERSONs with an entity id.
 
-def _resolve_sql(candidate: str, key: str) -> str:
-    """Mentions ``{m}`` -> the same rows plus ``is_pron``, ``key`` (NULL
-    on pronoun rows) and ``antecedent`` (the best-scoring candidate key
-    from a strictly earlier sentence; NULL when none clears the threshold
-    or the row is not a pronoun), in ONE window level.
-
-    Within a gender class every candidate scores the same, so the
-    class's best is its latest; across classes the score decides and
-    recency breaks ties — ``_best_antecedent`` as a greatest() over one
-    struct per class."""
-    base = f"""SELECT {_COLS}, lower(mention) AS pron,
-       lower(mention) IN {_PRONOUNS_IN} AS is_pron
-FROM {{m}}"""
-    # each row's candidate class (a gender, 'unknown', or NULL for a
-    # non-candidate), computed once below the window
-    cands = f"""SELECT *, CASE WHEN NOT is_pron THEN {key} END AS key,
-       CASE WHEN ({candidate}) AND NOT is_pron
-            THEN coalesce({_GENDER}, 'unknown') END AS cls
-FROM ({base}) base"""
-    per_class = ",\n       ".join(
-        f"max(CASE WHEN cls = {sql_str(cls)} THEN struct(sent_id, "
-        f"first_word_id, key) END) OVER earlier AS latest_{cls}"
-        for cls in _SCORES)
-    latest = f"""SELECT {_COLS}, pron, is_pron, key,
-       {per_class}
-FROM ({cands}) cands
-WINDOW earlier AS (PARTITION BY url ORDER BY sent_id
-                   RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"""
-    best = [_class_best(cls, table) for cls, table in _SCORES.items()]
-    best = best[0] if len(best) == 1 else f"greatest({', '.join(best)})"
-    return f"""SELECT {_COLS}, is_pron, key, {best}.latest.key AS antecedent
-FROM ({latest}) latest"""
-
-
-_ENT = "nullif(entity_id, '')"
-_WS_RE = sql_str(r"\s+")
-
-_MEMBERS = f"""SELECT url, sent_id, first_word_id, mention,
-       coalesce(key, antecedent) AS key,
-       CASE WHEN is_pron THEN 0 ELSE words END AS propn, words
-FROM (SELECT *, size(filter(split(mention, {_WS_RE}), t -> t != ''))
-                  AS words
-      FROM ({_resolve_sql("type = 'PERSON'",
-                          f"coalesce({_ENT}, lower(mention))")}) res) counted
-WHERE coalesce(key, antecedent) IS NOT NULL"""
-# chains are the keys with >= 2 members; representative: longest in
-# words, most PROPN, earliest (coref_processor.py:135-162)
-_SIZED = f"""SELECT url, sent_id, first_word_id, mention, key,
-       count(1) OVER doc_key AS n,
-       min(struct(-words, -propn, sent_id, first_word_id, mention))
-         OVER doc_key AS rep
-FROM ({_MEMBERS}) members
-WINDOW doc_key AS (PARTITION BY url, key)"""
-_CHAINS_SQL = f"""SELECT url,
-       CAST(dense_rank() OVER (PARTITION BY url ORDER BY key) - 1 AS INT)
-         AS chain_id,
-       mention AS member, CAST(sent_id AS INT) AS sent_id,
-       CAST(first_word_id AS INT) AS first_word_id,
-       rep.mention AS representative
-FROM ({_SIZED}) sized WHERE n >= 2"""
-
-_PRONOUNS_SQL = f"""SELECT url, CAST(sent_id AS INT) AS sent_id,
-       mention AS pronoun, antecedent AS antecedent_entity
-FROM ({_resolve_sql(f"type = 'PERSON' AND {_ENT} IS NOT NULL", _ENT)}) res
-WHERE is_pron"""
-
-
-def coref_chains(mentions_linked: DataFrame) -> DataFrame:
-    """linked mentions (+pronoun mentions) -> per-doc coref chains
-    (url, chain_id, member, sent_id, first_word_id, representative).
-
-    Input needs columns: url, sent_id, first_word_id, mention, type,
-    entity_id (null ok).  Every non-pronoun mention is a member keyed by
-    its entity id, or its lowercased surface when unlinked; a pronoun
-    joins its antecedent's chain; PERSON mentions are the candidates."""
-    return sql(mentions_linked.sparkSession, _CHAINS_SQL, m=mentions_linked)
-
-
-def resolve_pronouns(mentions_linked: DataFrame) -> DataFrame:
-    """coref_input rows -> (url, sent_id, pronoun, antecedent_entity):
-    one row per pronoun with the entity of the best-scoring
-    agreement-compatible PERSON mention (with an entity id) from a
-    strictly earlier sentence, NULL when none clears the trained
-    threshold; gated against the grammar oracle (kg_coref)."""
-    return sql(mentions_linked.sparkSession, _PRONOUNS_SQL, m=mentions_linked)
-
-
-# ---------------------------------------------------------------------------
-# per-document Python reference: the rule as a sequential scan, which the
-# tests compare the Catalyst plans against row for row (no DataFrame path
-# calls these)
-# ---------------------------------------------------------------------------
-
-def _resolve_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One document's mentions+pronouns (sorted) -> chain rows."""
-    pdf = pdf.sort_values(["sent_id", "first_word_id"])
-    chains: dict[str, list] = {}   # key -> [(surface, sent_id, word_id)]
-    committed: list = []   # (entity, gender) PERSONs from EARLIER sentences
-    pending: list = []     # PERSONs inside the current sentence
-    cur_sent = None
-    for r in pdf.itertuples():
-        if cur_sent is None or r.sent_id != cur_sent:
-            committed.extend(pending)
-            pending = []
-            cur_sent = r.sent_id
-        surface = r.mention
+    Chain rows (CHAINS_SCHEMA): the keys with >= 2 members, numbered in
+    key order, each represented by its longest member in words, then most
+    PROPN, then earliest, then the smaller surface
+    (coref_processor.py:135-162).  Pronoun rows (PRONOUNS_SCHEMA): one
+    per pronoun, antecedent None when no candidate clears the trained
+    threshold."""
+    chain_cands: list = []   # (key, gender): PERSONs of earlier sentences
+    pron_cands: list = []    # (entity, gender): the same, linked only
+    new_chain: list = []     # ... and of the current sentence
+    new_pron: list = []
+    members: dict = {}       # key -> [(surface, sent_id, first_word_id)]
+    pronouns = []
+    cur = None
+    for sid, wid, surface, typ, ent in sorted(
+            rows, key=lambda r: (r[0], r[1], r[4] or "")):
+        if sid != cur:
+            chain_cands += new_chain
+            pron_cands += new_pron
+            new_chain, new_pron, cur = [], [], sid
         if surface.lower() in PRONOUNS:
-            key = _best_antecedent(surface, committed)
+            pronouns.append(
+                (url, sid, surface, _best_antecedent(surface, pron_cands)))
+            key = _best_antecedent(surface, chain_cands)
             if key is None:
                 continue
         else:
-            key = r.entity_id if r.entity_id else surface.lower()
-            if r.type == "PERSON":
-                pending.append((key, entity_gender(r.entity_id)))
-        chains.setdefault(key, []).append(
-            (surface, int(r.sent_id), int(r.first_word_id)))
+            key = ent or surface.lower()
+            if typ == "PERSON":
+                gender = entity_gender(ent)
+                new_chain.append((key, gender))
+                if ent:
+                    new_pron.append((ent, gender))
+        members.setdefault(key, []).append((surface, sid, wid))
+    chains = []
+    for cid, key in enumerate(k for k in sorted(members)
+                              if len(members[k]) > 1):
+        rep = min((-len(m.split()), -_propn_count(m), sid, wid, m)
+                  for m, sid, wid in members[key])[-1]
+        chains += [(url, cid, m, sid, wid, rep)
+                   for m, sid, wid in members[key]]
+    return chains, pronouns
+
+
+def page_coref(url: str, lang: str, text: str) -> tuple[list, list]:
+    """One page -> ``resolve_doc`` over its linked mentions and pronoun
+    words (the words table's own annotation, incl. the <UNK> long-token
+    guard; first_word_id is the 1-based word index in the sentence)."""
     rows = []
-    cid = 0
-    for key in sorted(chains):
-        members = chains[key]
-        # representative: longest in WORDS, ties by most PROPN, then
-        # earliest document position (coref_processor.py:135-162 — the
-        # reference loop only replaces best on strictly greater
-        # (word_len, num_propn), so the first maximum wins)
-        rep = sorted(members,
-                     key=lambda m: (-len(m[0].split()), -_propn_count(m[0]),
-                                    m[1], m[2]))[0][0]
-        if len(members) > 1:
-            for surface, sid, wid in members:
-                rows.append((pdf["url"].iloc[0], cid, surface, sid, wid, rep))
-            cid += 1
-    return pd.DataFrame(rows, columns=["url", "chain_id", "member",
-                                       "sent_id", "first_word_id",
-                                       "representative"])
+    for sid, _a, _b, words in annotate_sentences(text, lang=lang,
+                                                 processors=COREF_PROCS):
+        for m in decode_from_bioes([w["ner"] for w in words]):
+            surface = " ".join(w["text"]
+                               for w in words[m["start"]:m["end"] + 1])
+            for ent in _ALIAS_IDS.get(surface.lower(), [None]):
+                rows.append((sid, m["start"] + 1, surface, m["type"], ent))
+        for i, w in enumerate(words, 1):
+            if w["upos"] == "PRON" and w["text"].lower() in PRONOUNS:
+                rows.append((sid, i, w["text"], "PRON", None))
+    return resolve_doc(url, rows)
 
 
-def _resolve_pronouns_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One document's coref input -> one row per pronoun with the entity
-    of the best-scoring AGREEMENT-COMPATIBLE person mention from a
-    STRICTLY EARLIER sentence (NULL when no candidate clears the trained
-    threshold).  A PERSON in the pronoun's own sentence never serves —
-    the explicit cross-sentence-only semantics this operator commits to,
-    matching the DuckDB oracle's `ROWS ... 1 PRECEDING` window over
-    sentences (ADVICE r2); since round 6 the window runs over
-    gender-compatible persons only (the trained mention-pair decision,
-    gold_coref_select)."""
-    pdf = pdf.sort_values(["sent_id", "first_word_id"])
-    committed: list = []   # (entity, gender) from sentences before cur
-    pending: list = []     # PERSONs inside the current sentence
-    cur_sent = None
-    rows = []
-    for r in pdf.itertuples():
-        if cur_sent is None or r.sent_id != cur_sent:
-            committed.extend(pending)
-            pending = []
-            cur_sent = r.sent_id
-        if r.mention.lower() in PRONOUNS:
-            rows.append((r.url, int(r.sent_id), r.mention,
-                         _best_antecedent(r.mention, committed)))
-        elif r.type == "PERSON" and r.entity_id:
-            pending.append((r.entity_id, entity_gender(r.entity_id)))
-    return pd.DataFrame(rows, columns=["url", "sent_id", "pronoun",
-                                       "antecedent_entity"])
+def chains_narrow(pages_df):
+    """English pages -> coreference chains (CHAINS_SCHEMA) in one narrow
+    Arrow pass."""
+    return map_pages(pages_df, lambda *page: page_coref(*page)[0],
+                     CHAINS_SCHEMA, en_only=True)
 
 
-_INPUT_SQL = f"""SELECT /*+ BROADCAST(a) */ m.url, m.sent_id, m.first_word_id,
-       m.mention, m.type, a.entity_id
-FROM {{mentions}} m
-LEFT JOIN (SELECT lower(alias) AS alias_l, entity_id FROM {{aliases}}) a
-  ON lower(m.mention) = a.alias_l
-UNION ALL
-SELECT url, sent_id, word_id AS first_word_id, text AS mention,
-       'PRON' AS type, CAST(NULL AS STRING) AS entity_id
-FROM {{words}}
-WHERE lower(text) IN {_PRONOUNS_IN} AND upos = 'PRON'"""
-
-
-def coref_input(words: DataFrame, mentions: DataFrame,
-                aliases: DataFrame) -> DataFrame:
-    """Decoded mentions + their ``entity_id`` (a broadcast left join on
-    the lowercased alias; unlinked mentions keep a NULL id), unioned with
-    the pronoun tokens (He/She/It/They) from the words table — pronouns
-    are not NER mentions but are coref anchors."""
-    return sql(words.sparkSession, _INPUT_SQL, words=words,
-               mentions=mentions, aliases=aliases)
+def pronouns_narrow(pages_df):
+    """English pages -> one row per pronoun with its resolved entity
+    (PRONOUNS_SCHEMA) in one narrow Arrow pass; gated against the grammar
+    oracle (kg_coref)."""
+    return map_pages(pages_df, lambda *page: page_coref(*page)[1],
+                     PRONOUNS_SCHEMA, en_only=True)

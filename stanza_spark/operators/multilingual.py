@@ -21,15 +21,17 @@ from pyspark.sql import DataFrame, functions as F
 from .annotate import annotate
 from .tokenize_sql import sentences_from_pages, tokens_sql
 
-# four FULL languages: the per-language "models" are the en rule
+# six FULL languages: the per-language "models" are the en rule
 # lexicons, the de lexicon + APPRART MWT dict (im -> in dem), the fr
 # lexicon + preposition-article clitic MWT dict (du -> de le,
-# test_french_pipeline.py golden shape), and the ar lexicon + MULTI-clitic
+# test_french_pipeline.py golden shape), the ar lexicon + MULTI-clitic
 # MWT dict (وللوزارة -> و + ل + الوزارة, a THREE-way split in an RTL
-# script — test_arabic_pipeline.py golden shape).  The non-English corpora
-# carry real MWT expansions, so the routed word stream exercises tuple
-# token ids corpus-wide across three typologically different contraction
-# systems.
+# script — test_arabic_pipeline.py golden shape), and the it / es
+# lexicons + preposition-article MWT dicts (nel -> in il, del -> de el).
+# The de/fr/es corpora carry real MWT expansions, so the routed word
+# stream exercises tuple token ids corpus-wide; ar and it pages do not
+# occur in the driver corpus, so only callers outside the gates reach
+# their branch.
 FULL_PIPELINE_LANGS = ("en", "de", "fr", "ar", "it", "es")
 
 

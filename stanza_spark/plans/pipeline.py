@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from ..sources.pages import pages as pages_src
 from ..operators.html import extract_text_expr
 from ..operators.annotate import annotate, triples_narrow
+from ..operators.coref import pronouns_narrow
 from ..operators.mentions import decode_mentions
 from ..operators.linking import alias_df, link_mentions_with_fallback
 from ..operators.graph import materialize_graph
@@ -201,12 +202,11 @@ class KGPipeline:
             lambda m: link_mentions_with_fallback(m, alias_df(self.spark)),
             ["mentions"], hook("links"))
 
-        def coref_stage(w, m):
-            from ..operators.coref import coref_input, resolve_pronouns
-            return resolve_pronouns(coref_input(w, m, alias_df(self.spark)))
-
+        # coref and triples are per-page kernels: each reads the pages
+        # stage and runs one narrow Arrow pass (its own annotation), so
+        # neither reads the words or mentions stage
         self._run_stage(
-            "coref", coref_stage, ["words", "mentions"], hook("coref"))
+            "coref", pronouns_narrow, ["pages"], hook("coref"))
 
         self._run_stage(
             "triples", triples_narrow, ["pages"], hook("triples"))

@@ -131,9 +131,12 @@ def _words(spark, sf_dir, cache: bool = False, cols=None,
     # concurrent build-side scans of the fan each re-pay that task count;
     # coalesce the READ side to cores/4 so k concurrent scans stay ~2x
     # cores tasks in flight (scale-adaptive: derived from parallelism,
-    # and the coalesce is narrow — no shuffle).  Measured on a 4-vCPU
-    # host at local[4]: kg_coref_chains was faster with the coalesce in
-    # 6 of 8 alternating A/B pairs (ROADMAP item 8).
+    # and the coalesce is narrow — no shuffle).  Measured at sf0.1 on a
+    # 4-vCPU host at local[4], 7 alternating pairs in one warm session:
+    # the kg_triples_chain fan was faster with the coalesce in 5 of 7
+    # (median 1.58 vs 1.89 s); kg_mentions_multi, one scan, gains
+    # nothing (faster in 1 of 7 and 2 of 7 over two runs; ROADMAP
+    # item 8).
     scan_parts = max(1, spark.sparkContext.defaultParallelism // 4)
     return w.localCheckpoint(eager=True).coalesce(scan_parts)
 
@@ -157,23 +160,20 @@ def q_kg_lemma_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_coref(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-local pronoun resolution (op 20): every pronoun resolved
-    to the most recent preceding PERSON mention's entity (the recency
-    rule; representative-selection analog of coref_chain.py:66-69)."""
-    from .operators.coref import coref_input, resolve_pronouns
-    w = _words(spark, sf_dir, cache=True)
-    return resolve_pronouns(coref_input(w, decode_mentions(w),
-                                        alias_df(spark)))
+    to the best-scoring agreeing PERSON entity of an earlier sentence
+    (recency breaks ties; representative-selection analog of
+    coref_chain.py:66-69), in one narrow pass over pages."""
+    from .operators.coref import pronouns_narrow
+    return pronouns_narrow(pages(spark, sf_dir, with_html=False))
 
 
 def q_kg_coref_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full coreference chains (op 20, the CorefChain surface): entity- or
     surface-keyed member lists per document with the reference's
     representative rule (longest-in-words, most-PROPN, earliest —
-    coref_processor.py:135-162)."""
-    from .operators.coref import coref_chains, coref_input
-    w = _words(spark, sf_dir, cache=True)
-    m = coref_input(w, decode_mentions(w), alias_df(spark))
-    return coref_chains(m).select(
+    coref_processor.py:135-162), in one narrow pass over pages."""
+    from .operators.coref import chains_narrow
+    return chains_narrow(pages(spark, sf_dir, with_html=False)).select(
         "url", "chain_id", "member", "sent_id", "representative")
 
 

@@ -4,16 +4,90 @@ rule — including the case pure recency gets WRONG (a female person
 intervening between a male antecedent and "He")."""
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from stanza_spark.operators.coref import (_MODEL, _best_antecedent,
-                                          _resolve_doc,
-                                          _resolve_pronouns_doc,
-                                          coref_chains, entity_gender,
-                                          pair_score, resolve_pronouns)
+from stanza_spark.operators.coref import (_MODEL, PRONOUNS,
+                                          _best_antecedent, _propn_count,
+                                          entity_gender, pair_score,
+                                          resolve_doc)
 from stanza_spark.operators.coref_train import pair_features
 from stanza_spark import vocab as V
+
+
+# ---------------------------------------------------------------------------
+# per-document Python reference: the rule as a sequential scan over a
+# sorted pandas frame, written independently of the production kernel
+# (operators.coref.resolve_doc), which the tests below compare against it
+# ---------------------------------------------------------------------------
+
+def _resolve_doc(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One document's mentions+pronouns -> chain rows."""
+    pdf = pdf.sort_values(["sent_id", "first_word_id"])
+    chains: dict[str, list] = {}   # key -> [(surface, sent_id, word_id)]
+    committed: list = []   # (entity, gender) PERSONs from EARLIER sentences
+    pending: list = []     # PERSONs inside the current sentence
+    cur_sent = None
+    for r in pdf.itertuples():
+        if cur_sent is None or r.sent_id != cur_sent:
+            committed.extend(pending)
+            pending = []
+            cur_sent = r.sent_id
+        surface = r.mention
+        if surface.lower() in PRONOUNS:
+            key = _best_antecedent(surface, committed)
+            if key is None:
+                continue
+        else:
+            key = r.entity_id if r.entity_id else surface.lower()
+            if r.type == "PERSON":
+                pending.append((key, entity_gender(r.entity_id)))
+        chains.setdefault(key, []).append(
+            (surface, int(r.sent_id), int(r.first_word_id)))
+    rows = []
+    cid = 0
+    for key in sorted(chains):
+        members = chains[key]
+        # representative: longest in WORDS, ties by most PROPN, then
+        # earliest document position (coref_processor.py:135-162 — the
+        # reference loop only replaces best on strictly greater
+        # (word_len, num_propn), so the first maximum wins)
+        rep = sorted(members,
+                     key=lambda m: (-len(m[0].split()), -_propn_count(m[0]),
+                                    m[1], m[2]))[0][0]
+        if len(members) > 1:
+            for surface, sid, wid in members:
+                rows.append((pdf["url"].iloc[0], cid, surface, sid, wid, rep))
+            cid += 1
+    return pd.DataFrame(rows, columns=["url", "chain_id", "member",
+                                       "sent_id", "first_word_id",
+                                       "representative"])
+
+
+def _resolve_pronouns_doc(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One document's coref input -> one row per pronoun with the entity
+    of the best-scoring AGREEMENT-COMPATIBLE person mention from a
+    STRICTLY EARLIER sentence (NULL when no candidate clears the trained
+    threshold).  A PERSON in the pronoun's own sentence never serves —
+    the cross-sentence-only semantics of the DuckDB oracle's
+    `ROWS ... 1 PRECEDING` window over sentences (gold_coref_select)."""
+    pdf = pdf.sort_values(["sent_id", "first_word_id"])
+    committed: list = []   # (entity, gender) from sentences before cur
+    pending: list = []     # PERSONs inside the current sentence
+    cur_sent = None
+    rows = []
+    for r in pdf.itertuples():
+        if cur_sent is None or r.sent_id != cur_sent:
+            committed.extend(pending)
+            pending = []
+            cur_sent = r.sent_id
+        if r.mention.lower() in PRONOUNS:
+            rows.append((r.url, int(r.sent_id), r.mention,
+                         _best_antecedent(r.mention, committed)))
+        elif r.type == "PERSON" and r.entity_id:
+            pending.append((r.entity_id, entity_gender(r.entity_id)))
+    return pd.DataFrame(rows, columns=["url", "sent_id", "pronoun",
+                                       "antecedent_entity"])
 
 
 def test_trained_weights_reproduce_committed_artifact(spark):
@@ -58,6 +132,9 @@ def test_entity_gender_table():
 
 
 def _doc(rows):
+    """The rows as a reference input frame, once the production kernel
+    is checked to agree with the reference on them."""
+    _assert_operators_match_reference(rows)
     return pd.DataFrame(
         rows, columns=["url", "sent_id", "first_word_id", "mention",
                        "type", "entity_id"])
@@ -114,12 +191,10 @@ def test_best_antecedent_prefers_match_over_unknown():
 
 
 # ---------------------------------------------------------------------------
-# The Catalyst operators against the per-document Python reference
+# The production kernel against the per-document Python reference
 # ---------------------------------------------------------------------------
 
 COLS = ["url", "sent_id", "first_word_id", "mention", "type", "entity_id"]
-SCHEMA = ("url string, sent_id int, first_word_id int, mention string, "
-          "type string, entity_id string")
 
 
 def _reference(rows, per_doc):
@@ -131,18 +206,19 @@ def _reference(rows, per_doc):
                   key=repr)
 
 
-def _assert_operators_match_reference(spark, rows):
-    m = spark.createDataFrame(rows, SCHEMA)
-    got_chains = sorted((tuple(r) for r in coref_chains(m).collect()),
-                        key=repr)
-    got_res = sorted((tuple(r) for r in resolve_pronouns(m).collect()),
-                     key=repr)
+def _assert_operators_match_reference(rows):
+    docs: dict = {}
+    for url, *row in rows:
+        docs.setdefault(url, []).append(tuple(row))
+    got = [resolve_doc(url, doc) for url, doc in docs.items()]
+    got_chains = sorted((r for chains, _ in got for r in chains), key=repr)
+    got_res = sorted((r for _, res in got for r in res), key=repr)
     assert got_chains == _reference(rows, _resolve_doc)
     assert got_res == _reference(rows, _resolve_pronouns_doc)
     return got_chains, got_res
 
 
-def test_catalyst_matches_reference_on_edge_cases(spark):
+def test_kernel_matches_reference_on_edge_cases():
     rows = [
         # own-sentence PERSON never serves; tie of two males -> recency
         ("a", 0, 0, "Barack Obama", "PERSON", "P0"),
@@ -155,8 +231,8 @@ def test_catalyst_matches_reference_on_edge_cases(spark):
         ("a", 3, 2, "It", "ORG", "O1"),          # NER mention, pronoun
         ("a", 4, 1, "they", "PRON", None),       # never on singulars
         # unknown-gender PERSONs with and without an entity id: without
-        # one (NULL or "") coref_chains keys them by surface and
-        # resolve_pronouns skips them; a non-P<i> id is unknown gender
+        # one (NULL or "") the chains key them by surface and pronoun
+        # resolution skips them; a non-P<i> id is unknown gender
         ("b", 0, 0, "Kim", "PERSON", None),
         ("b", 0, 2, "Kim Lee", "PERSON", "X9"),
         ("b", 1, 0, "it", "PRON", None),
@@ -165,15 +241,15 @@ def test_catalyst_matches_reference_on_edge_cases(spark):
         ("b", 3, 1, "Paris", "LOC", None),       # single member: dropped
         ("b", 4, 0, "Jo", "PERSON", "P99999999999"),
     ]
-    chains, res = _assert_operators_match_reference(spark, rows)
+    chains, res = _assert_operators_match_reference(rows)
     by_pron = {(u, s, p): a for u, s, p, a in res}
     assert by_pron[("a", 2, "hE")] == "P2"
     assert by_pron[("a", 2, "It")] is None
     assert by_pron[("a", 3, "SHE")] == "P1"
     assert by_pron[("a", 3, "It")] == "P12"   # the unknown-gender Ada
     assert by_pron[("a", 4, "they")] is None
-    # resolve_pronouns admits only PERSONs with an entity id ("X9");
-    # coref_chains also admits the surface-keyed Kim of sentence 2
+    # pronoun resolution admits only PERSONs with an entity id ("X9");
+    # the chains also admit the surface-keyed Kim of sentence 2
     assert by_pron[("b", 1, "it")] == "X9"
     assert by_pron[("b", 3, "It")] == "X9"
     b_chains = {(m, s): rep for u, _, m, s, _, rep in chains
@@ -209,13 +285,12 @@ _doc_rows = st.lists(
     max_size=14, unique_by=lambda r: (r[0], r[1]))
 
 
-@settings(max_examples=25, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@settings(max_examples=25, deadline=None)
 @given(st.lists(_doc_rows, min_size=1, max_size=6))
-def test_catalyst_operators_equal_python_reference(spark, docs):
-    """Multi-document mention tables: both window plans equal the
-    per-document Python reference row for row."""
+def test_kernel_equals_python_reference(docs):
+    """Multi-document mention tables: the kernel's chain and pronoun rows
+    equal the per-document Python reference row for row."""
     rows = [(f"u{d}", s, w, *mention)
             for d, doc in enumerate(docs) for s, w, mention in doc]
     if rows:
-        _assert_operators_match_reference(spark, rows)
+        _assert_operators_match_reference(rows)

@@ -1,7 +1,7 @@
 """Driver-side planning cost: the ``documents`` read needs no Spark job
 (declared schema, footer checked on the driver), and the coref gates build
-their plans in a bounded number of py4j calls (SQL text, not Column-API
-chains)."""
+their plans in a bounded number of py4j calls (one narrow pass over pages,
+not Column-API chains)."""
 
 import collections
 import contextlib
@@ -79,23 +79,13 @@ def test_good_documents_read_runs_no_job(spark):
                     lambda: pages(spark, SF_SMOKE, with_html=False)) == []
 
 
-@pytest.fixture
-def prebuilt_words(spark, monkeypatch):
-    """queries._words served from one prebuilt, checkpointed words table,
-    so a gate's build is only its own planning."""
+def test_coref_gates_build_in_few_py4j_calls(spark, monkeypatch):
+    """Building q_kg_coref_chains / q_kg_coref (pages and one narrow
+    Arrow pass) sends at most 100 py4j call commands each (the Column-API
+    window plans sent about 1 000).  Only py4j's call command ``c`` is
+    counted: the object-release commands the Python GC sends vary run to
+    run."""
     import stanza_spark.queries as Q
-    w = Q._words(spark, SF_SMOKE, cache=True)
-    monkeypatch.setattr(Q, "_words", lambda *a, **k: w)
-    return Q
-
-
-def test_coref_gates_build_in_few_py4j_calls(spark, prebuilt_words,
-                                             monkeypatch):
-    """Building q_kg_coref_chains / q_kg_coref over the words checkpoint
-    sends at most 100 py4j call commands each (the Column-API plans sent
-    about 1 000).  Only py4j's call command ``c`` is counted: the
-    object-release commands the Python GC sends vary run to run."""
-    Q = prebuilt_words
     client = spark.sparkContext._gateway._gateway_client
     sent = collections.Counter()
     send = client.send_command
@@ -110,20 +100,20 @@ def test_coref_gates_build_in_few_py4j_calls(spark, prebuilt_words,
         assert 0 < sent["c"] <= 100, (q.__name__, sent)
 
 
-def test_coref_chains_physical_operators_pinned(spark, prebuilt_words):
-    """The chains plan over the words checkpoint keeps its physical
-    shape: five windows, three sorts, two object-hash aggregates (the
-    BIOES decode), one broadcast join and one union, and no shuffle
-    exchange."""
+def test_coref_chains_physical_operators_pinned(spark):
+    """The chains plan keeps its physical shape: the pages scan, its
+    one input-spread exchange and ONE MapInPandas that annotates, links
+    and resolves each page — no window, sort, aggregate, join or union."""
+    import stanza_spark.queries as Q
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        prebuilt_words.q_kg_coref_chains(spark, SF_SMOKE).explain("formatted")
+        Q.q_kg_coref_chains(spark, SF_SMOKE).explain("formatted")
     tree = buf.getvalue().split("== Physical Plan ==")[1]
     nodes = collections.Counter(re.findall(r"^\(\d+\) (\w+)", tree, re.M))
     assert {k: nodes[k] for k in (
-        "Window", "Sort", "ObjectHashAggregate", "HashAggregate",
-        "BroadcastHashJoin", "SortMergeJoin", "Union", "BroadcastExchange",
-        "Exchange")} == {
-        "Window": 5, "Sort": 3, "ObjectHashAggregate": 2, "HashAggregate": 0,
-        "BroadcastHashJoin": 1, "SortMergeJoin": 0, "Union": 1,
-        "BroadcastExchange": 1, "Exchange": 0}, nodes
+        "MapInPandas", "Window", "Sort", "ObjectHashAggregate",
+        "HashAggregate", "BroadcastHashJoin", "SortMergeJoin", "Union",
+        "BroadcastExchange", "Exchange")} == {
+        "MapInPandas": 1, "Window": 0, "Sort": 0, "ObjectHashAggregate": 0,
+        "HashAggregate": 0, "BroadcastHashJoin": 0, "SortMergeJoin": 0,
+        "Union": 0, "BroadcastExchange": 0, "Exchange": 1}, nodes

@@ -22,55 +22,54 @@ def _seq_score(em, path):
 
 
 def _best_tag_score(em):
-    """Exhaustive max over ALL |TAGS|^T tag sequences, vectorized in
-    chunks (17^6 = 24.1 M sequences — itertools is too slow at the full
-    UD tag space, but the search stays literally exhaustive)."""
+    """Exhaustive max over ALL |TAGS|^T tag sequences (17^7 = 410 M at
+    T = 7 — itertools is too slow at the full UD tag space, but the
+    search stays literally exhaustive): for each choice of the first
+    T - 5 tags, the score of every completion is built by broadcasting,
+    one axis per remaining position, and the max taken over all of them
+    (a sum per sequence, never a max over partial paths)."""
     T, K = em.shape
-    total = K ** T
+    p = max(0, T - 5)
     best = -np.inf
-    chunk = 1 << 20
-    for start in range(0, total, chunk):
-        idx = np.arange(start, min(start + chunk, total), dtype=np.int64)
-        digits = np.empty((len(idx), T), dtype=np.int64)
-        x = idx
-        for t in range(T - 1, -1, -1):
-            digits[:, t] = x % K
-            x = x // K
-        s = em[0][digits[:, 0]].copy()
-        for t in range(1, T):
-            s += TRANS_W[digits[:, t - 1], digits[:, t]] + em[t][digits[:, t]]
-        best = max(best, float(s.max()))
+    for prefix in itertools.product(range(K), repeat=p):
+        # acc[..., i]: every sequence so far, ending in tag i at position p
+        acc = (em[0] if not prefix else
+               _seq_score(em, prefix) + TRANS_W[prefix[-1]] + em[p])
+        for t in range(p + 1, T):
+            acc = acc[..., :, None] + TRANS_W + em[t]
+        best = max(best, float(acc.max()))
     return best
 
 
 def _all_single_root_trees(n):
     """All head vectors (1-indexed over n words, 0 = ROOT) forming a
-    spanning arborescence with exactly one root arc."""
-    for heads in itertools.product(range(0, n + 1), repeat=n):
-        if sum(1 for h in heads if h == 0) != 1:
-            continue
-        seen_cycle = False
-        for start in range(1, n + 1):
-            node, hops = start, 0
-            while node != 0 and hops <= n:
-                node = heads[node - 1]
-                hops += 1
-            if node != 0:
-                seen_cycle = True
-                break
-        if not seen_cycle:
-            yield list(heads)
+    spanning arborescence with exactly one root arc, as the rows of an
+    array.  Every one of the (n+1)^n vectors is enumerated; the
+    single-root ones are kept, then the acyclic ones by pointer jumping:
+    each round replaces every node's pointer by its pointer's pointer
+    (ROOT points to itself), so after ceil(log2 n) + 1 rounds a node of a
+    tree points to ROOT and a node on or above a cycle never does."""
+    idx = np.arange((n + 1) ** n, dtype=np.int64)
+    heads = np.empty((len(idx), n), dtype=np.int8)
+    for t in range(n - 1, -1, -1):
+        heads[:, t] = idx % (n + 1)
+        idx //= n + 1
+    heads = heads[(heads == 0).sum(axis=1) == 1]
+    up = np.concatenate([np.zeros((len(heads), 1), np.int8), heads], axis=1)
+    for _ in range(int(np.ceil(np.log2(max(n, 2)))) + 1):
+        up = np.take_along_axis(up, up.astype(np.intp), axis=1)
+    return heads[(up[:, 1:] == 0).all(axis=1)]
 
 
 def _tree_score(tags, heads):
-    s = 0.0
-    for dep1, h in enumerate(heads, start=1):
-        dt = _T[tags[dep1 - 1]]
-        if h == 0:
-            s += ROOT_W[dt]
-        else:
-            s += ARC_W[dt, _T[tags[h - 1]]] - DIST_DECAY * (abs(dep1 - h) - 1)
-    return s
+    """Score of each head vector (rows of ``heads``): ROOT affinity for
+    the root arc, arc weight minus distance decay for every other."""
+    dt = np.array([_T[t] for t in tags])
+    h = np.asarray(heads, dtype=np.int64)
+    dep = np.arange(1, len(tags) + 1)
+    arc = (ARC_W[dt, dt[np.maximum(h - 1, 0)]]
+           - DIST_DECAY * (np.abs(dep - h) - 1))
+    return np.where(h == 0, ROOT_W[dt], arc).sum(axis=1)
 
 
 @pytest.mark.parametrize("pid", range(len(PATTERNS)))
@@ -81,10 +80,12 @@ def test_expected_analysis_is_weight_optimal(pid):
     best_tag = _best_tag_score(em)
     got_tag = _seq_score(em, [TAGS.index(t) for t in tags])
     assert got_tag == pytest.approx(best_tag)
-    # tree: exhaustive over all single-root arborescences
-    best_tree = max(_tree_score(tags, h)
-                    for h in _all_single_root_trees(len(toks)))
-    assert _tree_score(tags, heads) == pytest.approx(best_tree)
+    # tree: exhaustive over all single-root arborescences (Cayley: n^(n-1)
+    # rooted trees on n labelled words)
+    trees = _all_single_root_trees(len(toks))
+    assert len(trees) == len(toks) ** (len(toks) - 1)
+    best_tree = _tree_score(tags, trees).max()
+    assert _tree_score(tags, [heads])[0] == pytest.approx(best_tree)
 
 
 def test_patterns_exercise_out_of_grammar_shapes():

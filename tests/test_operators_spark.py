@@ -279,14 +279,12 @@ def test_french_mwt_golden():
 def test_coref_lite_golden(spark):
     """'He was elected president' resolves to Barack Obama; chain
     representative = longest surface (coref_chain.py:66-69 rule)."""
-    from stanza_spark.operators.coref import coref_chains, coref_input
+    from stanza_spark.operators.coref import chains_narrow
     doc = ("Barack Obama was born in Hawaii.  He was elected president in "
            "2008.  Obama attended Harvard.")
     df = spark.createDataFrame([("u", "en", doc)],
                                "url string, lang string, text string")
-    w = annotate(df)
-    chains = coref_chains(
-        coref_input(w, decode_mentions(w), alias_df(spark))).collect()
+    chains = chains_narrow(df).collect()
     members = sorted((r.member, r.sent_id) for r in chains)
     assert members == [("Barack Obama", 0), ("He", 1), ("Obama", 2)]
     assert all(r.representative == "Barack Obama" for r in chains)
@@ -514,7 +512,7 @@ def test_signlsh_recall_vs_brute_force(spark):
     assert recall >= 0.8, f"sign-LSH recall {recall:.3f} < 0.8"
 
 
-def test_coref_propn_tiebreak_and_same_sentence(spark):
+def test_coref_propn_tiebreak_and_same_sentence():
     """(a) Representative rule follows the reference exactly
     (coref_processor.py:135-162): longest in WORDS, length ties broken by
     most PROPN, then earliest — 'Ben' (1 word, 1 PROPN) beats the LATER
@@ -522,9 +520,7 @@ def test_coref_propn_tiebreak_and_same_sentence(spark):
     longest-surface-chars rule would have picked 'They'.
     (b) A PERSON in the pronoun's own sentence never serves as antecedent
     (cross-sentence-only semantics, matching the DuckDB oracle)."""
-    from stanza_spark.operators.coref import coref_chains, resolve_pronouns
-    schema = ("url string, sent_id int, first_word_id int, mention string, "
-              "type string, entity_id string")
+    from stanza_spark.operators.coref import resolve_doc
     rows = [
         # doc A: Ben ... He  -> chain rep must be 'Ben' via PROPN
         # tiebreak (P0 is male, so the agreement decision admits He)
@@ -538,15 +534,17 @@ def test_coref_propn_tiebreak_and_same_sentence(spark):
         ("c", 0, 0, "Curie", "PERSON", "P1"),
         ("c", 1, 0, "She", "PRON", None),
     ]
-    m = spark.createDataFrame(rows, schema)
-    chains = coref_chains(m).collect()
-    a_chain = [r for r in chains if r.url == "a"]
-    assert sorted(r.member for r in a_chain) == ["Ben", "He"]
-    assert all(r.representative == "Ben" for r in a_chain)
+    chains, resolved = [], []
+    for url in ("a", "b", "c"):
+        c, r = resolve_doc(url, [row[1:] for row in rows if row[0] == url])
+        chains += c
+        resolved += r
+    a_chain = [r for r in chains if r[0] == "a"]
+    assert sorted(r[2] for r in a_chain) == ["Ben", "He"]
+    assert all(r[5] == "Ben" for r in a_chain)
     # doc B: same-sentence person is NOT an antecedent -> no chain forms
-    assert not [r for r in chains if r.url == "b"]
-    res = {(r.url, r.pronoun): r.antecedent_entity
-           for r in resolve_pronouns(m).collect()}
+    assert not [r for r in chains if r[0] == "b"]
+    res = {(url, pron): ent for url, _, pron, ent in resolved}
     assert res[("b", "He")] is None       # same sentence: never
     assert res[("c", "She")] == "P1"      # earlier sentence + agrees: yes
 

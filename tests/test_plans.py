@@ -181,20 +181,26 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
 
 
 def test_coref_plans_have_no_grouped_python(spark):
-    """Coreference is a Catalyst window plan: the physical plans of both
-    coref gates contain no FlatMapGroupsInPandas (no per-document Python
-    pass), and the annotate MapInPandas — behind the words checkpoint —
-    is the only kind of Python node they may hold."""
-    import re
+    """Coreference is document-local, so both coref gates are ONE narrow
+    Arrow pass over pages: exactly one MapInPandas (no grouped
+    FlatMapGroupsInPandas, no words table), and no window, sort, union,
+    join or exchange but the pages repartition."""
+    import collections
     from stanza_spark.queries import q_kg_coref, q_kg_coref_chains
     for q in (q_kg_coref_chains, q_kg_coref):
         p = _plan(q(spark, SF_SMOKE))
-        nodes = set(re.findall(r"^\(\d+\) (\w+)", p, re.M))
+        tree = p.split("== Physical Plan ==")[1]
+        nodes = collections.Counter(re.findall(r"^\(\d+\) (\w+)", tree, re.M))
         python = {n for n in nodes if re.search("Pandas|Arrow|Python", n)}
-        assert "FlatMapGroupsInPandas" not in p, q.__name__
-        assert python <= {"MapInPandas"}, (q.__name__, python)
-        # the antecedent frame: strictly earlier sentences
-        assert "RangeFrame, unboundedpreceding$(), -1" in p, q.__name__
+        assert python == {"MapInPandas"}, (q.__name__, python)
+        assert {k: nodes[k] for k in (
+            "MapInPandas", "Window", "Sort", "Union", "BroadcastExchange",
+            "SortMergeJoin", "BroadcastHashJoin", "Exchange")} == {
+            "MapInPandas": 1, "Window": 0, "Sort": 0, "Union": 0,
+            "BroadcastExchange": 0, "SortMergeJoin": 0,
+            "BroadcastHashJoin": 0, "Exchange": 1}, (q.__name__, nodes)
+        # the one exchange is pages()' input-spread repartition
+        assert "hashpartitioning(doc_id" in tree, q.__name__
 
 
 def test_no_driver_collect_in_operator_paths():

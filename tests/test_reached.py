@@ -36,9 +36,6 @@ ALLOWED = {
         "the annotator's char offsets are checked against it",
     ("stanza_spark/operators/morphseg.py", "segment_word"):
         "the morphseg SQL is checked against it",
-    ("stanza_spark/operators/coref.py", "entity_gender"):
-        "the Python coref reference (_resolve_doc) the coref SQL is "
-        "checked against uses it",
     ("stanza_spark/operators/graph.py", "salted_support"):
         "checked against materialize_graph; the holistic-aggregate form "
         "SURVEY C6 names",
