@@ -58,8 +58,9 @@ class Pipeline:
             raise ValueError(f"unknown decoder: {decoder!r}")
         self.spark = spark
         self.lang = lang
-        self.pretokenized = pretokenized
-        self.no_ssplit = no_ssplit
+        # the TOKENIZER_VARIANTS entry that replaces the splitter, if any
+        self.variant = ("pretokenized" if pretokenized
+                        else "no_ssplit" if no_ssplit else None)
         # 'mst' = general decode kernels (Chu-Liu/Edmonds + Viterbi) in
         # place of the fixed grammars — the semantics-complete path
         self.decoder = decoder
@@ -94,14 +95,15 @@ class Pipeline:
         configured processors' columns (unrequested stages are skipped
         inside the UDF, not computed-and-nulled)."""
         from .operators.annotate import annotate
-        variant = ("pretokenized" if self.pretokenized
-                   else "no_ssplit" if self.no_ssplit else None)
-        w = annotate(self._pages(docs), en_only=False, variant=variant,
-                     processors=self.processors, decoder=self.decoder)
-        if "morphseg" in self.processors:
-            from .operators.morphseg import segment_words
-            w = segment_words(w)
-        return w
+        return self._morphseg(annotate(
+            self._pages(docs), en_only=False, variant=self.variant,
+            processors=self.processors, decoder=self.decoder))
+
+    def _morphseg(self, words: DataFrame) -> DataFrame:
+        if "morphseg" not in self.processors:
+            return words
+        from .operators.morphseg import segment_words
+        return segment_words(words)
 
     __call__ = process
 
@@ -114,23 +116,24 @@ class Pipeline:
         accepts a :class:`~stanza_spark.operators.triples.DepPattern`, a
         Semgrex-style string (parsed via ``DepPattern.from_semgrex``), or
         a name->pattern dict (multi-pattern run, output gains a
-        ``pattern`` column)."""
+        ``pattern`` column) — all matched in one narrow pass from the
+        pages (``triples.triples_narrow``) with this pipeline's variant,
+        processors and decoder; type columns only with ner."""
         if "depparse" not in self.processors:
             raise PipelineRequirementsException(
                 "triples requires the depparse processor")
-        from .operators.mentions import decode_mentions
         from .operators.triples import (DEFAULT_PATTERN, DepPattern,
-                                        extract_triples,
-                                        extract_triples_multi)
-        w = self.process(docs).localCheckpoint(eager=True)
-        m = decode_mentions(w) if "ner" in self.processors else None
+                                        triples_narrow)
         if isinstance(pattern, dict):
-            pats = {k: (DepPattern.from_semgrex(v) if isinstance(v, str)
-                        else v) for k, v in pattern.items()}
-            return extract_triples_multi(w, pats, m)
-        if isinstance(pattern, str):
+            pattern = {k: (DepPattern.from_semgrex(v) if isinstance(v, str)
+                           else v) for k, v in pattern.items()}
+        elif isinstance(pattern, str):
             pattern = DepPattern.from_semgrex(pattern)
-        return extract_triples(w, m, pattern=pattern or DEFAULT_PATTERN)
+        return triples_narrow(
+            self._pages(docs),
+            DEFAULT_PATTERN if pattern is None else pattern,
+            decoder=self.decoder, processors=self.processors,
+            variant=self.variant, en_only=False)
 
     def conllu(self, text: str) -> str:
         """Reference {:C} rendering of one document (requires the full
@@ -165,13 +168,22 @@ class Pipeline:
         """Dependency-graph surgery from the facade — the reference's
         Ssurgeon entry point (stanza/server/ssurgeon.py) as declarative
         edit rules over the words DataFrame.  ``rules`` is a list of
-        :class:`~stanza_spark.operators.ssurgeon.SsurgeonRule`; returns
-        the rewritten words table with the ``ss_edited`` lineage flag."""
+        :class:`~stanza_spark.operators.ssurgeon.SsurgeonRule`, applied
+        per sentence inside the annotation pass; returns the rewritten
+        words table with the ``ss_edited`` lineage flag."""
         if "depparse" not in self.processors:
             raise PipelineRequirementsException(
                 "ssurgeon requires the depparse processor")
-        from .operators.ssurgeon import apply_ssurgeon
-        return apply_ssurgeon(self.process(docs), rules)
+        from .operators.annotate import map_pages
+        from .operators.ssurgeon import SSURGEON_SCHEMA, ssurgeon_page
+        variant, procs, decoder = (self.variant, self.processors,
+                                   self.decoder)
+        return self._morphseg(map_pages(
+            self._pages(docs),
+            lambda url, lang, text: ssurgeon_page(
+                url, lang, text, rules, variant=variant, processors=procs,
+                decoder=decoder),
+            SSURGEON_SCHEMA, en_only=False))
 
     def tsurgeon(self, docs, rules) -> DataFrame:
         """Constituency-tree surgery from the facade — the reference's

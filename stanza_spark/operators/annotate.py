@@ -871,14 +871,19 @@ def annotate_page(url: str, lang: str, text: str,
     for sent_id, s_start, s_end, words in annotate_sentences(
             text, variant=variant, lang=lang,
             processors=processors, decoder=decoder):
-        for w_i, w in enumerate(words):
-            rows.append((
-                url, lang, sent_id, s_start, s_end,
-                w["token_id"], w_i + 1, w["is_mwt"], w["text"],
-                w["start"], w["end"], w["upos"], w["xpos"], w["feats"],
-                w["lemma"], w["head"], w["deprel"], w["ner"],
-            ))
+        rows.extend(sentence_rows(url, lang, sent_id, s_start, s_end, words))
     return rows
+
+
+def sentence_rows(url: str, lang: str, sent_id: int, s_start: int,
+                  s_end: int, words) -> list[tuple]:
+    """One annotated sentence -> its word-row tuples (WORDS_SCHEMA order,
+    word ids 1-based)."""
+    return [(url, lang, sent_id, s_start, s_end,
+             w["token_id"], w_i, w["is_mwt"], w["text"],
+             w["start"], w["end"], w["upos"], w["xpos"], w["feats"],
+             w["lemma"], w["head"], w["deprel"], w["ner"])
+            for w_i, w in enumerate(words, 1)]
 
 
 def map_pages(pages_df, page_fn, schema: str, en_only: bool):
@@ -918,98 +923,6 @@ def annotate(pages_df, en_only: bool = True, variant: str | None = None,
             url, lang, text, variant=variant, processors=processors,
             decoder=decoder),
         WORDS_SCHEMA, en_only)
-
-
-# ---------------------------------------------------------------------------
-# Narrow-path triple extraction: the whole pages -> triples chain in ONE
-# mapInPandas pass (zero shuffle).  This is the only plan for
-# default-pattern triples: kg_triples, the KGPipeline triples stage, the
-# stream's foreachBatch and the graph/pagerank gates all run it.
-# Annotation and pattern-matching are sentence-local, so nothing needs an
-# exchange until the corpus-wide graph aggregate (the reference exploits
-# the same locality in UDProcessor.bulk_process, processor.py:242-260).
-# The relational path (operators.triples SQL joins) serves declared
-# patterns; its default-pattern case stays gated through kg_ssurgeon and
-# the extract_triples_multi parity case (tests/test_parity_rotated.py).
-# ---------------------------------------------------------------------------
-
-_TRIPLE_PRIO = {"obj": 1, "xcomp": 2, "obl": 3}
-
-TRIPLES_SCHEMA = ("url string, sent_id int, subj string, pred string, "
-                  "obj string, subj_type string, obj_type string")
-
-
-def sentence_triples(words, mentions):
-    """words: annotated dicts (text/upos/lemma/head/deprel, 1-based heads);
-    mentions: ner_tags.decode_from_bioes spans (0-based start/end/type).
-    -> list of (subj, pred, obj, subj_type, obj_type)."""
-    flats: dict = {}
-    for i, w in enumerate(words):
-        if w["deprel"] == "flat":
-            flats.setdefault(w["head"], []).append((i + 1, w["text"]))
-
-    def span(word_id):
-        w = words[word_id - 1]
-        fl = sorted(flats.get(word_id, []))
-        text = " ".join([w["text"]] + [t for _, t in fl])
-        last = fl[-1][0] if fl else word_id
-        return text, last
-
-    mtype = {(m["start"] + 1, m["end"] + 1): m["type"] for m in mentions}
-    out = []
-    for v in range(1, len(words) + 1):
-        if words[v - 1]["upos"] != "VERB":
-            continue
-        subjs = [i + 1 for i, w in enumerate(words)
-                 if w["head"] == v and w["deprel"] in ("nsubj", "nsubj:pass")]
-        objs = sorted((_TRIPLE_PRIO[w["deprel"]], i + 1)
-                      for i, w in enumerate(words)
-                      if w["head"] == v and w["deprel"] in _TRIPLE_PRIO)
-        if not subjs or not objs:
-            continue
-        o_id = objs[0][1]
-        obj_text, o_last = span(o_id)
-        for s_id in subjs:
-            subj_text, s_last = span(s_id)
-            out.append((subj_text, words[v - 1]["lemma"], obj_text,
-                        mtype.get((s_id, s_last)), mtype.get((o_id, o_last))))
-    return out
-
-
-def page_triples(url: str, lang: str, text: str, decoder: str = "grammar"):
-    """-> list of triple rows for one page (TRIPLES_SCHEMA order): the
-    sentences of annotate_sentences (the words table's own annotation,
-    incl. the <UNK> long-token guard), mentions decoded from their BIOES
-    ``ner`` tags.
-
-    ``decoder='mst'`` swaps the fixed grammars for the general decode
-    kernels (operators.decode): Chu-Liu/Edmonds single-root MST over the
-    grammar-derived arc scores for depparse, Viterbi over the gazetteer
-    emissions for NER — byte-identical output on in-grammar sentences
-    (gate kg_triples_mst shares kg_triples' oracle), valid trees/tag
-    sequences on sentences the grammar degrades on."""
-    from .ner_tags import decode_from_bioes
-
-    rows = []
-    for sent_id, _a, _b, words in annotate_sentences(
-            text, lang=lang, decoder=decoder):
-        mentions = decode_from_bioes([w["ner"] for w in words])
-        for subj, pred, obj, st, ot in sentence_triples(words, mentions):
-            rows.append((url, sent_id, subj, pred, obj, st, ot))
-    return rows
-
-
-def triples_narrow(pages_df, decoder: str = "grammar"):
-    """English pages -> triples in one narrow Arrow pass (no shuffle
-    anywhere).
-    ``decoder='mst'`` runs the MST/Viterbi decode kernels instead of the
-    fixed grammars — same narrow plan, numpy per sentence inside the
-    Arrow batch."""
-    return map_pages(
-        pages_df,
-        lambda url, lang, text: page_triples(url, lang, text,
-                                             decoder=decoder),
-        TRIPLES_SCHEMA, en_only=True)
 
 
 def align_pretokenized(text: str, tokens: list[str]):

@@ -25,6 +25,22 @@ from pyspark.sql import DataFrame
 
 from ..session import sql
 
+#: the words columns the BIOES mention decode actually consumes —
+#: projecting to these before a materialization (guide §2.3 "project
+#: before the exchange") writes 7 of the words table's 18 columns; at
+#: cluster scale the same projection shrinks the stage table every
+#: downstream exchange reads.
+MENTION_COLS = ("url", "sent_id", "word_id", "text", "start_char",
+                "end_char", "ner")
+
+
+#: the processors a mentions-only consumer needs: the NER tagger reads
+#: token surfaces only (tag_ner is POS-independent), so POS/lemma/
+#: depparse are dead weight on those paths (guide §1.2 "don't compute
+#: things you throw away"; decoded mentions verified identical)
+MENTION_PROCS = ("tokenize", "mwt", "ner")
+
+
 # A segment opens exactly where the reference's state machine starts a new
 # entity (ner/utils.py:218-264): on B-/S-, after an O gap (flush), or right
 # after an E-/S- (the previous span was closed) — so even malformed

@@ -26,8 +26,9 @@ to :data:`MAX_NEST_DEPTH`):
                                                    # whole-name regex
 
 Matching semantics (deterministic, documented — the SAME
-greedy-select-then-require rule :func:`~stanza_spark.operators.triples
-.extract_triples` uses for its chains, so the two surfaces agree):
+greedy-select-then-require rule the triple matcher
+:func:`~stanza_spark.operators.triples.match_sentence` uses for its
+chains, so the two surfaces agree):
 
 * root: every word matching the root attrs binds (its LEMMA is the root
   output column — the predicate surface of the triple special case);
@@ -356,6 +357,28 @@ class _Compiler:
         return b
 
 
+def _surfaces(words: DataFrame) -> DataFrame:
+    """-> (url, sent_id, word_id, _surf): each word's flat-expanded
+    surface span — its text, then its ``flat`` children's in word order;
+    a word that is itself a ``flat`` dependent keeps its own text."""
+    flats = (
+        words.filter(F.col("deprel") == "flat")
+        .groupBy("url", "sent_id", F.col("head").alias("word_id"))
+        .agg(F.array_join(F.transform(
+            F.array_sort(F.collect_list(F.struct("word_id", "text"))),
+            lambda s: s["text"]), " ").alias("flat_text"))
+    )
+    return (
+        words.select("url", "sent_id", "word_id", "text", "deprel")
+        .join(flats, ["url", "sent_id", "word_id"], "left")
+        .select("url", "sent_id", "word_id",
+                F.when((F.col("deprel") != "flat")
+                       & F.col("flat_text").isNotNull(),
+                       F.concat_ws(" ", "text", "flat_text"))
+                .otherwise(F.col("text")).alias("_surf"))
+    )
+
+
 def match_semgrex(words: DataFrame, pattern: SemNode | str,
                   uniq: bool = False) -> DataFrame:
     """General Semgrex matching over the words table.
@@ -367,8 +390,6 @@ def match_semgrex(words: DataFrame, pattern: SemNode | str,
     ``uniq=True`` collapses duplicate output rows (the Semgrex CLI's
     uniq post-step) with one distinct over the named columns.
     """
-    from .triples import spans
-
     if isinstance(pattern, str):
         pattern = parse_semgrex(pattern)
     comp = _Compiler(words)
@@ -376,16 +397,7 @@ def match_semgrex(words: DataFrame, pattern: SemNode | str,
     names = _names_in_order(pattern)
     named_nonroot = [n for n in names[1:]]
     if named_nonroot:
-        # surface = flat-expanded span for span heads; a node that is
-        # itself a flat dependent (not a span head) emits its own text
-        sp = spans(words)
-        surf = (words.select("url", "sent_id", "word_id",
-                             F.col("text").alias("_raw"))
-                .join(sp.select("url", "sent_id", "word_id",
-                                "span_text"),
-                      ["url", "sent_id", "word_id"], "left")
-                .select("url", "sent_id", "word_id",
-                        F.coalesce("span_text", "_raw").alias("_surf")))
+        surf = _surfaces(words)
         for n in named_nonroot:
             idc = comp.id_col[n]
             # LEFT: an optional clause's binding column is NULL where it

@@ -1,5 +1,5 @@
 """Ssurgeon-analog dependency-graph rewriting — declarative edit rules
-applied to the flat words table as pure DataFrame transforms.
+applied to each annotated sentence inside the narrow Arrow pass.
 
 The reference exposes graph surgery through a Java subprocess: Semgrex
 matches select nodes/edges and Ssurgeon edits mutate them —
@@ -11,9 +11,10 @@ before triple extraction (e.g. a parser that emits generic ``dep`` where
 ``obl`` belongs).
 
 Here a rule is DATA — match predicates over one dependency arc plus an
-optional child-of-dependent constraint — and application is a broadcast
-join + conditional projection, so Catalyst plans the whole edit pass and
-nothing is per-document:
+optional child-of-dependent constraint — and :meth:`SsurgeonRule.apply`
+edits one sentence's word dicts, so the edit runs in the same per-page
+kernel as annotation and triple matching (kg_ssurgeon,
+``api.Pipeline.ssurgeon``) with no join and no exchange:
 
 * ``match_deprel``        — the arc label to match.
 * ``child_rel``           — if set, the DEPENDENT must itself have a child
@@ -26,20 +27,20 @@ nothing is per-document:
                             Ssurgeon re-hang for mis-attached modifiers.
 
 Rules apply IN ORDER, each over the previous rule's output (the reference
-applies its edit list sequentially per match).  The output carries an
-``ss_edited`` flag per word row so downstream stages (and lineage
-metrics) can see exactly which arcs surgery touched.
-
-Scale: each rule is one narrow self-join keyed on (url, sent_id) — the
-same co-located key every KG stage shuffles on, so at 100 TB the edit
-pass rides the words table's existing partitioning; no collect, no UDF.
+applies its edit list sequentially per match); one rule matches against
+the sentence as it was before that rule.  :func:`apply_rules` returns an
+edited flag per word (the ``ss_edited`` column) so downstream stages (and
+lineage metrics) can see exactly which arcs surgery touched.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from .annotate import WORDS_SCHEMA, annotate_sentences, sentence_rows
+
+#: the words table plus the per-word surgery flag
+SSURGEON_SCHEMA = WORDS_SCHEMA + ", ss_edited boolean"
 
 
 @dataclass(frozen=True)
@@ -56,45 +57,49 @@ class SsurgeonRule:
         if self.action == "relabel" and not self.new_deprel:
             raise ValueError("ssurgeon: relabel requires new_deprel")
 
+    def apply(self, words) -> list[bool]:
+        """Edit one sentence in place (word dicts with head/deprel/upos,
+        1-based heads) -> per word, whether this rule matched it.  A
+        reattach whose head has no head of its own keeps its arc."""
+        kids = ({w["head"] for w in words if w["deprel"] == self.child_rel}
+                if self.child_rel is not None else None)
+        hits = [w["deprel"] == self.match_deprel
+                and (self.dep_upos is None or w["upos"] in self.dep_upos)
+                and (kids is None or i in kids)
+                for i, w in enumerate(words, 1)]
+        heads = [w["head"] for w in words]
+        for w, hit in zip(words, hits):
+            if not hit:
+                continue
+            if self.action == "relabel":
+                w["deprel"] = self.new_deprel
+            elif w["head"] is not None and 0 < w["head"] <= len(words) \
+                    and heads[w["head"] - 1] is not None:
+                w["head"] = heads[w["head"] - 1]
+        return hits
 
-def apply_ssurgeon(words: DataFrame,
-                   rules: list[SsurgeonRule]) -> DataFrame:
-    """words (url, sent_id, word_id, head, deprel, upos, ...) -> the same
-    table with every rule applied in order and an ``ss_edited`` boolean
-    marking rows any rule touched."""
-    out = words.withColumn("ss_edited", F.lit(False))
+
+def apply_rules(words, rules) -> list[bool]:
+    """Apply ``rules`` in order to one sentence -> per word, whether any
+    rule touched it (the ``ss_edited`` flag)."""
+    edited = [False] * len(words)
     for rule in rules:
-        hit = F.col("deprel") == rule.match_deprel
-        if rule.dep_upos is not None:
-            hit = hit & F.col("upos").isin(*rule.dep_upos)
-        if rule.child_rel is not None:
-            kids = (out.filter(F.col("deprel") == rule.child_rel)
-                    .select("url", "sent_id",
-                            F.col("head").alias("word_id"))
-                    .distinct().withColumn("_kid", F.lit(True)))
-            out = out.join(kids, ["url", "sent_id", "word_id"], "left")
-            hit = hit & F.col("_kid").isNotNull()
-        # materialize the match BEFORE mutating the columns it reads —
-        # otherwise a relabel would un-match its own rows when ss_edited
-        # is computed afterwards
-        out = out.withColumn("_hit", hit)
-        if rule.action == "relabel":
-            out = out.withColumn(
-                "deprel",
-                F.when(F.col("_hit"), F.lit(rule.new_deprel))
-                .otherwise(F.col("deprel")))
-        else:                                    # reattach to grandparent
-            gp = out.select("url", "sent_id",
-                            F.col("word_id").alias("head"),
-                            F.col("head").alias("_gp_head"))
-            out = (out.join(gp, ["url", "sent_id", "head"], "left")
-                   .withColumn(
-                       "head",
-                       F.when(F.col("_hit") & F.col("_gp_head").isNotNull(),
-                              F.col("_gp_head")).otherwise(F.col("head")))
-                   .drop("_gp_head"))
-        out = (out.withColumn("ss_edited", F.col("ss_edited") | F.col("_hit"))
-               .drop("_hit"))
-        if rule.child_rel is not None:
-            out = out.drop("_kid")
-    return out
+        edited = [e or h for e, h in zip(edited, rule.apply(words))]
+    return edited
+
+
+def ssurgeon_page(url: str, lang: str, text: str, rules,
+                  variant: str | None = None, processors=None,
+                  decoder: str = "grammar") -> list[tuple]:
+    """-> one page's word rows after surgery (SSURGEON_SCHEMA order): the
+    sentences of ``annotate.annotate_sentences`` with ``rules`` applied
+    and each word's ``ss_edited`` flag."""
+    rows = []
+    for sent_id, s_start, s_end, words in annotate_sentences(
+            text, variant=variant, lang=lang, processors=processors,
+            decoder=decoder):
+        edited = apply_rules(words, rules)
+        rows.extend(r + (e,) for r, e in zip(
+            sentence_rows(url, lang, sent_id, s_start, s_end, words),
+            edited))
+    return rows

@@ -1,37 +1,44 @@
-"""OpenIE-style triple extraction from dependency arcs — pure Spark SQL
-self-joins, no UDF (operator C2, SURVEY §2.3).
+"""OpenIE-style triple extraction from dependency arcs: ONE per-sentence
+matcher for every :class:`DepPattern`, run inside one narrow Arrow pass
+from pages (operator C2, SURVEY §2.3).
 
 The reference's analog is Semgrex patterns run in a Java subprocess per
 document (/root/reference/stanza/server/semgrex.py:53-102, default pattern
-``{}=source >obj=zzz {}=target``); here the same dependency patterns are
-relational joins over the flat words table, so Catalyst plans them and there
-is no per-document IPC at all.  These joins serve declared patterns and
-``api.Pipeline``; default-pattern triples in kg_triples, the KGPipeline
-triples stage and the stream run the one narrow pass
-``annotate.triples_narrow``.
+``{}=source >obj=zzz {}=target``).  Here the pattern is data read by
+:func:`match_sentence` over one annotated sentence, and
+:func:`triples_narrow` runs annotation and matching together in a single
+``mapInPandas`` (``annotate.map_pages``): no words table, no join and no
+exchange besides the pages spread.  Every DepPattern consumer runs it:
+kg_triples (+ ``_mst``, ``_pattern``, ``_chain``, ``_subj_chain``,
+``_deep``), the ``KGPipeline`` triples stage, the stream, kg_ssurgeon's
+page kernel and ``api.Pipeline.triples``.
 
-Pattern (anchored to the reference golden parse
+Default pattern (anchored to the reference golden parse
 `Obama --nsubj--> attended <--obj-- Harvard` =>
 ``(Obama, attend, Harvard)``, test_english_pipeline.py:66-87):
 
 * predicate: any VERB ``v``; pred = lemma(v) (lemma normalization = op 16).
-* subject:   child of ``v`` with deprel nsubj | nsubj:pass.
+* subject:   child of ``v`` with deprel nsubj | nsubj:pass (one row each).
 * object:    highest-priority child among obj > xcomp > obl (ties: word
   order) — the first obl is e.g. ``moved to *Tokyo* in 1999``.
-* argument spans expand over ``flat`` children (``Barack <-flat- Obama``),
-  joined in surface order.
-* types: a span that exactly covers a NER mention inherits its type.
+* argument spans expand over ``flat`` children (``Barack <-flat- Obama``):
+  the head, then its children in word order.
+* types: a span that exactly covers a NER mention (first and last word)
+  inherits its type.
 
-Every join keys on (url, sent_id): AQE reuses the one exchange, and the
-arity of each side is O(words).  At 100 TB the words table is pre-hashed on
-url so all five joins co-locate.
+Annotation and matching are sentence-local, so nothing needs an exchange
+until the corpus-wide graph aggregate (the reference exploits the same
+locality in UDProcessor.bulk_process, processor.py:242-260).
 """
 
 from __future__ import annotations
 
+import functools
+import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from .annotate import annotate_sentences, map_pages
+from .ner_tags import decode_from_bioes
 
 
 @dataclass(frozen=True)
@@ -40,8 +47,8 @@ class DepPattern:
 
     The reference exposes user-definable dependency patterns (semgrex.py:193,
     default ``{}=source >obj=zzz {}=target``; engine :53-102) run in a Java
-    subprocess per document.  Here the pattern is DATA compiled onto the
-    same relational self-joins Catalyst already plans: a user wanting
+    subprocess per document.  Here the pattern is DATA read by
+    the one per-sentence matcher (:func:`match_sentence`): a user wanting
     ``(X, advise, Y)`` from an ``nmod`` arc passes
     ``DepPattern(obj_rels=("nmod",))`` instead of editing operator source.
 
@@ -87,6 +94,13 @@ class DepPattern:
     chain_rels: tuple[str, ...] | None = None
     subj_chain_rels: tuple[str, ...] | None = None
     expand_rels: tuple[str, ...] = ("flat",)
+
+    def __post_init__(self):
+        # the matcher reads the surface from the word dict: fail here,
+        # not inside a Python worker at the first predicate
+        if self.pred_from not in ("lemma", "text"):
+            raise ValueError("DepPattern.pred_from must be 'lemma' or "
+                             f"'text', got {self.pred_from!r}")
 
     @classmethod
     def from_semgrex(cls, pattern: str) -> "DepPattern":
@@ -212,251 +226,196 @@ SUBJ_CHAIN_PATTERN = DepPattern.from_semgrex(
     "!>xcomp {} >obl=obj ({} >case=tail {})")
 
 
-def spans(words: DataFrame,
-          expand_rels: tuple[str, ...] = ("flat",)) -> DataFrame:
-    """Span-head rows with flat-expanded surface text.
-
-    -> (url, sent_id, word_id, span_text, last_word_id)
-    """
-    flats = (
-        words.filter(F.col("deprel").isin(*expand_rels))
-        .groupBy("url", "sent_id", F.col("head").alias("word_id"))
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("word_id", "text"))),
-                    lambda s: s["text"],
-                ),
-                " ",
-            ).alias("flat_text"),
-            F.max("word_id").alias("flat_last"),
-        )
-    )
-    heads = words.filter(~F.col("deprel").isin(*expand_rels)).select(
-        "url", "sent_id", "word_id", "text"
-    )
-    return (
-        heads.join(flats, ["url", "sent_id", "word_id"], "left")
-        .select(
-            "url", "sent_id", "word_id",
-            F.when(
-                F.col("flat_text").isNotNull(),
-                F.concat_ws(" ", F.col("text"), F.col("flat_text")),
-            ).otherwise(F.col("text")).alias("span_text"),
-            F.coalesce("flat_last", "word_id").alias("last_word_id"),
-        )
-    )
+#: the processors an untyped match needs: NER only types the arguments
+#: (the parser never reads it), so a gate without type columns skips it
+PARSE_PROCS = ("tokenize", "mwt", "pos", "lemma", "depparse")
 
 
-def extract_triples_multi(words: DataFrame,
-                          patterns: dict[str, DepPattern],
-                          mentions: DataFrame | None = None) -> DataFrame:
-    """Run a NAMED LIST of dependency patterns in one job — the reference
-    Semgrex surface processes pattern lists per request (semgrex.py:53-102
-    iterates patterns); here each pattern's self-join plan is unioned with
-    a ``pattern`` label column.  Catalyst still plans each branch
-    independently (shared words-table scan, AQE exchange reuse), so k
-    patterns cost at most k narrow join fans over one cached input —
-    never k corpus scans at 100 TB when ``words`` is checkpointed."""
-    out = None
-    for name, pat in patterns.items():
-        t = extract_triples(words, mentions, pattern=pat) \
-            .withColumn("pattern", F.lit(name))
-        out = t if out is None else out.unionByName(t)
-    if out is None:
-        raise ValueError("extract_triples_multi: empty pattern dict")
+def _columns(pattern: DepPattern, keep_ids: bool, typed: bool) -> str:
+    cols = "url string, sent_id int, subj string, pred string, obj string"
+    if keep_ids:
+        cols += ", v_id int, s_id int, o_id int"
+    if pattern.subj_chain_rels is not None:
+        cols += ", subj_tail string"
+    if pattern.chain_rels is not None:
+        cols += ", tail string"
+    if typed:
+        cols += ", subj_type string, obj_type string"
+    return cols
+
+
+def _named(pattern) -> list:
+    """A DepPattern or a name -> DepPattern dict -> [(name | None, pat)]."""
+    if not isinstance(pattern, dict):
+        return [(None, pattern)]
+    if not pattern:
+        raise ValueError("triples: empty pattern dict")
+    return list(pattern.items())
+
+
+def triples_schema(pattern, typed: bool, keep_ids: bool) -> str:
+    """Output schema of the triple rows: ``url, sent_id, subj, pred,
+    obj``, then ``[v_id, s_id, o_id]`` (``keep_ids``), ``[subj_tail]``,
+    ``[tail]`` (the pattern's chains), ``[subj_type, obj_type]``
+    (``typed``); a pattern dict appends a ``pattern`` column, and its
+    patterns must share one shape."""
+    named = _named(pattern)
+    shapes = {_columns(p, keep_ids, typed) for _, p in named}
+    if len(shapes) != 1:
+        raise ValueError("triples: the patterns of one run must have the "
+                         f"same output columns, got {sorted(shapes)}")
+    cols, = shapes
+    return cols if named[0][0] is None else cols + ", pattern string"
+
+
+@functools.lru_cache(maxsize=None)
+def _compiled(p: DepPattern):
+    """-> ({obj rel: priority = first listed position}, compiled
+    ``pred_lemma_re`` or None), once per pattern."""
+    prio: dict = {}
+    for r_i, r in enumerate(p.obj_rels):
+        prio.setdefault(r, r_i)
+    return prio, (None if p.pred_lemma_re is None
+                  else re.compile(f"(?:{p.pred_lemma_re})"))
+
+
+def match_sentence(words, mentions, pattern: DepPattern = DEFAULT_PATTERN,
+                   keep_ids: bool = False) -> list[tuple]:
+    """Every match of ``pattern`` in one sentence.
+
+    ``words``: annotated dicts (text/upos/lemma/head/deprel; word ids are
+    1-based positions, head 0 = root); ``mentions``:
+    ``ner_tags.decode_from_bioes`` spans (0-based start/end/type), or
+    ``None`` for untyped rows.  -> tuples in :func:`triples_schema` order
+    without (url, sent_id).
+
+    Per predicate ``v`` (UPOS in ``pred_upos``, lemma whole-matching
+    ``pred_lemma_re``, no child in ``neg_rels``): one row per child in
+    ``subj_rels``; the object is the child in ``obj_rels`` with the least
+    (priority, word id), priority = FIRST listed position — or, with
+    ``obj_transitive``, the descendant within ``obj_max_depth`` with the
+    least (priority, depth, word id).  A pick is never re-chosen: an
+    object without a span (itself an ``expand_rels`` dependent) or
+    without a ``chain_rels`` child drops the predicate; a subject without
+    a span or without a ``subj_chain_rels`` child drops its row.  A chain
+    emits the text of the first such child by word order."""
+    p = pattern
+    preds = [v for v, w in enumerate(words, 1) if w["upos"] in p.pred_upos]
+    if not preds:
+        return []
+    rel = [None] + [w["deprel"] for w in words]
+    kids: list[list[int]] = [[] for _ in rel]
+    for i, w in enumerate(words, 1):
+        if w["head"]:
+            kids[w["head"]].append(i)
+
+    def first(i, rels):
+        return next((c for c in kids[i] if rel[c] in rels), None)
+
+    def span(i):
+        if rel[i] in p.expand_rels:
+            return None
+        fl = [c for c in kids[i] if rel[c] in p.expand_rels]
+        text = " ".join([words[i - 1]["text"]]
+                        + [words[c - 1]["text"] for c in fl])
+        return text, (fl[-1] if fl else i)
+
+    prio, lemma_re = _compiled(p)
+    mtype = None if mentions is None else {
+        (m["start"] + 1, m["end"] + 1): m["type"] for m in mentions}
+
+    out = []
+    for v in preds:
+        w = words[v - 1]
+        if lemma_re is not None and (
+                w["lemma"] is None or not lemma_re.fullmatch(w["lemma"])):
+            continue
+        subjs = [c for c in kids[v] if rel[c] in p.subj_rels]
+        if not subjs or any(rel[c] in p.neg_rels for c in kids[v]):
+            continue
+        if p.obj_transitive:
+            best, level = None, [v]
+            for depth in range(1, p.obj_max_depth + 1):
+                level = [c for x in level for c in kids[x]]
+                for c in level:
+                    if rel[c] in prio and (best is None or (
+                            prio[rel[c]], depth, c) < best):
+                        best = (prio[rel[c]], depth, c)
+        else:
+            best = min(((prio[rel[c]], c) for c in kids[v]
+                        if rel[c] in prio), default=None)
+        if best is None:
+            continue
+        o = best[-1]
+        o_span = span(o)
+        tail = None if p.chain_rels is None else first(o, p.chain_rels)
+        if o_span is None or (p.chain_rels is not None and tail is None):
+            continue
+        for s in subjs:
+            s_span = span(s)
+            if s_span is None:
+                continue
+            row = [s_span[0], w[p.pred_from], o_span[0]]
+            if keep_ids:
+                row += [v, s, o]
+            if p.subj_chain_rels is not None:
+                st = first(s, p.subj_chain_rels)
+                if st is None:
+                    continue
+                row.append(words[st - 1]["text"])
+            if tail is not None:
+                row.append(words[tail - 1]["text"])
+            if mtype is not None:
+                row += [mtype.get((s, s_span[1])), mtype.get((o, o_span[1]))]
+            out.append(tuple(row))
     return out
 
 
-def extract_triples(words: DataFrame, mentions: DataFrame | None = None,
-                    pattern: DepPattern = DEFAULT_PATTERN,
-                    keep_ids: bool = False) -> DataFrame:
-    """words (+ optional decoded mentions for typing) ->
-    (url, sent_id, subj, pred, obj, subj_type, obj_type).
+def page_triples(url: str, lang: str, text: str, pattern=DEFAULT_PATTERN,
+                 decoder: str = "grammar", variant: str | None = None,
+                 processors=None) -> list[tuple]:
+    """-> the triple rows of one page (:func:`triples_schema` order): the
+    sentences of ``annotate.annotate_sentences`` (the words table's own
+    annotation, incl. the <UNK> long-token guard) matched against
+    ``pattern`` (a DepPattern, or a name -> DepPattern dict whose rows
+    end in the name).  Rows are typed, from mentions decoded out of the
+    sentence's BIOES tags, exactly when ``processors`` includes ner.
 
-    ``pattern`` compiles a user-declared :class:`DepPattern` onto the
-    self-joins — the default reproduces the reference's OpenIE shape.
-    With ``chain_rels`` set the output gains a ``tail`` column (the
-    object's first chained child) and drops matches without one.
-    ``keep_ids`` adds provenance columns (v_id, s_id, o_id — the word ids
-    of predicate / subject head / object head) for consumers that join
-    back to the words table (e.g. the ssurgeon gate)."""
-    verbs = words.filter(F.col("upos").isin(*pattern.pred_upos))
-    if pattern.pred_lemma_re is not None:
-        # Semgrex attribute regexes match the WHOLE attribute — anchor.
-        verbs = verbs.filter(
-            F.col("lemma").rlike(f"^(?:{pattern.pred_lemma_re})$"))
-    verbs = verbs.select(
-        "url", "sent_id", F.col("word_id").alias("v_id"),
-        F.col(pattern.pred_from).alias("pred"),
-    )
+    ``decoder='mst'`` swaps the fixed grammars for the general decode
+    kernels (operators.decode): Chu-Liu/Edmonds single-root MST over the
+    grammar-derived arc scores for depparse, Viterbi over the gazetteer
+    emissions for NER — byte-identical output on in-grammar sentences
+    (gate kg_triples_mst shares kg_triples' oracle), valid trees/tag
+    sequences on sentences the grammar degrades on."""
+    named = _named(pattern)
+    typed = processors is None or "ner" in processors
+    rows = []
+    for sent_id, _a, _b, words in annotate_sentences(
+            text, variant=variant, lang=lang, processors=processors,
+            decoder=decoder):
+        mentions = (decode_from_bioes([w["ner"] for w in words])
+                    if typed else None)
+        for name, pat in named:
+            tag = () if name is None else (name,)
+            rows.extend((url, sent_id, *r, *tag)
+                        for r in match_sentence(words, mentions, pat))
+    return rows
 
-    # --- ONE child-aggregate keyed by (url, sent_id, head) serves every
-    # child lookup of the fan (r7, guide §2.3 "aggregate before you
-    # shuffle" / §2.4): subject list, best object (an algebraic
-    # min-struct replaces the row_number window — partial aggregation
-    # absorbs fan-in before the exchange), negation veto, and the chain
-    # firsts.  The r6 plan shuffled the words table once per branch
-    # (subj, obj+window, veto anti-join, two chain windows); this plan
-    # shuffles the pre-filtered child rows exactly once per consumer.
-    prio = F.lit(len(pattern.obj_rels) + 1)
-    for rank in range(len(pattern.obj_rels) - 1, -1, -1):
-        prio = F.when(F.col("deprel") == pattern.obj_rels[rank],
-                      rank + 1).otherwise(prio)
 
-    subj_cond = F.col("deprel").isin(*pattern.subj_rels)
-    keep_cond = subj_cond
-    aggs = [F.collect_list(F.when(subj_cond, F.col("word_id")))
-            .alias("subj_ids")]
-    if not pattern.obj_transitive:
-        obj_cond = F.col("deprel").isin(*pattern.obj_rels)
-        keep_cond = keep_cond | obj_cond
-        aggs.append(F.min(F.when(obj_cond, F.struct(
-            prio.alias("prio"), F.col("word_id").alias("o_id"))))
-            .alias("best_obj"))
-    if pattern.neg_rels:
-        neg_cond = F.col("deprel").isin(*pattern.neg_rels)
-        keep_cond = keep_cond | neg_cond
-        aggs.append(F.max(F.when(neg_cond, F.lit(1))).alias("veto"))
-    if pattern.chain_rels is not None:
-        ch_cond = F.col("deprel").isin(*pattern.chain_rels)
-        keep_cond = keep_cond | ch_cond
-        aggs.append(F.min(F.when(ch_cond, F.struct(
-            F.col("word_id").alias("tid"), F.col("text").alias("tail"))))
-            .alias("first_tail"))
-    if pattern.subj_chain_rels is not None:
-        sch_cond = F.col("deprel").isin(*pattern.subj_chain_rels)
-        keep_cond = keep_cond | sch_cond
-        aggs.append(F.min(F.when(sch_cond, F.struct(
-            F.col("word_id").alias("stid"),
-            F.col("text").alias("subj_tail")))).alias("first_subj_tail"))
-    children = (
-        words.filter(keep_cond)
-        .groupBy("url", "sent_id", F.col("head").alias("v_id"))
-        .agg(*aggs)
-    )
-
-    vcols = ["url", "sent_id", "v_id", "subj_ids"]
-    if not pattern.obj_transitive:
-        vcols.append("best_obj")
-    if pattern.neg_rels:
-        vcols.append("veto")
-    t = verbs.join(children.select(*vcols), ["url", "sent_id", "v_id"])
-    if pattern.neg_rels:
-        # !>rel {}: drop predicates having ANY child with a negated
-        # deprel (the former anti-join is a null-check on the aggregate)
-        t = t.filter(F.col("veto").isNull()).drop("veto")
-
-    if pattern.obj_transitive:
-        # >>rels=obj: the object may be any DESCENDANT within
-        # obj_max_depth hops (Semgrex dominates).  Bounded-depth closure
-        # = obj_max_depth-1 extra self-joins, all on the (url, sent_id)
-        # sentence key — narrow, co-located, no iteration state.  The
-        # first descendant by (rel priority, depth, word order) is an
-        # algebraic min-struct, not a window.
-        child = words.select(
-            "url", "sent_id", F.col("head").alias("p_id"),
-            F.col("word_id").alias("c_id"), "deprel")
-        level = child.select(
-            "url", "sent_id", F.col("p_id").alias("v_id"),
-            F.col("c_id").alias("o_id"), "deprel",
-            F.lit(1).alias("depth"))
-        desc = level
-        for d in range(2, pattern.obj_max_depth + 1):
-            level = (
-                level.select("url", "sent_id", "v_id",
-                             F.col("o_id").alias("p_id"))
-                .join(child, ["url", "sent_id", "p_id"])
-                .select("url", "sent_id", "v_id",
-                        F.col("c_id").alias("o_id"), "deprel",
-                        F.lit(d).alias("depth")))
-            desc = desc.unionByName(level)
-        best_obj = (
-            desc.filter(F.col("deprel").isin(*pattern.obj_rels))
-            .groupBy("url", "sent_id", "v_id")
-            .agg(F.min(F.struct(prio.alias("prio"), F.col("depth"),
-                                F.col("o_id"))).alias("best_obj"))
-        )
-        t = t.join(best_obj, ["url", "sent_id", "v_id"])
-    else:
-        t = t.filter(F.col("best_obj").isNotNull())
-    t = (t.withColumn("s_id", F.explode("subj_ids"))
-         .withColumn("o_id", F.col("best_obj.o_id"))
-         .drop("subj_ids", "best_obj"))
-
-    # Subject and object surfaces join the SAME span subtree: the
-    # renames live in the join conditions (not inside the build sides),
-    # so the two sides canonicalize identically and Spark plans ONE
-    # exchange + a ReusedExchange instead of computing the span
-    # aggregation twice (r7, guide §2.4 "share one exchange").
-    sp = spans(words, pattern.expand_rels)
-    base_cols = [F.col(f"t.{c}") for c in t.columns]
-    t = (
-        t.alias("t")
-        .join(sp.alias("sps"),
-              (F.col("t.url") == F.col("sps.url"))
-              & (F.col("t.sent_id") == F.col("sps.sent_id"))
-              & (F.col("t.s_id") == F.col("sps.word_id")))
-        .join(sp.alias("spo"),
-              (F.col("t.url") == F.col("spo.url"))
-              & (F.col("t.sent_id") == F.col("spo.sent_id"))
-              & (F.col("t.o_id") == F.col("spo.word_id")))
-        .select(*base_cols,
-                F.col("sps.span_text").alias("subj"),
-                F.col("sps.last_word_id").alias("s_last"),
-                F.col("spo.span_text").alias("obj"),
-                F.col("spo.last_word_id").alias("o_last"))
-    )
-
-    tail_cols: list[str] = ["v_id", "s_id", "o_id"] if keep_ids else []
-    if pattern.subj_chain_rels is not None:
-        # one-hop chain below the SUBJECT (r5 judge item #2 — chains
-        # below any named node of the triple shape): a match REQUIRES the
-        # chained child; first child by word order = the same min-struct
-        # aggregate, looked up at head = s_id
-        first_st = children.select(
-            "url", "sent_id", F.col("v_id").alias("s_id"),
-            F.col("first_subj_tail"))
-        t = (t.join(first_st, ["url", "sent_id", "s_id"])
-             .filter(F.col("first_subj_tail").isNotNull())
-             .withColumn("subj_tail", F.col("first_subj_tail.subj_tail"))
-             .drop("first_subj_tail"))
-        tail_cols.append("subj_tail")
-    if pattern.chain_rels is not None:
-        # one-hop chain below the object: same aggregate at head = o_id
-        first_ch = children.select(
-            "url", "sent_id", F.col("v_id").alias("o_id"),
-            F.col("first_tail"))
-        t = (t.join(first_ch, ["url", "sent_id", "o_id"])
-             .filter(F.col("first_tail").isNotNull())
-             .withColumn("tail", F.col("first_tail.tail"))
-             .drop("first_tail"))
-        tail_cols.append("tail")
-
-    if mentions is None:
-        return t.select("url", "sent_id", "subj", "pred", "obj", *tail_cols)
-
-    # Same exchange-sharing trick for mention typing: ONE mention-decode
-    # subtree, two alias-qualified left joins — the BIOES decode (two
-    # window passes) runs once per query instead of once per argument.
-    ms = mentions.select("url", "sent_id", "first_word_id",
-                         "last_word_id", "type")
-    t = (
-        t.alias("t")
-        .join(ms.alias("m1"),
-              (F.col("t.url") == F.col("m1.url"))
-              & (F.col("t.sent_id") == F.col("m1.sent_id"))
-              & (F.col("t.s_id") == F.col("m1.first_word_id"))
-              & (F.col("t.s_last") == F.col("m1.last_word_id")), "left")
-        .join(ms.alias("m2"),
-              (F.col("t.url") == F.col("m2.url"))
-              & (F.col("t.sent_id") == F.col("m2.sent_id"))
-              & (F.col("t.o_id") == F.col("m2.first_word_id"))
-              & (F.col("t.o_last") == F.col("m2.last_word_id")), "left")
-        .select(F.col("t.url"), F.col("t.sent_id"), F.col("t.subj"),
-                F.col("t.pred"), F.col("t.obj"),
-                *[F.col(f"t.{c}") for c in tail_cols],
-                F.col("m1.type").alias("subj_type"),
-                F.col("m2.type").alias("obj_type"))
-    )
-    return t
+def triples_narrow(pages_df, pattern=DEFAULT_PATTERN,
+                   decoder: str = "grammar", processors=None,
+                   variant: str | None = None, en_only: bool = True):
+    """pages (url, lang, text) -> the triples of ``pattern`` in ONE narrow
+    Arrow pass (no shuffle anywhere): :func:`page_triples` per page.
+    ``processors`` (None = all) and ``variant`` reach the annotator as
+    in ``annotate.annotate``; without ner the type columns are absent.
+    ``decoder='mst'`` runs the MST/Viterbi decode kernels instead of the
+    fixed grammars — same narrow plan, numpy per sentence inside the
+    Arrow batch."""
+    typed = processors is None or "ner" in processors
+    return map_pages(
+        pages_df,
+        lambda url, lang, text: page_triples(
+            url, lang, text, pattern, decoder=decoder, variant=variant,
+            processors=processors),
+        triples_schema(pattern, typed, keep_ids=False), en_only)

@@ -45,9 +45,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..sources.pages import pages as pages_src
 from ..operators.html import extract_text_expr
-from ..operators.annotate import annotate, triples_narrow
+from ..operators.annotate import annotate
 from ..operators.coref import pronouns_narrow
-from ..operators.mentions import decode_mentions
+from ..operators.mentions import MENTION_COLS, MENTION_PROCS, decode_mentions
+from ..operators.triples import triples_narrow
 from ..operators.linking import alias_df, link_mentions_with_fallback
 from ..operators.graph import materialize_graph
 
@@ -191,8 +192,13 @@ class KGPipeline:
             .drop("html"),
             [self.sf_dir], hook("pages"))
 
+        # the words stage feeds only the mentions decode: NER without
+        # POS/lemma/depparse, projected to the decode's columns
         self._run_stage(
-            "words", annotate, ["pages"], hook("words"))
+            "words",
+            lambda p: annotate(p, processors=MENTION_PROCS)
+            .select(*MENTION_COLS),
+            ["pages"], hook("words"))
 
         self._run_stage(
             "mentions", decode_mentions, ["words"], hook("mentions"))

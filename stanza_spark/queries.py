@@ -28,10 +28,11 @@ from .synth import (
 from . import vocab as _V
 from .sources.pages import pages
 from .operators.html import extract_text_expr
-from .operators.annotate import annotate, triples_narrow
+from .operators.annotate import annotate, map_pages
 from .operators.tokenize_sql import sentences_from_pages, tokens_sql
-from .operators.mentions import decode_mentions
-from .operators.triples import extract_triples
+from .operators.mentions import (MENTION_COLS, MENTION_PROCS,
+                                 decode_mentions)
+from .operators.triples import PARSE_PROCS, triples_narrow
 from .operators.linking import (alias_df, link_mentions,
                                 link_mentions_with_fallback)
 from .operators.canonicalize import canonicalize
@@ -92,26 +93,10 @@ def q_kg_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url", "sent_id", "token_id", "token")
 
 
-#: the columns the BIOES mention decode actually consumes — projecting
-#: to these before a materialization (guide §2.3 "project before the
-#: exchange") writes 7 of the words table's 18 columns; at cluster scale
-#: the same projection shrinks the stage table every downstream exchange
-#: reads.
-MENTION_COLS = ("url", "sent_id", "word_id", "text", "start_char",
-                "end_char", "ner")
-
-
-#: the processors a mentions-only consumer needs: the NER tagger reads
-#: token surfaces only (tag_ner is POS-independent), so POS/lemma/
-#: depparse are dead weight on those paths (guide §1.2 "don't compute
-#: things you throw away"; decoded mentions verified identical)
-MENTION_PROCS = ("tokenize", "mwt", "ner")
-
-
 def _words(spark, sf_dir, cache: bool = False, cols=None,
            processors=None):
     """Annotated words table.  ``cache=True`` persists it — essential for
-    the multi-branch declared-pattern triple plans, which otherwise
+    multi-branch plans such as kg_semgrex's join fan, which otherwise
     re-execute the whole pages->annotate chain once per self-join branch
     (measured 7x recompute = ~20x slowdown at sf0.1).  At cluster scale
     the equivalent is the materialized stage table in plans.pipeline.
@@ -132,11 +117,11 @@ def _words(spark, sf_dir, cache: bool = False, cols=None,
     # coalesce the READ side to cores/4 so k concurrent scans stay ~2x
     # cores tasks in flight (scale-adaptive: derived from parallelism,
     # and the coalesce is narrow — no shuffle).  Measured at sf0.1 on a
-    # 4-vCPU host at local[4], 7 alternating pairs in one warm session:
-    # the kg_triples_chain fan was faster with the coalesce in 5 of 7
-    # (median 1.58 vs 1.89 s); kg_mentions_multi, one scan, gains
-    # nothing (faster in 1 of 7 and 2 of 7 over two runs; ROADMAP
-    # item 8).
+    # 4-vCPU host at local[4], build + collect, 6 alternating pairs of
+    # fresh sessions (median of 3 warm runs each): the kg_semgrex join
+    # fan was faster with the coalesce in 6 of 6 (median 2.10 vs
+    # 2.30 s); kg_mentions_multi, one scan, gains nothing (faster in 1 of
+    # 7 and 2 of 7 over two runs; ROADMAP item 8).
     scan_parts = max(1, spark.sparkContext.defaultParallelism // 4)
     return w.localCheckpoint(eager=True).coalesce(scan_parts)
 
@@ -292,21 +277,21 @@ def q_kg_links_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Default-pattern triples: pages -> triples in one narrow Arrow pass
-    (annotate.triples_narrow), no shuffle and no checkpoint.  The
-    relational join fan (operators.triples) serves declared patterns."""
+    (triples.triples_narrow), no shuffle and no checkpoint; every
+    declared-pattern gate below runs the same pass and matcher."""
     return triples_narrow(pages(spark, sf_dir, with_html=False))
 
 
 def q_kg_triples_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semgrex-analog gate: a NON-default user pattern
     (``DepPattern(obj_rels=("obl",))`` — oblique-only relations, the
-    reference's ``{}=source >obl=zzz {}=target`` shape) compiled onto the
-    same relational self-joins.  Oracle = grammar-derived obl triples
-    (vocab.OBL_TRIPLES), proving the pattern surface is data, not code."""
+    reference's ``{}=source >obl=zzz {}=target`` shape) read by the same
+    per-sentence matcher in the same narrow pass.  Oracle =
+    grammar-derived obl triples (vocab.OBL_TRIPLES), proving the pattern
+    surface is data, not code."""
     from .operators.triples import OBL_PATTERN
-    w = _words(spark, sf_dir, cache=True)
-    m = decode_mentions(w).localCheckpoint(eager=True)
-    return extract_triples(w, m, pattern=OBL_PATTERN)
+    return triples_narrow(pages(spark, sf_dir, with_html=False),
+                          OBL_PATTERN)
 
 
 def q_kg_triples_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,11 +299,11 @@ def q_kg_triples_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     TEXTUAL surface exercising all three subset extensions at once — a
     3-node relation chain (verb -> obl noun -> its ``case`` child, emitted
     as the ``tail`` column), a negated relation (``!>xcomp`` vetoes t9's
-    "was elected president"), and alternation — compiled onto the same
-    edge self-joins.  Oracle = grammar-derived V.CHAIN_TRIPLES."""
+    "was elected president"), and alternation — one narrow pass, untyped
+    (no NER).  Oracle = grammar-derived V.CHAIN_TRIPLES."""
     from .operators.triples import CHAIN_PATTERN
-    w = _words(spark, sf_dir, cache=True)
-    return extract_triples(w, None, pattern=CHAIN_PATTERN)
+    return triples_narrow(pages(spark, sf_dir, with_html=False),
+                          CHAIN_PATTERN, processors=PARSE_PROCS)
 
 
 def q_kg_triples_subj_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -331,8 +316,8 @@ def q_kg_triples_subj_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single-token subjects (pronoun t17, one-word orgs) drop.  Oracle =
     grammar-derived gold_triples_subj_chain_select."""
     from .operators.triples import SUBJ_CHAIN_PATTERN
-    w = _words(spark, sf_dir, cache=True)
-    return extract_triples(w, None, pattern=SUBJ_CHAIN_PATTERN)
+    return triples_narrow(pages(spark, sf_dir, with_html=False),
+                          SUBJ_CHAIN_PATTERN, processors=PARSE_PROCS)
 
 
 def q_kg_semgrex(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -359,14 +344,14 @@ def q_kg_semgrex(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_triples_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive-Semgrex gate (pytest parity): ``>>case=obj`` — the
     object is any DESCENDANT of the predicate with deprel `case`
-    (bounded-depth closure joins, Semgrex's dominates operator), parsed
-    from the textual surface.  Oracle = grammar-derived V.DEEP_TRIPLES
+    (bounded-depth walk, Semgrex's dominates operator), parsed from the
+    textual surface.  Oracle = grammar-derived V.DEEP_TRIPLES
     (each verb's first case descendant by depth then word order)."""
     from .operators.triples import DepPattern
     pat = DepPattern.from_semgrex(
         "{upos:VERB}=pred >nsubj|nsubj:pass=subj {} >>case=obj {}")
-    w = _words(spark, sf_dir, cache=True)
-    return extract_triples(w, None, pattern=pat)
+    return triples_narrow(pages(spark, sf_dir, with_html=False), pat,
+                          processors=PARSE_PROCS)
 
 
 def q_kg_ssurgeon(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,28 +359,36 @@ def q_kg_ssurgeon(spark: SparkSession, sf_dir: str) -> DataFrame:
     quirk — every obl arc degraded to generic 'dep', the classic
     weak-parser failure — is repaired by a declarative edit rule
     (relabel dep->obl where the dependent has a `case` child, the
-    reference's graph-surgery capability, stanza/server/ssurgeon.py, as a
-    pure DataFrame transform).  Output = the default triples extracted
-    from the REPAIRED graph, each flagged `repaired`=1 iff its object arc
-    exists only because of the surgery; oracle = grammar-derived
-    gold_triples_ssurgeon_select.  Without the repair the obl-object
-    triples (V.OBL_OBJ_TIDS) vanish and the gate mismatches."""
-    from .operators.ssurgeon import SsurgeonRule, apply_ssurgeon
+    reference's graph-surgery capability, stanza/server/ssurgeon.py).
+    One narrow pass from pages; per sentence the page kernel plants the
+    quirk, applies the rule, matches the default pattern with word ids
+    and flags each triple `repaired`=1 iff the rule edited its object
+    word.  Oracle = grammar-derived gold_triples_ssurgeon_select.
+    Without the repair the obl-object triples (V.OBL_OBJ_TIDS) vanish
+    and the gate mismatches."""
+    from .operators.annotate import annotate_sentences
+    from .operators.ssurgeon import SsurgeonRule
+    from .operators.triples import match_sentence
 
-    w = _words(spark, sf_dir, cache=True)
-    quirked = w.withColumn(
-        "deprel", F.when(F.col("deprel") == "obl", "dep")
-        .otherwise(F.col("deprel")))
-    repaired = apply_ssurgeon(quirked, [
-        SsurgeonRule(match_deprel="dep", child_rel="case",
-                     action="relabel", new_deprel="obl"),
-    ]).localCheckpoint(eager=True)
-    t = extract_triples(repaired, None, keep_ids=True)
-    flags = repaired.select(
-        "url", "sent_id", F.col("word_id").alias("o_id"),
-        F.col("ss_edited").cast("int").alias("repaired"))
-    return t.join(flags, ["url", "sent_id", "o_id"]).select(
-        "url", "sent_id", "subj", "pred", "obj", "repaired")
+    quirk = SsurgeonRule(match_deprel="obl", new_deprel="dep")
+    repair = SsurgeonRule(match_deprel="dep", child_rel="case",
+                          action="relabel", new_deprel="obl")
+
+    def page(url, lang, text):
+        rows = []
+        for sent_id, _a, _b, words in annotate_sentences(
+                text, lang=lang, processors=PARSE_PROCS):
+            quirk.apply(words)
+            edited = repair.apply(words)
+            rows.extend(
+                (url, sent_id, subj, pred, obj, int(edited[o_id - 1]))
+                for subj, pred, obj, _v, _s, o_id
+                in match_sentence(words, None, keep_ids=True))
+        return rows
+    return map_pages(
+        pages(spark, sf_dir, with_html=False), page,
+        "url string, sent_id int, subj string, pred string, obj string, "
+        "repaired int", en_only=True)
 
 
 #: the kg_tokensregex gate's named pattern family — exercises every

@@ -4,7 +4,7 @@ event-time windowed aggregation.
 The reference's only streaming analog is ``Pipeline.stream`` — plain
 micro-batching with no time semantics (/root/reference/stanza/pipeline/
 core.py:477-503).  Here incremental ingestion runs the *batch* triples
-plan inside ``foreachBatch`` — ``annotate.triples_narrow``, the one narrow
+plan inside ``foreachBatch`` — ``triples.triples_narrow``, the one narrow
 Arrow pass kg_triples runs (the recommended pattern: one code path for
 batch and stream) — with exactly-once sink semantics provided by the
 checkpoint + a per-batch parquet overwrite; the windowed aggregation
@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.annotate import triples_narrow
+from ..operators.triples import triples_narrow
 
 PAGES_SCHEMA = ("doc_id bigint, url string, warc_ts timestamp, "
                 "text string, lang string")

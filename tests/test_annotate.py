@@ -314,7 +314,7 @@ def test_token_too_long_replaced_with_unk():
     assert (unk["start"], unk["end"]) == (6, 6 + 40)
     # the triples pass sees the same <UNK> as the words table, at the
     # default limit (MAX_TOKEN_LEN_DEFAULT = 1000)
-    from stanza_spark.operators.annotate import page_triples
+    from stanza_spark.operators.triples import page_triples
     assert page_triples("u", "en", "Obama visited " + "x" * 1201) == [
         ("u", 0, "Obama", "visit", "<UNK>", "PERSON", None)]
 

@@ -1,7 +1,7 @@
 """Driver-side planning cost: the ``documents`` read needs no Spark job
-(declared schema, footer checked on the driver), and the coref gates build
-their plans in a bounded number of py4j calls (one narrow pass over pages,
-not Column-API chains)."""
+(declared schema, footer checked on the driver), and the coref and
+declared-pattern triple gates build their plans in a bounded number of
+py4j calls (one narrow pass over pages, not Column-API chains)."""
 
 import collections
 import contextlib
@@ -79,12 +79,15 @@ def test_good_documents_read_runs_no_job(spark):
                     lambda: pages(spark, SF_SMOKE, with_html=False)) == []
 
 
-def test_coref_gates_build_in_few_py4j_calls(spark, monkeypatch):
-    """Building q_kg_coref_chains / q_kg_coref (pages and one narrow
-    Arrow pass) sends at most 100 py4j call commands each (the Column-API
-    window plans sent about 1 000).  Only py4j's call command ``c`` is
-    counted: the object-release commands the Python GC sends vary run to
-    run."""
+@pytest.mark.parametrize("gate", [
+    "kg_coref_chains", "kg_coref", "kg_triples_pattern", "kg_triples_chain",
+    "kg_triples_subj_chain", "kg_triples_deep", "kg_ssurgeon"])
+def test_gates_build_in_few_py4j_calls(spark, monkeypatch, gate):
+    """Building a gate that is pages and one narrow Arrow pass (the coref
+    and declared-pattern triple gates) sends at most 100 py4j call
+    commands (their Column-API window and join plans sent about 1 000).
+    Only py4j's call command ``c`` is counted: the object-release
+    commands the Python GC sends vary run to run."""
     import stanza_spark.queries as Q
     client = spark.sparkContext._gateway._gateway_client
     sent = collections.Counter()
@@ -94,10 +97,8 @@ def test_coref_gates_build_in_few_py4j_calls(spark, monkeypatch):
         sent[command.split("\n", 1)[0]] += 1
         return send(command, *args, **kwargs)
     monkeypatch.setattr(client, "send_command", counting)
-    for q in (Q.q_kg_coref_chains, Q.q_kg_coref):
-        sent.clear()
-        q(spark, SF_SMOKE)
-        assert 0 < sent["c"] <= 100, (q.__name__, sent)
+    Q.KG_QUERIES[gate](spark, SF_SMOKE)
+    assert 0 < sent["c"] <= 100, (gate, sent)
 
 
 def test_coref_chains_physical_operators_pinned(spark):

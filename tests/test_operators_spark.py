@@ -11,7 +11,7 @@ from stanza_spark.operators.html import wrap_html_expr, extract_text_expr
 from stanza_spark.operators.annotate import annotate
 from stanza_spark.operators.tokenize_sql import sentences_from_pages, tokens_sql
 from stanza_spark.operators.mentions import decode_mentions
-from stanza_spark.operators.triples import extract_triples
+from stanza_spark.operators.triples import triples_narrow
 from stanza_spark.operators.linking import alias_df, link_mentions, unlinked_mentions
 from stanza_spark.operators.canonicalize import connected_components
 from stanza_spark.sources.pages import pages
@@ -59,8 +59,7 @@ def test_triples_on_reference_golden(spark):
     doc = ("Barack Obama was born in Hawaii.  He was elected president in "
            "2008.  Obama attended Harvard.")
     df = spark.createDataFrame([("u", "en", doc)], "url string, lang string, text string")
-    w = annotate(df)
-    t = extract_triples(w, decode_mentions(w)).orderBy("sent_id").collect()
+    t = triples_narrow(df).orderBy("sent_id").collect()
     got = [(r.sent_id, r.subj, r.pred, r.obj, r.subj_type, r.obj_type) for r in t]
     assert got == [
         (0, "Barack Obama", "bear", "Hawaii", "PERSON", "GPE"),
@@ -720,18 +719,17 @@ def test_dep_pattern_is_user_switchable(spark):
     doc = "Obama attended Harvard in 1995.  Obama visited Tokyo in 1999."
     df = spark.createDataFrame([("u", "en", doc)],
                                "url string, lang string, text string")
-    w = annotate(df)
     default = {(r.sent_id, r.obj)
-               for r in extract_triples(w).select("sent_id", "obj").collect()}
+               for r in triples_narrow(df).select("sent_id", "obj").collect()}
     obl = {(r.sent_id, r.obj)
-           for r in extract_triples(w, pattern=OBL_PATTERN)
+           for r in triples_narrow(df, OBL_PATTERN)
            .select("sent_id", "obj").collect()}
     assert default == {(0, "Harvard"), (1, "Tokyo")}   # obj wins by priority
     assert obl == {(0, "1995"), (1, "1999")}           # obl-only skips obj
 
     # pred_from switches surface normalization: text keeps the inflection
-    lit = extract_triples(
-        w, pattern=DepPattern(pred_from="text")).select("pred").collect()
+    lit = triples_narrow(
+        df, DepPattern(pred_from="text")).select("pred").collect()
     assert {r.pred for r in lit} == {"attended", "visited"}
 
 
@@ -797,34 +795,36 @@ def test_semgrex_string_surface_parses_to_pattern():
         DepPattern.from_semgrex("{}=pred >obj=zzz {}")
 
 
-def test_ssurgeon_relabel_and_reattach(spark):
+def test_ssurgeon_relabel_and_reattach():
     """Declarative dependency surgery: relabel with a child-of-dependent
     constraint touches exactly the matching arcs; reattach re-hangs a
     dependent onto its grandparent; rules apply in order and ss_edited
     marks exactly the touched rows."""
-    from stanza_spark.operators.ssurgeon import SsurgeonRule, apply_ssurgeon
+    from stanza_spark.operators.ssurgeon import SsurgeonRule, apply_rules
     rows = [
         # sentence: w1 <- w2(dep, has case child w3) ; w3(case -> w2)
-        ("u", 0, 1, 0, "root", "VERB"),
-        ("u", 0, 2, 1, "dep", "NOUN"),     # should become obl (case kid)
-        ("u", 0, 3, 2, "case", "ADP"),
-        ("u", 0, 4, 1, "dep", "ADV"),      # no case child -> stays dep
+        (0, 1, 0, "root", "VERB"),
+        (0, 2, 1, "dep", "NOUN"),     # should become obl (case kid)
+        (0, 3, 2, "case", "ADP"),
+        (0, 4, 1, "dep", "ADV"),      # no case child -> stays dep
         # second sentence: reattach target — w3 hangs on w2, gp = w1
-        ("u", 1, 1, 0, "root", "VERB"),
-        ("u", 1, 2, 1, "obj", "NOUN"),
-        ("u", 1, 3, 2, "advmod", "ADV"),   # reattach -> head 1
+        (1, 1, 0, "root", "VERB"),
+        (1, 2, 1, "obj", "NOUN"),
+        (1, 3, 2, "advmod", "ADV"),   # reattach -> head 1
     ]
-    words = spark.createDataFrame(
-        rows, "url string, sent_id int, word_id int, head int, "
-              "deprel string, upos string")
-    out = apply_ssurgeon(words, [
+    rules = [
         SsurgeonRule(match_deprel="dep", child_rel="case",
                      action="relabel", new_deprel="obl"),
         SsurgeonRule(match_deprel="advmod", dep_upos=("ADV",),
                      action="reattach"),
-    ])
-    got = {(r.sent_id, r.word_id): (r.head, r.deprel, r.ss_edited)
-           for r in out.collect()}
+    ]
+    got = {}
+    for sent_id in (0, 1):
+        words = [dict(head=h, deprel=d, upos=u)
+                 for s_id, _w, h, d, u in rows if s_id == sent_id]
+        edited = apply_rules(words, rules)
+        for w_id, (w, e) in enumerate(zip(words, edited), 1):
+            got[(sent_id, w_id)] = (w["head"], w["deprel"], e)
     assert got[(0, 2)] == (1, "obl", True)
     assert got[(0, 4)] == (1, "dep", False)
     assert got[(0, 3)] == (2, "case", False)
@@ -933,7 +933,7 @@ def test_semgrex_arbitrary_named_nodes(spark):
     deep = nlp.semgrex(docs, "{}=p >>case=marker {}")
     assert {(r.p, r.marker) for r in deep.collect()} == {
         ("move", "to"), ("elect", "in")}
-    # head lemma regex constrains (same anchoring as extract_triples)...
+    # head lemma regex constrains (same anchoring as the triple matcher)...
     m3 = match_semgrex(
         w, "{upos:VERB,lemma:/move/}=action >nsubj|nsubj:pass=actor {}")
     assert {r.action for r in m3.collect()} == {"move"}

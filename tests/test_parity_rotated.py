@@ -66,20 +66,19 @@ def test_driver_registry_is_exactly_fifty():
 
 
 def test_multi_pattern_extraction_matches_union_oracle(spark, oracle_con):
-    """extract_triples_multi (named pattern list, the reference's
-    multi-pattern Semgrex surface) must equal the UNION of the per-pattern
-    DuckDB oracles, each labeled with its pattern name."""
-    from stanza_spark.operators.mentions import decode_mentions
+    """A named pattern dict (the reference's multi-pattern Semgrex
+    surface), matched in one narrow pass, must equal the UNION of the
+    per-pattern DuckDB oracles, each labeled with its pattern name."""
     from stanza_spark.operators.triples import (DEFAULT_PATTERN, OBL_PATTERN,
-                                                extract_triples_multi)
-    from stanza_spark.queries import _obl_pattern_oracle, _words
+                                                triples_narrow)
+    from stanza_spark.queries import _obl_pattern_oracle
+    from stanza_spark.sources.pages import pages
     from stanza_spark.synth import Dialect, gold_triples_select
 
     normalize = _load_checker().normalize
-    w = _words(spark, SF_SMOKE, cache=True)
-    m = decode_mentions(w).localCheckpoint(eager=True)
-    got = extract_triples_multi(
-        w, {"default": DEFAULT_PATTERN, "obl": OBL_PATTERN}, m).toPandas()
+    got = triples_narrow(
+        pages(spark, SF_SMOKE, with_html=False),
+        {"default": DEFAULT_PATTERN, "obl": OBL_PATTERN}).toPandas()
     d = Dialect("duckdb")
     sql = (f"SELECT *, 'default' AS pattern FROM ({gold_triples_select(d)}) "
            f"UNION ALL "

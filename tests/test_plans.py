@@ -2,10 +2,12 @@
 scan, projection prunes columns, small dimensions broadcast, skew-safe
 aggregation matches the plain aggregate (SURVEY §4)."""
 
+import collections
 import contextlib
 import io
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -55,7 +57,7 @@ def test_narrow_plan_has_no_exchange(spark):
 def test_salted_support_matches_plain_aggregate(spark):
     """Skew handling (C6): two-stage salted aggregation must be
     semantically identical to the direct groupBy."""
-    from stanza_spark.operators.annotate import triples_narrow
+    from stanza_spark.operators.triples import triples_narrow
     from stanza_spark.operators.graph import materialize_graph, salted_support
     from stanza_spark.operators.linking import alias_df
     from stanza_spark.sources.pages import pages
@@ -439,22 +441,24 @@ def test_langid_plan_is_narrow(spark):
     assert "Window" not in tree
 
 
-def test_triple_fan_has_no_window(spark):
-    """r7: the object pick / chain firsts are algebraic min-struct
-    aggregates, not row_number windows (map-side partials absorb fan-in
-    before the exchange).  The mention-TYPING variant still contains the
-    BIOES decode's own lag/sum windows (a different operator); the fan
-    itself must be window-free."""
-    from stanza_spark.queries import _words
-    from stanza_spark.operators.triples import (
-        CHAIN_PATTERN, SUBJ_CHAIN_PATTERN, extract_triples)
-    w = _words(spark, SF_SMOKE, cache=True)
-    for pat in (None, CHAIN_PATTERN, SUBJ_CHAIN_PATTERN):
-        df = extract_triples(w) if pat is None else extract_triples(
-            w, None, pattern=pat)
-        tree = _plan(df).split("== Physical Plan ==")[1].split("\n\n")[0]
-        assert "Window" not in tree, pat
-        assert "WindowGroupLimit" not in tree, pat
+@pytest.mark.parametrize("gate", [
+    "kg_triples_pattern", "kg_triples_chain", "kg_triples_subj_chain",
+    "kg_triples_deep", "kg_ssurgeon"])
+def test_triple_gates_physical_operators_pinned(spark, gate):
+    """Every declared-pattern triple gate is the pages scan, its one
+    input-spread exchange and ONE MapInPandas that annotates and matches
+    each page — no window, sort, aggregate, join or union."""
+    import stanza_spark.queries as Q
+    tree = _plan(Q.KG_QUERIES[gate](spark, SF_SMOKE)).split(
+        "== Physical Plan ==")[1]
+    nodes = collections.Counter(re.findall(r"^\(\d+\) (\w+)", tree, re.M))
+    assert {k: nodes[k] for k in (
+        "MapInPandas", "Window", "Sort", "ObjectHashAggregate",
+        "HashAggregate", "BroadcastHashJoin", "SortMergeJoin", "Union",
+        "BroadcastExchange", "Exchange")} == {
+        "MapInPandas": 1, "Window": 0, "Sort": 0, "ObjectHashAggregate": 0,
+        "HashAggregate": 0, "BroadcastHashJoin": 0, "SortMergeJoin": 0,
+        "Union": 0, "BroadcastExchange": 0, "Exchange": 1}, (gate, nodes)
 
 
 def test_local_values_df_matches_createDataFrame(spark):

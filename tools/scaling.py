@@ -62,7 +62,7 @@ def prepare_input(sf_dir: str, mult: int, workdir: str) -> str:
 
 def run_once(cores: int, workdir: str, repeats: int = 3) -> dict:
     from stanza_spark.session import get_spark
-    from stanza_spark.operators.annotate import triples_narrow
+    from stanza_spark.operators.triples import triples_narrow
     from stanza_spark.operators.graph import materialize_graph
     from stanza_spark.operators.linking import alias_df
 
