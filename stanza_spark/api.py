@@ -152,17 +152,20 @@ class Pipeline:
         negation, relation regexes, optional ``?``-clauses; a bare
         ``{}`` root defaults to VERB here (the facade is verb-rooted
         like the reference's patterns; an unconstrained root would bind
-        every word).  ``uniq=True`` collapses duplicate output rows (the
-        Semgrex CLI's uniq post-step)."""
+        every word).  Interpreted per sentence in one narrow pass from
+        the pages (``semgrex.semgrex_narrow``) with this pipeline's
+        variant, processors and decoder.  ``uniq=True`` collapses
+        duplicate output rows (the Semgrex CLI's uniq post-step)."""
         if "depparse" not in self.processors:
             raise PipelineRequirementsException(
                 "semgrex requires the depparse processor")
-        from .operators.semgrex import SemNode, match_semgrex, parse_semgrex
+        from .operators.semgrex import SemNode, parse_semgrex, semgrex_narrow
         root = parse_semgrex(pattern)
         if root.upos is None and root.lemma_re is None:
             root = SemNode(root.name, ("VERB",), None, root.clauses)
-        w = self.process(docs).localCheckpoint(eager=True)
-        return match_semgrex(w, root, uniq=uniq)
+        return semgrex_narrow(
+            self._pages(docs), root, uniq=uniq, processors=self.processors,
+            variant=self.variant, decoder=self.decoder, en_only=False)
 
     def ssurgeon(self, docs, rules) -> DataFrame:
         """Dependency-graph surgery from the facade — the reference's

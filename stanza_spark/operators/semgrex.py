@@ -1,11 +1,14 @@
-"""Unified Semgrex engine — ONE recursive pattern compiler for the whole
+"""Unified Semgrex engine — ONE pattern interpreter for the whole
 textual surface (operator C7, SURVEY §2.3; r5 judge item #2).
 
 The reference runs Semgrex patterns in a Java subprocess per document
 (/root/reference/stanza/server/semgrex.py:53-102 — arbitrary node names,
 nested relation chains, governor direction, dominance, negation).  Here
-the pattern compiles onto narrow (url, sent_id)-keyed self-joins of the
-flat words table, so Catalyst plans it and there is no per-document IPC.
+:func:`parse_semgrex` turns the pattern into a :class:`SemNode` tree,
+:func:`match_tree` interprets it over one annotated sentence, and
+:func:`semgrex_narrow` runs annotation and matching together in the one
+narrow Arrow pass (``annotate.map_pages``): no words table, no join and
+no per-document IPC.
 
 Grammar (recursive — every construct nests below ANY node, any depth up
 to :data:`MAX_NEST_DEPTH`):
@@ -35,16 +38,19 @@ chains, so the two surfaces agree):
 * ``>``: the parent's FIRST child by word order whose deprel is in
   ``rels`` and whose local attrs match is selected; the child's own
   nested clauses are then REQUIRED — a selected child that fails them
-  drops the parent binding (inner join), it is never re-chosen;
+  drops the parent binding, it is never re-chosen;
 * ``>>``: same, over bounded-depth descendants (depth ≤ ``DESC_DEPTH``),
-  first by (depth, word order) — Semgrex's dominates operator as
-  ``DESC_DEPTH - 1`` extra sentence-key self-joins, no iteration state;
+  first by (depth, word order) — Semgrex's dominates operator;
 * ``<``: the parent's governor — requires the parent's OWN deprel in
   ``rels`` and the governor to match the target attrs (each word has
-  exactly one governor, so no tie-break);
-* ``!>``: the parent must have NO child with any of these deprels
-  (anti-join); the negated node must be bare ``{}`` — attribute-
-  constrained negation is outside the subset and raises;
+  exactly one governor, so no tie-break).  A governor without attrs may
+  be the virtual root (head 0): its column is NULL and its ``>``
+  children are the sentence's root words; a governor with attrs never
+  binds head 0;
+* ``!>``: the parent must have NO child with any of these deprels; the
+  negated node must be bare ``{}`` — attribute-constrained negation is
+  outside the subset and raises;
+* relation and lemma regexes match the WHOLE name (``re.fullmatch``);
 * named nodes emit output columns: the root emits its lemma, every other
   named node its flat-expanded surface span (a node that is itself a
   ``flat`` dependent emits its own text).  Unnamed nodes constrain
@@ -52,12 +58,6 @@ chains, so the two surfaces agree):
 
 Anything outside this grammar raises — unsupported Semgrex syntax must
 fail loudly, never be silently ignored.
-
-Plan shape: k clauses cost k narrow join fans over the same words table,
-all keyed on (url, sent_id) (+ the parent word id in window partitions,
-so partitions stay sentence-bounded — no skew).  At 100 TB the words
-table is pre-hashed on url so every join co-locates; AQE reuses the one
-exchange.
 """
 
 from __future__ import annotations
@@ -65,10 +65,9 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F, Window
+from .annotate import annotate_sentences, map_pages
 
-#: nesting cap — bounds the compiled join fan (a runaway pattern is a
-#: user error, not a plan the cluster should attempt)
+#: nesting cap — a runaway pattern is a user error, rejected at parse
 MAX_NEST_DEPTH = 4
 #: total-clause cap across the whole pattern
 MAX_CLAUSES = 16
@@ -96,14 +95,6 @@ class SemClause:
     node: SemNode | None  # None only for kind == 'neg'
     rels_re: str | None = None
     optional: bool = False
-
-
-def _rel_cond(c: SemClause):
-    """deprel membership condition for one clause (literal set or
-    whole-name-anchored regex)."""
-    if c.rels_re is not None:
-        return F.col("deprel").rlike(f"^(?:{c.rels_re})$")
-    return F.col("deprel").isin(*c.rels)
 
 
 _NODE_RE = re.compile(r"\s*\{([^}]*)\}\s*(?:=(\w+))?")
@@ -222,7 +213,8 @@ def _parse_node(pattern: str, pos: int, depth: int,
 def parse_semgrex(pattern: str) -> SemNode:
     """Parse the full bounded Semgrex grammar (module docstring) into a
     :class:`SemNode` tree.  The root must be named; node names must be
-    unique; trailing unparsed text raises."""
+    unique and not ``url``/``sent_id`` (the key columns every match row
+    starts with); trailing unparsed text raises."""
     counters = {"clauses": 0}
     root, pos = _parse_node(pattern, 0, 0, counters)
     if pattern[pos:].strip():
@@ -237,6 +229,9 @@ def parse_semgrex(pattern: str) -> SemNode:
             if n.name in seen:
                 raise ValueError(
                     f"semgrex: duplicate node name {n.name!r}")
+            if n.name in ("url", "sent_id"):
+                raise ValueError(
+                    f"semgrex: node name {n.name!r} is a key column")
             seen.add(n.name)
         for c in n.clauses:
             if c.node is not None:
@@ -254,158 +249,108 @@ def _names_in_order(node: SemNode) -> list[str]:
     return out
 
 
-def _attr_filter(df: DataFrame, node: SemNode) -> DataFrame:
-    if node.upos is not None:
-        df = df.filter(F.col("upos").isin(*node.upos))
-    if node.lemma_re is not None:
-        # Semgrex attribute regexes match the WHOLE attribute — anchor
-        df = df.filter(F.col("lemma").rlike(f"^(?:{node.lemma_re})$"))
-    return df
+def _full(regex: str, value) -> bool:
+    """Whole-value regex match; a missing value never matches."""
+    return (value is not None
+            and re.fullmatch(f"(?:{regex})", value) is not None)
 
 
-class _Compiler:
-    """Binds pattern nodes to word-id columns over narrow self-joins."""
+def _attrs_ok(node: SemNode, w) -> bool:
+    return ((node.upos is None or w["upos"] in node.upos)
+            and (node.lemma_re is None or _full(node.lemma_re, w["lemma"])))
 
-    def __init__(self, words: DataFrame):
-        self.words = words
-        self.anon = 0
-        self.id_col: dict[str, str] = {}  # name -> binding id column
 
-    def _col_for(self, node: SemNode) -> str:
-        if node.name is not None:
-            c = f"_{node.name}_id"
-            self.id_col[node.name] = c
-            return c
-        self.anon += 1
-        return f"_anon{self.anon}_id"
+def _rel_ok(c: SemClause, deprel) -> bool:
+    return (deprel in c.rels if c.rels_re is None
+            else _full(c.rels_re, deprel))
 
-    def compile(self, root: SemNode) -> DataFrame:
-        root_col = self._col_for(root)
-        b = _attr_filter(self.words, root).select(
-            "url", "sent_id", F.col("word_id").alias(root_col),
-            F.col("lemma").alias(root.name))
-        return self._apply_clauses(b, root, root_col)
 
-    def _apply_clauses(self, b: DataFrame, node: SemNode,
-                       pcol: str) -> DataFrame:
+def match_tree(words, root: SemNode, uniq: bool = False) -> list[tuple]:
+    """Every binding of the pattern ``root`` in one sentence.
+
+    ``words``: annotated dicts (text/upos/lemma/head/deprel; word ids are
+    1-based positions, head 0 = root).  -> one tuple per root word that
+    satisfies every clause: its lemma, then the surface of each named
+    non-root node in pre-order (NULL for an unbound optional node or the
+    virtual root).  ``uniq=True`` drops repeated tuples (the Semgrex
+    CLI's uniq post-step), keeping the first."""
+    kids: list[list[int]] = [[] for _ in range(len(words) + 1)]
+    for i, w in enumerate(words, 1):
+        if w["head"] is not None:
+            kids[w["head"]].append(i)   # kids[0]: the root words
+
+    def descendants(i):
+        out, level = [], [i]
+        for _ in range(DESC_DEPTH):
+            level = sorted(k for x in level for k in kids[x])
+            out.extend(level)
+        return out
+
+    def bind(node: SemNode, i: int, env: dict) -> bool:
         for c in node.clauses:
             if c.kind == "neg":
-                veto = self.words.filter(_rel_cond(c)) \
-                    .select("url", "sent_id", F.col("head").alias(pcol))
-                b = b.join(veto, ["url", "sent_id", pcol], "left_anti")
+                if any(_rel_ok(c, words[k - 1]["deprel"]) for k in kids[i]):
+                    return False
                 continue
-            ccol = self._col_for(c.node)
-            how = "left" if c.optional else "inner"
-            if c.kind == "child":
-                cand = _attr_filter(
-                    self.words.filter(_rel_cond(c)),
-                    c.node).select(
-                        "url", "sent_id", F.col("head").alias(pcol),
-                        F.col("word_id").alias(ccol))
-                w = Window.partitionBy("url", "sent_id", pcol) \
-                    .orderBy(ccol)
-                first = (cand.withColumn("_rn", F.row_number().over(w))
-                         .filter(F.col("_rn") == 1).drop("_rn"))
-                b = b.join(first, ["url", "sent_id", pcol], how)
-            elif c.kind == "desc":
-                # bounded-depth closure: DESC_DEPTH-1 extra self-joins on
-                # the sentence key (Semgrex dominates), first match by
-                # (depth, word order)
-                edge = self.words.select(
-                    "url", "sent_id", F.col("head").alias("_p"),
-                    F.col("word_id").alias("_c"), "deprel", "upos",
-                    "lemma")
-                level = edge.select(
-                    "url", "sent_id", F.col("_p").alias(pcol),
-                    F.col("_c").alias(ccol), "deprel", "upos", "lemma",
-                    F.lit(1).alias("_depth"))
-                desc = level
-                for d in range(2, DESC_DEPTH + 1):
-                    level = (level.select(
-                        "url", "sent_id", pcol,
-                        F.col(ccol).alias("_p"))
-                        .join(edge, ["url", "sent_id", "_p"])
-                        .select("url", "sent_id", pcol,
-                                F.col("_c").alias(ccol), "deprel",
-                                "upos", "lemma",
-                                F.lit(d).alias("_depth")))
-                    desc = desc.unionByName(level)
-                cand = _attr_filter(desc.filter(_rel_cond(c)), c.node)
-                w = Window.partitionBy("url", "sent_id", pcol) \
-                    .orderBy("_depth", ccol)
-                first = (cand.withColumn("_rn", F.row_number().over(w))
-                         .filter(F.col("_rn") == 1)
-                         .select("url", "sent_id", pcol, ccol))
-                b = b.join(first, ["url", "sent_id", pcol], how)
-            elif c.kind == "gov":
-                # parent's own deprel must be in rels; its head is the
-                # governor (exactly one per word — no tie-break).  The
-                # attr check folds INTO the candidate before the
-                # (possibly left) join so optionality sees one condition
-                par = self.words.filter(_rel_cond(c)) \
-                    .select("url", "sent_id",
-                            F.col("word_id").alias(pcol),
-                            F.col("head").alias(ccol))
-                if c.node.upos is not None or c.node.lemma_re is not None:
-                    gq = _attr_filter(self.words, c.node).select(
-                        "url", "sent_id", F.col("word_id").alias(ccol))
-                    par = par.join(gq, ["url", "sent_id", ccol])
-                b = b.join(par, ["url", "sent_id", pcol], how)
-            else:  # pragma: no cover — parser emits only the four kinds
-                raise ValueError(f"semgrex: unknown clause kind {c.kind}")
-            b = self._apply_clauses(b, c.node, ccol)
-        return b
+            t, j = c.node, None
+            if c.kind == "gov":
+                if i and _rel_ok(c, words[i - 1]["deprel"]):
+                    h = words[i - 1]["head"]
+                    if t.upos is None and t.lemma_re is None:
+                        j = h
+                    elif h and _attrs_ok(t, words[h - 1]):
+                        j = h
+            else:
+                j = next((k for k in (kids[i] if c.kind == "child"
+                                      else descendants(i))
+                          if _rel_ok(c, words[k - 1]["deprel"])
+                          and _attrs_ok(t, words[k - 1])), None)
+            if j is None:
+                if not c.optional:
+                    return False
+            elif not bind(t, j, env):
+                return False
+            if t.name is not None:
+                env[t.name] = j
+        return True
+
+    def surface(j):
+        if not j:
+            return None
+        w = words[j - 1]
+        if w["deprel"] == "flat":
+            return w["text"]
+        return " ".join([w["text"]] + [words[k - 1]["text"] for k in kids[j]
+                                       if words[k - 1]["deprel"] == "flat"])
+
+    names = _names_in_order(root)[1:]
+    out = []
+    for r, w in enumerate(words, 1):
+        env: dict = {}
+        if _attrs_ok(root, w) and bind(root, r, env):
+            out.append((w["lemma"], *(surface(env[n]) for n in names)))
+    return list(dict.fromkeys(out)) if uniq else out
 
 
-def _surfaces(words: DataFrame) -> DataFrame:
-    """-> (url, sent_id, word_id, _surf): each word's flat-expanded
-    surface span — its text, then its ``flat`` children's in word order;
-    a word that is itself a ``flat`` dependent keeps its own text."""
-    flats = (
-        words.filter(F.col("deprel") == "flat")
-        .groupBy("url", "sent_id", F.col("head").alias("word_id"))
-        .agg(F.array_join(F.transform(
-            F.array_sort(F.collect_list(F.struct("word_id", "text"))),
-            lambda s: s["text"]), " ").alias("flat_text"))
-    )
-    return (
-        words.select("url", "sent_id", "word_id", "text", "deprel")
-        .join(flats, ["url", "sent_id", "word_id"], "left")
-        .select("url", "sent_id", "word_id",
-                F.when((F.col("deprel") != "flat")
-                       & F.col("flat_text").isNotNull(),
-                       F.concat_ws(" ", "text", "flat_text"))
-                .otherwise(F.col("text")).alias("_surf"))
-    )
+def semgrex_narrow(pages_df, pattern: SemNode | str, uniq: bool = False,
+                   processors=None, variant: str | None = None,
+                   decoder: str = "grammar", en_only: bool = True):
+    """pages (url, lang, text) -> (url, sent_id, <root name> = lemma,
+    <named node> = surface span …) in ONE narrow Arrow pass (no shuffle
+    besides the pages spread): each page is annotated
+    (``annotate.annotate_sentences`` with ``processors``, ``variant`` and
+    ``decoder``) and every sentence matched by :func:`match_tree`.  One
+    row per root binding; named-node columns appear in pattern order;
+    ``uniq`` dedupes within each sentence: every row carries its page's
+    url and sent_id, so rows of different sentences never repeat."""
+    root = parse_semgrex(pattern) if isinstance(pattern, str) else pattern
 
-
-def match_semgrex(words: DataFrame, pattern: SemNode | str,
-                  uniq: bool = False) -> DataFrame:
-    """General Semgrex matching over the words table.
-
-    -> (url, sent_id, <root name> = lemma, <named node> = surface span …)
-    one row per root binding satisfying every clause; named-node columns
-    appear in pattern order; an OPTIONAL clause's named column is NULL
-    where it did not bind.  ``DESC_DEPTH`` bounds the ``>>`` closure;
-    ``uniq=True`` collapses duplicate output rows (the Semgrex CLI's
-    uniq post-step) with one distinct over the named columns.
-    """
-    if isinstance(pattern, str):
-        pattern = parse_semgrex(pattern)
-    comp = _Compiler(words)
-    b = comp.compile(pattern)
-    names = _names_in_order(pattern)
-    named_nonroot = [n for n in names[1:]]
-    if named_nonroot:
-        surf = _surfaces(words)
-        for n in named_nonroot:
-            idc = comp.id_col[n]
-            # LEFT: an optional clause's binding column is NULL where it
-            # did not bind — the surface column stays NULL with it
-            b = b.join(
-                surf.select("url", "sent_id",
-                            F.col("word_id").alias(idc),
-                            F.col("_surf").alias(n)),
-                ["url", "sent_id", idc], "left")
-    out = b.select("url", "sent_id", *names)
-    return out.dropDuplicates() if uniq else out
+    def page(url, lang, text):
+        return [(url, sent_id, *row)
+                for sent_id, _a, _b, words in annotate_sentences(
+                    text, variant=variant, lang=lang,
+                    processors=processors, decoder=decoder)
+                for row in match_tree(words, root, uniq)]
+    schema = ", ".join(["url string", "sent_id int"] + [
+        f"{n} string" for n in _names_in_order(root)])
+    return map_pages(pages_df, page, schema, en_only)

@@ -130,8 +130,8 @@ class DepPattern:
 
         A pattern the triple shape cannot carry (governor direction,
         arbitrary names, deeper nests) raises HERE with a pointer to
-        :func:`~stanza_spark.operators.semgrex.match_semgrex`, which runs
-        the full grammar.
+        :func:`~stanza_spark.operators.semgrex.semgrex_narrow` /
+        ``Pipeline.semgrex``, which interpret the full grammar.
         """
         from .semgrex import SemNode, parse_semgrex
 
@@ -149,7 +149,7 @@ class DepPattern:
         def general(msg: str) -> ValueError:
             return ValueError(
                 f"semgrex: {msg} — outside the triple shape; use "
-                "match_semgrex/Pipeline.semgrex for the general grammar")
+                "semgrex_narrow/Pipeline.semgrex for the general grammar")
 
         neg: list[str] = []
         for c in root.clauses:
@@ -179,7 +179,7 @@ class DepPattern:
                     raise ValueError(
                         f"semgrex: the chain below =<{name}> must be a "
                         f"single bare child named ={want} in the triple "
-                        "shape (general chains: match_semgrex)")
+                        "shape (general chains: semgrex_narrow)")
                 kwargs[f"{name}_rels"] = c.rels
                 key = "chain_rels" if name == "obj" else "subj_chain_rels"
                 kwargs[key] = inner.rels
@@ -196,7 +196,7 @@ class DepPattern:
                 raise ValueError(
                     f"semgrex: unknown clause =<{name}> (the triple "
                     "shape names subj/obj/expand/tail/subj_tail; "
-                    "arbitrary names: match_semgrex)")
+                    "arbitrary names: semgrex_narrow)")
         if neg:
             kwargs["neg_rels"] = tuple(neg)
         return cls(**kwargs)

@@ -81,10 +81,10 @@ def test_good_documents_read_runs_no_job(spark):
 
 @pytest.mark.parametrize("gate", [
     "kg_coref_chains", "kg_coref", "kg_triples_pattern", "kg_triples_chain",
-    "kg_triples_subj_chain", "kg_triples_deep", "kg_ssurgeon"])
+    "kg_triples_subj_chain", "kg_triples_deep", "kg_ssurgeon", "kg_semgrex"])
 def test_gates_build_in_few_py4j_calls(spark, monkeypatch, gate):
-    """Building a gate that is pages and one narrow Arrow pass (the coref
-    and declared-pattern triple gates) sends at most 100 py4j call
+    """Building a gate that is pages and one narrow Arrow pass (the coref,
+    declared-pattern triple and Semgrex gates) sends at most 100 py4j call
     commands (their Column-API window and join plans sent about 1 000).
     Only py4j's call command ``c`` is counted: the object-release
     commands the Python GC sends vary run to run."""

@@ -895,12 +895,11 @@ def test_vietnamese_syllable_grouping():
 
 
 def test_semgrex_arbitrary_named_nodes(spark):
-    """Pipeline.semgrex / match_semgrex: any clause name becomes an
+    """Pipeline.semgrex: any clause name becomes an
     output column — a 4-node pattern (pred + subj + place + when) beyond
     the triple shape; negation vetoes; malformed patterns raise; a bare
     root defaults to VERB in the facade."""
     from stanza_spark.api import Pipeline
-    from stanza_spark.operators.semgrex import match_semgrex
     nlp = Pipeline(spark)
     docs = ["Obama moved to Tokyo in 1995.",
             "Obama was elected president in 2008."]
@@ -914,17 +913,14 @@ def test_semgrex_arbitrary_named_nodes(spark):
     # the same node; a richer corpus would separate them by deprel
     rows = {(r.action, r.actor, r.place) for r in m.collect()}
     assert ("move", "Obama", "Tokyo") in rows
-    w = nlp.process(docs).localCheckpoint(eager=True)
     # negation column: veto predicates with an xcomp child
-    m2 = match_semgrex(
-        w, "{upos:VERB}=action >nsubj|nsubj:pass=actor {} !>xcomp {} "
-           ">obl=place {}")
+    m2 = nlp.semgrex(
+        docs, "{upos:VERB}=action >nsubj|nsubj:pass=actor {} !>xcomp {} "
+              ">obl=place {}")
     assert {r.action for r in m2.collect()} == {"move"}
     for bad in (">obl=x {}",        # missing head node
                 "{}=p >obl=x {} >obl=x {}",   # duplicate names
                 "{}=p >obl=x ({} >case=y {}"):  # unclosed group
-        with _pytest.raises(ValueError):
-            match_semgrex(w, bad)
         with _pytest.raises(ValueError):
             nlp.semgrex(docs, bad)
     # r6: the unified engine legalized what the old one-hop matcher
@@ -934,18 +930,18 @@ def test_semgrex_arbitrary_named_nodes(spark):
     assert {(r.p, r.marker) for r in deep.collect()} == {
         ("move", "to"), ("elect", "in")}
     # head lemma regex constrains (same anchoring as the triple matcher)...
-    m3 = match_semgrex(
-        w, "{upos:VERB,lemma:/move/}=action >nsubj|nsubj:pass=actor {}")
+    m3 = nlp.semgrex(
+        docs, "{upos:VERB,lemma:/move/}=action >nsubj|nsubj:pass=actor {}")
     assert {r.action for r in m3.collect()} == {"move"}
-    assert match_semgrex(
-        w, "{lemma:/elect/}=a >nsubj|nsubj:pass=s {}").count() == 1
+    assert nlp.semgrex(
+        docs, "{lemma:/elect/}=a >nsubj|nsubj:pass=s {}").count() == 1
     # ...and unsupported head attributes fail loudly, never drop silently
     with _pytest.raises(ValueError, match="unsupported head attributes"):
-        match_semgrex(w, "{cpos:VB}=a >nsubj=s {}")
+        nlp.semgrex(docs, "{cpos:VB}=a >nsubj=s {}")
 
 
 def test_semgrex_unified_engine(spark):
-    """r5 judge item #2 — the ONE recursive compiler behind every
+    """r5 judge item #2 — the ONE pattern interpreter behind every
     Semgrex surface: nested 2-hop chains below any named node, governor
     direction ``<``, attribute-constrained inner nodes, and loud
     failures outside the grammar."""
@@ -953,19 +949,17 @@ def test_semgrex_unified_engine(spark):
 
     from stanza_spark.api import Pipeline
     from stanza_spark.operators.semgrex import (MAX_NEST_DEPTH,
-                                                match_semgrex,
                                                 parse_semgrex)
     nlp = Pipeline(spark)
     docs = ["Barack Obama moved to Tokyo in 1995.",
             "He visited London in 1996."]
-    w = nlp.process(docs).localCheckpoint(eager=True)
 
     # 2-hop chain below the SUBJECT with arbitrary names: the subject
     # must have a flat child (multiword name) — the pronoun sentence
     # drops even though its verb has nsubj+obl
-    m = match_semgrex(
-        w, "{upos:VERB}=act >nsubj=agent ({} >flat=surname {}) "
-           ">obl=dest ({} >case=how {})")
+    m = nlp.semgrex(
+        docs, "{upos:VERB}=act >nsubj=agent ({} >flat=surname {}) "
+              ">obl=dest ({} >case=how {})")
     assert m.columns == ["url", "sent_id", "act", "agent", "surname",
                          "dest", "how"]
     assert [(r.act, r.agent, r.surname, r.dest, r.how)
@@ -975,15 +969,15 @@ def test_semgrex_unified_engine(spark):
     # governor direction: root the pattern at the oblique PROPN and walk
     # UP to its verb — `<obl` requires the root's own deprel ("London"
     # is deprel obj here, so only "Tokyo" binds)
-    g = match_semgrex(
-        w, "{upos:PROPN}=where <obl=verb {upos:VERB}")
+    g = nlp.semgrex(
+        docs, "{upos:PROPN}=where <obl=verb {upos:VERB}")
     got = {(r.where, r.verb) for r in g.collect()}
     assert got == {("Tokyo", "moved")}
 
     # attribute-constrained inner node: the argument must be a PROPN
     # (1995/1996 are NUM -> skipped; first PROPN child by word order)
-    a = match_semgrex(
-        w, "{upos:VERB}=v >obj|obl=place {upos:PROPN}")
+    a = nlp.semgrex(
+        docs, "{upos:VERB}=v >obj|obl=place {upos:PROPN}")
     assert {r.place for r in a.collect()} == {"Tokyo", "London"}
 
     # loud failures: unnamed root, attribute-constrained negation,
@@ -1006,14 +1000,14 @@ def test_semgrex_unified_engine(spark):
     # RELATION REGEXES (round 6): `/re/` in place of a literal set, whole
     # name anchored — /obl|obj/ matches both, /ob/ matches NEITHER
     # (anchoring), and regex negation vetoes too
-    rr = match_semgrex(w, "{upos:VERB}=v >/obl|obj/=place {upos:PROPN}")
+    rr = nlp.semgrex(docs, "{upos:VERB}=v >/obl|obj/=place {upos:PROPN}")
     assert {r.place for r in rr.collect()} == {"Tokyo", "London"}
-    assert match_semgrex(
-        w, "{upos:VERB}=v >/ob/=place {upos:PROPN}").count() == 0
-    assert match_semgrex(
-        w, "{upos:VERB}=v >/nsubj(:pass)?/=s ({} >flat=t {})") \
+    assert nlp.semgrex(
+        docs, "{upos:VERB}=v >/ob/=place {upos:PROPN}").count() == 0
+    assert nlp.semgrex(
+        docs, "{upos:VERB}=v >/nsubj(:pass)?/=s ({} >flat=t {})") \
         .count() == 1
-    neg = match_semgrex(w, "{upos:VERB}=v !>/nsub.*/ {} >obl=d {}")
+    neg = nlp.semgrex(docs, "{upos:VERB}=v !>/nsub.*/ {} >obl=d {}")
     assert neg.count() == 0            # both verbs have nsubj-ish child
     with _pytest.raises(ValueError):
         parse_semgrex("{upos:VERB}=v >/unclosed=x {}")
@@ -1022,17 +1016,17 @@ def test_semgrex_unified_engine(spark):
     # binds where present ("Barack Obama moved...") and yields NULL
     # where absent ("He visited..." — PRON subject), the parent binding
     # surviving either way
-    opt = match_semgrex(
-        w, "{upos:VERB}=v >obl|obj=place {upos:PROPN} "
-           "?>nsubj=agent {upos:PROPN}")
+    opt = nlp.semgrex(
+        docs, "{upos:VERB}=v >obl|obj=place {upos:PROPN} "
+              "?>nsubj=agent {upos:PROPN}")
     got = {(r.v, r.place, r.agent) for r in opt.collect()}
     assert got == {("move", "Tokyo", "Barack Obama"),
                    ("visit", "London", None)}
     # uniq collapses duplicate output rows (Semgrex CLI post-step)
-    dup = match_semgrex(w, "{upos:ADP}=p <case=head {}")
+    dup = nlp.semgrex(docs, "{upos:ADP}=p <case=head {}")
     assert dup.count() >= 2
-    assert match_semgrex(
-        w, "{upos:ADP}=p <case=head {}", uniq=True).count() \
+    assert nlp.semgrex(
+        docs, "{upos:ADP}=p <case=head {}", uniq=True).count() \
         == dup.dropDuplicates().count()
     # optional negation and nested-group optional targets are outside
     # the subset and fail loudly

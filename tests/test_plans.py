@@ -443,11 +443,12 @@ def test_langid_plan_is_narrow(spark):
 
 @pytest.mark.parametrize("gate", [
     "kg_triples_pattern", "kg_triples_chain", "kg_triples_subj_chain",
-    "kg_triples_deep", "kg_ssurgeon"])
+    "kg_triples_deep", "kg_ssurgeon", "kg_semgrex"])
 def test_triple_gates_physical_operators_pinned(spark, gate):
-    """Every declared-pattern triple gate is the pages scan, its one
-    input-spread exchange and ONE MapInPandas that annotates and matches
-    each page — no window, sort, aggregate, join or union."""
+    """Every declared-pattern triple gate and the Semgrex gate is the
+    pages scan, its one input-spread exchange and ONE MapInPandas that
+    annotates and matches each page — no window, sort, aggregate, join or
+    union."""
     import stanza_spark.queries as Q
     tree = _plan(Q.KG_QUERIES[gate](spark, SF_SMOKE)).split(
         "== Physical Plan ==")[1]
